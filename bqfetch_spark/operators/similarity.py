@@ -2,12 +2,17 @@
 
 Brute-force exact cosine top-k as the verified baseline; IVF-style
 partitioned search as the 100 TB scale path (candidate set shrinks from
-N to N/n_cells × n_probe). Vector math is all JVM array expressions
-(functions/vectors.py).
+N to N/n_cells × n_probe). Per-vector math is JVM array expressions
+(functions/vectors.py); the two hot paths are numpy kernels shared by
+every query: `score_pairs` (over `cosine_tiles`) scores candidate
+pairs, and `assign_cells` ranks centroids for IVF assignment. Each
+query only spells its candidate generator.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -86,12 +91,97 @@ NEARDUP_MAX_VECTORS = 100_000
 # fill the 32 local slots. INPUT vectors per group are small (2×12.5k
 # × 64 doubles ≈ 12 MB at the 100k cap) but the pairwise SCORE matrix
 # is (n/B)² cells — 1.25 GB of float64 per 12.5k×12.5k group — so the
-# scoring kernels tile their y side to SCORE_TILE_CELLS live cells
-# (ADVICE r13): peak per task stays ~3 matrices × 32 MB whatever the
-# block population, and per-pair arithmetic is untouched (each pair's
-# fold is independent of the tiling).
+# shared kernel cosine_tiles tiles its y side to SCORE_TILE_CELLS live
+# cells: peak per task stays ~3 matrices × 32 MB whatever the block
+# population.
 NEARDUP_BLOCKS = 8
 SCORE_TILE_CELLS = 4_000_000  # ≈32 MB float64 per live pair matrix
+# Python-side pre-cut of score_pairs: it only drops pairs that can never
+# round (r6, half-up at 0.3499995) to ≥ 0.35; every caller applies the
+# authoritative threshold JVM-side on the rounded value.
+SCORE_PRE_CUT = 0.349
+PAIR_SCHEMA = "vec_a bigint, vec_b bigint, cosine double"
+_PAIR_DTYPES = {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
+
+
+def vectors(col: pd.Series) -> np.ndarray:
+    """An Arrow array column as a 2-D matrix; the dtype (int64 for the
+    IVF_Q grid, float64 otherwise) selects cosine_tiles' mode."""
+    return np.array(col.tolist())
+
+
+def cosine_tiles(x: np.ndarray, norms_x: np.ndarray, y: np.ndarray, norms_y: np.ndarray):
+    """Yield (start, cos): the cosine matrix of x against the y tile
+    starting at row `start`, cos = dot / outer(norms_x, norms_y). The y
+    side is tiled to SCORE_TILE_CELLS // len(x) rows, so at most
+    SCORE_TILE_CELLS pair cells are live at once.
+
+    The accumulation mode follows the input dtype, and both modes give
+    each pair the bits the JVM/DuckDB spellings give it, whatever the
+    tiling:
+    - integer vectors (the IVF_Q grid: |q| ≤ 1e6, 64 dims) are cast to
+      float64 and multiplied with matmul. Every partial sum is an
+      integer below 64·1e12 < 2^53, so it is exact in any accumulation
+      order — bit-equal to the int64 fold;
+    - float vectors fold dimension by dimension, one vectorized
+      outer-product add per dim: the JVM aggregate's left-to-right
+      IEEE add order for every pair.
+    Norms are precomputed per vector, and multiplication commutes, so
+    the orientation of a pair cannot change its value either."""
+    if np.issubdtype(x.dtype, np.integer):
+        xf, yf = x.astype(np.float64), y.astype(np.float64)
+
+        def dot(lo: int, hi: int) -> np.ndarray:
+            return xf @ yf[lo:hi].T
+
+    else:
+
+        def dot(lo: int, hi: int) -> np.ndarray:
+            acc = np.zeros((len(x), hi - lo))
+            for d in range(x.shape[1]):  # dim by dim: the fold's add order
+                acc += np.outer(x[:, d], y[lo:hi, d])
+            return acc
+
+    step = max(1, SCORE_TILE_CELLS // max(1, len(x)))
+    for lo in range(0, len(y), step):
+        hi = min(lo + step, len(y))
+        yield lo, dot(lo, hi) / np.outer(norms_x, norms_y[lo:hi])
+
+
+def score_pairs(
+    ids_x: np.ndarray,
+    x: np.ndarray,
+    norms_x: np.ndarray,
+    ids_y: np.ndarray,
+    y: np.ndarray,
+    norms_y: np.ndarray,
+) -> pd.DataFrame:
+    """Near-duplicate candidates of x × y: the pairs with cosine ≥
+    SCORE_PRE_CUT as a PAIR_SCHEMA frame oriented (min id, max id).
+
+    Pairs are unordered. When an x id also sits on the y side (self
+    pairs, or q69's y side that holds every member of x's cell), the
+    generator scores that pair from both ends, so only id_a < id_b is
+    kept; disjoint sides (q51's cross-block groups) keep every pair.
+    An empty side gives the typed empty frame."""
+    if not len(ids_x) or not len(ids_y):
+        return pd.DataFrame({c: [] for c in _PAIR_DTYPES}).astype(_PAIR_DTYPES)
+    x_on_y = np.isin(ids_x, ids_y)
+    out_a, out_b, out_c = [], [], []
+    for lo, cos in cosine_tiles(x, norms_x, y, norms_y):
+        ii, jj = np.nonzero(cos >= SCORE_PRE_CUT)
+        a, b = ids_x[ii], ids_y[lo + jj]
+        keep = (a < b) | ~x_on_y[ii]
+        out_a.append(np.minimum(a, b)[keep])
+        out_b.append(np.maximum(a, b)[keep])
+        out_c.append(cos[ii, jj][keep])
+    return pd.DataFrame(
+        {
+            "vec_a": np.concatenate(out_a),
+            "vec_b": np.concatenate(out_b),
+            "cosine": np.concatenate(out_c),
+        }
+    )
 
 
 @register("q51_embedding_neardup", oracle=NEARDUP_ORACLE, tags=("similarity", "dedup"))
@@ -118,28 +208,15 @@ def q51_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dot/(na*nb) — same formula/order as list_cosine_similarity
     with_n = emb.select("vec_id", "v", norm2(F.col("v")).alias("n"))
 
-    # BLOCKED all-pairs, scored per block-pair group (round 13; guide
-    # §4.2/§8): the broadcast-nested-loop + zip_with/aggregate fold
-    # evaluated ~2M pairs × 64 interpreted lambda steps — the query's
-    # dominant cost (and qx139's, which rides these pairs). Vectors are
-    # hashed into NEARDUP_BLOCKS blocks; each unordered pair of blocks
+    # BLOCKED all-pairs (round 13; guide §4.2/§8): vectors are hashed
+    # into NEARDUP_BLOCKS blocks, and each unordered pair of blocks
     # (i ≤ j) is one applyInPandas group holding block i ∪ block j, so
-    # every vector moves NEARDUP_BLOCKS times (≈8 skinny rows each, MBs)
-    # and every vector PAIR lands in exactly one group — no dedup
-    # needed. Inside the group the dot accumulates DIMENSION-BY-
-    # DIMENSION across the whole pair matrix (64 vectorized outer-
-    # product adds), which reproduces the JVM fold's left-to-right IEEE
-    # addition order per pair bit-for-bit — embeddings are arbitrary
-    # doubles here, so order DOES matter (unlike the integer-grid
-    # queries where any order is exact). Norms stay JVM-side (one fold
-    # per vector); multiply-commutativity makes pair orientation
-    # irrelevant. The 0.349 Python pre-cut only drops pairs that can
-    # never round to ≥ 0.35; the authoritative threshold stays JVM-side
-    # on the F.round value. Still O(n²) work — the documented ≤100k cap
+    # every vector moves NEARDUP_BLOCKS times and every vector PAIR
+    # lands in exactly one group. score_pairs scores the group's block
+    # i against block j; embeddings are arbitrary doubles, so it takes
+    # the dim-by-dim fold that reproduces the JVM add order. Norms stay
+    # JVM-side (one fold per vector). Still O(n²) work — the ≤100k cap
     # and q69's IVF spelling remain the scale path.
-    import numpy as np
-    import pandas as pd
-
     blocks = F.pmod(F.xxhash64("vec_id"), F.lit(NEARDUP_BLOCKS)).cast("int")
     others = F.sequence(F.lit(0), F.lit(NEARDUP_BLOCKS - 1))
     rows = (
@@ -164,58 +241,14 @@ def q51_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _score_blocks(pdf: pd.DataFrame) -> pd.DataFrame:
-        g1, g2 = int(pdf["g1"].iloc[0]), int(pdf["g2"].iloc[0])
-        ids = pdf["vec_id"].to_numpy()
-        m = np.array(pdf["v"].tolist(), dtype=np.float64)
-        nn = pdf["n"].to_numpy().astype(np.float64)
+        ids, m, n = pdf["vec_id"].to_numpy(), vectors(pdf["v"]), pdf["n"].to_numpy()
         blk = pdf["blk"].to_numpy()
-        if g1 == g2:
-            xi = np.arange(len(ids))
-            yi = xi
-        else:
-            xi = np.nonzero(blk == g1)[0]
-            yi = np.nonzero(blk == g2)[0]
-        if len(xi) == 0 or len(yi) == 0:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-            )
-        x = m[xi]
-        nx = nn[xi]
-        ida = ids[xi]
-        # y-side tiled (ADVICE r13): bound the live (x × y-tile) score
-        # matrices to SCORE_TILE_CELLS cells; each pair's dim-by-dim
-        # fold is independent of the tiling, so results are bit-equal
-        out_a, out_b, out_c = [], [], []
-        ych = max(1, SCORE_TILE_CELLS // max(1, len(xi)))
-        for ys in range(0, len(yi), ych):
-            yt = yi[ys : ys + ych]
-            y = m[yt]
-            acc = np.zeros((len(xi), len(yt)))
-            for d in range(x.shape[1]):  # dim-by-dim: the fold's add order
-                acc += np.outer(x[:, d], y[:, d])
-            cos = acc / np.outer(nx, nn[yt])
-            idb = ids[yt]
-            keep = cos >= 0.349
-            if g1 == g2:
-                # one triangle of the self-pairs; cross-block pairs
-                # appear once in x×y whatever their id order, so
-                # orient by min/max
-                keep &= ida[:, None] < idb[None, :]
-            ii, jj = np.nonzero(keep)
-            out_a.append(np.minimum(ida[ii], idb[jj]))
-            out_b.append(np.maximum(ida[ii], idb[jj]))
-            out_c.append(cos[ii, jj])
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a),
-                "vec_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        x, y = blk == pdf["g1"].iloc[0], blk == pdf["g2"].iloc[0]
+        return score_pairs(ids[x], m[x], n[x], ids[y], m[y], n[y])
 
     return (
         rows.groupBy("g1", "g2")
-        .applyInPandas(_score_blocks, "vec_a bigint, vec_b bigint, cosine double")
+        .applyInPandas(_score_blocks, PAIR_SCHEMA)
         .withColumn("cosine", r6(F.col("cosine")))
         .filter(F.col("cosine") >= 0.35)
         .select("vec_a", "vec_b", "cosine")
@@ -291,6 +324,16 @@ def _ivf_sim(dot: F.Column, na: F.Column, nb: F.Column) -> F.Column:
     return dot.cast("double") / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double")))
 
 
+def _ivf_side(pdf: pd.DataFrame) -> tuple:
+    """(ids, qv matrix, norms) of IVF_Q-grid rows (vec_id, qv, nv) — one
+    side of score_pairs; norms are sqrt(nv), _ivf_sim's factors."""
+    return (
+        pdf["vec_id"].to_numpy(),
+        vectors(pdf["qv"]),
+        np.sqrt(pdf["nv"].to_numpy().astype(np.float64)),
+    )
+
+
 # ---------------------------------------------------------------------------
 # Fixed-point Lloyd's — the qx221 unroll recipe applied to KMeans
 # (VERDICT r10 #2: graduate the trained-KMeans ANN legs).
@@ -332,157 +375,96 @@ def _km_quantize(s: list, n: int) -> list:
     return [(2 * int(si) + n) // (2 * n) for si in s]
 
 
-def km_struct_array(cq_state: list) -> F.Column:
-    """array<struct<d, cell_id>> of distances to every quantized
-    centroid — array_min = the oracle's ORDER BY d, cell_id LIMIT 1,
-    array_sort = its full probe ranking (struct compare is
-    field-ordered and d leads).
-
-    The centroid matrix rides as ONE nested array literal (plus one
-    cell-id literal) zipped into (d, cell_id) structs: the per-element
-    F.lit spelling issued k×64 py4j calls PER EXPRESSION BUILD, which
-    measured 1.5–3 s of pure driver-side Python per training round at
-    k=8 — more than the Spark jobs themselves."""
-    state = sorted((int(cid), [int(v) for v in cq]) for cid, cq in cq_state)
-    cells = F.lit([cid for cid, _ in state]).cast("array<int>")
-    mat = F.lit([cq for _, cq in state]).cast("array<array<bigint>>")
-
-    def entry(cqv, cid):
-        d = F.aggregate(
-            F.zip_with(F.col("qv"), cqv, lambda x, c: (x - c) * (x - c)),
-            F.lit(0).cast("bigint"),
-            lambda acc, t: acc + t,
-        )
-        return F.struct(d.alias("d"), cid.alias("cell_id"))
-
-    return F.zip_with(mat, cells, entry)
-
-
 def km_quantized(state: list) -> list:
     """[(cell_id, s, n)] → [(cell_id, cq)] for assignment/probing."""
     return [(cid, _km_quantize(s, n)) for cid, s, n in state]
 
 
-# Assignment kernels (round 14, guide §4.1/§4.2): the km_struct_array
-# fold spelling evaluated k×64 interpreted zip_with/aggregate lambda
-# steps PER ROW (~2k higher-order-function ops at k=16 — the same
-# expression-interpreter cost class the r14 PCA phase-1 rewrite
-# measured at 1.55 s/job at sf0.1). One numpy pass per Arrow batch now
-# computes the identical BIGINT distances via the exact expansion
-# d = Σx² + Σc² − 2·x·c (pure int64 arithmetic — no rounding anywhere,
-# so the algebraic regrouping is exact; magnitudes ≤ 64·(2.4e6)² ≈
-# 3.7e14, far inside int64) and the identical tie-breaks: centroid
-# columns are ordered by cell_id ascending, np.argmin takes the FIRST
-# minimum (= the struct array_min's (d, cell_id) order) and the stable
-# argsort keeps equal-d columns in cell order (= array_sort). The
-# JVM spelling (km_struct_array) is kept for the training loop's SQL
-# mirror documentation and plan history.
+# Cell assignment (round 14, guide §4.1/§4.2): one numpy pass per Arrow
+# batch builds a key matrix (rows × cells, smaller ranks first), keeps
+# each row's `probe` best cells by a stable argsort and emits one row
+# per (vector, cell). Centroid columns are in cell_id order and the
+# stable sort keeps equal keys in column order, so ties break toward
+# the smaller cell_id — the oracles' ORDER BY key, cell_id; at probe=1
+# that is argmin's first minimum.
 
 
-def _km_centroid_arrays(cq_state: list):
-    import numpy as np
+def assign_batch(pdf: pd.DataFrame, cells: np.ndarray, keys, probe: int) -> pd.DataFrame:
+    """pdf + cell_id: each row repeated once per each of its `probe`
+    smallest-key cells, in rank order."""
+    order = np.argsort(keys(pdf), axis=1, kind="stable")[:, :probe]
+    out = pdf.iloc[np.repeat(np.arange(len(pdf)), order.shape[1])].copy()
+    out["cell_id"] = cells[order.reshape(-1)].astype("int32")
+    return out
 
+
+def assign_cells(frame: DataFrame, cells: np.ndarray, keys, probe: int) -> DataFrame:
+    """assign_batch over every Arrow batch of frame (map-only)."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    schema = StructType(frame.schema.fields + [StructField("cell_id", IntegerType())])
+
+    def _assign(it):
+        for pdf in it:
+            if len(pdf):
+                yield assign_batch(pdf, cells, keys, probe)
+
+    return frame.mapInPandas(_assign, schema)
+
+
+def km_keys(cq_state: list):
+    """(cells, keys) ranking by the BIGINT squared distance to each
+    quantized centroid [(cell_id, cq)], via the exact expansion
+    d = Σx² + Σc² − 2·x·c: pure int64, magnitudes ≤ 64·(2.4e6)² ≈
+    3.7e14, so the regrouping rounds nothing."""
     state = sorted((int(cid), [int(v) for v in cq]) for cid, cq in cq_state)
     cells = np.array([cid for cid, _ in state], dtype=np.int64)
     cmat = np.array([cq for _, cq in state], dtype=np.int64)
-    return cells, cmat
-
-
-def km_assign(e: DataFrame, cq_state: list) -> DataFrame:
-    """+ (cell_id, d): argmin over centroids, one vectorized int64
-    pass per Arrow batch (ties → smaller cell_id, exactly the struct
-    array_min order of the previous map-only fold spelling)."""
-    import numpy as np
-
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    cells, cmat = _km_centroid_arrays(cq_state)
     cc = (cmat * cmat).sum(axis=1)
-    schema = StructType(
-        e.schema.fields
-        + [StructField("cell_id", IntegerType()), StructField("d", LongType())]
-    )
 
-    def _assign(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            q = np.array(list(pdf["qv"]), dtype=np.int64)
-            dmat = (q * q).sum(axis=1)[:, None] + cc[None, :] - 2 * (q @ cmat.T)
-            j = dmat.argmin(axis=1)
-            out = pdf.copy()
-            out["cell_id"] = cells[j].astype("int32")
-            out["d"] = dmat[np.arange(len(j)), j]
-            yield out
+    def keys(pdf: pd.DataFrame) -> np.ndarray:
+        q = np.array(list(pdf["qv"]), dtype=np.int64)
+        return (q * q).sum(axis=1)[:, None] + cc[None, :] - 2 * (q @ cmat.T)
 
-    return e.mapInPandas(_assign, schema)
+    return cells, keys
+
+
+def seeded_keys(crows: list):
+    """(cells, keys) ranking by −s against SEEDED centroid rows
+    [(cell_id, qc, nc)], s = dot/(sqrt(nv)·sqrt(nc)): integer dots are
+    exact in int64 and below 2^53 (a lossless cast to double, like the
+    JVM's), then _ivf_sim's three correctly-rounded IEEE ops in its
+    order."""
+    rows = sorted(crows, key=lambda r: int(r["cell_id"]))
+    cells = np.array([int(r["cell_id"]) for r in rows], dtype=np.int64)
+    cmat = np.array([[int(x) for x in r["qc"]] for r in rows], dtype=np.int64)
+    sq_nc = np.sqrt(np.array([int(r["nc"]) for r in rows], dtype=np.float64))
+
+    def keys(pdf: pd.DataFrame) -> np.ndarray:
+        qm = np.array(list(pdf["qv"]), dtype=np.int64)
+        sq_nv = np.sqrt(pdf["nv"].to_numpy().astype(np.float64))
+        return -((qm @ cmat.T).astype(np.float64) / (sq_nv[:, None] * sq_nc[None, :]))
+
+    return cells, keys
 
 
 def km_multi_assign(e: DataFrame, cq_state: list, probe: int) -> DataFrame:
-    """Multi-probe assignment: each vector lands in its `probe` nearest
-    cells (one output row per (vec, cell)), ranked by (d, cell_id) —
-    the stable argsort reproduces the previous array_sort + slice +
-    explode spelling row-for-row."""
-    import numpy as np
+    """+ cell_id: each vector's `probe` nearest quantized centroids,
+    ranked by (d, cell_id), one output row per (vec, cell)."""
+    return assign_cells(e, *km_keys(cq_state), probe)
 
-    from pyspark.sql.types import IntegerType, StructField, StructType
 
-    cells, cmat = _km_centroid_arrays(cq_state)
-    cc = (cmat * cmat).sum(axis=1)
-    schema = StructType(e.schema.fields + [StructField("cell_id", IntegerType())])
-
-    def _assign(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            q = np.array(list(pdf["qv"]), dtype=np.int64)
-            dmat = (q * q).sum(axis=1)[:, None] + cc[None, :] - 2 * (q @ cmat.T)
-            order = np.argsort(dmat, axis=1, kind="stable")[:, :probe]
-            out = pdf.iloc[np.repeat(np.arange(len(pdf)), order.shape[1])].copy()
-            out["cell_id"] = cells[order.reshape(-1)].astype("int32")
-            yield out
-
-    return e.mapInPandas(_assign, schema)
+def km_assign(e: DataFrame, cq_state: list) -> DataFrame:
+    """+ cell_id: the nearest quantized centroid (ties → smaller
+    cell_id)."""
+    return km_multi_assign(e, cq_state, 1)
 
 
 def ivf_seeded_assign(frame: DataFrame, crows: list, probe: int) -> DataFrame:
-    """Assignment against SEEDED centroid rows [(cell_id, qc, nc)] by
-    _ivf_sim similarity: each vector lands in its `probe` best cells
-    ranked by (s desc, cell_id asc) — one row per (vec, cell), input
-    columns passed through. Vectorized per Arrow batch (round 14,
-    guide §4.1/§4.2), replacing the per-row interpreted spelling of
-    k zip_with/aggregate dot folds + a struct sort_array: integer
-    dots are exact in int64 and < 2^53 (lossless cast to double, like
-    the JVM's), s = dot/(sqrt(nv)·sqrt(nc)) is the same three
-    correctly-rounded IEEE ops in the same order, and the stable
-    argsort on -s keeps equal-s columns in cell_id order — exactly
-    the struct compare of sort_array(desc) on (s, -cell_id)."""
-    import numpy as np
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    cells = np.array([int(r["cell_id"]) for r in crows], dtype=np.int64)
-    cmat = np.array([[int(x) for x in r["qc"]] for r in crows], dtype=np.int64)
-    sq_nc = np.sqrt(np.array([int(r["nc"]) for r in crows], dtype=np.float64))
-    schema = StructType(
-        frame.schema.fields + [StructField("cell_id", IntegerType())]
-    )
-
-    def _assign(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            qm = np.array(list(pdf["qv"]), dtype=np.int64)
-            s = (qm @ cmat.T).astype(np.float64) / (
-                np.sqrt(pdf["nv"].to_numpy().astype(np.float64))[:, None]
-                * sq_nc[None, :]
-            )
-            order = np.argsort(-s, axis=1, kind="stable")[:, :probe]
-            out = pdf.iloc[np.repeat(np.arange(len(pdf)), order.shape[1])].copy()
-            out["cell_id"] = cells[order.reshape(-1)].astype("int32")
-            yield out
-
-    return frame.mapInPandas(_assign, schema)
+    """+ cell_id: each vector's `probe` best SEEDED cells ranked by
+    (s desc, cell_id asc), one row per (vec, cell), input columns
+    passed through."""
+    return assign_cells(frame, *seeded_keys(crows), probe)
 
 
 # Per-session artifact memos (the frozen-index stance applied to the
@@ -531,10 +513,8 @@ def fixed_point_kmeans(e: DataFrame, k: int, rounds: int = KM_ROUNDS) -> list:
     )
     state = [(int(r["vec_id"]), [int(x) for x in r["qv"]], 1) for r in seeds]
     for _ in range(rounds):
-        # per-round assignment through the vectorized kernel (round 14)
-        # — identical int64 distances and tie-breaks as the
-        # km_struct_array fold, one Arrow pass instead of k×64
-        # interpreted lambda steps per row
+        # per-round assignment: one Arrow pass of the shared
+        # assignment kernel (exact int64 distances, cell_id tie-breaks)
         stats = (
             km_assign(e.select("qv"), km_quantized(state))
             .select("qv", "cell_id")
@@ -740,8 +720,8 @@ def q53_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is map-shaped (no corpus×8-row window shuffle since r10)
     and since round 14 runs as ONE vectorized numpy pass per Arrow
     batch instead of 8 interpreted zip_with folds per row — identical
-    doubles, identical ties-toward-smaller-cell (see the kernel comment
-    below). Recall-vs-brute-force stays pytest-asserted (quantization
+    doubles, identical ties-toward-smaller-cell (assign_cells,
+    seeded_keys). Recall-vs-brute-force stays pytest-asserted (quantization
     shifts cosines by ~1e-6 — invisible at 6dp and to recall)."""
     q = _ivf_quantized(spark, sf_dir)
     centroids = q.filter(F.col("vec_id") < IVF_CELLS).select(
@@ -749,13 +729,6 @@ def q53_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     crows = sorted(centroids.collect(), key=lambda r: r["cell_id"])  # 8 rows
 
-    # Assignment argmax vectorized per Arrow batch (round 14, guide
-    # §4.1/§4.2): the previous map-only spelling evaluated 8 centroid
-    # zip_with/aggregate folds (8×64 interpreted lambda steps) per row.
-    # ivf_seeded_assign with probe=1 computes the IDENTICAL
-    # similarities and the identical tie-break (ties → smaller
-    # cell_id), matching array_max over (s, -cell_id) structs; see the
-    # helper's exactness comment.
     assigned = ivf_seeded_assign(q, crows, probe=1)
     queries = assigned.filter(F.col("vec_id") < IVF_N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -884,7 +857,7 @@ def q69_embedding_neardup_ivf(
     rows-only through r10 as an MLlib fit) learns NEARDUP_IVF_CELLS
     centroids; every vector is MULTI-ASSIGNED to its NEARDUP_IVF_PROBE
     nearest cells by the same truncated integer distance (map-only:
-    one array_sort of k structs per vector); candidate pairs share at
+    one assign_cells ranking per Arrow batch); candidate pairs share at
     least one cell (equi-join on cell_id — never an unbounded cross
     join); the exact IVF_Q-quantized cosine (bit-identical to the
     DuckDB spelling) re-checks candidates against the same 0.35
@@ -902,17 +875,8 @@ def q69_embedding_neardup_ivf(
       this shuffle to almost nothing because its BYTES are tiny while
       its join OUTPUT is the expensive part — the explicit
       repartition on (cell, salt) pins k×NEARDUP_SALT balanced tasks.
-    - Candidates are deduped BEFORE the cosine: the join carries only
-      (vec_a, vec_b) ids (16-byte rows), multi-cell duplicates are
-      dropped, and vectors are re-attached by id joins afterwards —
-      so the 64-dim fold runs once per UNIQUE pair, not once per
-      shared cell (measured 2× at sf0.1; the id-join build sides are
-      AQE-decided, broadcast on the fixture, shuffle at scale).
-    - Norms are precomputed per VECTOR (one fold per pair, not
-      three), and the cosine is wrapped in a nondeterministic guard
-      so the threshold filter cannot be pushed below the projection
-      and evaluate the fold a second time (same pathology q51
-      documents; measured 7.7 s → 4.5 s at sf0.1).
+    - Pairs are scored inside each (cell, sub-bucket) group by
+      score_pairs, with squared norms precomputed per VECTOR.
     - Training runs KM_ROUNDS exact integer Lloyd rounds: centroid
       quality for bucketing saturates in a few iterations, and at
       100 TB the fit runs on a ~0.1% sample anyway.
@@ -927,25 +891,16 @@ def q69_embedding_neardup_ivf(
         cq,
         NEARDUP_IVF_PROBE if probe is None else probe,
     ).select("vec_id", F.col("cell_id").cast("int").alias("cell_id"))
-    # Verify PER (cell, sub-bucket) GROUP in one applyInPandas
-    # (round 13, second pass — the qx275 per-cell rewrite with the
-    # salt kept; guide §8 "move heavy bytes once"): the previous
-    # spelling joined skinny candidate ids, re-attached both 64-long
-    # vectors per pair, and shipped every pair's arrays through Arrow
-    # to a vectorized dot — the per-pair transfer was the dominant
-    # remaining cost. Scoring inside each (cell, salt) group moves the
-    # probe side once per its own sub-bucket and the build side once
-    # per sub-bucket (corpus × probe × (1 + NEARDUP_SALT) skinny rows
-    # ≈ MBs at sf0.1) instead of two arrays per PAIR; the salted task
-    # split that kept the join skew-hardened keeps the GROUPS balanced
-    # here — each (x, y) pair is scored in x's sub-bucket of every
-    # shared cell, byte-identical each time, and dropDuplicates keeps
-    # one copy. Exactness: qv components are integers ≤ 1e6, so all
-    # matmul partial sums are integers < 2^53 — float64 matmul is
-    # exact in any accumulation order, bit-equal to the int64 fold;
-    # the sim chain applies _ivf_sim's IEEE op order and the 0.349
-    # Python pre-cut only drops pairs that can never round to ≥ 0.35
-    # (the authoritative threshold stays JVM-side on F.round).
+    # Verify PER (cell, sub-bucket) GROUP in one applyInPandas (round
+    # 13; guide §8 "move heavy bytes once"): joining candidate ids and
+    # re-attaching both vectors per PAIR made the per-pair transfer the
+    # dominant cost. Each group scores its probe side (the cell's
+    # members in this sub-bucket) against the whole cell, so every
+    # vector moves (1 + NEARDUP_SALT) times per cell and the salted
+    # split keeps the groups balanced. score_pairs keeps each pair at
+    # its smaller id's sub-bucket; a pair sharing several cells is
+    # scored once per cell with identical bytes, and dropDuplicates
+    # keeps one copy.
     nv = e.select("vec_id", "qv", "nv")
     aset = assigned.join(nv, "vec_id")
     a_rows = aset.select(
@@ -964,49 +919,16 @@ def q69_embedding_neardup_ivf(
         F.explode(F.sequence(F.lit(0), F.lit(NEARDUP_SALT - 1))).alias("salt"),
         F.lit(0).alias("probe_side"),
     )
-    import numpy as np
-    import pandas as pd
-
-    _empty = {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
 
     def _score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        am = pdf[pdf["probe_side"] == 1]
-        bm = pdf[pdf["probe_side"] == 0]
-        if am.empty or bm.empty:
-            return pd.DataFrame({c: [] for c in _empty}).astype(_empty)
-        ids_a = am["vec_id"].to_numpy()
-        ids_b = bm["vec_id"].to_numpy()
-        ma = np.array(am["qv"].tolist(), dtype=np.float64)
-        mb = np.array(bm["qv"].tolist(), dtype=np.float64)
-        rt_a = np.sqrt(am["nv"].to_numpy().astype(np.float64))
-        rt_b = np.sqrt(bm["nv"].to_numpy().astype(np.float64))
-        # b-side tiled (ADVICE r13: bound the live score matrix in the
-        # hot cell); dots are exact integers in float64, so tiling
-        # cannot change a single value
-        out_a, out_b, out_c = [], [], []
-        bch = max(1, SCORE_TILE_CELLS // max(1, len(ids_a)))
-        for bs in range(0, len(ids_b), bch):
-            idb = ids_b[bs : bs + bch]
-            cos = (ma @ mb[bs : bs + bch].T) / (
-                rt_a[:, None] * rt_b[bs : bs + bch][None, :]
-            )
-            ii, jj = np.nonzero((ids_a[:, None] < idb[None, :]) & (cos >= 0.349))
-            out_a.append(ids_a[ii])
-            out_b.append(idb[jj])
-            out_c.append(cos[ii, jj])
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a),
-                "vec_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        probe_side = pdf["probe_side"] == 1
+        return score_pairs(*_ivf_side(pdf[probe_side]), *_ivf_side(pdf[~probe_side]))
 
     return (
         a_rows.unionByName(b_rows)
         .repartition(n_parts, "cell_id", "salt")
         .groupBy("cell_id", "salt")
-        .applyInPandas(_score_group, "vec_a bigint, vec_b bigint, cosine double")
+        .applyInPandas(_score_group, PAIR_SCHEMA)
         .select("vec_a", "vec_b", (r6(F.col("cosine")) + F.lit(0.0)).alias("cosine"))
         .filter(F.col("cosine") >= NEARDUP_THRESHOLD)
         .dropDuplicates(["vec_a", "vec_b"])
@@ -1097,9 +1019,9 @@ def q55_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     e, state = fixed_point_kmeans_cached(spark, sf_dir, IVF_CELLS)
     cq = km_quantized(state)
     assigned = km_assign(e.select("vec_id", "qv"), cq)
-    # probe = top-IVF_PROBE cells by the same literal BIGINT distance,
-    # ranked map-only via array_sort (struct order (d, cell_id) == the
-    # oracle's ORDER BY) — no per-query window
+    # probe = top-IVF_PROBE cells by the same BIGINT distance, ranked
+    # map-only by (d, cell_id) == the oracle's ORDER BY — no per-query
+    # window
     probes = km_multi_assign(
         e.filter(F.col("vec_id") < IVF_N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
@@ -1254,21 +1176,14 @@ def qx133_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_query = F.col("vec_id") % 20 == 0
 
     # Queries × corpus scored per corpus BLOCK in one applyInPandas
-    # (round 13; guide §4.2 — the interpreted-HOF-fold trap): the
-    # crossJoin spelling evaluated cosine's three zip_with/aggregate
-    # folds interpreted per pair (~190k pairs × 192 lambda steps at
-    # sf0.1 — the query's dominant cost). The corpus is hashed into
-    # NEARDUP_BLOCKS groups and moves ONCE; the small query side is
-    # replicated to every group (the broadcast analog — a label-
-    # propagation audit samples its queries, so that side stays small
-    # by contract). Inside the group the dot accumulates dimension-by-
-    # dimension (vectorized outer-product adds), reproducing the JVM
-    # fold's left-to-right IEEE addition order bit-for-bit for both the
-    # numerator and each norm; den = nq·nc then one divide — cosine()'s
-    # exact op order. 6dp rounding and the top-k window stay JVM-side.
-    import numpy as np
-    import pandas as pd
-
+    # (round 13; guide §4.2 — the interpreted-HOF-fold trap): the corpus
+    # is hashed into NEARDUP_BLOCKS groups and moves ONCE; the small
+    # query side is replicated to every group (the broadcast analog — a
+    # label-propagation audit samples its queries, so that side stays
+    # small by contract). The vote needs every pair with its labels, so
+    # this query reads cosine_tiles directly — no pre-cut, no pair
+    # orientation; its norms fold dim by dim like norm2's aggregate.
+    # 6dp rounding and the top-k window stay JVM-side.
     qrows = emb.where(is_query).select(
         F.col("vec_id").alias("rid"),
         "label",
@@ -1289,6 +1204,10 @@ def qx133_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cosine double, neighbor_id bigint"
     )
 
+    def _fold_norms(m: np.ndarray) -> np.ndarray:
+        # sum() folds left to right from 0: norm2's JVM add order
+        return np.sqrt(sum(m[:, d] * m[:, d] for d in range(m.shape[1])))
+
     def _score_knn(pdf: pd.DataFrame) -> pd.DataFrame:
         qs = pdf[pdf["is_q"] == 1]
         cs = pdf[pdf["is_q"] == 0]
@@ -1304,38 +1223,19 @@ def qx133_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "neighbor_id": "int64",
                 }
             )
-        mq = np.array(qs["v"].tolist(), dtype=np.float64)
-        mc = np.array(cs["v"].tolist(), dtype=np.float64)
-        dim = mq.shape[1]
-        nq = np.zeros(len(qs))
-        for d in range(dim):  # dim-by-dim: the fold's add order
-            nq += mq[:, d] * mq[:, d]
-        rtq = np.sqrt(nq)
-        # corpus side tiled (ADVICE r13: the untiled query×corpus score
-        # matrix grows without bound with the corpus); per-vector and
-        # per-pair folds keep their dim-by-dim order inside each tile,
-        # so results are bit-equal
+        mq, mc = vectors(qs["v"]), vectors(cs["v"])
         frames = []
-        cch = max(1, SCORE_TILE_CELLS // max(1, len(qs)))
-        for css in range(0, len(cs), cch):
-            mct = mc[css : css + cch]
-            cst = cs.iloc[css : css + cch]
-            num = np.zeros((len(qs), len(mct)))
-            nc = np.zeros(len(mct))
-            for d in range(dim):  # dim-by-dim: the fold's add order
-                num += np.outer(mq[:, d], mct[:, d])
-                nc += mct[:, d] * mct[:, d]
-            cos = num / np.outer(rtq, np.sqrt(nc))
-            qi, ci = np.indices(cos.shape)
-            qi, ci = qi.ravel(), ci.ravel()
+        for lo, cos in cosine_tiles(mq, _fold_norms(mq), mc, _fold_norms(mc)):
+            qi, ci = (a.ravel() for a in np.indices(cos.shape))
+            ci = ci + lo
             frames.append(
                 pd.DataFrame(
                     {
                         "query_id": qs["rid"].to_numpy()[qi],
                         "true_label": qs["label"].to_numpy()[qi],
-                        "neighbor_label": cst["label"].to_numpy()[ci],
+                        "neighbor_label": cs["label"].to_numpy()[ci],
                         "cosine": cos.ravel(),
-                        "neighbor_id": cst["rid"].to_numpy()[ci],
+                        "neighbor_id": cs["rid"].to_numpy()[ci],
                     }
                 )
             )
@@ -1679,8 +1579,6 @@ def _round_half_up_exact(v):
     notions of tie coincide) and away-from-zero on binary ties, which
     is what this computes: np.rint for the non-ties (rint's half-even
     branch is unreachable there), floor/floor+1 by sign on the ties."""
-    import numpy as np
-
     fl = np.floor(v)
     # exact half-integer test: v*2 is lossless (power-of-two scale),
     # so "2v integral and v not" has no false positives — unlike
@@ -1718,9 +1616,6 @@ def pca_stats_phase1(emb: DataFrame) -> DataFrame:
     subset of its buckets' rows). Old-vs-new frames are asserted
     bit-equal in tests/test_statistics.py."""
     def _partials(it):
-        import numpy as np
-        import pandas as pd
-
         iu = np.triu_indices(PCA_DIM)
         acc: dict = {}  # bkt -> [q int64[2144], n]
         for pdf in it:
@@ -2147,8 +2042,6 @@ def qx194_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (the oracle replays it as a recursive CTE with
     NOT EXISTS argmax; float ties would otherwise fork the whole
     selection tail)."""
-    import pandas as pd
-
     emb = load_catalog(spark, sf_dir).table("embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
@@ -3103,8 +2996,8 @@ def qx275_neardup_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     same reason any summation order is: integer-valued doubles below
     2^53.
 
-    Scale shape: assignment is map-only (sort_array over a 16-struct
-    array — no corpus window); the candidate join is cell-bucketed
+    Scale shape: assignment is map-only (one assign_cells ranking per
+    Arrow batch — no corpus window); the candidate join is cell-bucketed
     (never all-pairs; q69's salted variant is the skew-hardened
     spelling, 100×-certified); the verify cosine runs only on
     candidates. Trained cells (q69) buy recall; seeded cells buy a
@@ -3115,79 +3008,26 @@ def qx275_neardup_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     crows = sorted(centroids.collect(), key=lambda r: r["cell_id"])
 
-    # Multi-probe assignment vectorized per Arrow batch (round 14,
-    # guide §4.1/§4.2): the previous spelling evaluated ND_EXACT_CELLS
-    # interpreted zip_with/aggregate dot folds + a struct sort_array
-    # per row. ivf_seeded_assign computes the IDENTICAL similarities
-    # and (s desc, cell_id asc) ranking; see the helper's exactness
-    # comment. (Historical note kept from r13: only the skinny
-    # (vec_id, qv, nv, cell_id) rows flow into the bucketed self-join
-    # below — scoring before dedup measured 3.6× slower at sf0.1.)
+    # Only the skinny (vec_id, qv, nv, cell_id) rows flow into the
+    # per-cell groups (scoring before dedup measured 3.6× slower at
+    # sf0.1 in the JVM-fold spelling).
     assigned = ivf_seeded_assign(q, crows, probe=ND_EXACT_PROBE)
 
-    # Verify PER CELL inside one applyInPandas (round 13, second pass;
-    # guide §8 "move heavy bytes once"): the previous spelling built a
-    # skinny distinct (vec_a, vec_b) candidate frame, re-attached both
-    # 64-long vectors by id-joins, and shipped ~1M pairs × 2 arrays
-    # (≈1 GB) through Arrow to a vectorized dot — the transfer WAS the
-    # remaining cost (6.5 s isolated; the dot itself is milliseconds).
-    # Scoring inside each cell's group moves each vector ND_EXACT_PROBE
-    # times (corpus×3 rows ≈ 3 MB at sf0.1) instead of once per PAIR,
-    # and the up-to-PROBE× re-scored shared-cell pairs that made
-    # score-before-dedup 3.6× slower in the JVM-fold spelling cost ~0
-    # under a matmul. Exactness: every qv component is an integer
-    # ≤ 1e6, so all dot partial sums are integers < 2^53 — float64
-    # matmul is EXACT whatever its accumulation order, bit-equal to the
-    # int64 fold; the sim chain then applies _ivf_sim's IEEE op order.
-    # Duplicate pairs from shared cells carry identical bytes, so the
-    # post-filter dropDuplicates is a pure dedup. The Python-side 0.349
-    # pre-cut only discards pairs that can never round to ≥ 0.35 (r6 is
-    # half-up at 0.3499995); the authoritative threshold stays JVM-side
-    # on the F.round value. A hot cell concentrates one group in one
-    # task — q69's salted spelling remains the documented skew-hardened
-    # path at real scale.
-    import numpy as np
-    import pandas as pd
-
+    # Verify PER CELL inside one applyInPandas (round 13; guide §8
+    # "move heavy bytes once"): shipping ~1M candidate pairs × 2 arrays
+    # through Arrow WAS the cost (6.5 s isolated at sf0.1). Each cell
+    # scores its members against themselves, so every vector moves
+    # ND_EXACT_PROBE times; a pair sharing several cells is re-scored
+    # with identical bytes (~0 under a matmul), and dropDuplicates is a
+    # pure dedup. A hot cell concentrates one group in one task — q69's
+    # salted spelling is the skew-hardened path at real scale.
     def _score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-            )
-        order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
-        ids = pdf["vec_id"].to_numpy()[order]
-        m = np.array(pdf["qv"].tolist(), dtype=np.float64)[order]
-        rt = np.sqrt(pdf["nv"].to_numpy().astype(np.float64))[order]
-        # row-tiled upper triangle (ADVICE r13: the untiled occupancy²
-        # matrix is quadratic memory in the hot cell's population);
-        # dots are exact integers in float64, so tiling cannot change
-        # a single value
-        out_a, out_b, out_c = [], [], []
-        rch = max(1, SCORE_TILE_CELLS // n)
-        for a in range(0, n - 1, rch):
-            b = min(a + rch, n)
-            dt = m[a:b] @ m.T
-            mask = np.zeros((b - a, n), dtype=bool)
-            for r in range(b - a):
-                mask[r, a + r + 1 :] = True  # j > i, i = a + r
-            ii, jj = np.nonzero(mask)
-            cos = dt[ii, jj] / (rt[ii + a] * rt[jj])
-            keep = cos >= 0.349
-            out_a.append(ids[ii + a][keep])
-            out_b.append(ids[jj][keep])
-            out_c.append(cos[keep])
-        return pd.DataFrame(
-            {
-                "vec_a": np.concatenate(out_a),
-                "vec_b": np.concatenate(out_b),
-                "cosine": np.concatenate(out_c),
-            }
-        )
+        side = _ivf_side(pdf)
+        return score_pairs(*side, *side)
 
     return (
         assigned.groupBy("cell_id")
-        .applyInPandas(_score_cell, "vec_a bigint, vec_b bigint, cosine double")
+        .applyInPandas(_score_cell, PAIR_SCHEMA)
         .withColumn("cosine", r6(F.col("cosine")))
         .filter(F.col("cosine") >= NEARDUP_THRESHOLD)
         .dropDuplicates(["vec_a", "vec_b"])

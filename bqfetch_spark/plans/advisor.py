@@ -4,8 +4,8 @@ The reference sizes chunks from table bytes, free RAM and cores
 (`get_nb_chunks_approximation`, bqfetch/bqfetch.py:374-454). On Spark,
 memory safety is the engine's job (spill, AQE coalescing); what remains
 useful is the *advisory* arithmetic — how many partitions a table wants
-for a target partition size — and the skew diagnostic (bqfetch/
-bqfetch.py:410-419).
+for a target partition size. The reference's skew diagnostic
+(bqfetch/bqfetch.py:410-419) is the registry query q32_skew_report.
 """
 
 from __future__ import annotations
@@ -183,16 +183,3 @@ def q61_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows, "table string, bytes bigint, target_bytes bigint, suggested_partitions bigint"
     )
 
-
-def skew_report(df: DataFrame, column: str) -> DataFrame:
-    """Generic form of the reference's ±25% dispersion diagnostic
-    (bqfetch/bqfetch.py:410-419) for any DataFrame/column; the
-    fixture-bound oracle-checked version is q32_skew_report."""
-    counts = df.groupBy(F.col(column).alias("value")).agg(F.count(F.lit(1)).alias("cnt"))
-    stats = counts.agg(F.avg("cnt").alias("mean_cnt"))
-    return counts.crossJoin(F.broadcast(stats)).select(
-        "value",
-        "cnt",
-        F.col("mean_cnt"),
-        (F.abs(F.col("cnt") - F.col("mean_cnt")) > 0.25 * F.col("mean_cnt")).alias("is_dispersed"),
-    )

@@ -148,9 +148,3 @@ def build_span_store(spark: SparkSession, sf_dir: str, work_dir: str) -> str:
 
     return store_dir
 
-
-def run_incremental_span_mask(
-    spark: SparkSession, sf_dir: str, work_dir: str
-) -> DataFrame:
-    """Build the span store under work_dir, then report from it."""
-    return span_report(spark, build_span_store(spark, sf_dir, work_dir))

@@ -17,11 +17,13 @@ def test_machine_adjudication_branches():
     assert out["q_noise"]["isolated_min"] == 2.0
 
     # cap: only the worst ISOLATED_CAP flags get a re-measure
-    many = {f"q{i:02d}": {"prev": 1.0, "now": 3.0 + i} for i in range(12)}
+    n_flags = bench.ISOLATED_CAP + 4
+    many = {f"q{i:02d}": {"prev": 1.0, "now": 3.0 + i} for i in range(n_flags)}
     calls = []
     out = bench._machine_adjudicate(many, remeasure=lambda n: (calls.append(n), [1.0])[1])
     assert len(calls) == bench.ISOLATED_CAP
     capped = [n for n, r in out.items() if "cap" in r["verdict"]]
-    assert len(capped) == 12 - bench.ISOLATED_CAP
+    assert len(capped) == n_flags - bench.ISOLATED_CAP
     # the worst ratios were prioritized
-    assert "q11" in calls and "q00" not in calls
+    worst, best = f"q{n_flags - 1:02d}", "q00"
+    assert worst in calls and best not in calls
