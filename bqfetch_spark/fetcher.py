@@ -19,20 +19,25 @@ Reference mapping:
   deleted — Spark's scheduler and AQE own parallelism and memory.
 - ``fetch_to_pandas`` keeps the reference's pandas result contract
   (:275) via Arrow, and ``iter_batches`` exposes the columnar stream
-  the reference read from the Storage API (:496-502).
+  the reference read from the Storage API (:496-502) as JVM-encoded
+  Arrow frames served partition by partition, with no Python worker.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from typing import Any, Iterator
+from typing import TYPE_CHECKING, Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bqfetch_spark.catalog import load_catalog
+from bqfetch_spark.compat import arrow_batches
 from bqfetch_spark.registry import register
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 @dataclass(frozen=True)
@@ -372,49 +377,39 @@ class Fetcher:
         ref: TableRef,
         chunk: FetchingChunk | None,
         batch_rows: int = 65536,
-    ):
-        """Columnar Arrow record batches (reference read Arrow batches
-        from the Storage API, bqfetch/bqfetch.py:496-502), streamed
-        INCREMENTALLY and ARROW-NATIVE end to end: executors serialize
-        their Arrow batches to IPC bytes (mapInArrow — data never
-        leaves columnar form), the driver pulls those one row at a
-        time via toLocalIterator (bounded memory: one in-flight IPC
-        batch + at most ``batch_rows`` pending rows, however large the
-        chunk is) and re-slices them to ``batch_rows``. Round 2's
-        spelling went Row.asDict() → from_pylist — a per-row Python
-        hop that also broke struct columns and shifted naive-datetime
-        instants on non-UTC drivers; both gone, the bytes on the wire
-        ARE Arrow. For a chunk-sized read that fits in driver memory,
-        fetch_to_pandas is the faster (single toArrow) path; this is
-        the 100 TB-safe spout."""
-        import pyarrow as pa
+    ) -> Iterator[pa.RecordBatch]:
+        """Columnar Arrow record batches of ``batch_rows`` rows (the last
+        may be shorter), streamed with bounded driver memory — the
+        reference read Arrow batches from the Storage API
+        (bqfetch/bqfetch.py:496-502). The JVM encodes the Arrow frames
+        and serves them one partition at a time (``compat.arrow_batches``:
+        no Python worker, no pickled rows), so driver memory stays at two
+        partitions' frames plus ``batch_rows`` pending rows however large
+        the chunk is. On classic PySpark the batches carry the schema
+        ``toArrow()`` gives. For a chunk that fits in driver memory,
+        ``fetch_to_pandas`` is the faster single-``toArrow`` path; this
+        is the 100 TB-safe spout."""
+        if batch_rows <= 0:
+            raise ValueError(f"batch_rows must be positive, got {batch_rows}")
+        return _rebatch(arrow_batches(self.fetch(ref, chunk)), batch_rows)
 
-        df = self.fetch(ref, chunk)
 
-        def _to_ipc(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            import pyarrow as _pa
+def _rebatch(
+    batches: Iterator[pa.RecordBatch], batch_rows: int
+) -> Iterator[pa.RecordBatch]:
+    """Re-slice a batch stream to ``batch_rows``-row batches."""
+    import pyarrow as pa
 
-            for b in batches:
-                sink = _pa.BufferOutputStream()
-                with _pa.ipc.new_stream(sink, b.schema) as writer:
-                    writer.write_batch(b)
-                yield _pa.RecordBatch.from_pydict(
-                    {"ipc": [sink.getvalue().to_pybytes()]}
-                )
-
-        pending: pa.Table | None = None
-        for row in df.mapInArrow(_to_ipc, "ipc binary").toLocalIterator(
-            prefetchPartitions=True
-        ):
-            tbl = pa.ipc.open_stream(pa.py_buffer(row["ipc"])).read_all()
-            pending = tbl if pending is None else pa.concat_tables([pending, tbl])
-            while pending.num_rows >= batch_rows:
-                head = pending.slice(0, batch_rows).combine_chunks()
-                yield head.to_batches(max_chunksize=batch_rows)[0]
-                pending = pending.slice(batch_rows)
-        if pending is not None and pending.num_rows:
-            for batch in pending.combine_chunks().to_batches(max_chunksize=batch_rows):
-                yield batch
+    pending: pa.Table | None = None
+    for batch in batches:
+        tbl = pa.Table.from_batches([batch])
+        pending = tbl if pending is None else pa.concat_tables([pending, tbl])
+        while pending.num_rows >= batch_rows:
+            head = pending.slice(0, batch_rows).combine_chunks()
+            yield head.to_batches(max_chunksize=batch_rows)[0]
+            pending = pending.slice(batch_rows)
+    if pending is not None and pending.num_rows:
+        yield from pending.combine_chunks().to_batches(max_chunksize=batch_rows)
 
 
 # ---------------------------------------------------------------------------

@@ -147,6 +147,39 @@ def test_cms_probe_raises_capability_error_without_jvm(spark, monkeypatch):
         all_queries()["qx147_heavy_hitters_cms"].fn(spark, SF_SMOKE)
 
 
+def test_arrow_batches_fallback_matches_classic_route(spark):
+    """Without classic internals the Arrow stream takes the mapInArrow
+    + toLocalIterator route and yields the same rows as the JVM-encoded
+    classic route."""
+    import pyarrow as pa
+
+    import bqfetch_spark.compat as compat
+
+    df = spark.read.parquet(os.path.join(SF_SMOKE, "events.parquet"))
+    classic = pa.Table.from_batches(list(compat.arrow_batches(df)))
+    fallback = pa.Table.from_batches(list(compat.arrow_batches(_NoInternals(df))))
+    assert classic.num_rows == fallback.num_rows == df.count()
+    assert classic.column_names == fallback.column_names
+    key = [("event_id", "ascending")]
+    assert fallback.cast(classic.schema).sort_by(key).equals(classic.sort_by(key))
+
+
+def test_iter_batches_runs_no_python_worker_on_classic_route(spark, monkeypatch):
+    """The classic route never calls mapInArrow: with it broken,
+    iter_batches still delivers every row."""
+    from bqfetch_spark.fetcher import Fetcher, TableRef
+
+    def _boom(self, *args, **kwargs):
+        raise AssertionError("mapInArrow reached on the classic route")
+
+    ref = TableRef(SF_SMOKE, "orders")
+    fetcher = Fetcher(spark)
+    df = fetcher.table(ref)
+    monkeypatch.setattr(type(df), "mapInArrow", _boom)
+    rows = sum(b.num_rows for b in fetcher.iter_batches(ref, None, batch_rows=500))
+    assert rows == df.count()
+
+
 @pytest.mark.skipif(
     not os.environ.get("SPARK_REMOTE")
     or importlib.util.find_spec("grpc") is None,

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from bqfetch_spark.catalog import TABLES
 from bqfetch_spark.fetcher import Fetcher, TableRef
 from tests.conftest import SF_SMOKE
 
@@ -60,8 +61,6 @@ def test_chunks_cover_null_domain_values(spark, fetcher, tmp_path, by_values):
     advice: NULL rows were silently lost from every chunk)."""
     import os
 
-    from bqfetch_spark.catalog import TABLES
-
     # the catalog loads every fixture table for a directory: symlink the
     # untouched ones, rewrite only customer with NULLs injected
     for t in TABLES:
@@ -103,28 +102,75 @@ def test_fetch_to_pandas_and_arrow(spark, fetcher):
     assert sum(b.num_rows for b in batches) == 5
 
 
-def test_iter_batches_arrow_native(spark, fetcher):
-    """The spout is Arrow end-to-end (round-3 fix): batches arrive
-    Arrow-typed, sliced to batch_rows, and value-identical (incl.
-    timestamp instants) to a single toArrow materialization — no
-    per-row Python dict hop that shifted naive datetimes on non-UTC
-    drivers."""
+def _rows(tbl):
+    """Order-independent row multiset (repr keeps NaN == NaN and list
+    cells comparable)."""
+    from collections import Counter
+
+    return Counter(repr(r) for r in tbl.to_pylist())
+
+
+def _assert_stream_matches_to_arrow(fetcher, ref, chunk, batch_rows):
+    """iter_batches must be schema- and value-identical to a single
+    toArrow() materialization of the same chunk, sliced to batch_rows."""
     import pyarrow as pa
 
-    ref = TableRef(SF_SMOKE, "events")
-    batches = list(fetcher.iter_batches(ref, None, batch_rows=100))
-    expected = fetcher.fetch(ref, None).toArrow()
+    expected = fetcher.fetch(ref, chunk).toArrow()
+    batches = list(fetcher.iter_batches(ref, chunk, batch_rows=batch_rows))
     assert all(isinstance(b, pa.RecordBatch) for b in batches)
-    assert all(b.num_rows <= 100 for b in batches)
-    assert sum(b.num_rows for b in batches) == expected.num_rows
-    got = pa.Table.from_batches(batches).sort_by("event_id")
-    assert got.equals(expected.sort_by("event_id").cast(got.schema))
+    assert all(0 < b.num_rows <= batch_rows for b in batches)
+    assert all(b.schema == expected.schema for b in batches)
+    got = pa.Table.from_batches(batches, schema=expected.schema)
+    assert got.num_rows == expected.num_rows
+    assert _rows(got) == _rows(expected)
+
+
+@pytest.mark.parametrize("table", TABLES)
+def test_iter_batches_arrow_native(spark, fetcher, table):
+    """The spout is Arrow end to end: batches arrive Arrow-typed,
+    sliced to batch_rows, and identical to toArrow() for every fixture
+    table — timestamp instants (events.ts) and list columns
+    (embeddings) included."""
+    _assert_stream_matches_to_arrow(fetcher, TableRef(SF_SMOKE, table), None, 100)
+
+
+def test_iter_batches_value_list_chunk(spark, fetcher):
+    ref = TableRef(SF_SMOKE, "lineitem")
+    chunk = fetcher.chunks(ref, "l_suppkey", by_nb_chunks=3, by_values=True)[1]
+    _assert_stream_matches_to_arrow(fetcher, ref, chunk, 256)
+
+
+def test_iter_batches_degenerate_chunk_is_empty(spark, fetcher):
+    """A chunk that matches nothing (F.lit(False) predicate) streams
+    zero batches instead of raising."""
+    from bqfetch_spark.fetcher import FetchingChunk
+
+    chunk = FetchingChunk("c_custkey", 0, 1, None, None, 0, elements=())
+    ref = TableRef(SF_SMOKE, "customer")
+    assert fetcher.fetch(ref, chunk).count() == 0
+    assert list(fetcher.iter_batches(ref, chunk, batch_rows=10)) == []
+
+
+def test_iter_batches_early_close_releases_stream(spark, fetcher):
+    """Abandoning a stream after one batch must release its serving
+    socket and job: the next stream on the same session runs to the
+    full row count."""
+    ref = TableRef(SF_SMOKE, "lineitem")
+    for batch in fetcher.iter_batches(ref, None, batch_rows=100):
+        assert batch.num_rows == 100
+        break
+    rows = sum(b.num_rows for b in fetcher.iter_batches(ref, None, batch_rows=100))
+    assert rows == fetcher.table(ref).count()
 
 
 def test_invalid_args(spark, fetcher):
     ref = TableRef(SF_SMOKE, "customer")
     with pytest.raises(ValueError):
         fetcher.chunks(ref, "c_custkey", by_nb_chunks=0)
+    # rejected at call time: the stream (and its Spark job) never starts
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="batch_rows"):
+            fetcher.iter_batches(ref, None, batch_rows=bad)
 
 
 def test_chunks_by_size_mode(spark, fetcher, duck):
