@@ -263,15 +263,15 @@ GROUP BY 1, 2
 @register("q98_streaming_rollup_maintenance", oracle=ROLLUP_MAINT_ORACLE, tags=("streaming", "incremental", "agg"))
 def q98_streaming_rollup_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained hourly rollup (streaming/rollup.py):
-    ingest waves upsert per-(hour, event_type) count/DECIMAL-sum
-    partials into a partitioned parquet store, rewriting ONLY the hour
-    partitions each wave touches (dynamic partition overwrite) — the
+    each ingest wave lands its per-(hour, event_type) count/DECIMAL-sum
+    partials as an append-only (day, ingest_batch) partition of a
+    parquet store, never reading the store on the write path — the
     materialized-view maintenance pattern a 100 TB metrics table needs
-    (per-wave cost is O(wave + touched hours), history never
-    recomputed). Additive partials make the store bit-identical to a
-    one-shot batch rollup however ingest was sliced, so this carries a
-    FULL DuckDB oracle; the multi-wave slicing itself is pinned by a
-    three-file test (tests/test_sources_streaming.py)."""
+    (per-wave cost is O(wave), history never recomputed; readers sum
+    the partials per bucket). Additive partials make the store
+    bit-identical to a one-shot batch rollup however ingest was sliced,
+    so this carries a FULL DuckDB oracle; the multi-wave slicing itself
+    is pinned by a three-file test (tests/test_sources_streaming.py)."""
     from bqfetch_spark.workcache import overwrite_workdir
 
     from bqfetch_spark.streaming.rollup import run_rollup_maintenance
@@ -374,6 +374,7 @@ def qx287_ann_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_int_stores,
         merged_store_ready,
     )
+    from bqfetch_spark.streaming.waves import wave_of
     from bqfetch_spark.workcache import overwrite_workdir
 
     q, _ = pq_frame_and_sample(spark, sf_dir)
@@ -381,9 +382,7 @@ def qx287_ann_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = overwrite_workdir("annmerge", sf_dir)
     shards = []
-    for i, pred in enumerate(
-        (F.pmod("vec_id", F.lit(5)) <= 2, F.pmod("vec_id", F.lit(5)) >= 3)
-    ):
+    for i, pred in enumerate((wave_of("vec_id") <= 2, wave_of("vec_id") >= 3)):
         store = os.path.join(work, f"shard{i}", "codes")
         _write_codes_wave(
             ivfpq_int_encode(
@@ -391,7 +390,6 @@ def qx287_ann_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             store,
             None,
-            overwrite_all=True,
         )
         shards.append(store)
 
@@ -685,15 +683,16 @@ def qx242_ann_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         km_quantized,
     )
     from bqfetch_spark.streaming.ann_index import ANN_DRIFT_JSD, occupancy_jsd
+    from bqfetch_spark.streaming.waves import wave_of
 
     q, _ = pq_frame_and_sample(spark, sf_dir)
-    initial = q.filter(F.pmod("vec_id", F.lit(5)) <= 2).select(
+    initial = q.filter(wave_of("vec_id") <= 2).select(
         "vec_id", F.col("qn").alias("qv")
     )
-    wave_in = q.filter(F.pmod("vec_id", F.lit(5)) == 3).select(
+    wave_in = q.filter(wave_of("vec_id") == 3).select(
         "vec_id", F.col("qn").alias("qv")
     )
-    wave_dr = q.filter(F.pmod("vec_id", F.lit(5)) == 4).select(
+    wave_dr = q.filter(wave_of("vec_id") == 4).select(
         "vec_id", F.transform("qn", lambda x: F.abs(x)).alias("qv")
     )
 
@@ -812,13 +811,12 @@ ORDER BY version
 def qx246_streaming_versioned_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest INTO the versioned table (qx241's manifest
     protocol): three document waves arrive as separate micro-batches
-    (maxFilesPerTrigger=1, mtimes pinned ascending so wave order is
-    the file order), and every foreachBatch APPEND-commits one
-    snapshot — so the table's history IS the ingest log. After the
-    bounded run, each version is read back AS OF and fingerprinted
-    (qx230's order-invariant row-hash sum). The oracle reconstructs
-    version k as waves 0..k-1 from the source table, so the value
-    hash proves (a) the stream committed one snapshot per wave, (b)
+    in wave order (the ordered replay of streaming/waves.py), and every
+    foreachBatch APPEND-commits one snapshot — so the table's history
+    IS the ingest log. After the bounded run, each version is read back
+    AS OF and fingerprinted (qx230's order-invariant row-hash sum). The
+    oracle reconstructs version k as waves 0..k-1 from the source
+    table, so the value hash proves (a) the stream committed one snapshot per wave, (b)
     append commits are cumulative, (c) every historical snapshot
     still reads back byte-identical after later commits — the
     exactly-the-ingest-log contract a warehouse's load history gives.
@@ -831,43 +829,18 @@ def qx246_streaming_versioned_ingest(spark: SparkSession, sf_dir: str) -> DataFr
     from bqfetch_spark.workcache import overwrite_workdir
 
     from bqfetch_spark.operators.lakehouse import commit_snapshot, read_snapshot, table_version
+    from bqfetch_spark.streaming.waves import replay_waves
 
     work = overwrite_workdir("vingest", sf_dir)
     table_dir = os.path.join(work, "table")
-    incoming = os.path.join(work, "incoming")
-    os.makedirs(incoming)
-
     docs = load_catalog(spark, sf_dir).table("documents").select("doc_id", "text")
-    for w in (0, 1, 2):
-        path = os.path.join(incoming, f"wave_{w}")
-        docs.filter(F.col("doc_id") % 3 == w).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path)
-    # pin ascending mtimes so the file source discovers waves in order
-    for i, w in enumerate((0, 1, 2)):
-        base = 1_000_000_000 + i * 60
-        p = os.path.join(incoming, f"wave_{w}")
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (base, base))
-        os.utime(p, (base, base))
-
-    schema = spark.read.parquet(os.path.join(incoming, "wave_0")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(incoming, "wave_*"))
+    replay_waves(
+        spark,
+        [docs.filter(F.col("doc_id") % 3 == w) for w in (0, 1, 2)],
+        work,
+        lambda batch, bid: commit_snapshot(spark, table_dir, batch, mode="append"),
+        ordered=True,
     )
-
-    def _commit(batch: DataFrame, batch_id: int) -> None:
-        commit_snapshot(spark, table_dir, batch, mode="append")
-
-    q = (
-        stream.writeStream.foreachBatch(_commit)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     h = F.conv(
         F.substring(F.md5(F.concat_ws("|", F.col("doc_id").cast("string"), "text")), 1, 15),

@@ -991,8 +991,8 @@ def _q56_oracle() -> str:
     return _ivfpq_oracle()
 
 
-# the streaming index trains on the 60% initial ingest (_wave_of() <= 2
-# in streaming/ann_index.py) and freezes; the oracle mirrors exactly
+# the streaming index trains on the 60% initial ingest (wave_of("vec_id")
+# <= 2, streaming/waves.py) and freezes; the oracle mirrors exactly
 # that slice as its training predicate
 Q57_TRAIN_WHERE = "vec_id % 5 <= 2"
 
@@ -1239,8 +1239,10 @@ def q57_int_artifacts(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     shared-artifact stance: production trains once, serves many)."""
     key = (spark.sparkContext.applicationId, sf_dir, "q57-train")
     if key not in _Q56_MEMO:
+        from bqfetch_spark.streaming.waves import wave_of
+
         q, _ = pq_frame_and_sample(spark, sf_dir)
-        initial = q.filter(F.pmod("vec_id", F.lit(5)) <= 2)
+        initial = q.filter(wave_of("vec_id") <= 2)
         _q56_memo_put(key, train_int_artifacts(initial))
     return _Q56_MEMO[key]
 

@@ -34,6 +34,7 @@ exact baseline is gated in tests/test_ann_recall.py.
 from __future__ import annotations
 
 import os
+import shutil
 
 import numpy as np
 
@@ -46,12 +47,11 @@ from bqfetch_spark.operators.pq import (
     train_coarse_centroids,
     unit_normalized,
 )
-
-# deterministic 3-way ingest split: 60% initial build, two 20% waves.
-# A function, not a module-level Column: building a Column requires an
-# active SparkContext, which must not be an import-time prerequisite.
-def _wave_of() -> "F.Column":
-    return F.pmod(F.col("vec_id"), F.lit(5))
+from bqfetch_spark.streaming.waves import (
+    BACKFILL_BATCH_ID,
+    backfill_and_replay,
+    write_wave,
+)
 
 
 def build_index(
@@ -191,22 +191,17 @@ def _write_codes_wave(
     wave lands as a dynamic overwrite of its own (cell, batch)
     partitions, so a re-run replaces its half-written codes instead of
     appending duplicates. Without a batch_id (manual bulk adds) the
-    write is a plain append under ingest_batch=-1."""
-    out = _clustered_for_store(codes).withColumn(
-        "ingest_batch",
-        F.lit(-1 if batch_id is None else int(batch_id)).cast("bigint"),
-    )
-    writer = out.write.partitionBy("cell_id", "ingest_batch")
+    write is a plain append under ingest_batch=-1; ``overwrite_all``
+    first clears the whole store (the offline rebuild)."""
     if overwrite_all:
-        writer.mode("overwrite").parquet(store)
-    elif batch_id is None:
-        writer.mode("append").parquet(store)
-    else:
-        (
-            writer.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(store)
-        )
+        shutil.rmtree(store, ignore_errors=True)
+    write_wave(
+        _clustered_for_store(codes),
+        store,
+        batch_id,
+        cols=("cell_id",),
+        untagged=BACKFILL_BATCH_ID,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -324,8 +319,6 @@ def merge_int_stores(dst_store: str, src_stores: list[str]) -> int:
     in-place sibling of partial_retrain's journaled swap; shard
     sources are read-only throughout, so a retry never loses data).
     Returns the number of part files merged."""
-    import shutil
-
     shutil.rmtree(dst_store, ignore_errors=True)
     os.makedirs(dst_store)
     n_files = 0
@@ -370,7 +363,7 @@ def append_wave(
     batch_id: int | None = None,
 ) -> None:
     """One ingest wave: encode against the FROZEN artifacts, append
-    codes to the store (partitioned by (ingest_batch, cell_id) — a
+    codes to the store (partitioned by (cell_id, ingest_batch) — a
     probed search still prunes on the cell_id level). O(wave); never
     reads the store.
 
@@ -392,7 +385,7 @@ def run_incremental_ann_index(
 ) -> DataFrame:
     """Bounded streaming run on the INTEGER chain (full value-hash
     oracle since round 12 — _q57_oracle in operators/pq.py): 60% of
-    the embeddings (vec_id % 5 <= 2, the _wave_of slices) train the
+    the embeddings (vec_id % 5 <= 2, the wave_of slices) train the
     frozen exact-integer artifacts and build the initial code store;
     the remaining 40% arrives as two wave files through a foreachBatch
     stream that appends frozen-artifact codes (O(wave), bit-identical
@@ -400,62 +393,25 @@ def run_incremental_ann_index(
     ADC top-10 search over the maintained store (pqi_ivf_search, the
     exact search q56 serves from its one-shot store)."""
     from bqfetch_spark.operators.pq import (
-        ivfpq_int_encode,
         pq_frame_and_sample,
         pqi_ivf_search,
         q57_int_artifacts,
     )
-    from bqfetch_spark.streaming.ownership import claim_store, owner_key_for_checkpoint
 
     index_dir = os.path.join(work_dir, "index")
-    incoming_dir = os.path.join(work_dir, "incoming")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
     store = os.path.join(index_dir, "codes")
-
     # the session-memoized quantized frame (one checkpoint feeds q56,
     # qx240 and this run — the shared-artifact stance); the frozen
     # integer artifacts ride the same memo (shared with qx242's drift
     # monitor), so repeat runs skip the training chain entirely
     q, _ = pq_frame_and_sample(spark, sf_dir)
-    initial = q.filter(_wave_of() <= 2)
     cq_sorted, books = q57_int_artifacts(spark, sf_dir)
     _write_int_artifacts(cq_sorted, books, index_dir)
-    _write_codes_wave(
-        ivfpq_int_encode(initial.select("vec_id", "qn"), cq_sorted, books),
-        store,
-        None,
-        overwrite_all=True,
+    backfill_and_replay(
+        spark, q.select("vec_id", "qn"), "vec_id", work_dir, store,
+        lambda batch, bid: append_int_wave(spark, batch, index_dir, bid),
+        ordered=False,
     )
-    # after the backfill overwrite: the codes store keys appends on the
-    # foreachBatch id — claim it for this checkpoint lineage so a fresh
-    # checkpoint can't restart at batch 0 over it (streaming/ownership.py)
-    claim_store(store, owner_key_for_checkpoint(ckpt_dir))
-
-    # the two remaining slices arrive as separate files → separate
-    # micro-batches (maxFilesPerTrigger=1)
-    os.makedirs(incoming_dir, exist_ok=True)
-    for wave in (3, 4):
-        q.filter(_wave_of() == wave).select("vec_id", "qn").coalesce(
-            1
-        ).write.mode("overwrite").parquet(os.path.join(incoming_dir, f"wave_{wave}"))
-    schema = spark.read.parquet(os.path.join(incoming_dir, "wave_3")).schema
-    incoming = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(incoming_dir, "wave_*"))
-    )
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        append_int_wave(spark, batch, index_dir, batch_id=batch_id)
-
-    sq = (
-        incoming.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-
     codes = spark.read.parquet(store)
     return pqi_ivf_search(spark, codes, q, cq_sorted, books)
 
@@ -518,8 +474,7 @@ def retrain_index(
     re-encode every vector, and swap the store. At 100 TB the rebuild
     is one encode pass over the vectors — exactly the one-shot build
     cost — and runs beside the serving store until the swap; here the
-    swap is an in-place overwrite (the parquet store's dynamic
-    partition overwrite)."""
+    swap clears the store and rewrites it under ingest_batch=-1."""
     cents, books = build_index(spark, emb_n_all, dim, index_dir)
     _write_codes_wave(
         ivfpq_encode(spark, emb_n_all, cents, books),
@@ -568,7 +523,6 @@ def recover_retrain(index_dir: str) -> bool:
     journal and staging leftovers. Idempotent: safe to call at every
     store open; returns True if a retrain was completed."""
     import json
-    import shutil
 
     journal = os.path.join(index_dir, _RETRAIN_JOURNAL)
     if not os.path.exists(journal):
@@ -679,7 +633,6 @@ def partial_retrain(
     assignment — the standard partial-retrain approximation, bounded
     by the probe redundancy)."""
     import json
-    import shutil
 
     from bqfetch_spark.operators.pq import PQ_ITERS, PQ_SEED, _lloyd, fit_sample
 
@@ -713,7 +666,7 @@ def partial_retrain(
 
     staging = store + ".retrain"
     shutil.rmtree(staging, ignore_errors=True)
-    _write_codes_wave(recoded, staging, None, overwrite_all=True)
+    _write_codes_wave(recoded, staging, None)
     _write_codes_wave(cold_wave, staging, None)
     # stage the new artifacts, then COMMIT via the journal: everything
     # after this point is idempotent roll-forward (recover_retrain).

@@ -26,15 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bqfetch_spark.operators.llm_pipeline import CONTAM_MOD, contam_shingles
-
-BACKFILL_BATCH_ID = -1
-MANUAL_BATCH_ID = -2
-
-
-def _wave_of() -> "F.Column":
-    # deterministic 3-way ingest split, the drift/pca_stats convention:
-    # 60% backfill, two 20% waves
-    return F.pmod(F.col("doc_id"), F.lit(5))
+from bqfetch_spark.streaming.waves import backfill_and_replay, write_wave
 
 
 def build_benchmark_store(docs: DataFrame, bench_dir: str) -> None:
@@ -62,24 +54,14 @@ def flag_wave(
     store (hash bucket + gram recheck — the q40 collision-safe
     pattern), and per-doc distinct-shared-gram counts land under the
     wave's own ingest_batch partition."""
-    bid = MANUAL_BATCH_ID if batch_id is None else int(batch_id)
     bench = spark.read.parquet(bench_dir)
     sh = contam_shingles(wave_docs)
     flagged = (
         sh.join(F.broadcast(bench), (sh["h"] == bench["h"]) & (sh["g"] == bench["bg"]))
         .groupBy("doc_id")
         .agg(F.count_distinct("g").cast("bigint").alias("n_shared_ngrams"))
-        .withColumn("ingest_batch", F.lit(bid).cast("bigint"))
     )
-    writer = flagged.coalesce(1).write.partitionBy("ingest_batch")
-    if batch_id is None:
-        writer.mode("append").parquet(store_dir)
-    else:
-        (
-            writer.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(store_dir)
-        )
+    write_wave(flagged.coalesce(1), store_dir, batch_id)
 
 
 FLAG_STORE_SCHEMA = "doc_id long, n_shared_ngrams long, ingest_batch long"
@@ -108,60 +90,20 @@ def run_incremental_decontamination(
     foreachBatch (AvailableNow — per-doc flags are batch-slicing
     invariant), and report from the store."""
     from bqfetch_spark.catalog import load_catalog
-    from bqfetch_spark.streaming.ownership import (
-        claim_store,
-        owner_key_for_checkpoint,
-    )
 
     bench_dir = os.path.join(work_dir, "bench")
     store_dir = os.path.join(work_dir, "flags")
-    incoming_dir = os.path.join(work_dir, "incoming")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
     docs = load_catalog(spark, sf_dir).table("documents").select(
         "doc_id", "text"
     )
     build_benchmark_store(docs, bench_dir)
-    train = docs.filter(F.col("doc_id") % CONTAM_MOD != 0)
-
-    flag_wave(
+    backfill_and_replay(
         spark,
-        train.filter(_wave_of() <= 2),
-        bench_dir,
+        docs.filter(F.col("doc_id") % CONTAM_MOD != 0),
+        "doc_id",
+        work_dir,
         store_dir,
-        batch_id=BACKFILL_BATCH_ID,
+        lambda batch, bid: flag_wave(spark, batch, bench_dir, store_dir, bid),
+        ordered=False,
     )
-    claim_store(store_dir, owner_key_for_checkpoint(ckpt_dir))
-
-    os.makedirs(incoming_dir, exist_ok=True)
-    for wave in (3, 4):
-        train.filter(_wave_of() == wave).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(incoming_dir, f"wave_{wave}")
-        )
-    schema = spark.read.parquet(os.path.join(incoming_dir, "wave_3")).schema
-    # No maxFilesPerTrigger cap (round 14, guide §1.2 — the qx200
-    # precedent): AvailableNow folds every pending wave file into ONE
-    # micro-batch instead of one batch per file, saving the fixed
-    # scheduler + checkpoint-commit fee per extra batch. Semantics
-    # unchanged: flag_wave is per-doc against the FROZEN benchmark
-    # store and each doc lives in exactly one wave, so a doc's flag row
-    # is identical whichever micro-batch carried it; the report
-    # aggregates across ingest_batch partitions. Production tunes the
-    # trigger to its latency target, not to one-file batches.
-    incoming = (
-        spark.readStream.schema(schema)
-        .parquet(os.path.join(incoming_dir, "wave_*"))
-    )
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        flag_wave(spark, batch, bench_dir, store_dir, batch_id=batch_id)
-
-    q = (
-        incoming.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
     return contamination_report(spark, store_dir)

@@ -22,14 +22,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BACKFILL_BATCH_ID = -1
-MANUAL_BATCH_ID = -2  # manual append_mix_wave calls without a foreachBatch id
-
-
-def _wave_of() -> "F.Column":
-    # deterministic 3-way ingest split, the pca_stats/ann_index family
-    # convention: 60% backfill, two 20% waves
-    return F.pmod(F.col("doc_id"), F.lit(5))
+from bqfetch_spark.streaming.waves import (
+    BACKFILL_BATCH_ID,
+    backfill_and_replay,
+    write_wave,
+)
 
 
 def mix_counts(docs: DataFrame) -> DataFrame:
@@ -54,19 +51,7 @@ def append_mix_wave(
     ingest_batch partition. With a foreachBatch ``batch_id`` the write
     is a dynamic overwrite of that partition (retry-idempotent);
     manual calls land under MANUAL_BATCH_ID."""
-    bid = MANUAL_BATCH_ID if batch_id is None else int(batch_id)
-    frame = mix_counts(wave_docs).withColumn(
-        "ingest_batch", F.lit(bid).cast("bigint")
-    )
-    writer = frame.coalesce(1).write.partitionBy("ingest_batch")
-    if batch_id is None:
-        writer.mode("append").parquet(store_dir)
-    else:
-        (
-            writer.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(store_dir)
-        )
+    write_wave(mix_counts(wave_docs).coalesce(1), store_dir, batch_id)
 
 
 def drift_report(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -123,57 +108,14 @@ def build_mix_store(spark: SparkSession, sf_dir: str, work_dir: str) -> str:
     planner (qx281), which read DIFFERENT columns of the same additive
     store."""
     from bqfetch_spark.catalog import load_catalog
-    from bqfetch_spark.streaming.ownership import (
-        claim_store,
-        owner_key_for_checkpoint,
-    )
 
     store_dir = os.path.join(work_dir, "mix")
-    incoming_dir = os.path.join(work_dir, "incoming")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
     docs = load_catalog(spark, sf_dir).table("documents").select(
         "doc_id", "source", "text"
     )
-    (
-        mix_counts(docs.filter(_wave_of() <= 2))
-        .withColumn("ingest_batch", F.lit(BACKFILL_BATCH_ID).cast("bigint"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .parquet(store_dir)
+    backfill_and_replay(
+        spark, docs, "doc_id", work_dir, store_dir,
+        lambda batch, bid: append_mix_wave(spark, batch, store_dir, bid),
+        ordered=False,
     )
-    claim_store(store_dir, owner_key_for_checkpoint(ckpt_dir))
-
-    os.makedirs(incoming_dir, exist_ok=True)
-    for wave in (3, 4):
-        docs.filter(_wave_of() == wave).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(incoming_dir, f"wave_{wave}")
-        )
-    schema = spark.read.parquet(os.path.join(incoming_dir, "wave_3")).schema
-    # No maxFilesPerTrigger cap (round 14, guide §1.2 — the qx200
-    # precedent): AvailableNow folds every pending wave file into ONE
-    # micro-batch instead of one batch per file, saving the fixed
-    # scheduler + checkpoint-commit fee per extra batch. Semantics
-    # unchanged: the batch folds through the SAME append_mix_wave
-    # dynamic-overwrite path, and integer count additivity makes the
-    # store-merged totals bit-equal however ingest is sliced (the
-    # tested design property). Production tunes the trigger to its
-    # latency target, not to one-file batches.
-    incoming = (
-        spark.readStream.schema(schema)
-        .parquet(os.path.join(incoming_dir, "wave_*"))
-    )
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        append_mix_wave(spark, batch, store_dir, batch_id=batch_id)
-
-    q = (
-        incoming.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
     return store_dir

@@ -27,16 +27,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-BACKFILL_BATCH_ID = -1
-# Sentinel for MANUAL (non-streamed) incremental_dedup_batch calls:
-# distinct from both BACKFILL_BATCH_ID and any real foreachBatch id
-# (which start at 0), so a manual wave over a streamed store never
-# treats the stream's batch-0 fingerprints as its own retry leftovers.
-# Callers issuing MULTIPLE manual waves against one store must pass
-# distinct explicit ids — two waves sharing the sentinel would each
-# exclude the other's fingerprints from the dup probe.
-MANUAL_BATCH_ID = -2
+from bqfetch_spark.streaming.waves import (
+    BACKFILL_BATCH_ID,
+    MANUAL_BATCH_ID,
+    drain,
+    write_wave,
+)
 
 
 def build_fingerprint_store(corpus: DataFrame, store_dir: str) -> None:
@@ -71,6 +67,12 @@ def incremental_dedup_batch(
     from bqfetch_spark.operators.llm_pipeline import dedup_exact
     from bqfetch_spark.session import shuffle_partitions
 
+    # the manual sentinel differs from the backfill tag and from every
+    # foreachBatch id, so a manual wave over a streamed store never
+    # treats the stream's batch-0 fingerprints as its own retry
+    # leftovers. Callers issuing MULTIPLE manual waves against one store
+    # must pass distinct explicit ids — two waves sharing the sentinel
+    # would each exclude the other's fingerprints from the dup probe.
     if batch_id is None:
         batch_id = MANUAL_BATCH_ID
     store = spark.read.parquet(store_dir).filter(F.col("batch_id") != batch_id)
@@ -91,59 +93,39 @@ def incremental_dedup_batch(
 
 
 def run_incremental_dedup(
-    spark: SparkSession, sf_dir: str, work_dir: str, files_per_trigger: int = 1
+    spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Bounded streaming run of the incremental dedup: documents with
     doc_id % 10 >= 8 arrive as a stream (the q66 incoming-batch split);
     the store starts as the fingerprints of the rest of the corpus.
     Returns the accumulated survivors — semantically identical to
     q66's one-shot batch anti-join (pytest-asserted)."""
-    from bqfetch_spark.streaming.ownership import claim_store, owner_key_for_checkpoint
+    from bqfetch_spark.catalog import load_catalog
+    from bqfetch_spark.streaming.windows import streaming_documents
 
     store_dir = os.path.join(work_dir, "fp_store")
     sink_dir = os.path.join(work_dir, "sink")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    from bqfetch_spark.catalog import load_catalog
 
     docs = load_catalog(spark, sf_dir).table("documents")
     build_fingerprint_store(docs.filter(F.col("doc_id") % 10 < 8), store_dir)
-    # after the backfill (mode=overwrite wipes the dir): claim the
-    # store for this checkpoint lineage so a later FRESH-checkpoint
-    # query can't restart at batch 0 over it (streaming/ownership.py)
-    claim_store(store_dir, owner_key_for_checkpoint(ckpt_dir))
-
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    incoming = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(sf_dir)
-        .filter(F.col("doc_id") % 10 >= 8)
-    )
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
         out = incremental_dedup_batch(spark, batch, store_dir, batch_id=batch_id)
-        # sink partitioned by the batch id with DYNAMIC overwrite: a
-        # retried wave replaces its own partial output instead of
-        # appending a second copy — exactly-once sink rows even though
+        # the sink is partitioned by batch id, so a retried wave replaces
+        # its own partial output: exactly-once sink rows even though
         # foreachBatch side effects are at-least-once
-        (
-            out.select("doc_id", "lang", "source", "n_chars")
-            .withColumn("ingest_batch", F.lit(batch_id).cast("bigint"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(sink_dir)
-        )
+        sink = out.select("doc_id", "lang", "source", "n_chars")
+        write_wave(sink, sink_dir, batch_id)
 
-    q = (
-        incoming.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+    # the drain claims the store after the backfill (mode=overwrite wipes
+    # the dir), so a later FRESH-checkpoint query can't restart at batch
+    # 0 over it (streaming/ownership.py)
+    drain(
+        streaming_documents(spark, sf_dir).filter(F.col("doc_id") % 10 >= 8),
+        _ingest,
+        os.path.join(work_dir, "ckpt"),
+        store_dir,
     )
-    q.awaitTermination()
     return spark.read.parquet(sink_dir).drop("ingest_batch")
 
 

@@ -1,15 +1,16 @@
 """Offline compaction / vacuum for the incremental stores.
 
-The four incremental stores are APPEND-ONLY by design — that is what
-makes their ingest waves O(wave) and retry-idempotent — so they grow
-forever: the fingerprint store (streaming/incremental.py) accumulates
-one duplicate fp row per retried wave, the LSH band store
+The incremental stores (streaming/waves.py lists them) are APPEND-ONLY
+by design — that is what makes their ingest waves O(wave) and
+retry-idempotent — so they grow forever. This module compacts three of
+them: the fingerprint store (streaming/incremental.py) accumulates one
+duplicate fp row per retried wave, the LSH band store
 (streaming/neardup.py) and ANN code store (streaming/ann_index.py)
 accumulate one small file per wave per partition, and all three keep
 dead ``ingest_batch`` partition directories around indefinitely. This
-module is the maintenance-window counterpart (rollup already has its
-own ``compact_rollup``): fold the accumulated rows back to the
-canonical backfill tag, bin-packed to target-sized files (the same
+module is the maintenance-window counterpart (rollup has its own
+``compact_rollup``): fold the accumulated rows back to the canonical
+backfill tag, bin-packed to target-sized files (the same
 ceil(bytes/target) policy as q39's ``compact_parquet_dir``).
 
 Content identity is the contract: compaction changes the store's FILE
@@ -46,6 +47,7 @@ from pyspark.sql import functions as F
 
 from bqfetch_spark.registry import register
 from bqfetch_spark.streaming.ownership import OWNER_MARKER
+from bqfetch_spark.streaming.waves import BACKFILL_BATCH_ID, write_wave
 
 # q39's policy (operators/lakehouse.py): ceil(total_bytes / target)
 # files. Stores are fingerprint-sized, so at fixture scale this is 1.
@@ -124,8 +126,6 @@ def compact_fingerprint_store(
     tmp = store_dir.rstrip("/") + "__compacting"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    from bqfetch_spark.streaming.incremental import BACKFILL_BATCH_ID
-
     (
         spark.read.parquet(store_dir)
         .select("fp")
@@ -151,12 +151,10 @@ def compact_band_store(
     nightly crawls is 365 tiny files per partition that every probe
     join must open."""
     _check_claim(store_dir, force)
-    from bqfetch_spark.streaming.neardup import BACKFILL_BATCH_ID
-
     tmp = store_dir.rstrip("/") + "__compacting"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    (
+    folded = (
         spark.read.schema(
             "band int, bucket bigint, doc_id bigint, "
             "signature array<bigint>, ingest_batch bigint"
@@ -164,12 +162,9 @@ def compact_band_store(
         .parquet(store_dir)
         .select("band", "bucket", "doc_id", "signature")
         .distinct()
-        .withColumn("ingest_batch", F.lit(BACKFILL_BATCH_ID).cast("bigint"))
         .repartition(_packed_file_count(store_dir, target_bytes))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .parquet(tmp)
     )
+    write_wave(folded, tmp, untagged=BACKFILL_BATCH_ID)
     return _swap_in(tmp, store_dir, keep_backup)
 
 
@@ -190,16 +185,15 @@ def compact_ann_code_store(
     tmp = codes_dir.rstrip("/") + "__compacting"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    (
+    folded = (
         spark.read.parquet(codes_dir)
         .drop("ingest_batch")
         .distinct()
-        .withColumn("ingest_batch", F.lit(-1).cast("bigint"))
         .repartition(F.col("cell_id"))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch", "cell_id")
-        .parquet(tmp)
     )
+    # the live store's (cell_id, ingest_batch) layout: partial_retrain
+    # swaps whole cell_id directories
+    write_wave(folded, tmp, cols=("cell_id",), untagged=BACKFILL_BATCH_ID)
     return _swap_in(tmp, codes_dir, keep_backup)
 
 

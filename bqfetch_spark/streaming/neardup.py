@@ -32,10 +32,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BACKFILL_BATCH_ID = -1
-# manual-call sentinel distinct from backfill (-1) and real
-# foreachBatch ids (>= 0) — see streaming/incremental.py
-MANUAL_BATCH_ID = -2
+from bqfetch_spark.streaming.waves import (
+    BACKFILL_BATCH_ID,
+    MANUAL_BATCH_ID,
+    drain,
+    write_wave,
+)
 
 
 def _band_rows(docs: DataFrame) -> DataFrame:
@@ -45,14 +47,9 @@ def _band_rows(docs: DataFrame) -> DataFrame:
 
 
 def build_band_store(corpus: DataFrame, store_dir: str) -> None:
-    """One-time backfill: band rows for the existing corpus."""
-    (
-        _band_rows(corpus)
-        .withColumn("ingest_batch", F.lit(BACKFILL_BATCH_ID).cast("bigint"))
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .parquet(store_dir)
-    )
+    """One-time backfill into a fresh store: band rows for the existing
+    corpus."""
+    write_wave(_band_rows(corpus), store_dir, BACKFILL_BATCH_ID)
 
 
 def neardup_batch(
@@ -112,60 +109,30 @@ def neardup_batch(
         .select("doc_a", "doc_b", est_jaccard_col().alias("est_jaccard"))
     )
     pairs = pairs.localCheckpoint(eager=True)
-    (
-        wave.withColumn("ingest_batch", F.lit(batch_id).cast("bigint"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(store_dir)
-    )
+    # the resolved id, so a manual wave also overwrites its own partition
+    write_wave(wave, store_dir, batch_id)
     return pairs
 
 
 def run_incremental_neardup(
-    spark: SparkSession, sf_dir: str, work_dir: str, files_per_trigger: int = 1
+    spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Bounded streaming run: the WHOLE documents table streams through
     an initially-empty band store, so the union of per-wave pair sets
     must equal the one-shot q47 pair set over the same table."""
-    from bqfetch_spark.streaming.ownership import claim_store, owner_key_for_checkpoint
+    from bqfetch_spark.streaming.windows import streaming_documents
 
     store_dir = os.path.join(work_dir, "band_store")
     sink_dir = os.path.join(work_dir, "pairs")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
+    incoming = streaming_documents(spark, sf_dir)
     # empty store with the right schema/partitioning
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    empty = spark.createDataFrame([], schema)
-    build_band_store(empty, store_dir)
-    # after the backfill (mode=overwrite wipes the dir): claim the
-    # store for this checkpoint lineage (streaming/ownership.py)
-    claim_store(store_dir, owner_key_for_checkpoint(ckpt_dir))
-
-    incoming = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .parquet(sf_dir)
-    )
+    build_band_store(spark.createDataFrame([], incoming.schema), store_dir)
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
         pairs = neardup_batch(spark, batch, store_dir, batch_id=batch_id)
-        (
-            pairs.withColumn("ingest_batch", F.lit(batch_id).cast("bigint"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(sink_dir)
-        )
+        write_wave(pairs, sink_dir, batch_id)
 
-    q = (
-        incoming.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(incoming, _ingest, os.path.join(work_dir, "ckpt"), store_dir)
     return (
         spark.read.parquet(sink_dir)
         .drop("ingest_batch")

@@ -1,14 +1,16 @@
 """Store-ownership claims for the incremental stores.
 
-All four incremental stores (rollup partials, dedup fingerprints, LSH
-band rows, ANN codes) get their foreachBatch retry-idempotence from
-keying partitions / exclusion filters on the micro-batch ``batch_id``.
-That id is only unique WITHIN ONE CHECKPOINT LINEAGE: a brand-new
-streaming query (fresh checkpoint) pointed at an existing store
-restarts batch ids at 0, and its first wave's dynamic overwrite of
-``ingest_batch=0`` would silently delete the prior query's batch-0
-partials (rollup/neardup/ann) or hide its batch-0 fingerprints from
-the ``batch_id != batch_id`` exclusion (dedup) and re-admit their
+The incremental stores (rollup partials, dedup fingerprints, LSH band
+rows, ANN codes, and the drift, pca_stats, decontam, spanmask, vocab
+and packing partials — all written through streaming/waves.py) get
+their foreachBatch retry-idempotence from keying partitions /
+exclusion filters on the micro-batch ``batch_id``. That id is only
+unique WITHIN ONE CHECKPOINT LINEAGE: a brand-new streaming query
+(fresh checkpoint) pointed at an existing store restarts batch ids at
+0, and its first wave's dynamic overwrite of ``ingest_batch=0`` would
+silently delete the prior query's batch-0 partials (every
+``ingest_batch``-partitioned store) or hide its batch-0 fingerprints
+from the ``batch_id != batch_id`` exclusion (dedup) and re-admit their
 duplicates.
 
 The fix is an explicit ownership contract: a store is CLAIMED by the
@@ -16,10 +18,11 @@ checkpoint lineage that writes it. ``claim_store`` drops an
 ``_bqfetch_store_owner`` marker (leading underscore — invisible to
 Spark's parquet reader, same convention as ``_SUCCESS``) holding the
 owner key, which the built-in runners derive from the checkpoint
-location's real path. Restarting the same query over the same
-checkpoint re-presents the same key and passes; pointing a NEW
-checkpoint at the store raises before any batch runs, instead of
-corrupting batch-0 state an arbitrary time later.
+location's real path (``waves.drain`` claims before it starts).
+Restarting the same query over the same checkpoint re-presents the
+same key and passes; pointing a NEW checkpoint at the store raises
+before any batch runs, instead of corrupting batch-0 state an
+arbitrary time later.
 
 The marker is created atomically (``open(..., "x")``) so two
 concurrent fresh queries racing to claim the same store resolve to

@@ -32,15 +32,11 @@ from pyspark.sql import functions as F
 
 from bqfetch_spark.operators.corpus import PACK_WINDOW
 from bqfetch_spark.session import shuffle_partitions
-
-BACKFILL_BATCH_ID = -1
-MANUAL_BATCH_ID = -2
-
-
-def _wave_of() -> "F.Column":
-    # deterministic 3-way ingest split, the family convention:
-    # 60% backfill, two 20% waves
-    return F.pmod(F.col("doc_id"), F.lit(5))
+from bqfetch_spark.streaming.waves import (
+    MANUAL_BATCH_ID,
+    backfill_and_replay,
+    write_wave,
+)
 
 
 def pack_wave_partials(wave_docs: DataFrame, offset: int) -> DataFrame:
@@ -104,18 +100,7 @@ def append_pack_wave(
 ) -> None:
     bid = MANUAL_BATCH_ID if batch_id is None else int(batch_id)
     offset = _store_offset(spark, store_dir, bid)
-    frame = pack_wave_partials(wave_docs, offset).withColumn(
-        "ingest_batch", F.lit(bid).cast("bigint")
-    )
-    writer = frame.coalesce(1).write.partitionBy("ingest_batch")
-    if batch_id is None:
-        writer.mode("append").parquet(store_dir)
-    else:
-        (
-            writer.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(store_dir)
-        )
+    write_wave(pack_wave_partials(wave_docs, offset).coalesce(1), store_dir, batch_id)
 
 
 def packing_report(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -147,57 +132,16 @@ def run_incremental_packing(
     the remaining two slices arrive as separate micro-batches and
     append where the stream left off. Returns the merged histogram."""
     from bqfetch_spark.catalog import load_catalog
-    from bqfetch_spark.streaming.ownership import (
-        claim_store,
-        owner_key_for_checkpoint,
-    )
 
     store_dir = os.path.join(work_dir, "pack")
-    incoming_dir = os.path.join(work_dir, "incoming")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
     docs = load_catalog(spark, sf_dir).table("documents").select(
         "doc_id", "source", "text"
     )
-    (
-        pack_wave_partials(docs.filter(_wave_of() <= 2), 0)
-        .withColumn("ingest_batch", F.lit(BACKFILL_BATCH_ID).cast("bigint"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .parquet(store_dir)
+    # ORDER-DEPENDENT: each wave starts where the previous one ended, so
+    # the waves replay ordered, one micro-batch per wave
+    backfill_and_replay(
+        spark, docs, "doc_id", work_dir, store_dir,
+        lambda batch, bid: append_pack_wave(spark, batch, store_dir, bid),
+        ordered=True,
     )
-    claim_store(store_dir, owner_key_for_checkpoint(ckpt_dir))
-
-    # Packing is ORDER-DEPENDENT (each wave starts where the previous
-    # ended), so waves arrive as two SEQUENTIAL availableNow drains of
-    # the same checkpointed source — modeling files appearing over time
-    # with a guaranteed arrival order, rather than trusting the file
-    # source's multi-file ordering. Structured Streaming's own
-    # guarantee does the rest: a failed batch N is retried until it
-    # succeeds BEFORE N+1 starts, so the offset-excluding-own-batch
-    # computation in append_pack_wave always sees exactly batches < N.
-    os.makedirs(incoming_dir, exist_ok=True)
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        append_pack_wave(spark, batch, store_dir, batch_id=batch_id)
-
-    first = True
-    for wave in (3, 4):
-        docs.filter(_wave_of() == wave).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(incoming_dir, f"wave_{wave}")
-        )
-        if first:
-            schema = spark.read.parquet(os.path.join(incoming_dir, "wave_3")).schema
-            first = False
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(os.path.join(incoming_dir, "wave_*"))
-            .writeStream.foreachBatch(_ingest)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     return packing_report(spark, store_dir)

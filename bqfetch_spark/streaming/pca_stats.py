@@ -32,14 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BACKFILL_BATCH_ID = -1
-MANUAL_BATCH_ID = -2  # manual append_stats_wave calls without a foreachBatch id
-
-
-def _wave_of() -> "F.Column":
-    # deterministic 3-way ingest split shared with streaming/ann_index.py:
-    # 60% backfill, two 20% waves
-    return F.pmod(F.col("vec_id"), F.lit(5))
+from bqfetch_spark.streaming.waves import backfill_and_replay, write_wave
 
 
 def append_stats_wave(
@@ -54,20 +47,8 @@ def append_stats_wave(
     (retry-idempotent); manual calls land under MANUAL_BATCH_ID."""
     from bqfetch_spark.operators.similarity import pca_stats_phase1
 
-    bid = MANUAL_BATCH_ID if batch_id is None else int(batch_id)
-    frame = pca_stats_phase1(wave_emb).withColumn(
-        "ingest_batch", F.lit(bid).cast("bigint")
-    )
     # a stats frame is ~2144 rows × buckets — one file per wave
-    writer = frame.coalesce(1).write.partitionBy("ingest_batch")
-    if batch_id is None:
-        writer.mode("append").parquet(store_dir)
-    else:
-        (
-            writer.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(store_dir)
-        )
+    write_wave(pca_stats_phase1(wave_emb).coalesce(1), store_dir, batch_id)
 
 
 def merged_stats(spark: SparkSession, store_dir: str):
@@ -93,71 +74,23 @@ def run_incremental_pca_stats(
 ) -> DataFrame:
     """Bounded streaming run: 60% of the embeddings backfill the stats
     store; the remaining two wave files arrive through a foreachBatch
-    stream (one AvailableNow micro-batch — see the trigger note below).
+    stream (one folded micro-batch, streaming/waves.py).
     Returns the covariance frame computed FROM THE MAINTAINED STORE —
     bit-equal to qx192's one-shot output by integer additivity, so it
     shares qx192's full oracle."""
     from bqfetch_spark.catalog import load_catalog
     from bqfetch_spark.functions.vectors import as_double
     from bqfetch_spark.operators.similarity import covariance_rows
-    from bqfetch_spark.streaming.ownership import (
-        claim_store,
-        owner_key_for_checkpoint,
-    )
 
     store_dir = os.path.join(work_dir, "stats")
-    incoming_dir = os.path.join(work_dir, "incoming")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
     emb = load_catalog(spark, sf_dir).table("embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    from bqfetch_spark.operators.similarity import pca_stats_phase1
-
-    (
-        pca_stats_phase1(emb.filter(_wave_of() <= 2))
-        .withColumn("ingest_batch", F.lit(BACKFILL_BATCH_ID).cast("bigint"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("ingest_batch")
-        .parquet(store_dir)
+    backfill_and_replay(
+        spark, emb, "vec_id", work_dir, store_dir,
+        lambda batch, bid: append_stats_wave(spark, batch, store_dir, bid),
+        ordered=False,
     )
-    claim_store(store_dir, owner_key_for_checkpoint(ckpt_dir))
-
-    os.makedirs(incoming_dir, exist_ok=True)
-    for wave in (3, 4):
-        emb.filter(_wave_of() == wave).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(incoming_dir, f"wave_{wave}")
-        )
-    schema = spark.read.parquet(os.path.join(incoming_dir, "wave_3")).schema
-    # No maxFilesPerTrigger cap (round 14, guide §1.2): with
-    # Trigger.AvailableNow the bounded replay then ingests every
-    # pending wave file in ONE micro-batch instead of one batch per
-    # file. Each micro-batch costs a fixed scheduler + checkpoint +
-    # state-commit fee (~1.2 s here) that dwarfs the per-wave O(wave)
-    # partial-agg at fixture scale — measured 2.5 s → 1.3 s for the
-    # stream leg. Semantics unchanged: the batch is still folded by
-    # the SAME append_stats_wave dynamic-overwrite path (idempotent
-    # under retry), integer additivity makes the merged store
-    # bit-equal however ingest is sliced (that is the tested design
-    # property), and a production deployment would tune the trigger to
-    # its latency target, not to one-file batches.
-    incoming = (
-        spark.readStream.schema(schema)
-        .parquet(os.path.join(incoming_dir, "wave_*"))
-    )
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        append_stats_wave(spark, batch, store_dir, batch_id=batch_id)
-
-    q = (
-        incoming.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
     n, sx, sxy = merged_stats(spark, store_dir)
     return spark.createDataFrame(
         covariance_rows(n, sx, sxy), "i int, j int, cov double"

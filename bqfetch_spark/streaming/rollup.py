@@ -42,6 +42,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bqfetch_spark.streaming.waves import BACKFILL_BATCH_ID, drain, write_wave
+
 DEC_SUM = "decimal(18,6)"  # per-row cast before summing
 # The STORED sum type is pinned wider and identical in EVERY write
 # path: Spark widens sum(decimal(18,6)) to decimal(28,6), so letting
@@ -93,26 +95,18 @@ def upsert_rollup(
 
     NULL-ts events land under day=__HIVE_DEFAULT_PARTITION__ like any
     other partition value and aggregate naturally on read."""
-    partials = (
-        _partials(batch)
-        .withColumn("day", F.date_format("bucket_start", "yyyyMMdd").cast("long"))
-        .withColumn(
-            "ingest_batch",
-            F.lit(-1 if batch_id is None else int(batch_id)).cast("bigint"),
-        )
-        # one file per touched (day, batch): partition writes fan across
-        # tasks for wide backfills, steady-state waves touch 1-2 days
-        .repartition(F.col("day"))
+    partials = _partials(batch).withColumn(
+        "day", F.date_format("bucket_start", "yyyyMMdd").cast("long")
     )
-    writer = partials.write.partitionBy("day", "ingest_batch")
-    if batch_id is None:
-        writer.mode("append").parquet(store_dir)
-    else:
-        (
-            writer.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(store_dir)
-        )
+    # one file per touched (day, batch): partition writes fan across
+    # tasks for wide backfills, steady-state waves touch 1-2 days
+    write_wave(
+        partials.repartition(F.col("day")),
+        store_dir,
+        batch_id,
+        cols=("day",),
+        untagged=BACKFILL_BATCH_ID,
+    )
 
 
 def read_rollup(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -150,7 +144,7 @@ def compact_rollup(spark: SparkSession, store_dir: str, force: bool = False) -> 
     folded = (
         read_rollup(spark, store_dir)
         .withColumn("day", F.date_format("bucket_start", "yyyyMMdd").cast("long"))
-        .withColumn("ingest_batch", F.lit(-1).cast("bigint"))
+        .withColumn("ingest_batch", F.lit(BACKFILL_BATCH_ID).cast("bigint"))
         .localCheckpoint(eager=True)  # the write replaces what it reads
     )
     (
@@ -168,26 +162,16 @@ def run_rollup_maintenance(spark: SparkSession, sf_dir: str, work_dir: str) -> D
     sums), which is what the q98 oracle checks."""
     from bqfetch_spark.streaming.windows import streaming_events
 
-    from bqfetch_spark.streaming.ownership import claim_store, owner_key_for_checkpoint
-
     store_dir = os.path.join(work_dir, "rollup_store")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-    # batch ids are only unique within one checkpoint lineage: claim
-    # the store for this checkpoint so a later FRESH-checkpoint query
-    # can't restart at batch 0 and dynamic-overwrite these partials
-    claim_store(store_dir, owner_key_for_checkpoint(ckpt_dir))
-    incoming = streaming_events(spark, sf_dir)
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        upsert_rollup(spark, batch, store_dir, batch_id=batch_id)
-
-    q = (
-        incoming.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+    # batch ids are only unique within one checkpoint lineage: the drain
+    # claims the store for this checkpoint so a later FRESH-checkpoint
+    # query can't restart at batch 0 and dynamic-overwrite these partials
+    drain(
+        streaming_events(spark, sf_dir),
+        lambda batch, bid: upsert_rollup(spark, batch, store_dir, bid),
+        os.path.join(work_dir, "ckpt"),
+        store_dir,
     )
-    q.awaitTermination()
     return read_rollup(spark, store_dir).select(
         "bucket_start",
         "event_type",

@@ -28,12 +28,8 @@ from bqfetch_spark.operators.llm_pipeline import (
     merge_hit_spans,
     positional_contam_shingles,
 )
-from bqfetch_spark.streaming.decontam import (
-    BACKFILL_BATCH_ID,
-    MANUAL_BATCH_ID,
-    _wave_of,
-    build_benchmark_store,
-)
+from bqfetch_spark.streaming.decontam import build_benchmark_store
+from bqfetch_spark.streaming.waves import backfill_and_replay, write_wave
 
 
 def mask_wave(
@@ -47,7 +43,6 @@ def mask_wave(
     frozen benchmark store (hash bucket + gram recheck — the q40
     collision-safe pattern), hits merge into spans doc-locally, and the
     wave's spans land under its own ingest_batch partition."""
-    bid = MANUAL_BATCH_ID if batch_id is None else int(batch_id)
     bench = spark.read.parquet(bench_dir)
     sh = positional_contam_shingles(wave_docs).withColumn("h", F.xxhash64("g"))
     # No explicit broadcast hint on the benchmark store: eval suites are
@@ -61,16 +56,7 @@ def mask_wave(
         )
         .select("doc_id", "i")
     )
-    spans = merge_hit_spans(hits).withColumn("ingest_batch", F.lit(bid).cast("bigint"))
-    writer = spans.coalesce(1).write.partitionBy("ingest_batch")
-    if batch_id is None:
-        writer.mode("append").parquet(store_dir)
-    else:
-        (
-            writer.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(store_dir)
-        )
+    write_wave(merge_hit_spans(hits).coalesce(1), store_dir, batch_id)
 
 
 SPAN_STORE_SCHEMA = (
@@ -96,55 +82,23 @@ def span_report(spark: SparkSession, store_dir: str) -> DataFrame:
 
 def build_span_store(spark: SparkSession, sf_dir: str, work_dir: str) -> str:
     """Bounded streaming run: freeze the benchmark store, backfill 60%
-    of the training docs' spans, stream the remaining two slices as
-    separate micro-batches through foreachBatch; returns the span-store
-    path for a later `span_report` read."""
+    of the training docs' spans, stream the remaining two slices
+    through foreachBatch (folded — per-doc spans are batch-slicing
+    invariant); returns the span-store path for a later `span_report`
+    read."""
     from bqfetch_spark.catalog import load_catalog
-    from bqfetch_spark.streaming.ownership import (
-        claim_store,
-        owner_key_for_checkpoint,
-    )
 
     bench_dir = os.path.join(work_dir, "bench")
     store_dir = os.path.join(work_dir, "spans")
-    incoming_dir = os.path.join(work_dir, "incoming")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
     docs = load_catalog(spark, sf_dir).table("documents").select("doc_id", "text")
     build_benchmark_store(docs, bench_dir)
-    train = docs.filter(F.col("doc_id") % CONTAM_MOD != 0)
-
-    mask_wave(
+    backfill_and_replay(
         spark,
-        train.filter(_wave_of() <= 2),
-        bench_dir,
+        docs.filter(F.col("doc_id") % CONTAM_MOD != 0),
+        "doc_id",
+        work_dir,
         store_dir,
-        batch_id=BACKFILL_BATCH_ID,
+        lambda batch, bid: mask_wave(spark, batch, bench_dir, store_dir, bid),
+        ordered=False,
     )
-    claim_store(store_dir, owner_key_for_checkpoint(ckpt_dir))
-
-    os.makedirs(incoming_dir, exist_ok=True)
-    for wave in (3, 4):
-        train.filter(_wave_of() == wave).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(incoming_dir, f"wave_{wave}")
-        )
-    schema = spark.read.parquet(os.path.join(incoming_dir, "wave_3")).schema
-    incoming = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(os.path.join(incoming_dir, "wave_*"))
-    )
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        mask_wave(spark, batch, bench_dir, store_dir, batch_id=batch_id)
-
-    q = (
-        incoming.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
     return store_dir
-

@@ -36,15 +36,7 @@ from pyspark.sql import functions as F
 
 from bqfetch_spark.operators.corpus import VOCAB_FRACS, _VOCAB_THRS
 from bqfetch_spark.operators.relational import r6
-
-BACKFILL_BATCH_ID = -1
-MANUAL_BATCH_ID = -2
-
-
-def _wave_of() -> "F.Column":
-    # deterministic 3-way ingest split, the pca_stats/drift convention:
-    # 60% backfill, two 20% waves
-    return F.pmod(F.col("doc_id"), F.lit(5))
+from bqfetch_spark.streaming.waves import backfill_and_replay, write_wave
 
 
 def _hv() -> "F.Column":
@@ -108,22 +100,11 @@ def append_vocab_wave(
     foreachBatch ``batch_id`` the writes are dynamic overwrites of that
     partition (retry-idempotent); manual calls land under
     MANUAL_BATCH_ID."""
-    bid = MANUAL_BATCH_ID if batch_id is None else int(batch_id)
     for sub, frame in (
         ("wmin", word_min_partials(wave_docs)),
         ("stats", doc_stat_partials(wave_docs)),
     ):
-        out = frame.withColumn("ingest_batch", F.lit(bid).cast("bigint"))
-        writer = out.coalesce(1).write.partitionBy("ingest_batch")
-        path = os.path.join(store_dir, sub)
-        if batch_id is None:
-            writer.mode("append").parquet(path)
-        else:
-            (
-                writer.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(path)
-            )
+        write_wave(frame.coalesce(1), os.path.join(store_dir, sub), batch_id)
 
 
 def vocab_report(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -174,64 +155,14 @@ def run_incremental_vocab(
     micro-batches, the store merge is bit-equal). Returns the growth
     report computed from the maintained stores."""
     from bqfetch_spark.catalog import load_catalog
-    from bqfetch_spark.streaming.ownership import (
-        claim_store,
-        owner_key_for_checkpoint,
-    )
 
     store_dir = os.path.join(work_dir, "vocab")
-    incoming_dir = os.path.join(work_dir, "incoming")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
     docs = load_catalog(spark, sf_dir).table("documents").select(
         "doc_id", "source", "text"
     )
-    backfill = docs.filter(_wave_of() <= 2)
-    for sub, frame in (
-        ("wmin", word_min_partials(backfill)),
-        ("stats", doc_stat_partials(backfill)),
-    ):
-        (
-            frame.withColumn(
-                "ingest_batch", F.lit(BACKFILL_BATCH_ID).cast("bigint")
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("ingest_batch")
-            .parquet(os.path.join(store_dir, sub))
-        )
-    claim_store(store_dir, owner_key_for_checkpoint(ckpt_dir))
-
-    os.makedirs(incoming_dir, exist_ok=True)
-    for wave in (3, 4):
-        docs.filter(_wave_of() == wave).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(incoming_dir, f"wave_{wave}")
-        )
-    schema = spark.read.parquet(os.path.join(incoming_dir, "wave_3")).schema
-    # No maxFilesPerTrigger cap (round 14, guide §1.2 — the qx200
-    # precedent): with Trigger.AvailableNow the bounded replay ingests
-    # every pending wave file in ONE micro-batch instead of one batch
-    # per file, saving the fixed scheduler + checkpoint-commit fee each
-    # extra batch pays. Semantics unchanged: the batch folds through
-    # the SAME append_vocab_wave dynamic-overwrite path, and the report
-    # min-merges/sums across ingest_batch partitions — associative min
-    # and integer addition make the merged store bit-equal however
-    # ingest is sliced. A production deployment tunes the trigger to
-    # its latency target, not to one-file batches.
-    incoming = (
-        spark.readStream.schema(schema)
-        .parquet(os.path.join(incoming_dir, "wave_*"))
+    backfill_and_replay(
+        spark, docs, "doc_id", work_dir, store_dir,
+        lambda batch, bid: append_vocab_wave(spark, batch, store_dir, bid),
+        ordered=False,
     )
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        append_vocab_wave(spark, batch, store_dir, batch_id=batch_id)
-
-    q = (
-        incoming.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
     return vocab_report(spark, store_dir)

@@ -38,6 +38,17 @@ def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
+def streaming_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """readStream over the documents table: its single file is a single
+    micro-batch under AvailableNow."""
+    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "documents.parquet")
+        .parquet(sf_dir)
+    )
+
+
 def tumbling_counts_stream(
     events: DataFrame, watermark: str = "1 hour", window: str = "1 hour"
 ) -> DataFrame:

@@ -159,6 +159,29 @@ def test_ann_code_store_compaction_content_and_layout(spark, tmp_path):
     assert post.select("cell_id").distinct().count() == n_cells
 
 
+def test_ann_code_store_compaction_keeps_cell_outermost_layout(spark, tmp_path):
+    """Compaction must write the live store's (cell_id, ingest_batch)
+    layout: partial_retrain swaps whole ``cell_id=`` directories, and a
+    store whose top level is ``ingest_batch=`` would mix two partition
+    orders after the next retrain."""
+    from bqfetch_spark.streaming.ann_index import _write_codes_wave
+
+    codes_dir = os.path.join(str(tmp_path), "index", "codes")
+    codes = spark.range(12).selectExpr(
+        "id AS vec_id", "id % 3 AS cell_id", "id AS code"
+    )
+    _write_codes_wave(codes.filter("vec_id < 6"), codes_dir, 0)
+    _write_codes_wave(codes.filter("vec_id >= 6"), codes_dir, 1)
+
+    compact_ann_code_store(spark, os.path.join(str(tmp_path), "index"))
+    top = sorted(d for d in os.listdir(codes_dir) if not d.startswith(("_", ".")))
+    assert top == ["cell_id=0", "cell_id=1", "cell_id=2"]
+    for cell in top:
+        assert os.listdir(os.path.join(codes_dir, cell)) == ["ingest_batch=-1"]
+    post = spark.read.parquet(codes_dir)
+    assert sorted(r.vec_id for r in post.collect()) == list(range(12))
+
+
 def test_compaction_refuses_claimed_store(spark, tmp_path):
     from bqfetch_spark.streaming.incremental import build_fingerprint_store
     from bqfetch_spark.streaming.ownership import claim_store

@@ -1533,11 +1533,11 @@ def test_mix_wave_retry_is_idempotent_and_drift_zero_on_uniform(spark, tmp_path)
 
     from bqfetch_spark.catalog import load_catalog
     from bqfetch_spark.streaming.drift import (
-        BACKFILL_BATCH_ID,
         append_mix_wave,
         drift_report,
         mix_counts,
     )
+    from bqfetch_spark.streaming.waves import BACKFILL_BATCH_ID
     from tests.conftest import SF_SMOKE
 
     docs = load_catalog(spark, SF_SMOKE).table("documents").select(
@@ -1674,11 +1674,11 @@ def test_streaming_vocab_growth_matches_oneshot_and_survives_blind_replay(
     from bqfetch_spark.catalog import load_catalog
     from bqfetch_spark.operators.corpus import qx269_vocab_growth
     from bqfetch_spark.streaming.vocab import (
-        _wave_of,
         append_vocab_wave,
         run_incremental_vocab,
         vocab_report,
     )
+    from bqfetch_spark.streaming.waves import wave_of
     from tests.conftest import SF_CORRECT
 
     work = str(tmp_path / "vocabwork")
@@ -1694,7 +1694,7 @@ def test_streaming_vocab_growth_matches_oneshot_and_survives_blind_replay(
     docs = load_catalog(spark, SF_CORRECT).table("documents").select(
         "doc_id", "source", "text"
     )
-    append_vocab_wave(spark, docs.filter(_wave_of() == 3), store, batch_id=None)
+    append_vocab_wave(spark, docs.filter(wave_of("doc_id") == 3), store, batch_id=None)
     replayed = {r.frac: r for r in vocab_report(spark, store).collect()}
     for r in one.collect():
         assert replayed[r.frac].vocab == r.vocab  # min-merge idempotent
@@ -1716,11 +1716,11 @@ def test_streaming_packing_straddles_and_retries_correctly(spark, tmp_path):
 
     from bqfetch_spark.catalog import load_catalog
     from bqfetch_spark.streaming.packing import (
-        _wave_of,
         append_pack_wave,
         packing_report,
         run_incremental_packing,
     )
+    from bqfetch_spark.streaming.waves import wave_of
     from tests.conftest import SF_CORRECT
 
     work = str(tmp_path / "packwork")
@@ -1753,6 +1753,6 @@ def test_streaming_packing_straddles_and_retries_correctly(spark, tmp_path):
         "doc_id", "source", "text"
     )
     before = sorted(map(tuple, rep))
-    append_pack_wave(spark, docs.filter(_wave_of() == 4), store, batch_id=1)
+    append_pack_wave(spark, docs.filter(wave_of("doc_id") == 4), store, batch_id=1)
     after = sorted(map(tuple, packing_report(spark, store).collect()))
     assert after == before

@@ -63,7 +63,7 @@ def test_runner_store_claimed_by_its_checkpoint(spark, tmp_path):
     from bqfetch_spark.streaming.incremental import run_incremental_dedup
 
     work = str(tmp_path / "work")
-    out = run_incremental_dedup(spark, SF_SMOKE, work, files_per_trigger=1)
+    out = run_incremental_dedup(spark, SF_SMOKE, work)
     assert out.count() > 0
     store_dir = os.path.join(work, "fp_store")
     assert os.path.exists(os.path.join(store_dir, OWNER_MARKER))
