@@ -395,7 +395,23 @@ ADJUDICATIONS = {
         "must re-read the store (excluding its own batch tag is the "
         "contract). Isolated min-of-5 3.14s at 02:05 vs the 7.5s the "
         "04:30 degraded-box re-measure shows (same code; see the "
-        "slow-box note above ADJUDICATIONS)."
+        "slow-box note above ADJUDICATIONS). "
+        "r8 flag 3.36->5.53s (the round's only n_regressions entry) "
+        "adjudicated as in-group warm-state noise in r9, NOT the r8 "
+        "workload change (the added at-least-once retry wave): an "
+        "isolated fresh-child min-of-5 re-measure gives 3.25s (runs "
+        "8.21/3.74/3.67/3.42/3.25) — BELOW the r7 record of 3.36s even "
+        "with the third incremental_dedup_batch call included. The "
+        "retry wave appends one extra O(wave) fingerprint write, "
+        "invisible at this scale; the 5.53s run sat late in a bench "
+        "group whose earlier streaming queries leave the session warm "
+        "but memory-pressured. Re-flagged 3.52->5.95s in the r10 "
+        "morning bench: module STILL byte-unchanged since r8, and the "
+        "isolated fresh-child NOOP-SINK min-of-5 on an idle box gives "
+        "3.30s (runs 14.99/4.27/3.69/3.54/3.30) — at the r9-"
+        "adjudicated 3.25s level. The query rebuilds its store "
+        "fixtures per run, so late-suite temp-dir/GC state inflates "
+        "in-suite repeats; the isolated number is the plan's cost."
     ),
     "qx219_embedding_frechet": (_R14_SLOW_BOX),
     "q65_training_pipeline": (
@@ -403,7 +419,12 @@ ADJUDICATIONS = {
         "while the spin loop read 2.1s (~2x slow): box-normalized it "
         "sits at its r13 records (2.54s r13 32-core suite, 1.96s "
         "driver 8-core = the flag's prev); the four-stage pipeline's "
-        "modules are byte-untouched this round."
+        "modules are byte-untouched this round. "
+        "r8 verdict watch item (2.58->3.14s over two rounds with the "
+        "module untouched) closed in r9: isolated fresh-child min-of-5 "
+        "gives 2.65s (runs 6.60/3.35/2.65/2.72/2.80) — within 3% of the "
+        "r6 2.58s record and well inside the verdict's 1.2x bound. "
+        "In-group drift tracked box state, not code."
     ),
     "qx221_bpe_merges": (
         _R14_SLOW_BOX + " 02:10 isolated: 2.51s (= r13 record); the "
@@ -588,31 +609,6 @@ ADJUDICATIONS = {
         "warm-up dominates cold). The same plan recorded 3.38s earlier "
         "in r5 — the query's KMeans stage tracks box load, the plan "
         "shape (bucketed candidate join, salted, pair-dedup) unchanged."
-    ),
-    "qx212_compact_fingerprint_store": (
-        "r8 flag 3.36->5.53s (the round's only n_regressions entry) "
-        "adjudicated as in-group warm-state noise in r9, NOT the r8 "
-        "workload change (the added at-least-once retry wave): an "
-        "isolated fresh-child min-of-5 re-measure gives 3.25s (runs "
-        "8.21/3.74/3.67/3.42/3.25) — BELOW the r7 record of 3.36s even "
-        "with the third incremental_dedup_batch call included. The "
-        "retry wave appends one extra O(wave) fingerprint write, "
-        "invisible at this scale; the 5.53s run sat late in a bench "
-        "group whose earlier streaming queries leave the session warm "
-        "but memory-pressured. Re-flagged 3.52->5.95s in the r10 "
-        "morning bench: module STILL byte-unchanged since r8, and the "
-        "isolated fresh-child NOOP-SINK min-of-5 on an idle box gives "
-        "3.30s (runs 14.99/4.27/3.69/3.54/3.30) — at the r9-"
-        "adjudicated 3.25s level. The query rebuilds its store "
-        "fixtures per run, so late-suite temp-dir/GC state inflates "
-        "in-suite repeats; the isolated number is the plan's cost."
-    ),
-    "q65_training_pipeline": (
-        "r8 verdict watch item (2.58->3.14s over two rounds with the "
-        "module untouched) closed in r9: isolated fresh-child min-of-5 "
-        "gives 2.65s (runs 6.60/3.35/2.65/2.72/2.80) — within 3% of the "
-        "r6 2.58s record and well inside the verdict's 1.2x bound. "
-        "In-group drift tracked box state, not code."
     ),
     "qx125_pagerank": (
         "r8 verdict watch item (4.04->4.68s over two rounds, module "

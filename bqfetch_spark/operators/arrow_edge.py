@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bqfetch_spark.catalog import load_catalog
+from bqfetch_spark.compat import app_id
 from bqfetch_spark.functions.vectors import as_double, cosine_pandas
 from bqfetch_spark.registry import register
 from bqfetch_spark.session import shuffle_partitions
@@ -321,7 +322,7 @@ def q57_streaming_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _build(work: str) -> None:
         holder["result"] = run_incremental_ann_index(spark, sf_dir, work)
 
-    work = session_workdir("annidx", f"{spark.sparkContext.applicationId}|{sf_dir}", _build)
+    work = session_workdir("annidx", f"{app_id(spark)}|{sf_dir}", _build)
     if "result" in holder:
         return holder["result"]
     # memo hit: serve the search from the already-maintained store
@@ -485,8 +486,9 @@ def _qx164_oracle() -> str:
 )
 def qx164_streaming_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """qx162's stateful streaming spelling: applyInPandasWithState
-    keyed by (user_id, event_type) carrying ONE long (last SEEN event
-    ts in µs) per live key — bounded by key domain, not stream length.
+    keyed by a hash bucket of (user_id, event_type)
+    (streaming/bucket_state.py), carrying ONE long (last SEEN event ts
+    in µs) per live key — bounded by key domain, not stream length.
     Over the single-file fixture replay the micro-batch equals the
     table, so the batch lag-window oracle applies verbatim; the
     cross-wave state carry (ts-split waves, the part one bounded
@@ -738,7 +740,7 @@ def qx242_ann_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bqfetch_spark.operators.pq import _Q56_MEMO, _q56_memo_put
 
     union = initial.unionByName(wave_in).unionByName(wave_dr)
-    mkey = (spark.sparkContext.applicationId, sf_dir, "qx242-retrain")
+    mkey = (app_id(spark), sf_dir, "qx242-retrain")
     if mkey not in _Q56_MEMO:
         _q56_memo_put(
             mkey, sorted(km_quantized(fixed_point_kmeans(union, IVFPQ_CELLS)))

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bqfetch_spark.catalog import load_catalog
+from bqfetch_spark.compat import app_id
 from bqfetch_spark.functions.vectors import as_double, cosine
 from bqfetch_spark.operators.relational import r6
 from bqfetch_spark.registry import register
@@ -256,7 +257,7 @@ def pq_frame_and_sample(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, li
     """(localCheckpointed quantized frame, [(vec_id, qn), ...] sample)
     memoized per session — ONE checkpoint + ONE bounded collect feeds
     every integer-PQ trainer."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (app_id(spark), sf_dir)
     if key not in _PQ_FRAME_MEMO:
         q = pq_quantized(spark, sf_dir).localCheckpoint(eager=True)
         sample = [
@@ -273,7 +274,7 @@ def pq_frame_and_sample(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, li
 def pqi_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
     """(quantized frame, qn-grid integer codebooks), memoized."""
     q, sample = pq_frame_and_sample(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (app_id(spark), sf_dir)
     if key not in _PQI_BOOKS_MEMO:
         _PQI_BOOKS_MEMO[key] = int_train_codebooks(sample)
     return q, _PQI_BOOKS_MEMO[key]
@@ -531,7 +532,7 @@ def qx240_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the CODE STORE is an artifact too (q57's premise): checkpoint it
     # once per session so repeat invocations serve from codes instead
     # of re-running the encode pass
-    ck = (spark.sparkContext.applicationId, sf_dir, "qx240-codes")
+    ck = (app_id(spark), sf_dir, "qx240-codes")
     if ck not in _PQI_BOOKS_MEMO:
         _PQI_BOOKS_MEMO[ck] = pqi_int_codes(q, books).localCheckpoint(eager=True)
     codes = _PQI_BOOKS_MEMO[ck]
@@ -1180,7 +1181,7 @@ def int_residual_books(sample: list, cq_sorted: list) -> list:
 def _q56_artifacts(spark: SparkSession, sf_dir: str):
     """(frame, coarse cq list, residual books, residual-sample
     assignment fn inputs) memoized per session."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (app_id(spark), sf_dir)
     if key in _Q56_MEMO:
         return _Q56_MEMO[key]
     from bqfetch_spark.operators.similarity import (
@@ -1237,7 +1238,7 @@ def q57_int_artifacts(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     (Q57_TRAIN_WHERE), memoized per session — ONE training chain feeds
     q57's streaming fixture AND qx242's drift monitor (the
     shared-artifact stance: production trains once, serves many)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "q57-train")
+    key = (app_id(spark), sf_dir, "q57-train")
     if key not in _Q56_MEMO:
         from bqfetch_spark.streaming.waves import wave_of
 
@@ -1442,7 +1443,7 @@ def q56_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # code store as a per-session artifact (see qx240): assignment +
     # residual + encode run once, repeats serve from the checkpoint
-    ck = (spark.sparkContext.applicationId, sf_dir, "q56-codes")
+    ck = (app_id(spark), sf_dir, "q56-codes")
     if ck not in _Q56_MEMO:
         _q56_memo_put(
             ck,

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bqfetch_spark.catalog import load_catalog
+from bqfetch_spark.compat import app_id
 from bqfetch_spark.functions.vectors import as_double, cosine, dot, norm2
 from bqfetch_spark.operators.relational import r6
 from bqfetch_spark.registry import register
@@ -479,7 +480,7 @@ _KM_STATE_MEMO: dict = {}
 
 
 def _ivf_quantized_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (app_id(spark), sf_dir)
     if key not in _E_CKPT_MEMO:
         _E_CKPT_MEMO[key] = _ivf_quantized(spark, sf_dir).localCheckpoint(eager=True)
     return _E_CKPT_MEMO[key]
@@ -491,7 +492,7 @@ def fixed_point_kmeans_cached(
     """(checkpointed quantized corpus, trained exact state) with both
     memoized per session — the deterministic fit makes the memo safe."""
     e = _ivf_quantized_ckpt(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, k, rounds)
+    key = (app_id(spark), sf_dir, k, rounds)
     if key not in _KM_STATE_MEMO:
         _KM_STATE_MEMO[key] = fixed_point_kmeans(e, k, rounds)
     return e, _KM_STATE_MEMO[key]
@@ -1700,7 +1701,6 @@ def _embedding_sufficient_stats(spark: SparkSession, sf_dir: str):
     import os
 
     from bqfetch_spark.catalog import _session_uuid
-    from bqfetch_spark.compat import app_id
 
     try:
         mtime = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))

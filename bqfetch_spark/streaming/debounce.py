@@ -2,57 +2,36 @@
 
 Batch qx162 judges each event against its predecessor with a lag
 window; on a live stream the "predecessor" must be carried across
-micro-batches, so the operator is ``applyInPandasWithState`` with a
-last-SEEN-timestamp state per (user_id, event_type). lag-gap semantics
-exactly as the batch op: an event survives iff it is the key's first
-ever or arrived more than DEBOUNCE_SECONDS after the previous SEEN
-(not previous kept) event.
+micro-batches, so the operator keeps a last-SEEN-timestamp state per
+(user_id, event_type). lag-gap semantics exactly as the batch op: an
+event survives iff it is the key's first ever or arrived more than
+DEBOUNCE_SECONDS after the previous SEEN (not previous kept) event.
 
-State keying (round 14, guide §4.5/§2.3): the GroupState key is a
-HASH BUCKET of (user_id, event_type), not the raw pair. The per-key
-spelling invoked the Python kernel once per live key per micro-batch
-(~7.5k invocations per fixture replay); the per-invocation fixed cost
-(pandas group slice, Arrow framing, state round-trip) dominated the
-query wall (measured ~4.1-4.7 s isolated with an already-numpy
-kernel). Bucketing by pmod(xxhash64(user, etype), DEBOUNCE_BUCKETS)
-drops that to DEBOUNCE_BUCKETS invocations, each admitting ALL of its
-keys vectorized in one numpy pass — admission is a pure lag against
-the previous SEEN event, so there is no sequential dependency to
-unroll. The bucket state holds (users, etypes, lasts) parallel arrays
-— one long + one key per live key, the SAME total state as before,
-just grouped; admission decisions are bit-identical (the per-key
-reference kernel is kept below and hypothesis-tested equal).
-
-DEBOUNCE_BUCKETS is an explicit deployment choice like the state
-partition count (see streaming/windows.run_to_memory): size it so a
-bucket holds ~10k-100k live keys (state value ~16-100 B/key keeps the
-per-bucket state row in the single-MB range). The local default 64
-suits the fixture's ~7.5k keys; BQFS_DEBOUNCE_BUCKETS overrides for
-production key volumes. Production also adds a GroupState TTL so idle
-keys expire.
+The state is keyed by a hash bucket of (user_id, event_type)
+(streaming/bucket_state.py): each bucket admits ALL of its keys in one
+numpy pass. Admission is a pure lag against the previous SEEN event,
+so there is no sequential dependency to unroll. The bucket state holds
+(users, etypes, lasts) parallel arrays — one long + one key per live
+key; admission decisions are bit-identical to the per-key reference
+kernel kept below (hypothesis-tested equal). Idle keys never expire
+yet (ROADMAP direction 5).
 """
 
 from __future__ import annotations
-
-import os
-from typing import Any, Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from bqfetch_spark.operators.events import DEBOUNCE_SECONDS
+from bqfetch_spark.streaming import bucket_state
 
 OUTPUT_SCHEMA = "event_id bigint, user_id bigint, event_type string, ts timestamp, gap_s bigint"
-STATE_SCHEMA = "last_us long"  # per-key reference spelling
 BUCKET_STATE_SCHEMA = (
     "users array<bigint>, etypes array<string>, lasts array<bigint>"
 )
-
-DEBOUNCE_BUCKETS = int(os.environ.get("BQFS_DEBOUNCE_BUCKETS", "64"))
+_STATE_COLS = ("user_id", "event_type", "last_us")
 
 _GAP_US = DEBOUNCE_SECONDS * 1_000_000
 
@@ -66,10 +45,8 @@ def debounce_kernel(last_us: int | None, pdf: pd.DataFrame) -> tuple[int | None,
     hypothesis can drive without a SparkSession."""
     if not len(pdf):
         # zero-row group (reachable via timeout/TTL invocations, not
-        # the current NoTimeout wrapper): state and emptiness pass
-        # through
+        # the NoTimeout wiring): state and emptiness pass through
         return last_us, pdf.assign(gap_s=pd.Series(dtype="int64"))
-    # numpy spelling (round 13): same admission math on int64 arrays —
     # µs gaps against the previous SEEN event, state seeds the first
     # gap, first-ever rows keep with gap_s = -1.
     ts_ns = pdf["ts"].to_numpy().astype("datetime64[ns]").astype("int64")
@@ -115,99 +92,38 @@ def debounce_bucket_kernel(
     u = uid[order]
     e = et_codes[order]
     us = ts_ns[order] // 1_000
-    n = len(u)
-    newrun = np.empty(n, dtype=bool)
-    newrun[0] = True
-    newrun[1:] = (u[1:] != u[:-1]) | (e[1:] != e[:-1])
-    starts = np.flatnonzero(newrun)
+    starts = np.flatnonzero(bucket_state.run_heads(u, e))
+    ends = np.append(starts[1:], len(us)) - 1
+    runs = pd.DataFrame(
+        {"user_id": u[starts],
+         "event_type": np.asarray(et_uniques, dtype=object)[e[starts]]}
+    )
+    old = bucket_state.state_frame(state, _STATE_COLS)
+    # each key-run's first gap is seeded from the bucket state (-1 =
+    # first ever, mirroring debounce_kernel's last_us=None branch)
+    seed = bucket_state.lookup(old, runs, "last_us", -1)
     prev = np.empty_like(us)
     prev[1:] = us[:-1]
-    # seed each key-run's first gap from the bucket state (-1 = first
-    # ever, mirroring debounce_kernel's last_us=None branch)
-    seed = np.full(len(starts), -1, dtype=np.int64)
-    if state is not None and len(state[0]):
-        st = pd.DataFrame(
-            {"user_id": np.asarray(state[0], dtype=np.int64),
-             "event_type": state[1],
-             "last_us": np.asarray(state[2], dtype=np.int64)}
-        )
-        run_keys = pd.DataFrame(
-            {"user_id": u[starts],
-             "event_type": np.asarray(et_uniques, dtype=object)[e[starts]]}
-        )
-        lu = run_keys.merge(st, on=["user_id", "event_type"], how="left")[
-            "last_us"
-        ].to_numpy()
-        has = ~np.isnan(lu)
-        seed[has] = lu[has].astype(np.int64)
-    first_ever = np.zeros(n, dtype=bool)
-    first_ever[starts] = seed < 0
     prev[starts] = np.where(seed < 0, 0, seed)
+    first_ever = np.zeros(len(us), dtype=bool)
+    first_ever[starts] = seed < 0
     gap = us - prev
     keep = (gap > _GAP_US) | first_ever
     gap_s = gap // 1_000_000
     gap_s[first_ever] = -1
     kept = pdf.iloc[order[keep]].copy()
     kept["gap_s"] = gap_s[keep]
-    # new state = old keys not seen this batch + every batch key's run
-    # end (its last SEEN µs)
-    ends = np.append(starts[1:] - 1, n - 1)
-    new_users = u[starts]
-    new_etypes = np.asarray(et_uniques, dtype=object)[e[starts]]
-    new_lasts = us[ends]
-    if state is not None and len(state[0]):
-        batch_df = pd.DataFrame(
-            {"user_id": new_users, "event_type": new_etypes, "last_us": new_lasts}
-        )
-        old = pd.DataFrame(
-            {"user_id": np.asarray(state[0], dtype=np.int64),
-             "event_type": state[1],
-             "last_us": np.asarray(state[2], dtype=np.int64)}
-        )
-        merged = pd.concat([batch_df, old], ignore_index=True).drop_duplicates(
-            subset=["user_id", "event_type"], keep="first"
-        )
-        new_users = merged["user_id"].to_numpy()
-        new_etypes = merged["event_type"].to_numpy()
-        new_lasts = merged["last_us"].to_numpy()
-    new_state = (
-        [int(x) for x in new_users],
-        [str(x) for x in new_etypes],
-        [int(x) for x in new_lasts],
-    )
-    return new_state, kept
+    # each batch key's state is its run end (its last SEEN µs)
+    new = runs.assign(last_us=us[ends])
+    return bucket_state.carry_forward(new, old, _STATE_COLS[:2]), kept
 
 
-def _debounce_group(
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """One hash bucket's micro-batch → vectorized multi-key admission."""
-    st = tuple(state.get) if state.exists else None
-    batch = pd.concat(list(batches), ignore_index=True)
-    new_state, kept = debounce_bucket_kernel(st, batch)
-    if new_state is not None:
-        state.update(new_state)
-    if len(kept):
-        yield kept[["event_id", "user_id", "event_type", "ts", "gap_s"]]
-
-
-def debounce_stream(events_stream: DataFrame, n_buckets: int | None = None) -> DataFrame:
+def debounce_stream(events_stream: DataFrame) -> DataFrame:
     """Wire the debounce operator onto a streaming events frame."""
-    nb = DEBOUNCE_BUCKETS if n_buckets is None else n_buckets
-    return (
-        events_stream.select("event_id", "user_id", "event_type", "ts")
-        .withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("user_id", "event_type"), F.lit(nb)).cast("int"),
-        )
-        .groupBy("bucket")
-        .applyInPandasWithState(
-            _debounce_group,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=BUCKET_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return bucket_state.bucketed_stream(
+        events_stream.select("event_id", "user_id", "event_type", "ts"),
+        ["user_id", "event_type"],
+        debounce_bucket_kernel,
+        OUTPUT_SCHEMA,
+        BUCKET_STATE_SCHEMA,
     )

@@ -10,13 +10,7 @@ state.
 
 Implementation: ``applyInPandasWithState`` (GroupState keyed by
 source), the same arbitrary-state API as the sessionizer
-(streaming/sessions.py). Spark 4's transformWithState
-(``transformWithStateInPandas`` + ValueState) is the v2 spelling of
-exactly this operator and ships here as ``enforce_quota_stream_tws``,
-but its state-server protocol requires ``google.protobuf``, which this
-environment does not ship — the GroupState spelling is semantically
-identical for a single value state and runs everywhere, so it stays
-the default.
+(streaming/sessions.py).
 
 Admission is deterministic: within each micro-batch a source's rows
 are processed in doc_id order, so with doc_id-ordered arrival the
@@ -33,7 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 # binds at every fixture SF (admits ~280 of 500 docs at sf0.001/0.01,
 # ~284 of 5000 at sf0.1) so the quota actually cuts in tests
@@ -95,55 +88,5 @@ def enforce_quota_stream(docs_stream: DataFrame) -> DataFrame:
             stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-class _QuotaProcessor(StatefulProcessor):
-    """transformWithState spelling of ``_enforce_group``. Same
-    admission core — batch-sort by doc_id, prefix-cumsum against the
-    carried counter — so both spellings pass the q100 oracle. Runnable
-    only where google.protobuf is installed (see tws_available in
-    streaming/sessions.py)."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("used", "used long")
-
-    def handleInputRows(self, key, rows, timerValues):
-        (source,) = key
-        used = self._state.get()[0] if self._state.exists() else 0
-        batch = pd.concat(list(rows), ignore_index=True)
-        batch = batch.sort_values("doc_id", kind="mergesort")
-        cum = used + batch["n_tokens"].cumsum()
-        admitted = batch.loc[cum <= TOKEN_BUDGET_PER_SOURCE].copy()
-        self._state.update((int(cum.iloc[-1]) if len(batch) else used,))
-        if len(admitted):
-            admitted["cum_tokens"] = cum[admitted.index].astype("int64")
-            yield admitted[["doc_id", "source", "n_tokens", "cum_tokens"]]
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def enforce_quota_stream_tws(docs_stream: DataFrame) -> DataFrame:
-    """``enforce_quota_stream`` on the transformWithStateInPandas API
-    (Spark 4.x successor to applyInPandasWithState; see
-    streaming/sessions.py for the availability gate — the TWS driver
-    worker needs google.protobuf, so the GroupState form stays the
-    default spelling)."""
-    from bqfetch_spark.streaming.sessions import _require_rocksdb
-
-    _require_rocksdb(docs_stream.sparkSession)
-    return (
-        with_token_counts(docs_stream)
-        .groupBy("source")
-        .transformWithStateInPandas(
-            statefulProcessor=_QuotaProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
         )
     )

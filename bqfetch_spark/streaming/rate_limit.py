@@ -6,8 +6,8 @@ across micro-batches. State per user is TWO longs — the hour currently
 being counted (epoch micros of its start) and how many events of that
 hour have been SEEN — so an hour rollover resets the counter without
 per-window keys: state is bounded by the live-user domain, not by
-stream length × windows (production adds a GroupState TTL for idle
-users).
+stream length × windows. Idle users never expire yet (ROADMAP
+direction 5).
 
 Admission is deterministic with ts-ordered arrival per key: an event's
 slot is its 1-based position within its (user, hour) by (ts, event_id)
@@ -16,44 +16,30 @@ slot ≤ RATE_LIMIT_N. Wave-slicing invariance of the kernel is
 hypothesis-tested; cross-wave carry is pytest-asserted with ts-split
 waves; the bounded one-file replay shares qx163's full oracle.
 
-State keying (round 14, guide §4.5/§2.3 — the qx164 debounce recipe):
-the GroupState key is a HASH BUCKET of user_id, not the raw id. The
-per-key spelling invoked the Python kernel once per live user per
-micro-batch; the per-invocation fixed cost (pandas group slice, Arrow
-framing, state round-trip) dominated the query wall. Bucketing by
-pmod(xxhash64(user_id), RATE_LIMIT_BUCKETS) drops that to
-RATE_LIMIT_BUCKETS invocations, each admitting ALL of its users in one
-vectorized pass — an event's slot is a per-(user, hour) running count,
-so there is no cross-user dependency to unroll. Bucket state carries
-(users, hours, seens) parallel arrays — the SAME total state, grouped;
-admission decisions are bit-identical to the per-key reference kernel
-(kept below, hypothesis-tested equal). RATE_LIMIT_BUCKETS is a
-deployment choice like the state partition count: the local default 64
-suits the fixture's key volume; BQFS_RATE_LIMIT_BUCKETS overrides for
-production. Production also adds a GroupState TTL for idle users.
+The state is keyed by a hash bucket of user_id
+(streaming/bucket_state.py): each bucket admits ALL of its users in
+one vectorized pass — an event's slot is a per-(user, hour) running
+count, so there is no cross-user dependency to unroll. Bucket state
+carries (users, hours, seens) parallel arrays; admission decisions are
+bit-identical to the per-key reference kernel kept below
+(hypothesis-tested equal).
 """
 
 from __future__ import annotations
-
-import os
-from typing import Any, Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from bqfetch_spark.operators.events import RATE_LIMIT_N
+from bqfetch_spark.streaming import bucket_state
 
 OUTPUT_SCHEMA = (
     "event_id bigint, user_id bigint, ts timestamp, slot bigint, window_start timestamp"
 )
-STATE_SCHEMA = "hour_us long, seen long"  # per-key reference spelling
 BUCKET_STATE_SCHEMA = "users array<bigint>, hours array<bigint>, seens array<bigint>"
-
-RATE_LIMIT_BUCKETS = int(os.environ.get("BQFS_RATE_LIMIT_BUCKETS", "64"))
+_STATE_COLS = ("user_id", "hour_us", "seen")
 
 _HOUR_US = 3_600 * 1_000_000
 
@@ -113,109 +99,35 @@ def rate_limit_bucket_kernel(
     u = uid[order]
     us = ts_ns[order] // 1_000
     hour = (us // _HOUR_US) * _HOUR_US
-    n = len(u)
     # (user, hour) runs — hours are nondecreasing within a user after
     # the sort, so each (user, hour) value is one contiguous run and
     # position-within-run == the reference kernel's per-value cumcount
-    newrun = np.empty(n, dtype=bool)
-    newrun[0] = True
-    newrun[1:] = (u[1:] != u[:-1]) | (hour[1:] != hour[:-1])
-    starts = np.flatnonzero(newrun)
-    run_id = np.cumsum(newrun) - 1
-    slot = np.arange(n, dtype=np.int64) - starts[run_id] + 1
-    # seed each run from the bucket state: the reference kernel adds
-    # prev_seen to every row whose hour == the user's carried hour —
-    # per run, that is a constant carry (runs are unique per
-    # (user, hour) value)
-    if state is not None and len(state[0]):
-        st = pd.DataFrame(
-            {
-                "user_id": np.asarray(state[0], dtype=np.int64),
-                "hour_us": np.asarray(state[1], dtype=np.int64),
-                "seen": np.asarray(state[2], dtype=np.int64),
-            }
-        )
-        run_keys = pd.DataFrame({"user_id": u[starts], "hour_us": hour[starts]})
-        carry = (
-            run_keys.merge(st, on=["user_id", "hour_us"], how="left")["seen"]
-            .fillna(0)
-            .to_numpy()
-            .astype(np.int64)
-        )
-        slot = slot + carry[run_id]
+    heads = bucket_state.run_heads(u, hour)
+    starts = np.flatnonzero(heads)
+    run_id = np.cumsum(heads) - 1
+    # the reference kernel adds prev_seen to every row whose hour ==
+    # the user's carried hour — per run, a constant carry
+    old = bucket_state.state_frame(state, _STATE_COLS)
+    runs = pd.DataFrame({"user_id": u[starts], "hour_us": hour[starts]})
+    carry = bucket_state.lookup(old, runs, "seen", 0)
+    slot = np.arange(len(u), dtype=np.int64) - starts[run_id] + 1 + carry[run_id]
     keep = slot <= RATE_LIMIT_N
     kept = pdf.iloc[order[keep]].copy()
     kept["slot"] = slot[keep]
     kept["window_start"] = pd.to_datetime(hour[keep] * 1_000)
-    # new state per user present this batch: the hour of the user's
-    # LAST row and how many of that hour have been seen (this batch's
-    # last run length + the carried count when the hour matches)
-    user_new = np.empty(n, dtype=bool)
-    user_new[0] = True
-    user_new[1:] = u[1:] != u[:-1]
-    user_starts = np.flatnonzero(user_new)
-    user_ends = np.append(user_starts[1:] - 1, n - 1)
-    last_hour = hour[user_ends]
-    seen_last = user_ends - starts[run_id[user_ends]] + 1
-    if state is not None and len(state[0]):
-        lk = pd.DataFrame({"user_id": u[user_starts], "hour_us": last_hour})
-        carry_last = (
-            lk.merge(st, on=["user_id", "hour_us"], how="left")["seen"]
-            .fillna(0)
-            .to_numpy()
-            .astype(np.int64)
-        )
-        seen_last = seen_last + carry_last
-    new_users = u[user_starts]
-    new_hours = last_hour
-    new_seens = seen_last
-    if state is not None and len(state[0]):
-        batch_df = pd.DataFrame(
-            {"user_id": new_users, "hour_us": new_hours, "seen": new_seens}
-        )
-        merged = pd.concat([batch_df, st], ignore_index=True).drop_duplicates(
-            subset=["user_id"], keep="first"
-        )
-        new_users = merged["user_id"].to_numpy()
-        new_hours = merged["hour_us"].to_numpy()
-        new_seens = merged["seen"].to_numpy()
-    new_state = (
-        [int(x) for x in new_users],
-        [int(x) for x in new_hours],
-        [int(x) for x in new_seens],
-    )
-    return new_state, kept
+    # each batch user's state: the hour of their LAST row and its slot
+    # (= that hour's seen count, carry included)
+    last = np.append(np.flatnonzero(bucket_state.run_heads(u))[1:], len(u)) - 1
+    new = pd.DataFrame({"user_id": u[last], "hour_us": hour[last], "seen": slot[last]})
+    return bucket_state.carry_forward(new, old, _STATE_COLS[:1]), kept
 
 
-def _rate_limit_group(
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """One hash bucket's micro-batch → vectorized multi-user admission."""
-    st = tuple(state.get) if state.exists else None
-    batch = pd.concat(list(batches), ignore_index=True)
-    new_state, kept = rate_limit_bucket_kernel(st, batch)
-    if new_state is not None:
-        state.update(new_state)
-    if len(kept):
-        yield kept[["event_id", "user_id", "ts", "slot", "window_start"]]
-
-
-def rate_limit_stream(events_stream: DataFrame, n_buckets: int | None = None) -> DataFrame:
+def rate_limit_stream(events_stream: DataFrame) -> DataFrame:
     """Wire the rate limiter onto a streaming events frame."""
-    nb = RATE_LIMIT_BUCKETS if n_buckets is None else n_buckets
-    return (
-        events_stream.select("event_id", "user_id", "ts")
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("user_id"), F.lit(nb)).cast("int")
-        )
-        .groupBy("bucket")
-        .applyInPandasWithState(
-            _rate_limit_group,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=BUCKET_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return bucket_state.bucketed_stream(
+        events_stream.select("event_id", "user_id", "ts"),
+        ["user_id"],
+        rate_limit_bucket_kernel,
+        OUTPUT_SCHEMA,
+        BUCKET_STATE_SCHEMA,
     )

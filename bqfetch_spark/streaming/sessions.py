@@ -3,7 +3,8 @@ applyInPandasWithState (SURVEY.md §2.C C17's streaming form).
 
 Batch sessionization (q31) re-scans history; the streaming form keeps
 one open session per user in state, emits a session row when the
-30-minute inactivity gap closes it, and GC's state via timeouts. This
+30-minute inactivity gap closes it, and (event-time form) flushes
+idle sessions once the watermark passes their gap. This
 is the canonical "operator Spark lacks as a single primitive,
 implemented as a Pandas-UDF-backed stateful map" (build-brief custom
 operator path b).
@@ -18,10 +19,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 SESSION_GAP_SECONDS = 30 * 60
 
@@ -32,11 +29,23 @@ OUTPUT_SCHEMA = (
 STATE_SCHEMA = "start long, last long, n long"
 
 
+def _closed_rows(user_id: Any, sessions: list[tuple[int, int, int]]) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "user_id": [user_id] * len(sessions),
+            "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in sessions],
+            "session_end": [pd.Timestamp(e, unit="us") for _, e, _ in sessions],
+            "n_events": [c for _, _, c in sessions],
+            "closed": [True] * len(sessions),
+        }
+    )
+
+
 def _sessionize_group(
     key: tuple[Any, ...],
     batches: Iterator[pd.DataFrame],
     state: GroupState,
-    timeout: str | None = None,
+    event_time: bool = False,
 ) -> Iterator[pd.DataFrame]:
     """Fold this micro-batch's events for one user into the open
     session; emit every session the new events close, keep the still-
@@ -44,17 +53,9 @@ def _sessionize_group(
     (user_id,) = key
     if state.hasTimedOut:
         if state.exists:
-            start, last, n = state.get
+            session = tuple(state.get)
             state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "session_start": [pd.Timestamp(start, unit="us")],
-                    "session_end": [pd.Timestamp(last, unit="us")],
-                    "n_events": [n],
-                    "closed": [True],
-                }
-            )
+            yield _closed_rows(user_id, [session])
         return
 
     ts_list: list[int] = []
@@ -80,177 +81,31 @@ def _sessionize_group(
             last = max(last, t)
             n += 1
     state.update((start, last, n))
-    if timeout == "processing":
-        state.setTimeoutDuration(SESSION_GAP_SECONDS * 1000)
-    elif timeout == "event":
+    if event_time:
         # fire when the WATERMARK passes last-event + gap: the open
         # session closes exactly when batch semantics say it must,
         # driven by event time, immune to ingestion stalls
         state.setTimeoutTimestamp(last // 1000 + SESSION_GAP_SECONDS * 1000)
 
     if closed:
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(closed),
-                "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in closed],
-                "session_end": [pd.Timestamp(e, unit="us") for _, e, _ in closed],
-                "n_events": [c for _, _, c in closed],
-                "closed": [True] * len(closed),
-            }
-        )
+        yield _closed_rows(user_id, closed)
 
 
-def sessionize_stream(events: DataFrame, with_timeout: bool = False) -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """events (user_id, ts, ...) → closed-session rows, maintained
-    incrementally with per-user state. ``with_timeout=True`` enables
-    the processing-time timeout that flushes idle sessions in a
-    continuous deployment (do NOT combine with AvailableNow triggers —
-    the timeout keeps the bounded query alive)."""
-    conf = (
-        GroupStateTimeout.ProcessingTimeTimeout if with_timeout else GroupStateTimeout.NoTimeout
-    )
-    mode = "processing" if with_timeout else None
+    incrementally with per-user state. Without a timeout the last open
+    session per user stays in state; ``sessionize_stream_event_time``
+    flushes idle sessions."""
     return (
         events.select("user_id", "ts")
         .groupBy("user_id")
         .applyInPandasWithState(
-            # closure (cloudpickle-serialized) so workers see the flag
-            lambda key, batches, state: _sessionize_group(
-                key, batches, state, timeout=mode
-            ),
+            _sessionize_group,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=conf,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-class _SessionProcessor(StatefulProcessor):
-    """transformWithState spelling of ``_sessionize_group`` — Spark 4.x
-    positions transformWithStateInPandas as the successor to
-    applyInPandasWithState (SPARK-49564); the session-fold semantics
-    are IDENTICAL and batch-equality tests drive both paths. State is
-    one (start, last, n) epoch-µs triple per user in a named
-    ValueState; timers replace the GroupState timeout conf (eventTime
-    timer = flush when the watermark passes last-event + gap)."""
-
-    def __init__(self, time_mode: str = "none"):
-        self._time_mode = time_mode
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("session", "start long, last long, n long")
-
-    def _emit(self, user_id, sessions: list[tuple[int, int, int]]) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "user_id": [user_id] * len(sessions),
-                "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in sessions],
-                "session_end": [pd.Timestamp(e, unit="us") for _, e, _ in sessions],
-                "n_events": [c for _, _, c in sessions],
-                "closed": [True] * len(sessions),
-            }
-        )
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        ts_list: list[int] = []
-        for pdf in rows:
-            ts_list.extend(int(v.value // 1000) for v in pd.to_datetime(pdf["ts"]))
-        ts_list.sort()
-
-        start, last, n = self._state.get() if self._state.exists() else (0, 0, 0)
-        gap_us = SESSION_GAP_SECONDS * 1_000_000
-        closed: list[tuple[int, int, int]] = []
-        for t in ts_list:
-            if n == 0:
-                start = last = t
-                n = 1
-            elif t - last > gap_us:
-                closed.append((start, last, n))
-                start = last = t
-                n = 1
-            else:
-                last = max(last, t)
-                n += 1
-        self._state.update((start, last, n))
-        if self._time_mode == "eventTime":
-            # one live timer per user: re-arm at last-event + gap
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(last // 1000 + SESSION_GAP_SECONDS * 1000)
-        elif self._time_mode == "processingTime":
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(
-                timerValues.getCurrentProcessingTimeInMs() + SESSION_GAP_SECONDS * 1000
-            )
-        if closed:
-            yield self._emit(user_id, closed)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if self._state.exists():
-            start, last, n = self._state.get()
-            self._state.clear()
-            if n > 0:
-                yield self._emit(user_id, [(start, last, n)])
-
-    def close(self) -> None:
-        pass
-
-
-def tws_available() -> bool:
-    """transformWithStateInPandas needs two things beyond the PySpark
-    wheel: the RocksDB state store (bundled with Spark 4) and the
-    ``google.protobuf`` Python package — the TWS driver worker speaks a
-    protobuf protocol to the JVM state server and crashes on import
-    without it (probed empirically: STREAMING_PYTHON_RUNNER_
-    INITIALIZATION_FAILURE, ImportError google.protobuf). protobuf is
-    an optional pyspark dependency not installed in every environment,
-    so the TWS spelling is gated and the applyInPandasWithState forms
-    remain the default."""
-    import importlib.util
-
-    try:
-        # raises ModuleNotFoundError when even the 'google' namespace
-        # package is absent (find_spec imports the parent first)
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-def _require_rocksdb(spark) -> None:
-    """transformWithState runs only on the RocksDB state store; set it
-    for this session (bundled with Spark 4, no extra install)."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires the google.protobuf "
-            "Python package (pip install protobuf); use "
-            "sessionize_stream / sessionize_stream_event_time instead."
-        )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-
-def sessionize_stream_tws(events: DataFrame, event_time: bool = False) -> DataFrame:
-    """``sessionize_stream`` / ``sessionize_stream_event_time`` on the
-    transformWithStateInPandas API (the applyInPandasWithState forms
-    above remain the fallback spelling; both pass the same
-    batch-equality tests). ``event_time=True`` adds the watermark-driven
-    idle-session flush via an event-time timer."""
-    _require_rocksdb(events.sparkSession)
-    src = events.select("user_id", "ts")
-    if event_time:
-        src = src.withWatermark("ts", "2 hours")
-    return src.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_SessionProcessor("eventTime" if event_time else "none"),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime" if event_time else "none",
     )
 
 
@@ -268,7 +123,7 @@ def sessionize_stream_event_time(events: DataFrame, watermark: str = "2 hours") 
         .groupBy("user_id")
         .applyInPandasWithState(
             lambda key, batches, state: _sessionize_group(
-                key, batches, state, timeout="event"
+                key, batches, state, event_time=True
             ),
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,

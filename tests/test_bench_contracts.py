@@ -27,3 +27,24 @@ def test_machine_adjudication_branches():
     # the worst ratios were prioritized
     worst, best = f"q{n_flags - 1:02d}", "q00"
     assert worst in calls and best not in calls
+
+
+def test_bench_dict_literals_have_no_duplicate_keys():
+    """A repeated key in a dict literal silently keeps only the later
+    value (the earlier ADJUDICATIONS text never reached BENCH_DETAIL);
+    every dict literal in bench.py must spell each key once."""
+    import ast
+    from collections import Counter
+    from pathlib import Path
+
+    import bench
+
+    tree = ast.parse(Path(bench.__file__).read_text(encoding="utf-8"))
+    dupes = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Dict):
+            keys = Counter(
+                k.value for k in node.keys if isinstance(k, ast.Constant)
+            )
+            dupes += [(node.lineno, k) for k, n in keys.items() if n > 1]
+    assert dupes == []

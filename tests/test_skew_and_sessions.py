@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from bqfetch_spark.catalog import load_catalog
@@ -68,95 +67,6 @@ def test_streaming_sessionization_matches_batch(spark):
     n_users = len({r.user_id for r in batch_rows})
     assert len(streamed) >= len(batch_sessions) - n_users - 5
     assert len(streamed) > 0
-
-
-def _tws_ok():
-    from bqfetch_spark.streaming.sessions import tws_available
-
-    return tws_available()
-
-
-@pytest.mark.skipif(not _tws_ok(), reason="google.protobuf not installed (TWS driver worker requires it)")
-def test_streaming_sessionization_tws_matches_batch(spark):
-    """The transformWithStateInPandas spelling (Spark 4.x successor to
-    applyInPandasWithState) must close the same sessions as batch q31 —
-    the same contract the fallback spelling passes above."""
-    from bqfetch_spark.streaming.sessions import sessionize_stream_tws
-    from bqfetch_spark.streaming.windows import streaming_events
-
-    ev = streaming_events(spark, SF_SMOKE)
-    result = (
-        sessionize_stream_tws(ev)
-        .writeStream.format("memory")
-        .queryName("sessions_tws_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    result.awaitTermination()
-    streamed = spark.table("sessions_tws_test").collect()
-
-    from bqfetch_spark.registry import all_queries
-
-    batch_rows = all_queries()["q31_sessionization"].fn(spark, SF_SMOKE).collect()
-    batch_sessions = {
-        (r.user_id, r.session_start, r.session_end, r.n_events) for r in batch_rows
-    }
-    for r in streamed:
-        assert (r.user_id, r.session_start, r.session_end, r.n_events) in batch_sessions, r
-    n_users = len({r.user_id for r in batch_rows})
-    assert len(streamed) >= len(batch_sessions) - n_users - 5
-    assert len(streamed) > 0
-
-
-@pytest.mark.skipif(not _tws_ok(), reason="google.protobuf not installed (TWS driver worker requires it)")
-def test_event_time_timer_tws_flushes_idle_sessions(spark, tmp_path):
-    """TWS event-time timers must flush idle sessions at the same
-    watermark boundary the applyInPandasWithState event-timeout form
-    does (same two-batch scenario as the test below)."""
-    import datetime as dt
-    import os
-
-    from bqfetch_spark.streaming.sessions import sessionize_stream_tws
-
-    utc = dt.timezone.utc
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 0, tzinfo=utc)
-    m = dt.timedelta(minutes=1)
-    src = tmp_path / "ev"
-    spark.createDataFrame(
-        [(1, t0), (1, t0 + 5 * m), (2, t0 + 1 * m)], "user_id long, ts timestamp"
-    ).coalesce(1).write.parquet(str(src / "f1"))
-    spark.createDataFrame(
-        [(3, t0 + 360 * m)], "user_id long, ts timestamp"
-    ).coalesce(1).write.parquet(str(src / "f2"))
-    now = os.path.getmtime(str(src / "f2"))
-    for sub, off in (("f1", -100), ("f2", -50)):
-        for f in (src / sub).glob("*.parquet"):
-            os.utime(f, (now + off, now + off))
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
-    q = (
-        sessionize_stream_tws(stream, event_time=True)
-        .writeStream.format("memory")
-        .queryName("et_sessions_tws_test")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table("et_sessions_tws_test").collect()
-    got = {(r.user_id, r.session_start, r.session_end, r.n_events) for r in rows}
-    naive = lambda t: t.replace(tzinfo=None)
-    assert (1, naive(t0), naive(t0 + 5 * m), 2) in got, got
-    assert (2, naive(t0 + 1 * m), naive(t0 + 1 * m), 1) in got, got
-    assert all(r.user_id != 3 for r in rows)
-    assert all(r.closed for r in rows)
 
 
 def test_event_time_timeout_flushes_idle_sessions(spark, tmp_path):

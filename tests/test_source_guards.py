@@ -1,0 +1,27 @@
+"""Source-level guards on where the engine touches its surroundings:
+deployment settings come from the environment in session.py alone, and
+the Spark application identity is read through compat.py alone (Spark
+Connect has no sparkContext)."""
+
+from __future__ import annotations
+
+from pathlib import Path
+
+import bqfetch_spark
+
+
+def test_environment_and_app_id_reads_live_in_one_module_each():
+    root = Path(bqfetch_spark.__file__).parent
+    sources = {
+        p.relative_to(root).as_posix(): p.read_text(encoding="utf-8")
+        for p in root.rglob("*.py")
+    }
+    strays = {}
+    for needles, home in (
+        (("os.environ", "os.getenv"), "session.py"),
+        (("sparkContext.applicationId",), "compat.py"),
+    ):
+        hits = [n for n, text in sources.items() if any(x in text for x in needles)]
+        if sorted(hits) != [home]:
+            strays[needles] = sorted(hits)
+    assert strays == {}

@@ -776,56 +776,6 @@ def test_token_quota_state_carries_across_microbatches(spark, tmp_path):
     assert any(i < 250 for i in ids) and any(i >= 250 for i in ids)
 
 
-def _tws_ok():
-    from bqfetch_spark.streaming.sessions import tws_available
-
-    return tws_available()
-
-
-@pytest.mark.skipif(
-    not _tws_ok(), reason="google.protobuf not installed (TWS driver worker requires it)"
-)
-def test_token_quota_tws_matches_groupstate(spark, tmp_path):
-    """The transformWithStateInPandas quota spelling must admit the
-    same cumulative-sum prefix as the GroupState form (same two-wave
-    scenario as the test above)."""
-    from pyspark.sql.window import Window
-
-    from bqfetch_spark.streaming.quota import (
-        TOKEN_BUDGET_PER_SOURCE,
-        enforce_quota_stream_tws,
-        with_token_counts,
-    )
-    from bqfetch_spark.streaming.windows import run_to_memory
-
-    docs = load_catalog(spark, SF_SMOKE).table("documents")
-    docs.filter(F.col("doc_id") < 250).coalesce(1).write.parquet(str(tmp_path / "w1"))
-    docs.filter(F.col("doc_id") >= 250).coalesce(1).write.parquet(str(tmp_path / "w2"))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .option("recursiveFileLookup", "true")
-        .parquet(str(tmp_path))
-    )
-    result = run_to_memory(
-        enforce_quota_stream_tws(stream), "quota_tws_test", output_mode="append"
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    want_df = (
-        with_token_counts(docs)
-        .withColumn("cum_tokens", F.sum("n_tokens").over(w))
-        .filter(F.col("cum_tokens") <= TOKEN_BUDGET_PER_SOURCE)
-    )
-    got = {tuple(r) for r in result.collect()}
-    want = {tuple(r) for r in want_df.select(*result.columns).collect()}
-    assert got == want and len(got) > 0
-
-
 def test_streaming_dedup_matches_batch(spark):
     """q70: doubled delivery through dropDuplicatesWithinWatermark must
     reproduce the batch table exactly once per event_id."""
@@ -1393,6 +1343,45 @@ def test_streaming_rate_limit_matches_batch_window(spark, tmp_path):
     got = {tuple(r) for r in result.select(*batch.columns).collect()}
     want = {tuple(r) for r in batch.collect()}
     assert got == want and len(got) > 0
+
+
+@pytest.mark.parametrize(
+    "module, stream_fn",
+    [("debounce", "debounce_stream"), ("rate_limit", "rate_limit_stream")],
+)
+def test_bucket_count_does_not_change_admissions(spark, monkeypatch, module, stream_fn):
+    """The qx164/qx166 streams keep the same rows whether every key
+    shares one GroupState bucket or spreads over the default count: the
+    bucket is a grouping of per-key state, never part of a decision.
+    The state row count proves each run used the bucket count set."""
+    import importlib
+    from collections import Counter
+
+    from bqfetch_spark.streaming import bucket_state
+    from bqfetch_spark.streaming.windows import streaming_events
+
+    wire = getattr(importlib.import_module(f"bqfetch_spark.streaming.{module}"), stream_fn)
+
+    def run(name):
+        q = (
+            wire(streaming_events(spark, SF_SMOKE))
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        state_rows = max(
+            p["stateOperators"][0]["numRowsTotal"] for p in q.recentProgress
+        )
+        return Counter(tuple(r) for r in spark.table(name).collect()), state_rows
+
+    default_rows, default_state = run(f"{module}_buckets_default")
+    monkeypatch.setattr(bucket_state, "BUCKETS", 1)
+    one_rows, one_state = run(f"{module}_buckets_one")
+    assert one_rows == default_rows and sum(default_rows.values()) > 0
+    assert one_state == 1 and default_state > 1
 
 
 def test_debounce_state_survives_checkpoint_restart(spark, tmp_path):
