@@ -41,6 +41,7 @@ class Catalog:
         self.spark = spark
         self.sf_dir = sf_dir
         self._dfs: dict[str, DataFrame] = {}
+        self._session = _session_key(spark)
         # defensive: the harness may hand us a session built without
         # bqfetch_spark.session defaults; events.ts (timestamp[ns])
         # is unreadable without this (it is a runtime-settable conf)
@@ -61,6 +62,7 @@ class Catalog:
             df = self.spark.read.parquet(self.path(name))
             df = normalize_table(name, df)
             df.createOrReplaceTempView(name)
+            _VIEW_OWNER[self._session] = self.sf_dir
             self._dfs[name] = df
         return self._dfs[name]
 
@@ -109,6 +111,12 @@ def normalize_table(name: str, df: DataFrame) -> DataFrame:
 # SHARE an applicationId but not temp views — without it the second
 # session would reuse a catalog whose views exist only in the first.
 _CATALOGS: dict[tuple[str, str, str], Catalog] = {}
+# Which sf_dir's tables a session's temp views currently name, keyed by
+# (applicationId, sessionUUID) and set whenever a Catalog registers a
+# view. A memo hit re-registers the views only when another sf_dir took
+# them over, so the common hit (same sf_dir as the last call) makes no
+# py4j view call at all.
+_VIEW_OWNER: dict[tuple[str, str], str] = {}
 
 
 def _session_uuid(spark: SparkSession) -> str:
@@ -134,16 +142,20 @@ def _session_uuid(spark: SparkSession) -> str:
         return u
 
 
-def load_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
+def _session_key(spark: SparkSession) -> tuple[str, str]:
     from bqfetch_spark.compat import app_id
 
-    key = (app_id(spark), _session_uuid(spark), sf_dir)
-    cat = _CATALOGS.get(key)
+    return app_id(spark), _session_uuid(spark)
+
+
+def load_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
+    session = _session_key(spark)
+    cat = _CATALOGS.get((*session, sf_dir))
     if cat is None:
         cat = Catalog(spark, sf_dir).load_all()
-        _CATALOGS[key] = cat
-    else:
-        # re-assert temp views in case another sf_dir overwrote them
+        _CATALOGS[(*session, sf_dir)] = cat
+    elif _VIEW_OWNER.get(session) != sf_dir:
         for name, df in cat._dfs.items():
             df.createOrReplaceTempView(name)
+    _VIEW_OWNER[session] = sf_dir
     return cat

@@ -11,10 +11,17 @@ Reference mapping:
   :256) we compute **contiguous value-range buckets** distributed
   (ntile over the sorted distinct domain) and collect only n (lo, hi)
   boundary pairs — O(n_chunks), not O(n_values), so the planning step
-  itself survives a 100 TB table.
+  itself survives a 100 TB table. A size-driven plan
+  (``by_chunk_size_in_GB``, :374-454) reads the table once: one grouped
+  aggregate gives each value's row count and materialized bytes, and
+  the table size, the skew check and the boundaries all derive from it.
 - ``BigQueryFetcher.fetch(chunk, nb_cores, parallel_backend)``
-  (:267-372) → ``Fetcher.fetch``: a range predicate pushed into the
-  Parquet scan. Process pools / CTAS temp tables / psutil sizing
+  (:267-372) → ``Fetcher.fetch``: the chunk predicate pushed into the
+  Parquet scan. Like the reference, which renders each chunk's filter
+  once as one SQL string (:171, sent as ``row_restriction`` at
+  :483-484), a predicate is one Spark-SQL expression built in a single
+  JVM call, so its driver cost does not grow with the chunk's value
+  list. Process pools / CTAS temp tables / psutil sizing
   (bqfetch/utils.py:30-62, bqfetch/bqfetch.py:158-181,374-436) are
   deleted — Spark's scheduler and AQE own parallelism and memory.
 - ``fetch_to_pandas`` keeps the reference's pandas result contract
@@ -25,12 +32,17 @@ Reference mapping:
 
 from __future__ import annotations
 
+import datetime
+import decimal
+import logging
+import math
 import time
 from dataclasses import dataclass
 from typing import TYPE_CHECKING, Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from bqfetch_spark.catalog import load_catalog
 from bqfetch_spark.compat import arrow_batches
@@ -38,6 +50,8 @@ from bqfetch_spark.registry import register
 
 if TYPE_CHECKING:
     import pyarrow as pa
+
+_logger = logging.getLogger(__name__)
 
 
 @dataclass(frozen=True)
@@ -47,6 +61,55 @@ class TableRef:
 
     sf_dir: str
     name: str
+
+
+def _spark_identifier(column: str) -> str:
+    """``column`` spelled as ``F.col(column)`` resolves it: dot-separated
+    parts, each backquoted, unless the name is already backquoted."""
+    if "`" in column:
+        return column
+    return ".".join(f"`{part}`" for part in column.split("."))
+
+
+def _sql_literal(v: Any, spark: bool, ntz: bool = False) -> str | None:
+    """``v`` as a SQL literal — the one renderer behind both chunk
+    predicates. ``spark=True`` spells Spark SQL with the type ``F.lit(v)``
+    gives (``ntz``: the session prefers TIMESTAMP_NTZ for naive
+    datetimes, as ``F.lit`` does) and returns None for a value it has no
+    spelling for; otherwise it spells BigQuery Storage-API SQL. NaN and
+    ±inf take a cast, since a bare ``nan``/``inf`` is an identifier in
+    both dialects."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        if spark and not -(2**63) <= v < 2**63:
+            return None  # F.lit has no type past bigint either
+        return str(int(v))
+    if isinstance(v, float):
+        if math.isfinite(v):
+            return f"{float(v)!r}D" if spark else repr(float(v))
+        word = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+        return f"CAST('{word}' AS {'DOUBLE' if spark else 'FLOAT64'})"
+    if spark and isinstance(v, decimal.Decimal) and v.is_finite():
+        return f"{v}BD"
+    if isinstance(v, datetime.datetime):
+        if not spark:
+            return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
+        if v.tzinfo is None and ntz:
+            return f"TIMESTAMP_NTZ '{v.isoformat(sep=' ')}'"
+        # the instant F.lit takes: a naive value is local wall-clock
+        # time in the Python process's TZ, whatever the session's is
+        return f"timestamp_micros({TimestampType().toInternal(v)})"
+    if isinstance(v, datetime.date):
+        return f"DATE '{v.isoformat()}'"
+    if spark and isinstance(v, (bytes, bytearray)):
+        return f"X'{v.hex()}'"
+    if isinstance(v, str) or not spark:
+        escaped = str(v).replace("\\", "\\\\").replace("'", "\\'")
+        return f"'{escaped}'"
+    return None
 
 
 @dataclass(frozen=True)
@@ -61,14 +124,14 @@ class FetchingChunk:
     - **value-list** (``elements`` set): reference-parity categorical
       chunks (``FetchingChunk(elements, column)``,
       bqfetch/bqfetch.py:43-50) — an explicit tuple of member values,
-      evaluated as a typed ``Column.isin`` predicate. Unlike the
-      reference, which stringifies and double-quotes every value into
-      the SQL text (bqfetch/bqfetch.py:171 and :483-484, breaking
-      non-string types), ``isin`` renders correct literal types for
-      ints/dates/strings alike (the SURVEY §1.3 promise). Intended for
-      low-cardinality chunk columns (the README's ``Geography``
-      example); driver memory is O(domain), so the planner bounds it
-      with ``max_values``.
+      evaluated as a typed IN predicate. Unlike the reference, which
+      stringifies and double-quotes every value into the SQL text
+      (bqfetch/bqfetch.py:171 and :483-484, breaking non-string
+      types), each value keeps its literal type for ints/dates/strings
+      alike (the SURVEY §1.3 promise). Intended for low-cardinality
+      chunk columns (the README's ``Geography`` example); driver
+      memory is O(domain), so the planner bounds it with
+      ``max_values``.
     """
 
     column: str
@@ -87,18 +150,30 @@ class FetchingChunk:
     includes_null: bool = False
 
     def predicate(self) -> F.Column:
-        base = None
+        """The chunk's membership test, built in ONE JVM call: the IN /
+        BETWEEN / IS NULL predicate is rendered as Spark SQL and handed
+        to ``F.expr``. Building it literal by literal
+        (``isin(*elements)``: a py4j round-trip per value) cost 9.3 s
+        for a 10,000-value chunk; one expression costs milliseconds.
+        Every literal keeps the type ``F.lit`` gives its Python value,
+        so the optimized plan — and the ``In(...)`` filter pushed to the
+        Parquet scan — is the one ``isin`` builds. A chunk holding a
+        value with no SQL spelling (a struct, say) falls back to one
+        ``F.lit`` per value."""
+        ntz = False
+        if any(isinstance(v, datetime.datetime) and v.tzinfo is None for v in self._values):
+            from pyspark.sql.utils import is_timestamp_ntz_preferred
+
+            ntz = is_timestamp_ntz_preferred()
+        sql = self._sql(_spark_identifier(self.column), spark=True, ntz=ntz)
+        if sql is not None:
+            return F.expr(sql)
+        col = F.col(self.column)
         if self.elements is not None:
-            if self.elements:
-                base = F.col(self.column).isin(*self.elements)
-        elif self.lower is not None:
-            base = F.col(self.column).between(F.lit(self.lower), F.lit(self.upper))
-        if self.includes_null:
-            nullp = F.col(self.column).isNull()
-            return nullp if base is None else (base | nullp)
-        if base is None:  # degenerate: empty chunk matches nothing
-            return F.lit(False)
-        return base
+            base = col.isin(*self.elements) if self.elements else F.lit(False)
+        else:
+            base = col.between(F.lit(self.lower), F.lit(self.upper))
+        return (base | col.isNull()) if self.includes_null else base
 
     def row_restriction(self) -> str:
         """The chunk predicate as a Storage-API SQL boolean — what the
@@ -106,36 +181,40 @@ class FetchingChunk:
         (bqfetch/bqfetch.py:483-484) and what the spark-bigquery
         connector forwards verbatim from its ``filter`` reader option
         (sources/bigquery.py). Semantics mirror ``predicate()``
-        exactly: typed literals (the reference double-quoted every
-        value as a string, :171, breaking non-string columns), BETWEEN
-        for range mode, IN for value-list mode, an IS NULL disjunct
-        for the NULL-owning chunk, FALSE for the degenerate empty
-        chunk."""
-        import datetime
+        exactly, through the same literal renderer: typed literals (the
+        reference double-quoted every value as a string, :171, breaking
+        non-string columns), BETWEEN for range mode, IN for value-list
+        mode, an IS NULL disjunct for the NULL-owning chunk, FALSE for
+        the degenerate empty chunk."""
+        return self._sql(f"`{self.column}`", spark=False)
 
-        def lit(v: Any) -> str:
-            if isinstance(v, bool):
-                return "TRUE" if v else "FALSE"
-            if isinstance(v, (int, float)):
-                return repr(v)
-            if isinstance(v, datetime.datetime):
-                return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
-            if isinstance(v, datetime.date):
-                return f"DATE '{v.isoformat()}'"
-            escaped = str(v).replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{escaped}'"
+    @property
+    def _values(self) -> tuple:
+        return (self.lower, self.upper) if self.elements is None else self.elements
 
-        col = f"`{self.column}`"
+    def _sql(self, col: str, spark: bool, ntz: bool = False) -> str | None:
+        """The chunk predicate over identifier ``col`` as SQL text, or
+        None when a value has no spelling (``_sql_literal``)."""
+        lits = [_sql_literal(v, spark, ntz) for v in self._values]
+        if None in lits:
+            return None
         base = None
         if self.elements is not None:
             if self.elements:
-                base = f"{col} IN ({', '.join(lit(e) for e in self.elements)})"
+                base = f"{col} IN ({', '.join(lits)})"
         elif self.lower is not None:
-            base = f"{col} BETWEEN {lit(self.lower)} AND {lit(self.upper)}"
+            base = f"{col} BETWEEN {lits[0]} AND {lits[1]}"
         if self.includes_null:
             nullp = f"{col} IS NULL"
             return nullp if base is None else f"({base} OR {nullp})"
         return base if base is not None else "FALSE"
+
+
+def _skewed(mean: float) -> F.Column:
+    """1 for a value whose row count (``__cnt``) is more than ±25% off
+    ``mean``, else 0 — the reference's dispersion test
+    (bqfetch/bqfetch.py:410-419)."""
+    return (F.abs(F.col("__cnt") - F.lit(mean)) > 0.25 * F.lit(mean)).cast("long")
 
 
 class Fetcher:
@@ -153,35 +232,24 @@ class Fetcher:
     def table(self, ref: TableRef) -> DataFrame:
         return load_catalog(self.spark, ref.sf_dir).table(ref.name)
 
-    def _value_counts(self, ref: TableRef, column: str) -> DataFrame:
-        """Per-value row counts — the one data-sized aggregate the whole
-        planning pipeline derives from (reference SQL A2,
-        bqfetch/bqfetch.py:105-123). Both the skew diagnostic and the
-        domain bucketing read this DF, so a ``by_chunk_size_in_GB``
-        plan costs ONE scan of the table, not one per diagnostic
-        (round-4 fix: check_skew + distinct previously each rescanned)."""
-        return self.table(ref).groupBy(column).agg(F.count(F.lit(1)).alias("__cnt"))
+    def _value_counts(self, ref: TableRef, column: str, with_bytes: bool = False) -> DataFrame:
+        """Per-value row counts (``__cnt``) — the one data-sized aggregate
+        the whole planning pipeline derives from (reference SQL A2,
+        bqfetch/bqfetch.py:105-123). ``with_bytes`` adds each value's
+        Σ materialized_row_bytes (``__bytes``), so a size-driven plan
+        reads its table size, skew mean and bucket boundaries off this
+        one scan."""
+        tbl = self.table(ref)
+        aggs = [F.count(F.lit(1)).alias("__cnt")]
+        if with_bytes:
+            from bqfetch_spark.plans.advisor import materialized_row_bytes
 
-    def _skew_fraction(self, ref: TableRef, column: str, counts: DataFrame) -> float:
-        """Dispersed fraction — the share of distinct values whose row
-        count is more than ±25% off the mean — with the reference's
-        plan-time warning above 25% (bqfetch/bqfetch.py:410-419).
-        Distributed: two tiny aggregates over the counts DF, nothing
-        about the domain is collected."""
-        row = counts.crossJoin(
-            F.broadcast(counts.agg(F.avg("__cnt").alias("__mean")))
-        ).agg(
-            (
-                F.sum(
-                    (
-                        F.abs(F.col("__cnt") - F.col("__mean"))
-                        > 0.25 * F.col("__mean")
-                    ).cast("long")
-                )
-                / F.count(F.lit(1))
-            ).alias("frac")
-        ).collect()[0]
-        frac = float(row["frac"] or 0.0)
+            aggs.append(F.sum(materialized_row_bytes(tbl)).alias("__bytes"))
+        return tbl.groupBy(column).agg(*aggs)
+
+    def _report_skew(self, ref: TableRef, column: str, frac: float) -> float:
+        """The reference's plan-time warning when more than 25% of the
+        chunk-key values are dispersed (bqfetch/bqfetch.py:410-419)."""
         if frac > 0.25:
             import warnings
 
@@ -196,10 +264,15 @@ class Fetcher:
 
     def check_skew(self, ref: TableRef, column: str) -> float:
         """Standalone plan-time dispersion check (reference parity:
-        bqfetch/bqfetch.py:410-419). ``chunks(by_chunk_size_in_GB=…)``
-        runs the same diagnostic off its shared counts DF instead of
-        calling this (one table scan total)."""
-        return self._skew_fraction(ref, column, self._value_counts(ref, column))
+        bqfetch/bqfetch.py:410-419): the share of distinct values whose
+        row count is more than ±25% off the mean, warning above 25%.
+        Two tiny aggregates over the per-value counts; nothing about the
+        domain is collected. ``chunks(by_chunk_size_in_GB=…)`` tallies
+        the same indicator inside its boundary job instead."""
+        counts = self._value_counts(ref, column)
+        mean, n = counts.agg(F.avg("__cnt"), F.count(F.lit(1))).first()
+        n_skewed = counts.agg(F.sum(_skewed(mean))).first()[0] if n else 0
+        return self._report_skew(ref, column, n_skewed / n if n else 0.0)
 
     def chunks(
         self,
@@ -231,8 +304,11 @@ class Fetcher:
           plans/advisor.suggest_chunks_by_size; reference
           get_nb_chunks_approximation, bqfetch/bqfetch.py:374-454).
           This mode also runs the reference's plan-time skew check
-          (check_skew: warns when >25% of values are >25% off the
-          mean count, bqfetch/bqfetch.py:410-419).
+          (``check_skew``'s fraction and warning,
+          bqfetch/bqfetch.py:410-419). The whole plan reads the table
+          ONCE: a grouped aggregate gives each value's row count and
+          bytes, one tiny summary of it gives the table bytes and the
+          mean count, and the skew tally rides in the boundary job.
 
         The bucketing is the adaptive exact-ntile spelling
         (plans/ranks.with_ntile_auto): small domains use a plain ntile
@@ -243,42 +319,44 @@ class Fetcher:
 
         ``by_values=True`` returns reference-parity value-LIST chunks
         (``FetchingChunk.elements`` populated — bqfetch/bqfetch.py:43-50
-        semantics with typed ``isin`` predicates instead of the
-        reference's stringified IN-lists, :171). Bucket membership is
-        identical to the range mode (same ntile over the same sorted
-        domain) — only the chunk representation changes. Driver memory
-        becomes O(domain), so the planner refuses domains larger than
+        semantics with typed IN predicates instead of the reference's
+        stringified IN-lists, :171). Bucket membership is identical to
+        the range mode (same ntile over the same sorted domain) — only
+        the chunk representation changes. Driver memory becomes
+        O(domain), so the planner refuses domains larger than
         ``max_values`` (probed with a limit over the persisted counts
         aggregate — bounds the driver payload, and the aggregate is
         computed once for probe and boundaries together) and points at
-        the range mode."""
+        the range mode.
+
+        Each plan is also logged as one structured ``logging`` record on
+        the ``bqfetch_spark.fetcher`` logger: ``n_chunks``,
+        ``estimated_bytes`` and ``skew_fraction`` (None for a plan by
+        chunk count, which computes neither) and ``domain_size``."""
         if (by_nb_chunks is None) == (by_chunk_size_in_GB is None):
             raise ValueError(
                 "exactly one of by_nb_chunks / by_chunk_size_in_GB must be given"
             )
         if by_nb_chunks is not None and by_nb_chunks <= 0:
             raise ValueError("by_nb_chunks must be positive")
-        from bqfetch_spark.plans.advisor import (
-            estimated_materialized_bytes,
-            suggest_chunks_by_size,
-        )
+        from bqfetch_spark.plans.advisor import suggest_chunks_by_size
         from bqfetch_spark.plans.ranks import with_ntile_auto
         from bqfetch_spark.session import shuffle_partitions
 
-        counts = self._value_counts(ref, column)
-        persisted = False
+        sized = by_chunk_size_in_GB is not None
+        nbytes = mean = None
+        counts = self._value_counts(ref, column, with_bytes=sized)
+        # the size summary, the domain probe and the boundary job all
+        # read the counts aggregate — persist it so the table is
+        # scanned once (the probe's limit cannot short-circuit an
+        # aggregation; what it bounds is the DRIVER payload)
+        persisted = sized or by_values
+        if persisted:
+            counts = counts.persist()
         try:
-            if by_values:
-                # the domain probe and the boundary job below both read
-                # the counts aggregate — persist so the table is
-                # aggregated once (the probe's limit cannot short-
-                # circuit an aggregation; what it bounds is the DRIVER
-                # payload, and with the persist it also costs no second
-                # scan)
-                counts = counts.persist()
-                persisted = True
-            if by_chunk_size_in_GB is not None:
-                nbytes = estimated_materialized_bytes(self.table(ref))
+            if sized:
+                total, mean = counts.agg(F.sum("__bytes"), F.avg("__cnt")).first()
+                nbytes = int(total or 0)
                 by_nb_chunks = suggest_chunks_by_size(
                     nbytes, by_chunk_size_in_GB, nb_cores, available_bytes
                 )
@@ -286,14 +364,7 @@ class Fetcher:
                     f"estimated {by_nb_chunks} chunks for {ref.name} "
                     f"({nbytes / 1024**3:.3f} GB at {by_chunk_size_in_GB} GB/chunk × {nb_cores} cores)"
                 )
-                # skew stats and bucket boundaries both derive from the
-                # SAME materialized per-value counts — one table scan
-                if not persisted:
-                    counts = counts.persist()
-                    persisted = True
-                self._skew_fraction(ref, column, counts)
-
-            domain = counts.select(column)
+            domain = counts.select(column, "__cnt") if sized else counts.select(column)
             if by_values:
                 probe = domain.limit(max_values + 1).count()
                 if probe > max_values:
@@ -320,6 +391,8 @@ class Fetcher:
                 # and union(chunks) stays exactly the table
                 F.sum(F.col(column).isNull().cast("long")).alias("n_nulls"),
             ]
+            if sized:
+                agg_cols.append(F.sum(_skewed(mean)).alias("n_skewed"))
             if by_values:
                 agg_cols.append(F.sort_array(F.collect_list(column)).alias("els"))
             bounds = bucketed.groupBy("__bucket").agg(*agg_cols).orderBy("__bucket").collect()
@@ -339,7 +412,28 @@ class Fetcher:
             )
             for row in bounds
         ]
+        domain_size = sum(c.n_values for c in out)
+        frac = None
+        if sized:
+            n_skewed = sum(row["n_skewed"] or 0 for row in bounds)
+            frac = self._report_skew(
+                ref, column, n_skewed / domain_size if domain_size else 0.0
+            )
         self._log(f"planned {len(out)} chunks on {ref.name}.{column}")
+        _logger.info(
+            "planned %d chunks on %s.%s",
+            len(out),
+            ref.name,
+            column,
+            extra={
+                "table": ref.name,
+                "column": column,
+                "n_chunks": len(out),
+                "estimated_bytes": nbytes,
+                "domain_size": domain_size,
+                "skew_fraction": frac,
+            },
+        )
         return out
 
     def fetch(self, ref: TableRef, chunk: FetchingChunk | None) -> DataFrame:

@@ -400,9 +400,7 @@ def qx249_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces the same physical plan the hand-written window spelling
     (q20's idiom) would — SQL-surface completeness without a
     performance cliff."""
-    cat = load_catalog(spark, sf_dir)
-    cat.table("customer").createOrReplaceTempView("customer")
-    cat.table("orders").createOrReplaceTempView("orders")
+    load_catalog(spark, sf_dir)  # registers the temp views the SQL reads
     return spark.sql(LATERAL_ORACLE)
 
 
@@ -455,7 +453,7 @@ def qx250_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-min CC loop), so depth-bounded hierarchies (org charts, BOMs)
     run in O(depth) joins; unbounded graphs should still prefer the
     pointer-jumping CC operator."""
-    load_catalog(spark, sf_dir).table("supplier").createOrReplaceTempView("supplier")
+    load_catalog(spark, sf_dir)  # registers the temp views the SQL reads
     return spark.sql(RECURSIVE_SPARK_SQL)
 
 

@@ -98,9 +98,7 @@ def qx125_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     weights/out-weights are exact BIGINTs; each per-node contribution
     is a <=|nodes|-term double sum — mirrored expression, ~ulp drift,
     stable at round-6."""
-    cat = load_catalog(spark, sf_dir)
-    for t in ("lineitem", "orders", "customer", "supplier", "nation"):
-        cat.table(t).createOrReplaceTempView(t)
+    cat = load_catalog(spark, sf_dir)  # also registers the temp views the SQL reads
     # The ONLY fact-sized stage stays distributed: one partially-
     # aggregated multi-join reduces the facts to the nation-level edge
     # list. That list is DIMENSION-bounded — ≤ |nation|² = 625 rows at
@@ -188,9 +186,7 @@ def qx145_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard degree-ordered orientation (u→v iff deg(u)<deg(v)) — the
     canonical-order join IS that algorithm; integer counts make the
     oracle exact."""
-    cat = load_catalog(spark, sf_dir)
-    for t in ("lineitem", "orders", "customer", "supplier", "nation"):
-        cat.table(t).createOrReplaceTempView(t)
+    cat = load_catalog(spark, sf_dir)  # also registers the temp views the SQL reads
     e = spark.sql(_EDGES_SQL)
     und = (
         e.filter(F.col("src") != F.col("dst"))
@@ -270,9 +266,7 @@ def qx146_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     a capped recursive CTE taking min(hop); both engines bound the
     walk at BFS_MAX_HOPS so the semantics agree exactly, NULL for
     unreachable."""
-    cat = load_catalog(spark, sf_dir)
-    for t in ("lineitem", "orders", "customer", "supplier", "nation"):
-        cat.table(t).createOrReplaceTempView(t)
+    cat = load_catalog(spark, sf_dir)  # also registers the temp views the SQL reads
     from pyspark.sql.window import Window
 
     e = spark.sql(_EDGES_SQL).filter(F.col("src") != F.col("dst"))

@@ -185,9 +185,12 @@ def test_row_restriction_matches_predicate_semantics(spark, fetcher=None):
     ]
     df = spark.createDataFrame(rows, "k int, name string, d date")
 
-    def both(chunk):
-        via_pred = {r.name for r in df.filter(chunk.predicate()).collect()}
-        via_sql = {r.name for r in df.filter(F.expr(chunk.row_restriction())).collect()}
+    def both(chunk, frame=df):
+        via_pred = {r.name for r in frame.filter(chunk.predicate()).collect()}
+        # Spark stands in for the Storage API here, and spells BigQuery's
+        # FLOAT64 as DOUBLE
+        spark_sql = chunk.row_restriction().replace(" AS FLOAT64)", " AS DOUBLE)")
+        via_sql = {r.name for r in frame.filter(F.expr(spark_sql)).collect()}
         assert via_pred == via_sql, chunk.row_restriction()
         return via_pred
 
@@ -220,6 +223,28 @@ def test_row_restriction_matches_predicate_semantics(spark, fetcher=None):
         n_values=0, elements=(),
     )
     assert both(empty) == set()
+
+    # Spark sorts NaN last, so a double chunk column holding NaN plans
+    # exactly such bounds; NaN and ±inf spell as casts, not as bare
+    # (identifier) words
+    nan, inf = float("nan"), float("inf")
+    floats = spark.createDataFrame(
+        [(1.5, "a"), (nan, "b"), (-inf, "c"), (2.0, "d"), (inf, "e"), (None, "f")],
+        "x double, name string",
+    )
+    listed = FetchingChunk(
+        column="x", index=0, n_chunks=1, lower=None, upper=None,
+        n_values=3, elements=(-inf, 1.5, nan),
+    )
+    assert listed.row_restriction() == (
+        "`x` IN (CAST('-Infinity' AS FLOAT64), 1.5, CAST('NaN' AS FLOAT64))"
+    )
+    assert both(listed, floats) == {"a", "b", "c"}
+    tail = FetchingChunk(
+        column="x", index=0, n_chunks=1, lower=1.0, upper=nan, n_values=4,
+    )
+    assert tail.row_restriction() == "`x` BETWEEN 1.0 AND CAST('NaN' AS FLOAT64)"
+    assert both(tail, floats) == {"a", "b", "d", "e"}
 
 
 # ---------------------------------------------------------------------------

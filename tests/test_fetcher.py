@@ -296,3 +296,201 @@ def test_skew_warning_at_plan_time(spark, fetcher):
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         assert fetcher.check_skew(TableRef(SF_SMOKE, "customer"), "c_custkey") == 0.0
+
+
+def _no_per_value_literals(monkeypatch):
+    """Make every per-value literal path raise: ``isin``'s and
+    ``F.lit``'s py4j literal construction."""
+    import pyspark.sql.classic.column as classic_column
+
+    def refuse(*_a, **_k):
+        raise AssertionError("predicate built a per-value literal")
+
+    monkeypatch.setattr(classic_column, "_create_column_from_literal", refuse)
+    monkeypatch.setattr(F, "lit", refuse)
+
+
+def _predicate_cases():
+    """(spark type, column values, chunk elements) per literal type the
+    planner can hand back; each column also holds a NULL."""
+    import datetime
+    import decimal
+
+    nan, inf = float("nan"), float("inf")
+    ts = [datetime.datetime(2024, 3, 10, h, 30, 0, 250000 * (h % 2)) for h in range(6)]
+    return {
+        "int": ("int", [1, 7, 15, -3], (-3, 7)),
+        "bigint": ("bigint", [2**40, -(2**35), 5, 2**31], (-(2**35), 5, 2**31)),
+        "bool": ("boolean", [True, False], (True,)),
+        "double": ("double", [1.5, nan, -inf, inf, 2.0, -0.5], (-inf, -0.5, 1.5, nan)),
+        "decimal": (
+            "decimal(10,2)",
+            [decimal.Decimal("1.50"), decimal.Decimal("-2.25"), decimal.Decimal("9.99")],
+            (decimal.Decimal("-2.25"), decimal.Decimal("1.50")),
+        ),
+        "string": ("string", ["it's", "back\\slash", "plain", "%_"], ("back\\slash", "it's")),
+        "date": (
+            "date",
+            [datetime.date(2024, 1, 1), datetime.date(2024, 2, 29), datetime.date(1999, 12, 31)],
+            (datetime.date(1999, 12, 31), datetime.date(2024, 2, 29)),
+        ),
+        "timestamp": ("timestamp", ts, (ts[1], ts[4])),
+        "timestamp_ntz": ("timestamp_ntz", ts, (ts[0], ts[5])),
+        "binary": ("binary", [b"\x00a", b"'", b"\\"], (b"'", b"\x00a")),
+    }
+
+
+@pytest.mark.parametrize("kind", list(_predicate_cases()))
+@pytest.mark.parametrize("owns_null", [False, True])
+def test_value_list_predicate_is_one_expression(spark, monkeypatch, kind, owns_null):
+    """A value-list predicate is built without one py4j literal per
+    value, and keeps exactly the rows ``isin(*elements)`` keeps — per
+    literal type, with NaN and ±inf among the doubles, a quote and a
+    backslash in the strings, and naive timestamps read under a
+    non-UTC Python TZ (``F.lit`` takes a naive datetime as local time
+    in the Python process, whatever the session time zone is, unless
+    the session prefers TIMESTAMP_NTZ)."""
+    import os
+    import time
+
+    from bqfetch_spark.fetcher import FetchingChunk
+
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    if kind == "timestamp_ntz":  # F.lit then gives naive datetimes this type
+        spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
+    try:
+        spark_type, values, elements = _predicate_cases()[kind]
+        df = spark.createDataFrame(
+            list(enumerate(values + [None])), f"id int, x {spark_type}"
+        )
+        expected = F.col("x").isin(*elements)
+        if owns_null:
+            expected = expected | F.col("x").isNull()
+        want = sorted(r.id for r in df.filter(expected).collect())
+        chunk = FetchingChunk(
+            "x", 0, 1, None, None, len(elements), elements=elements, includes_null=owns_null
+        )
+        with monkeypatch.context() as m:
+            _no_per_value_literals(m)
+            pred = chunk.predicate()
+        got = sorted(r.id for r in df.filter(pred).collect())
+    finally:
+        spark.conf.unset("spark.sql.timestampType")
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert got == want
+    assert want  # every case keeps some rows
+
+
+@pytest.mark.parametrize("owns_null", [False, True])
+def test_empty_value_list_predicate(spark, monkeypatch, owns_null):
+    """The degenerate empty chunk keeps nothing, or only the NULL rows
+    when it owns them."""
+    from bqfetch_spark.fetcher import FetchingChunk
+
+    df = spark.createDataFrame([(1, 5), (2, None)], "id int, x int")
+    chunk = FetchingChunk("x", 0, 1, None, None, 0, elements=(), includes_null=owns_null)
+    with monkeypatch.context() as m:
+        _no_per_value_literals(m)
+        pred = chunk.predicate()
+    assert [r.id for r in df.filter(pred).collect()] == ([2] if owns_null else [])
+
+
+def test_value_list_predicate_pushes_in_and_builds_fast(spark, fetcher, monkeypatch):
+    """The single-expression predicate still reaches the Parquet scan as
+    ``In``, and a 20,000-value chunk builds in well under 0.1 s (one
+    literal round-trip per value took about a second per 1,000)."""
+    import time
+
+    from bqfetch_spark.fetcher import FetchingChunk
+
+    ref = TableRef(SF_SMOKE, "lineitem")
+    chunk = fetcher.chunks(ref, "l_suppkey", by_nb_chunks=3, by_values=True)[1]
+    plan = fetcher.fetch(ref, chunk)._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters: [In(l_suppkey" in plan, plan
+
+    big = FetchingChunk(
+        "l_orderkey", 0, 1, 0, 19_999, 20_000, elements=tuple(range(20_000))
+    )
+    with monkeypatch.context() as m:
+        _no_per_value_literals(m)
+        t0 = time.perf_counter()
+        big.predicate()
+        elapsed = time.perf_counter() - t0
+    assert elapsed < 0.1, elapsed
+
+
+def test_size_driven_plan_is_one_scan(spark, fetcher, caplog):
+    """A size-driven plan reads its table size, skew mean and bucket
+    boundaries off one grouped aggregate: at most 6 Spark jobs (11
+    when the bytes sum and the skew check were separate scans), the
+    same chunks as a plan by the chunk count it derives, and the same
+    skew fraction and warning as ``check_skew``."""
+    import logging
+    import warnings
+
+    from bqfetch_spark.plans.advisor import (
+        estimated_materialized_bytes,
+        suggest_chunks_by_size,
+    )
+
+    ref = TableRef(SF_SMOKE, "documents")
+    fetcher.table(ref).count()  # catalog load and file listing outside the group
+    sc = spark.sparkContext
+    group = "test-size-driven-plan"
+    sc.setJobGroup(group, group)
+    try:
+        with caplog.at_level(logging.INFO, logger="bqfetch_spark.fetcher"):
+            with pytest.warns(UserWarning, match="off the mean") as planned:
+                chunks = fetcher.chunks(
+                    ref, "lang", by_chunk_size_in_GB=1e-6, available_bytes=2 * 1024**3
+                )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+
+    [record] = [r for r in caplog.records if r.name == "bqfetch_spark.fetcher"]
+    nbytes = estimated_materialized_bytes(fetcher.table(ref))
+    n = suggest_chunks_by_size(nbytes, 1e-6, 1, 2 * 1024**3)
+    assert chunks == fetcher.chunks(ref, "lang", by_nb_chunks=n)
+    assert (record.n_chunks, record.estimated_bytes) == (len(chunks), nbytes)
+    assert record.domain_size == sum(c.n_values for c in chunks)
+
+    with pytest.warns(UserWarning, match="off the mean") as checked:
+        frac = fetcher.check_skew(ref, "lang")
+    assert record.skew_fraction == frac > 0.25
+    def skew_warnings(caught):
+        return [str(w.message) for w in caught if w.category is UserWarning]
+
+    assert len(skew_warnings(planned)) == 1
+    assert skew_warnings(planned) == skew_warnings(checked)
+
+    # an even key: no warning, fraction 0 from both
+    caplog.clear()
+    ref = TableRef(SF_SMOKE, "customer")
+    with warnings.catch_warnings(), caplog.at_level(logging.INFO, logger="bqfetch_spark.fetcher"):
+        warnings.simplefilter("error", UserWarning)
+        fetcher.chunks(ref, "c_custkey", by_chunk_size_in_GB=1e-5, available_bytes=2 * 1024**3)
+        assert fetcher.check_skew(ref, "c_custkey") == 0.0
+    assert caplog.records[-1].skew_fraction == 0.0
+
+
+def test_chunk_plan_log_record(spark, fetcher, caplog):
+    """Every plan emits one structured record on the fetcher logger; a
+    plan by chunk count computes no size or skew, so those are None."""
+    import logging
+
+    ref = TableRef(SF_SMOKE, "customer")
+    with caplog.at_level(logging.INFO, logger="bqfetch_spark.fetcher"):
+        chunks = fetcher.chunks(ref, "c_mktsegment", by_nb_chunks=3, by_values=True)
+    [record] = [r for r in caplog.records if r.name == "bqfetch_spark.fetcher"]
+    assert record.levelno == logging.INFO
+    assert (record.table, record.column) == ("customer", "c_mktsegment")
+    assert (record.n_chunks, record.domain_size) == (3, 5) == (len(chunks), 5)
+    assert record.estimated_bytes is None and record.skew_fraction is None
+    assert record.getMessage() == "planned 3 chunks on customer.c_mktsegment"
