@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bqfetch_spark.catalog import load_catalog
+from bqfetch_spark.functions.text import token_ngrams
 from bqfetch_spark.operators.llm_pipeline import NGRAM_JACCARD_ORACLE, q46_ngram_jaccard
 from bqfetch_spark.operators.relational import r6
 from bqfetch_spark.plans.ranks import with_global_cumsum, with_global_rank
@@ -624,24 +625,16 @@ def qx175_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles that occur in NO other document — high novelty marks
     original content, low novelty marks boilerplate/template text
     (and, inverted, memorization risk when screening generations
-    against training data). Same flat-shingle spelling as q46: one
-    explode, per-doc distinct riding the doc_id exchange, df as a
-    re-agg of the gram frame, then one gram-keyed join back — the
-    gram stream is touched twice, the documents once. The df frame is
-    vocabulary-bounded, never doc²."""
+    against training data). Same shingles as q46: per-doc distinct
+    grams riding the doc_id exchange, df as a re-agg of the gram frame,
+    then one gram-keyed join back — the gram stream is touched twice,
+    the documents once. The df frame is vocabulary-bounded, never
+    doc²."""
     docs = load_catalog(spark, sf_dir).table("documents")
-    t = F.split("text", " ")
-    toks = docs.select("doc_id", t.alias("t")).filter(F.size("t") >= 3)
-    z = F.arrays_zip(
-        F.slice("t", 1, F.size("t") - 2).alias("w1"),
-        F.slice("t", 2, F.size("t") - 2).alias("w2"),
-        F.slice("t", 3, F.size("t") - 2).alias("w3"),
-    )
-    flat = (
-        toks.repartition(shuffle_partitions(spark), "doc_id")
-        .select("doc_id", F.explode(z).alias("z"))
-        .select("doc_id", F.concat_ws(" ", "z.w1", "z.w2", "z.w3").alias("g"))
-        .distinct()
+    flat = token_ngrams(
+        docs.select("doc_id", "text").repartition(shuffle_partitions(spark), "doc_id"),
+        3,
+        distinct=True,
     )
     df_counts = flat.groupBy("g").agg(F.countDistinct("doc_id").alias("d"))
     return (

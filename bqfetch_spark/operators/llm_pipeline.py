@@ -20,6 +20,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bqfetch_spark.catalog import load_catalog
+from bqfetch_spark.functions.text import (
+    CONTAM_N,
+    SHINGLE_DF_CAP,
+    drop_stop_shingles,
+    token_ngrams,
+)
 from bqfetch_spark.operators.relational import r6
 from bqfetch_spark.registry import register
 from bqfetch_spark.session import shuffle_partitions
@@ -304,8 +310,6 @@ def q45_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # N-gram Jaccard near-dup candidates (shared-shingle join)
 # ---------------------------------------------------------------------------
 
-SHINGLE_DF_CAP = 8  # stop-shingle cut: drop shingles present in > CAP docs
-
 NGRAM_JACCARD_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents
@@ -358,48 +362,21 @@ def q46_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator) still counts ALL shingles."""
     docs = load_catalog(spark, sf_dir).table("documents")
     np = shuffle_partitions(spark)
-    t = F.split(F.col("text"), " ")
     # shuffle RAW text first, split after: the one-file fixture scan is
     # a single input partition, so any expression before the exchange
     # runs on one task — with the exchange first, tokenization runs on
-    # every core (measured 2× on the tokenize+gram stage).
-    tokenized = (
-        docs.select("doc_id", "text")
-        .repartition(np, "doc_id")
-        .select("doc_id", t.alias("t"))
-        .filter(F.size("t") >= 3)
-    )
-    # 3-grams via arrays_zip(slice,slice,slice) → explode → concat_ws
-    # on FLAT rows: the lambda spelling (transform + element_at +
-    # concat_ws inside the HOF) runs in Catalyst's per-element
-    # interpreter, measured 2× slower than this whole-stage-codegen'd
-    # flat projection. Per-doc gram dedup rides the doc_id exchange
-    # (hash clustering on a subset of the grouping keys), so it costs
-    # no extra shuffle.
-    n2 = F.size("t") - 2
-    z = F.arrays_zip(
-        F.slice("t", 1, n2).alias("w1"),
-        F.slice("t", 2, n2).alias("w2"),
-        F.slice("t", 3, n2).alias("w3"),
-    )
-    # pre-shuffle by the join key so the self-join's two sides, the
-    # stop-shingle window, and the sizes aggregate all ride ONE
-    # exchange: scan→explode→dedup executes once
-    fr = (
-        tokenized.select("doc_id", F.explode(z).alias("z"))
-        .select("doc_id", F.concat_ws(" ", "z.w1", "z.w2", "z.w3").alias("g"))
-        .dropDuplicates(["doc_id", "g"])
-        .repartition(np, "g")
-    )
+    # every core (measured 2× on the tokenize+gram stage). Per-doc gram
+    # dedup rides that doc_id exchange; pre-shuffling by the join key
+    # lets the self-join's two sides, the stop-shingle window and the
+    # sizes aggregate all ride ONE exchange: scan→explode→dedup runs once
+    fr = token_ngrams(
+        docs.select("doc_id", "text").repartition(np, "doc_id"), 3, distinct=True
+    ).repartition(np, "g")
     # n_grams (the Jaccard denominator) counts ALL distinct grams —
     # computed before the DF cap, off the same g-exchange (partial
     # count per partition, then a tiny doc_id shuffle)
     sizes = fr.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    flat = (
-        fr.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("g")))
-        .filter(F.col("__df") <= SHINGLE_DF_CAP)
-        .drop("__df")
-    )
+    flat = drop_stop_shingles(fr)
     a = flat.alias("a")
     b = flat.alias("b")
     shared = (
@@ -472,29 +449,17 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     (transform lambda + array_min × k) runs in Catalyst's per-element
     interpreter and measured ~2× slower on the same data. min() over
     duplicate shingles equals min() over distinct ones, so no dedup
-    is needed. Short docs (< 3 tokens) get clamped shingles by
-    padding the token array with two copies of its last token —
-    identical values to the previous element-clamping spelling.
+    is needed. Short docs (< 3 tokens) get one clamped shingle
+    (``pad_short``).
     Per-doc state is k longs; scales linearly in corpus size.
     """
-    from bqfetch_spark.session import shuffle_partitions as _sp
-
-    t = F.split(F.col("text"), " ")
-    padded = F.concat("t", F.array(F.element_at("t", -1), F.element_at("t", -1)))
-    m = F.greatest(F.size("t") - 2, F.lit(1))
-    z = F.arrays_zip(
-        F.slice(padded, 1, m).alias("w1"),
-        F.slice(padded, 2, m).alias("w2"),
-        F.slice(padded, 3, m).alias("w3"),
-    )
-    flat = (
-        docs.select("doc_id", "text")
-        .repartition(_sp(docs.sparkSession), "doc_id")
-        .select("doc_id", t.alias("t"))
-        .select("doc_id", F.explode(z).alias("z"))
-        .select("doc_id", F.concat_ws(" ", "z.w1", "z.w2", "z.w3").alias("g"))
-        .select("doc_id", (md5_bigint(F.col("g")) % MH_P).alias("h31"))
-    )
+    flat = token_ngrams(
+        docs.select("doc_id", "text").repartition(
+            shuffle_partitions(docs.sparkSession), "doc_id"
+        ),
+        MH_SHINGLE,
+        pad_short=True,
+    ).select("doc_id", (md5_bigint(F.col("g")) % MH_P).alias("h31"))
     sigs = flat.groupBy("doc_id").agg(
         *[
             F.min((F.lit(a) * F.col("h31") + F.lit(b)) % MH_P).alias(f"h{i}")
@@ -1208,29 +1173,10 @@ def qx201_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving-size aggregate."""
     docs = load_catalog(spark, sf_dir).table("documents")
     np = shuffle_partitions(spark)
-    t = F.split(F.col("text"), " ")
-    tokenized = (
-        docs.select("doc_id", "text")
-        .repartition(np, "doc_id")
-        .select("doc_id", t.alias("t"))
-        .filter(F.size("t") >= 3)
-    )
-    n2 = F.size("t") - 2
-    z = F.arrays_zip(
-        F.slice("t", 1, n2).alias("w1"),
-        F.slice("t", 2, n2).alias("w2"),
-        F.slice("t", 3, n2).alias("w3"),
-    )
-    fr = (
-        tokenized.select("doc_id", F.explode(z).alias("z"))
-        .select("doc_id", F.concat_ws(" ", "z.w1", "z.w2", "z.w3").alias("g"))
-        .dropDuplicates(["doc_id", "g"])
-        .repartition(np, "g")
-    )
-    flat = (
-        fr.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("g")))
-        .filter(F.col("__df") <= SHINGLE_DF_CAP)
-        .drop("__df")
+    flat = drop_stop_shingles(
+        token_ngrams(
+            docs.select("doc_id", "text").repartition(np, "doc_id"), 3, distinct=True
+        ).repartition(np, "g")
     )
     sizes = flat.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_surv"))
     a, b = flat.alias("a"), flat.alias("b")
@@ -1552,33 +1498,14 @@ def qx217_source_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the <=|sources|^2 matrix. One shingle-keyed exchange family
     end-to-end; text never moves past the explode."""
     docs = load_catalog(spark, sf_dir).table("documents")
-    toks = docs.select("doc_id", "source", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= 3
+    # the per-doc gram dedup rides the g exchange (g is a subset of its
+    # keys), as do the stop-shingle window and the source-level DISTINCT
+    grams = (
+        token_ngrams(docs, 3, keys=("doc_id", "source"))
+        .repartition(shuffle_partitions(spark), "g")
+        .dropDuplicates(["doc_id", "source", "g"])
     )
-    grams = toks.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("t") - 3),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.element_at("t", i + 1),
-                        F.element_at("t", i + 2),
-                        F.element_at("t", i + 3),
-                    ),
-                )
-            )
-        ).alias("g"),
-    )
-    np_ = shuffle_partitions(spark)
-    grams = grams.repartition(np_, "g")
-    df_counts = grams.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
-    flat = grams.join(df_counts.hint("shuffle_hash"), "g").filter(
-        F.col("__df") <= SHINGLE_DF_CAP
-    )
-    srcg = flat.select("source", "g").distinct()
+    srcg = drop_stop_shingles(grams).select("source", "g").distinct()
     a, b = srcg.alias("a"), srcg.alias("b")
     return (
         a.join(
@@ -2467,7 +2394,6 @@ def qx239_context_stitching(spark: SparkSession, sf_dir: str) -> DataFrame:
 # qx259: benchmark contamination (exact n-gram collision detection)
 # ---------------------------------------------------------------------------
 
-CONTAM_N = 5  # n-gram width of the collision check
 CONTAM_MOD = 7  # doc_id % CONTAM_MOD == 0 plays the "benchmark" set
 
 CONTAM_ORACLE = f"""
@@ -2490,25 +2416,6 @@ WHERE s.doc_id % {CONTAM_MOD} <> 0
 GROUP BY s.doc_id
 ORDER BY s.doc_id
 """
-
-
-def token_ngrams(docs: DataFrame, n: int, positional: bool = False) -> DataFrame:
-    """Whitespace-token n-grams of the text column — the ONE shingle
-    definition the contamination scans (CONTAM_N), the streaming span
-    masks, and the boilerplate miner (BP_N) all share. Returns
-    (doc_id, g), or (doc_id, i, g) with the 1-based token position
-    when ``positional``."""
-    w = F.split(F.col("text"), " ")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("w") - n + 1),
-        lambda i: F.concat_ws(" ", F.slice("w", i, n)),
-    )
-    base = docs.select("doc_id", w.alias("w")).filter(F.size("w") >= n)
-    if positional:
-        return base.select(
-            "doc_id", F.posexplode(grams).alias("pos0", "g")
-        ).select("doc_id", (F.col("pos0") + 1).cast("bigint").alias("i"), "g")
-    return base.select("doc_id", F.explode(grams).alias("g"))
 
 
 def contam_shingles(docs: DataFrame) -> DataFrame:
@@ -2649,21 +2556,7 @@ def qx264_minhash_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     output-bounded. md5 costs ~3x xxhash64 per gram — the price of an
     exact oracle, paid once per gram, still JVM-side."""
     docs = load_catalog(spark, sf_dir).table("documents")
-    w = F.split(F.col("text"), " ")
-    grams = (
-        docs.select("doc_id", w.alias("w"))
-        .filter(F.size("w") >= MH_SHINGLE)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - MH_SHINGLE + 1),
-                    lambda i: F.concat_ws(" ", F.slice("w", i, MH_SHINGLE)),
-                )
-            ).alias("g"),
-        )
-        .distinct()
-    )
+    grams = token_ngrams(docs, MH_SHINGLE, distinct=True)
     hashed = grams.withColumn(
         "h31",
         F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("bigint") % MH_P,
@@ -3040,7 +2933,7 @@ def qx283_boilerplate_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the doc-count denominator rides the same plan as a 1-row
     broadcast — one job, no second action (the qx258 lesson)."""
     docs = load_catalog(spark, sf_dir).table("documents")
-    sh = token_ngrams(docs, BP_N).dropDuplicates(["doc_id", "g"])
+    sh = token_ngrams(docs, BP_N, distinct=True)
     df = sh.groupBy("g").agg(F.count(F.lit(1)).cast("bigint").alias("doc_freq"))
     # Distributed top-k (TakeOrderedAndProject — per-partition heads,
     # never a single-partition window over the vocab-sized df frame);

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bqfetch_spark.catalog import load_catalog
+from bqfetch_spark.functions.text import CONTAM_N, token_ngrams
 from bqfetch_spark.operators.relational import r6
 from bqfetch_spark.registry import register
 from bqfetch_spark.session import shuffle_partitions
@@ -83,35 +84,23 @@ def q75_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_catalog(spark, sf_dir).table("documents")
     np = shuffle_partitions(spark)
     t = F.split(F.col("text"), " ")
+    per_doc = ["doc_id", "n_words", "n_distinct"]
     base = (
         docs.select("doc_id", "text")
         .repartition(np, "doc_id")
-        .select("doc_id", t.alias("t"))
-        .filter(F.size("t") >= 2)
         .select(
             "doc_id",
-            "t",
-            F.size("t").cast("bigint").alias("n_words"),
-            F.size(F.array_distinct("t")).alias("n_distinct"),
+            "text",
+            F.size(t).cast("bigint").alias("n_words"),
+            F.size(F.array_distinct(t)).alias("n_distinct"),
         )
     )
-    n1 = F.size("t") - 1
-    z = F.arrays_zip(F.slice("t", 1, n1).alias("w1"), F.slice("t", 2, n1).alias("w2"))
-    bigram_counts = (
-        base.select("doc_id", "n_words", "n_distinct", F.explode(z).alias("z"))
-        .select("doc_id", "n_words", "n_distinct", F.concat_ws(" ", "z.w1", "z.w2").alias("bg"))
-        .groupBy("doc_id", "bg")
-        .agg(
-            F.count(F.lit(1)).alias("c"),
-            F.first("n_words").alias("n_words"),
-            F.first("n_distinct").alias("n_distinct"),
-        )
-    )
-    agg = bigram_counts.groupBy("doc_id").agg(
-        F.max("c").alias("top_c"),
-        F.sum("c").alias("tot"),
-        F.first("n_words").alias("n_words"),
-        F.first("n_distinct").alias("n_distinct"),
+    agg = (
+        token_ngrams(base, 2, keys=per_doc)
+        .groupBy(*per_doc, "g")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy(*per_doc)
+        .agg(F.max("c").alias("top_c"), F.sum("c").alias("tot"))
     )
     top_frac = r6(F.col("top_c").cast("double") / F.col("tot"))
     dup_frac = r6(F.lit(1.0) - F.col("n_distinct").cast("double") / F.col("n_words"))
@@ -185,8 +174,6 @@ def q76_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q77: eval-set contamination screen (broadcast n-gram overlap)
 # ---------------------------------------------------------------------------
 
-CONTAM_N = 5  # n-gram width; benchmark-decontamination standard is 8-13,
-# 5 here so the tiny-vocabulary fixture produces non-trivial overlap
 EVAL_DOCS = 20  # doc_id < EVAL_DOCS plays the held-out benchmark
 
 CONTAM_ORACLE = f"""
@@ -211,21 +198,6 @@ GROUP BY 1, 2
 """
 
 
-def _distinct_ngrams(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, g): distinct word n-grams per doc, flat-row construction
-    (arrays_zip of shifted slices → explode → concat_ws) — stays in
-    whole-stage codegen; the HOF-lambda spelling runs interpreted."""
-    t = F.split(F.col("text"), " ")
-    tok = docs.select("doc_id", t.alias("t")).filter(F.size("t") >= n)
-    width = F.size("t") - (n - 1)
-    z = F.arrays_zip(*[F.slice("t", i + 1, width).alias(f"w{i}") for i in range(n)])
-    return (
-        tok.select("doc_id", F.explode(z).alias("z"))
-        .select("doc_id", F.concat_ws(" ", *[f"z.w{i}" for i in range(n)]).alias("g"))
-        .dropDuplicates(["doc_id", "g"])
-    )
-
-
 @register("q77_contamination", oracle=CONTAM_ORACLE, tags=("quality", "decontamination"))
 def q77_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-decontamination screen: for every training document,
@@ -242,9 +214,9 @@ def q77_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_catalog(spark, sf_dir).table("documents")
     np = shuffle_partitions(spark)
     base = docs.select("doc_id", "text").repartition(np, "doc_id")
-    train = _distinct_ngrams(base.filter(F.col("doc_id") >= EVAL_DOCS), CONTAM_N)
-    ev = _distinct_ngrams(
-        base.filter(F.col("doc_id") < EVAL_DOCS), CONTAM_N
+    train = token_ngrams(base.filter(F.col("doc_id") >= EVAL_DOCS), CONTAM_N, distinct=True)
+    ev = token_ngrams(
+        base.filter(F.col("doc_id") < EVAL_DOCS), CONTAM_N, distinct=True
     ).withColumnRenamed("doc_id", "eval_doc_id")
     return (
         train.join(F.broadcast(ev), "g")
@@ -710,15 +682,13 @@ def qx223_decontaminated_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_ids = docs.orderBy(h, "doc_id").limit(DECONTAM_K).select("doc_id")
 
     test_grams = (
-        _distinct_ngrams(
-            docs.join(F.broadcast(test_ids), "doc_id"), CONTAM_N
-        )
+        token_ngrams(docs.join(F.broadcast(test_ids), "doc_id"), CONTAM_N)
         .select("g")
         .distinct()
     )
     train = docs.join(F.broadcast(test_ids), "doc_id", "left_anti")
     contam_ids = (
-        _distinct_ngrams(train, CONTAM_N)
+        token_ngrams(train, CONTAM_N)
         .join(F.broadcast(test_grams), "g")
         .select("doc_id")
         .distinct()
@@ -760,7 +730,7 @@ def qx223_decontaminated_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # qx224: duplicated-span fraction (exact-substring dedup metric)
 # ---------------------------------------------------------------------------
 
-SPAN_N = 5  # span width in tokens (matches CONTAM_N's fixture rationale)
+SPAN_N = CONTAM_N  # span width in tokens: the decontamination gram width
 
 DUP_SPAN_ORACLE = f"""
 WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
@@ -793,27 +763,10 @@ ORDER BY d.doc_id
 def _dup_span_positions(docs: DataFrame) -> DataFrame:
     """(doc_id, i): 1-based start positions of every {SPAN_N}-gram
     that also appears in at least one OTHER document. Positional grams
-    are a row-local transform+explode; the cross-doc test is one
-    gram-keyed distinct-doc-count exchange joined back. Shared by
-    qx224 (measure) and qx229 (cut)."""
-    t = F.split(F.col("text"), " ")
-    pos = (
-        docs.select("doc_id", t.alias("t"))
-        .filter(F.size("t") >= SPAN_N)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - (SPAN_N - 1)),
-                    lambda i: F.struct(
-                        i.alias("i"),
-                        F.concat_ws(" ", F.slice("t", i, SPAN_N)).alias("g"),
-                    ),
-                )
-            ).alias("z"),
-        )
-        .select("doc_id", F.col("z.i").alias("i"), F.col("z.g").alias("g"))
-    )
+    are row-local; the cross-doc test is one gram-keyed
+    distinct-doc-count exchange joined back. Shared by qx224 (measure)
+    and qx229 (cut)."""
+    pos = token_ngrams(docs, SPAN_N, positional=True)
     df_counts = pos.groupBy("g").agg(F.count_distinct("doc_id").alias("ndocs"))
     return pos.join(df_counts.filter(F.col("ndocs") >= 2), "g").select("doc_id", "i")
 
@@ -833,7 +786,7 @@ def qx224_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     MUCH of each surviving doc is boilerplate/quotation — the signal
     that drives span-level cutting rather than whole-doc dropping.
 
-    Plan shape: positional grams are a row-local transform+explode
+    Plan shape: positional grams are a row-local explode
     (position rides along, so coverage is reconstructible); the
     cross-doc test is ONE gram-keyed exchange (distinct-doc count,
     q46's family) joined back to the positional stream; interval union
@@ -957,16 +910,9 @@ def qx229_dup_span_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_catalog(spark, sf_dir).table("documents")
     dup = _dup_span_positions(docs)
 
-    t = F.split(F.col("text"), " ")
-    tok = docs.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size(t)),
-                lambda j: F.struct(j.alias("pos"), F.element_at(t, j).alias("w")),
-            )
-        ).alias("z"),
-    ).select("doc_id", F.col("z.pos").alias("pos"), F.col("z.w").alias("w"))
+    tok = token_ngrams(docs, 1, positional=True).select(
+        "doc_id", F.col("i").alias("pos"), F.col("g").alias("w")
+    )
 
     starts = dup.select(
         "doc_id",
@@ -1277,15 +1223,7 @@ def qx268_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     |gram vocab|·C(S,2)/…, never corpus-sized. The final matrix is
     S²-sized — metadata. Text never moves past the projection."""
     docs = load_catalog(spark, sf_dir).table("documents")
-    t = F.split(F.col("text"), " ")
-    tok = docs.select("source", t.alias("t")).filter(F.size("t") >= CONTAM_N)
-    width = F.size("t") - (CONTAM_N - 1)
-    z = F.arrays_zip(*[F.slice("t", i + 1, width).alias(f"w{i}") for i in range(CONTAM_N)])
-    grams = (
-        tok.select("source", F.explode(z).alias("z"))
-        .select("source", F.concat_ws(" ", *[f"z.w{i}" for i in range(CONTAM_N)]).alias("g"))
-        .dropDuplicates(["source", "g"])
-    )
+    grams = token_ngrams(docs, CONTAM_N, keys=("source",), distinct=True)
     sizes = grams.groupBy("source").agg(F.count(F.lit(1)).cast("bigint").alias("n_grams"))
     ga, gb = grams.alias("ga"), grams.alias("gb")
     shared = (

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bqfetch_spark.catalog import load_catalog
+from bqfetch_spark.functions.text import token_ngrams
 from bqfetch_spark.operators.relational import r6
 from bqfetch_spark.plans.ranks import with_global_cumsums
 from bqfetch_spark.registry import register
@@ -3116,33 +3117,17 @@ def qx225_conditional_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain-rule identity — not an independently-estimated unigram
     distribution), so H_cond ≥ 0 holds by construction.
 
-    Plan shape: adjacent pairs are a row-local transform+explode; ONE
+    Plan shape: adjacent pairs are row-local word bigrams; ONE
     (source, bigram)-keyed exchange builds the count frame; the
     marginal and both entropy folds are source-keyed reductions of
     that vocabulary-bounded frame (qx214's exchange family). Entropy
     terms use the qx118 convention: log2(N) − Σ c·log2 c / N from
     exact integer counts, rounded 6dp."""
     docs = load_catalog(spark, sf_dir).table("documents")
-    t = F.split(F.col("text"), " ")
-    pairs = (
-        docs.select("source", t.alias("t"))
-        .filter(F.size("t") >= 2)
-        .select(
-            "source",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - 1),
-                    lambda i: F.concat_ws(
-                        " ", F.element_at("t", i), F.element_at("t", i + 1)
-                    ),
-                )
-            ).alias("pg"),
-        )
+    pc = token_ngrams(docs, 2, keys=("source",)).groupBy("source", "g").agg(
+        F.count(F.lit(1)).alias("c")
     )
-    pc = pairs.groupBy("source", "pg").agg(F.count(F.lit(1)).alias("c"))
-    mc = pc.groupBy(
-        "source", F.split("pg", " ")[0].alias("w1")
-    ).agg(F.sum("c").alias("c"))
+    mc = pc.groupBy("source", F.split("g", " ")[0].alias("w1")).agg(F.sum("c").alias("c"))
 
     def entropy(df, out):
         n = F.sum("c").cast("double")

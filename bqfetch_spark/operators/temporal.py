@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bqfetch_spark.catalog import load_catalog
+from bqfetch_spark.functions.text import token_ngrams
 from bqfetch_spark.operators.relational import r6
 from bqfetch_spark.registry import register
 
@@ -351,25 +352,15 @@ def q49_mllib_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the tokenize + shingle/hash feature stage across cores:
     # the one-file fixture scan is a single input partition, so the
     # exchange comes FIRST and all expression work runs post-shuffle.
-    # Shingles are built as flat rows (arrays_zip(slice×3) → explode →
-    # codegen'd concat_ws) and re-assembled per doc with collect_set —
-    # ~2× faster than the HOF-lambda spelling (see q46/q47); HashingTF
-    # is order-insensitive over the set, so features are unchanged.
-    # Short docs get clamped shingles by padding with the last token.
-    t = F.split(F.col("text"), " ")
-    padded = F.concat("t", F.array(F.element_at("t", -1), F.element_at("t", -1)))
-    m = F.greatest(F.size("t") - 2, F.lit(1))
-    z = F.arrays_zip(
-        F.slice(padded, 1, m).alias("w1"),
-        F.slice(padded, 2, m).alias("w2"),
-        F.slice(padded, 3, m).alias("w3"),
-    )
+    # Shingle rows (short docs get one clamped shingle, as in q47) are
+    # re-assembled per doc with collect_set; HashingTF is
+    # order-insensitive over the set.
     toks = (
-        docs.select("doc_id", "text")
-        .repartition(shuffle_partitions(spark), "doc_id")
-        .select("doc_id", t.alias("t"))
-        .select("doc_id", F.explode(z).alias("z"))
-        .select("doc_id", F.concat_ws(" ", "z.w1", "z.w2", "z.w3").alias("g"))
+        token_ngrams(
+            docs.select("doc_id", "text").repartition(shuffle_partitions(spark), "doc_id"),
+            3,
+            pad_short=True,
+        )
         .groupBy("doc_id")
         .agg(F.collect_set("g").alias("tokens"))
     )

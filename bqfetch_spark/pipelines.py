@@ -17,11 +17,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bqfetch_spark.catalog import load_catalog
-from bqfetch_spark.operators.llm_pipeline import (
-    SHINGLE_DF_CAP,
-    STOPWORD_PATTERN,
-    dedup_exact,
-)
+from bqfetch_spark.functions.text import SHINGLE_DF_CAP, drop_stop_shingles, token_ngrams
+from bqfetch_spark.operators.llm_pipeline import STOPWORD_PATTERN, dedup_exact
 from bqfetch_spark.operators.relational import r6
 from bqfetch_spark.registry import register
 from bqfetch_spark.session import shuffle_partitions
@@ -119,41 +116,18 @@ def q65_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # exact dedup shuffled on the 8-byte xxhash64(text) pre-key, text
     # only compared on hash ties (operators/llm_pipeline.dedup_exact)
-    deduped = dedup_exact(kept, shuffle_partitions(spark))
+    np = shuffle_partitions(spark)
+    deduped = dedup_exact(kept, np)
 
-    # near-dup candidates via shared-shingle join (same shape as q46,
-    # incl. the shuffle barrier that materializes the token arrays)
-    t = F.split(F.col("text"), " ")
-    tokenized = (
-        deduped.select("doc_id", t.alias("t"))
-        .filter(F.size("t") >= 3)
-        .repartition(shuffle_partitions(spark), "doc_id")
-    )
-    # 3-grams as flat rows (arrays_zip(slice×3) → explode → codegen'd
-    # concat_ws; the HOF-lambda spelling is 2× slower — see q46); the
-    # per-doc gram dedup rides the doc_id exchange, and one join-key
+    # near-dup candidates via shared-shingle join (same shape as q46):
+    # the per-doc gram dedup rides the doc_id exchange, and one join-key
     # exchange then feeds the DF-cap window, both self-join sides, and
     # the sizes aggregate
-    n2 = F.size("t") - 2
-    z = F.arrays_zip(
-        F.slice("t", 1, n2).alias("w1"),
-        F.slice("t", 2, n2).alias("w2"),
-        F.slice("t", 3, n2).alias("w3"),
-    )
-    fr = (
-        tokenized.select("doc_id", F.explode(z).alias("z"))
-        .select("doc_id", F.concat_ws(" ", "z.w1", "z.w2", "z.w3").alias("g"))
-        .dropDuplicates(["doc_id", "g"])
-        .repartition(shuffle_partitions(spark), "g")
-    )
+    fr = token_ngrams(
+        deduped.select("doc_id", "text").repartition(np, "doc_id"), 3, distinct=True
+    ).repartition(np, "g")
     sizes = fr.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    # stop-shingle cut on the join-key exchange (see q46: join cost is
-    # Σ df², hot shingles dominate; the window reuses the g-exchange)
-    flat = (
-        fr.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("g")))
-        .filter(F.col("__df") <= SHINGLE_DF_CAP)
-        .drop("__df")
-    )
+    flat = drop_stop_shingles(fr)
     a, b = flat.alias("a"), flat.alias("b")
     pairs = (
         a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -348,7 +322,6 @@ from bqfetch_spark.operators.corpus import BATCH_SIZE  # noqa: E402
 from bqfetch_spark.operators.llm_pipeline import (  # noqa: E402
     CONTAIN_MIN_GRAMS,
     CONTAIN_THRESHOLD,
-    SHINGLE_DF_CAP,
 )
 
 CURATION_V3_ORACLE = f"""
@@ -450,25 +423,7 @@ def qx202_curation_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
 
-    t = F.split(F.col("text"), " ")
-    tokenized = deduped.select("doc_id", t.alias("t")).filter(F.size("t") >= 3)
-    n2 = F.size("t") - 2
-    z = F.arrays_zip(
-        F.slice("t", 1, n2).alias("w1"),
-        F.slice("t", 2, n2).alias("w2"),
-        F.slice("t", 3, n2).alias("w3"),
-    )
-    fr = (
-        tokenized.select("doc_id", F.explode(z).alias("z"))
-        .select("doc_id", F.concat_ws(" ", "z.w1", "z.w2", "z.w3").alias("g"))
-        .dropDuplicates(["doc_id", "g"])
-        .repartition(np, "g")
-    )
-    flat = (
-        fr.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("g")))
-        .filter(F.col("__df") <= SHINGLE_DF_CAP)
-        .drop("__df")
-    )
+    flat = drop_stop_shingles(token_ngrams(deduped, 3, distinct=True).repartition(np, "g"))
     sizes = flat.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_surv"))
     a, b = flat.alias("a"), flat.alias("b")
     pairs = (

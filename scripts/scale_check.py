@@ -49,30 +49,13 @@ def dedup_shape(df, parts):
 
 def jaccard_shape(df, parts):
     """q46's plan shape (shingle join + DF cap) against an arbitrary
-    frame."""
-    from pyspark.sql.window import Window
+    frame, built with the engine's n-gram kernel."""
+    from bqfetch_spark.functions.text import drop_stop_shingles, token_ngrams
 
-    from bqfetch_spark.operators.llm_pipeline import SHINGLE_DF_CAP
-
-    t = F.split(F.col("text"), " ")
-    tokenized = df.select("doc_id", t.alias("t")).filter(F.size("t") >= 3).repartition(parts, "doc_id")
-    grams = tokenized.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size("t") - 2),
-                lambda i: F.concat_ws(
-                    " ", F.element_at("t", i), F.element_at("t", i + 1), F.element_at("t", i + 2)
-                ),
-            )
-        ).alias("gs"),
-    ).repartition(parts, "doc_id")
-    flat = (
-        grams.select("doc_id", F.explode("gs").alias("g"))
-        .repartition(parts, "g")
-        .withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("g")))
-        .filter(F.col("__df") <= SHINGLE_DF_CAP)
-        .drop("__df")
+    flat = drop_stop_shingles(
+        token_ngrams(
+            df.select("doc_id", "text").repartition(parts, "doc_id"), 3, distinct=True
+        ).repartition(parts, "g")
     )
     a, b = flat.alias("a"), flat.alias("b")
     return (

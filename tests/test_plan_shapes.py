@@ -131,6 +131,22 @@ def test_qx266_signature_subtree_shared(spark):
     assert plan.count("Scan ExistingRDD") <= 2, plan
 
 
+def test_qx264_gram_subtrees_reused_at_runtime(spark):
+    """qx264 reads its distinct-gram frame four times (signature, sizes,
+    both verify sides) and its band frame twice, and the static plan
+    re-derives each copy. Unlike qx266 no checkpoint is needed: every
+    copy sits behind a shuffle, so AQE exchange reuse leaves two scans
+    of documents in the executed plan (the signature and the gram
+    exchanges); the rest are ReusedExchange nodes."""
+    df = REG["qx264_minhash_lsh_exact"].fn(spark, SF_CORRECT)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final, final
+    final = final.split("== Initial Plan ==")[0]
+    assert final.count("Scan parquet") == 2, final
+    assert final.count("ReusedExchange") >= 4, final
+
+
 def test_q40_dedup_exchanges_on_hash_key(spark):
     """Exact dedup must shuffle on the 8-byte xxhash64(text) pre-key,
     never on the raw text column."""

@@ -1,7 +1,7 @@
 """Source-level guards on where the engine touches its surroundings:
 deployment settings come from the environment in session.py alone, and
 the Spark application identity is read through compat.py alone (Spark
-Connect has no sparkContext)."""
+Connect has no sparkContext), and word n-grams are built by one kernel."""
 
 from __future__ import annotations
 
@@ -25,3 +25,20 @@ def test_environment_and_app_id_reads_live_in_one_module_each():
         if sorted(hits) != [home]:
             strays[needles] = sorted(hits)
     assert strays == {}
+
+
+def test_word_ngrams_are_built_in_one_module():
+    """Every word n-gram goes through functions/text.py:token_ngrams:
+    no other module in the engine or its scripts zips shifted token
+    slices or builds grams with a per-element concat_ws lambda."""
+    import re
+
+    pkg = Path(bqfetch_spark.__file__).parent
+    files = [*pkg.rglob("*.py"), *(pkg.parent / "scripts").rglob("*.py")]
+    spellings = (re.compile(r"F\.arrays_zip\("), re.compile(r"lambda\s+\w+\s*:\s*F\.concat_ws\("))
+    hits = sorted(
+        p.relative_to(pkg.parent).as_posix()
+        for p in files
+        if any(rx.search(p.read_text(encoding="utf-8")) for rx in spellings)
+    )
+    assert hits == ["bqfetch_spark/functions/text.py"]
