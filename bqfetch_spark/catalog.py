@@ -6,6 +6,14 @@ is registered as a temp view so both the DataFrame API and `spark.sql`
 reach it (SURVEY.md §1.1). Schema is self-describing Parquet — same
 "source-of-truth is the catalog" stance as the reference (SURVEY.md §1.4).
 
+Loading runs no Spark job. The reference reads table facts from catalog
+metadata (`get_table(...).num_bytes`), not from a query; here each
+table's schema comes from its Parquet footer, read on the driver
+(`compat.parquet_schema_reader`), and is handed to the reader, so Spark
+skips its one-job-per-table schema inference. Where that route is
+closed (Connect, drifted internals) the read falls back to inference
+with the same schema.
+
 Normalization at load (SURVEY.md §7 risk register):
 - `events.ts` is stored as timestamp[ns]; Spark reads it fine but we cast
   to TimestampType (µs) explicitly so engine and oracle agree.
@@ -17,7 +25,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampType
+from pyspark.sql.types import StructType, TimestampType
+
+from bqfetch_spark.compat import app_id, parquet_schema_reader
 
 TABLES = (
     "region",
@@ -41,6 +51,7 @@ class Catalog:
         self.spark = spark
         self.sf_dir = sf_dir
         self._dfs: dict[str, DataFrame] = {}
+        self._file_schemas: dict[str, StructType] = {}
         self._session = _session_key(spark)
         # defensive: the harness may hand us a session built without
         # bqfetch_spark.session defaults; events.ts (timestamp[ns])
@@ -51,6 +62,8 @@ class Catalog:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
         except Exception:
             pass  # locked down by the host — reads of ns columns will raise
+        # after the conf writes: the converter snapshots nanosAsLong
+        self._footer_schema = parquet_schema_reader(spark)
 
     def path(self, name: str) -> str:
         return os.path.join(self.sf_dir, f"{name}.parquet")
@@ -59,12 +72,27 @@ class Catalog:
         if name not in self._dfs:
             if name not in TABLES:
                 raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-            df = self.spark.read.parquet(self.path(name))
-            df = normalize_table(name, df)
+            df = normalize_table(name, self._read(name))
             df.createOrReplaceTempView(name)
             _VIEW_OWNER[self._session] = self.sf_dir
             self._dfs[name] = df
         return self._dfs[name]
+
+    def _read(self, name: str) -> DataFrame:
+        path = self.path(name)
+        schema = self._footer_schema(path)
+        if schema is None:
+            df = self.spark.read.parquet(path)
+            self._file_schemas[name] = df.schema
+            return df
+        self._file_schemas[name] = schema
+        return self.spark.read.schema(schema).parquet(path)
+
+    def file_schema(self, name: str) -> StructType:
+        """The schema `name`'s Parquet file is read with, before
+        `normalize_table`: what a readStream over the file needs."""
+        self.table(name)
+        return self._file_schemas[name]
 
     def load_all(self) -> "Catalog":
         for name in TABLES:
@@ -101,8 +129,10 @@ def normalize_table(name: str, df: DataFrame) -> DataFrame:
     return out
 
 
-# Catalog memo: every registry query calls load_catalog, and the
-# parquet footer/schema re-read per table per query is pure overhead.
+# Catalog memo: every registry query calls load_catalog. A cold load
+# runs no Spark job (schemas come from the footers on the driver), but
+# it still reads 10 footers and resolves 10 DataFrames and temp views,
+# all of which a hit reuses.
 # Keyed by (applicationId, sessionUUID, sf_dir): applicationId is
 # stable for a context's lifetime and unique across restarts, so a
 # recycled SparkSession can never resurrect a catalog whose DataFrames
@@ -143,8 +173,6 @@ def _session_uuid(spark: SparkSession) -> str:
 
 
 def _session_key(spark: SparkSession) -> tuple[str, str]:
-    from bqfetch_spark.compat import app_id
-
     return app_id(spark), _session_uuid(spark)
 
 

@@ -20,6 +20,12 @@ fallback instead of an AttributeError:
   ``PythonRDD.toLocalIteratorAndServe``, read with pyspark's
   ``_local_iterator_from_socket``) and falls back to a ``mapInArrow``
   IPC re-encode plus ``toLocalIterator`` when those are unreachable.
+- Parquet footer schemas (``parquet_schema_reader`` /
+  ``parquet_file_schema``) read one file's footer on the driver and
+  convert it with Spark's own ``ParquetToSparkSchemaConverter`` under
+  the session's SQLConf: the schema inference would give, with no
+  Spark job. They return ``None`` under Connect, for a directory, or
+  when a private call drifts; callers then let Spark infer.
 
 Connect itself cannot run in the build sandbox (no grpcio/protobuf —
 see tests/test_connect_compat.py for the env-gated smoke marker), so
@@ -31,9 +37,10 @@ from __future__ import annotations
 
 import contextlib
 import io
-from typing import TYPE_CHECKING, Iterator
+from typing import TYPE_CHECKING, Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 if TYPE_CHECKING:
     import pyarrow as pa
@@ -109,6 +116,62 @@ def app_id(spark: SparkSession) -> str:
         return str(spark.conf.get("spark.app.id"))
     except Exception:
         return "connect-app"
+
+
+def parquet_schema_reader(spark: SparkSession) -> Callable[[str], StructType | None]:
+    """A function from one Parquet file's path to the ``StructType``
+    Spark's schema inference gives for it, read from the file's footer
+    on the driver: no Spark job. The footer goes through the same
+    ``ParquetFileFormat.readSchemaFromFooter`` and
+    ``ParquetToSparkSchemaConverter`` that inference runs on an
+    executor, built from the session's SQLConf, so ``nanosAsLong``, the
+    timestamp-NTZ and the binary-as-string rules follow the session.
+
+    The JVM classes, the Hadoop conf and the converter are looked up
+    once here, not once per file: py4j resolves each package segment
+    with its own round trip. The returned function gives ``None`` for a
+    directory, an unreadable file or a drifted private call, and the
+    whole reader gives only ``None`` under Connect."""
+    try:
+        jss = spark._jsparkSession
+        jvm = spark._jvm
+        pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+        state = jss.sessionState()
+        hconf = state.newHadoopConf()
+        converter = pq.ParquetToSparkSchemaConverter(state.conf())
+        read_footer = pq.ParquetFooterReader.readFooter
+        from_footer = pq.ParquetFileFormat.readSchemaFromFooter
+        skip_row_groups = (
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+        )
+        input_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath
+        footer_of = jvm.org.apache.parquet.hadoop.Footer
+        hpath = jvm.org.apache.hadoop.fs.Path
+    except Exception:
+        return lambda path: None
+    # classic-only imports: a Connect client ships no py4j
+    from py4j.protocol import Py4JError
+    from pyspark.errors.exceptions.captured import CapturedException
+
+    def schema(path: str) -> StructType | None:
+        try:
+            p = hpath(path)
+            meta = read_footer(input_file(p, hconf), skip_row_groups)
+            # a file source's relation is always read as nullable
+            # (DataSource.resolveRelation), so inference reports it so
+            as_json = from_footer(footer_of(p, meta), converter).asNullable().json()
+        except (Py4JError, CapturedException):
+            return None  # a directory, an unreadable file or type, a drifted call
+        return _parse_datatype_json_string(as_json)
+
+    return schema
+
+
+def parquet_file_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark would infer for one Parquet file, read from its
+    footer with no Spark job; ``None`` when that route is closed (see
+    ``parquet_schema_reader``)."""
+    return parquet_schema_reader(spark)(path)
 
 
 def arrow_batches(df: DataFrame) -> Iterator["pa.RecordBatch"]:

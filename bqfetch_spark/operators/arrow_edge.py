@@ -235,18 +235,12 @@ def q100_streaming_token_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful operator carries a FULL DuckDB oracle (a plain window);
     cross-micro-batch state carry is pinned by a two-wave test."""
     from bqfetch_spark.streaming.quota import enforce_quota_stream
-    from bqfetch_spark.streaming.windows import run_to_memory
+    from bqfetch_spark.streaming.windows import run_to_memory, streaming_documents
 
-    import os
-
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
     return run_to_memory(
-        enforce_quota_stream(stream), "q100_quota_sink", output_mode="append",
+        enforce_quota_stream(streaming_documents(spark, sf_dir)),
+        "q100_quota_sink",
+        output_mode="append",
         state_partitions=8,
     )
 

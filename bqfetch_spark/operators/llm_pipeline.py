@@ -2557,10 +2557,7 @@ def qx264_minhash_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact oracle, paid once per gram, still JVM-side."""
     docs = load_catalog(spark, sf_dir).table("documents")
     grams = token_ngrams(docs, MH_SHINGLE, distinct=True)
-    hashed = grams.withColumn(
-        "h31",
-        F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("bigint") % MH_P,
-    )
+    hashed = grams.withColumn("h31", md5_bigint(F.col("g")) % MH_P)
     sig = hashed.groupBy("doc_id").agg(
         *[
             F.min((F.lit(a) * F.col("h31") + F.lit(b)) % MH_P).alias(f"s{i}")

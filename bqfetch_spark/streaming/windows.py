@@ -11,7 +11,6 @@ bindings change.
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,11 +21,12 @@ from bqfetch_spark.catalog import load_catalog, normalize_table
 
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table (schema taken from the batch
-    catalog; pathGlobFilter isolates the one file in the shared dir)."""
-    batch = load_catalog(spark, sf_dir).table("events")
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    catalog, which read it off the file's footer with no Spark job;
+    pathGlobFilter isolates the one file in the shared dir)."""
+    cat = load_catalog(spark, sf_dir)
+    batch = cat.table("events")
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(cat.file_schema("events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -40,10 +40,9 @@ def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the documents table: its single file is a single
-    micro-batch under AvailableNow."""
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    micro-batch under AvailableNow (schema from the batch catalog)."""
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(load_catalog(spark, sf_dir).file_schema("documents"))
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )

@@ -26,6 +26,18 @@ def spark():
     yield s
 
 
+def jobs_in_group(spark, group: str, fn):
+    """fn()'s result and the number of Spark jobs it ran, counted in a
+    job group on the shared SparkContext."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -18,7 +18,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_in_group
 
 
 class _NoInternals:
@@ -112,6 +112,26 @@ def test_session_uuid_fallback_is_stable_and_gc_safe(spark):
     assert _session_uuid(proxy_a) == ua  # stable per proxy (memo works)
     proxy_b = _NoInternals(spark)
     assert _session_uuid(proxy_b) != ua  # a new session never inherits
+
+
+def test_catalog_falls_back_to_inference_without_internals(spark):
+    """Without the JVM route the footer helper gives None, and the
+    catalog infers each schema instead (one job per table), ending with
+    the same file and table schemas the footer route gives."""
+    from bqfetch_spark.catalog import TABLES, Catalog, load_catalog
+    from bqfetch_spark.compat import parquet_file_schema
+
+    footer = load_catalog(spark, SF_SMOKE)
+    proxy = _NoInternals(spark.newSession())  # its own temp views
+    assert parquet_file_schema(proxy, footer.path("orders")) is None
+
+    inferred, jobs = jobs_in_group(
+        spark, "test-catalog-inference-fallback", Catalog(proxy, SF_SMOKE).load_all
+    )
+    assert jobs == len(TABLES)
+    for name in TABLES:
+        assert inferred.file_schema(name) == footer.file_schema(name), name
+        assert inferred.table(name).schema == footer.table(name).schema, name
 
 
 def test_global_rank_takes_checkpoint_route_without_plan_access(spark):

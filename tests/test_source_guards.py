@@ -1,7 +1,8 @@
 """Source-level guards on where the engine touches its surroundings:
 deployment settings come from the environment in session.py alone, and
 the Spark application identity is read through compat.py alone (Spark
-Connect has no sparkContext), and word n-grams are built by one kernel."""
+Connect has no sparkContext), word n-grams are built by one kernel, and
+no read runs a schema-inference job only to learn a schema."""
 
 from __future__ import annotations
 
@@ -42,3 +43,20 @@ def test_word_ngrams_are_built_in_one_module():
         if any(rx.search(p.read_text(encoding="utf-8")) for rx in spellings)
     )
     assert hits == ["bqfetch_spark/functions/text.py"]
+
+
+def test_no_schema_only_parquet_reads():
+    """``spark.read.parquet(path).schema`` runs a schema-inference job to
+    learn what the file's footer already says: a fixture file's schema
+    comes from ``Catalog.file_schema`` or ``compat.parquet_file_schema``
+    instead. The one read left names a Spark-written wave directory,
+    which the single-file footer route does not cover."""
+    import re
+
+    root = Path(bqfetch_spark.__file__).parent
+    schema_only = re.compile(r"\.read\.parquet\((?:[^()]|\([^()]*\))*\)\s*\.schema\b")
+    hits = {
+        p.relative_to(root).as_posix(): len(schema_only.findall(p.read_text(encoding="utf-8")))
+        for p in root.rglob("*.py")
+    }
+    assert {k: n for k, n in hits.items() if n} == {"streaming/waves.py": 1}
