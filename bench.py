@@ -899,12 +899,14 @@ def _load_previous_bench() -> tuple[str, dict[str, float]]:
 
     Prefers BENCH_DETAIL.json (this repo's own full-name record from
     the previous bench run — loaded BEFORE this run overwrites it),
-    then falls back to the newest driver BENCH_r*.json. Round-2
-    lesson: the driver's tail capture truncated the 69-query line so
-    BENCH_r02 recorded parsed:null; the detail side file is therefore
-    the authoritative per-query history.
+    then falls back to the highest-round driver record, named exactly
+    BENCH_r<digits>.json (the per-CPU ``_c8`` and ``_builder`` side
+    records are not the headline). Round-2 lesson: the driver's tail
+    capture truncated the 69-query line so BENCH_r02 recorded
+    parsed:null; the detail side file is therefore the authoritative
+    per-query history.
     """
-    import glob
+    import re
 
     here = os.path.dirname(os.path.abspath(__file__))
     detail = os.path.join(here, "BENCH_DETAIL.json")
@@ -915,14 +917,18 @@ def _load_previous_bench() -> tuple[str, dict[str, float]]:
             return "BENCH_DETAIL.json", dict(queries)
     except (OSError, ValueError, AttributeError):
         pass
-    candidates = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-    for path in reversed(candidates):
+    rounds = {
+        int(m.group(1)): name
+        for name in os.listdir(here)
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", name))
+    }
+    for _, name in sorted(rounds.items(), reverse=True):
         try:
-            with open(path) as fh:
+            with open(os.path.join(here, name)) as fh:
                 doc = json.load(fh)
             queries = (doc.get("parsed") or doc).get("queries", {})
             if queries:
-                return os.path.basename(path), dict(queries)
+                return name, dict(queries)
         except (OSError, ValueError, AttributeError):
             continue
     return "", {}

@@ -17,8 +17,8 @@ fallback instead of an AttributeError:
   probes) behind an explicit capability error.
 - Arrow streaming (``arrow_batches``) serves JVM-encoded Arrow frames
   partition by partition (``Dataset.toArrowBatchRdd`` through
-  ``PythonRDD.toLocalIteratorAndServe``, read with pyspark's
-  ``_local_iterator_from_socket``) and falls back to a ``mapInArrow``
+  ``PythonRDD.toLocalIteratorAndServe``, read over a socket this module
+  owns and closes) and falls back to a ``mapInArrow``
   IPC re-encode plus ``toLocalIterator`` when those are unreachable.
 - Parquet footer schemas (``parquet_schema_reader`` /
   ``parquet_file_schema``) read one file's footer on the driver and
@@ -185,7 +185,7 @@ def arrow_batches(df: DataFrame) -> Iterator["pa.RecordBatch"]:
     driver decodes them against the schema ``toArrow()`` casts to — no
     Python worker, no pickled rows. An empty result yields no batch.
     Closing the iterator early drains the current partition and stops
-    the serving thread (pyspark's local-iterator finalizer).
+    the serving thread; the socket is closed either way.
 
     Fallback, when the classic setup is unreachable (Connect, or the
     private JVM calls raise before the first frame): executors re-encode
@@ -199,19 +199,20 @@ def arrow_batches(df: DataFrame) -> Iterator["pa.RecordBatch"]:
         except Exception:  # private-API drift: take the public route
             pass
         else:
-            for frame in frames:
-                yield pa.ipc.read_record_batch(pa.py_buffer(frame), schema)
+            with contextlib.closing(frames):
+                for frame in frames:
+                    yield pa.ipc.read_record_batch(pa.py_buffer(frame), schema)
             return
     yield from _worker_arrow_batches(df)
 
 
 def _jvm_arrow_frames(df: DataFrame):
     """(frame iterator, Arrow schema) for the classic route; raises on
-    any missing internal."""
-    from pyspark.serializers import NoOpSerializer
+    any missing internal. The socket is connected here, so setup errors
+    surface before the first frame."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.traceback_utils import SCCallSiteSync
-    from pyspark.util import _local_iterator_from_socket
+    from pyspark.util import local_connect_and_auth
 
     spark = df.sparkSession
     schema = to_arrow_schema(
@@ -219,10 +220,51 @@ def _jvm_arrow_frames(df: DataFrame):
     )
     sc = spark.sparkContext
     with SCCallSiteSync(sc):
-        sock_info = sc._jvm.PythonRDD.toLocalIteratorAndServe(
+        port, secret, server = sc._jvm.PythonRDD.toLocalIteratorAndServe(
             df._jdf.toArrowBatchRdd(), True
         )
-    return _local_iterator_from_socket(sock_info, NoOpSerializer()), schema
+    sockfile, sock = local_connect_and_auth(port, secret)
+    # partitions take unpredictable time to compute: no read timeout
+    sock.settimeout(None)
+    return _served_frames(sockfile, sock, server), schema
+
+
+def _served_frames(sockfile, sock, server):
+    """The frames of a ``toLocalIteratorAndServe`` stream, partition by
+    partition: ask for the next one (1), read its status (1 = frames
+    follow, 0 = done, -1 = the job failed and ``getResult`` raises it).
+    pyspark's ``_local_iterator_from_socket`` speaks the same protocol
+    but never closes its socket; this generator closes it on exhaustion,
+    error or early close, after draining the current partition and
+    telling the server to stop (0) when closed mid-stream."""
+    from pyspark.serializers import NoOpSerializer, read_int, write_int
+
+    frames = None  # the partition being read, until it is used up
+    try:
+        while True:
+            write_int(1, sockfile)
+            sockfile.flush()
+            status = read_int(sockfile)
+            if status == -1:
+                server.getResult()
+            if status != 1:
+                return
+            frames = NoOpSerializer().load_stream(sockfile)
+            for frame in frames:  # ``yield from`` would close ``frames`` before the drain
+                yield frame
+            frames = None
+    finally:
+        try:
+            if frames is not None:  # closed mid-partition
+                for _ in frames:
+                    pass
+                write_int(0, sockfile)
+                sockfile.flush()
+        except Exception:  # the server may already be gone
+            pass
+        finally:
+            sockfile.close()
+            sock.close()
 
 
 def _worker_arrow_batches(df: DataFrame) -> Iterator["pa.RecordBatch"]:

@@ -665,7 +665,7 @@ def qx242_ann_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     LOCALIZED partial_retrain, store swap, crash recovery — stays
     pytest-gated (tests/test_ann_recall.py,
     tests/test_crash_consistency.py) and 100×-certified
-    (scripts/scale_check_100x.py)."""
+    (scripts/scale_check.py partial_retrain)."""
     import numpy as np
 
     from bqfetch_spark.operators.pq import (

@@ -2512,7 +2512,8 @@ def qx277_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     which sizes work before executing it).
 
     Scale shape: qx264's verified-pair frame is output-bounded
-    (100x-certified ≈linear in corpus size, scripts/scale_check_100x.py)
+    (100x-certified ≈linear in corpus size, scripts/scale_check.py
+    qx264_minhash_lsh_exact)
     and the sweep grid is a 5-row broadcast — the threshold join
     multiplies pairs by at most |grid| before two pairs-sized
     aggregations. The corpus text is never touched again."""

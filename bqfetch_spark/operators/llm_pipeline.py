@@ -2682,7 +2682,8 @@ def qx266_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus's vocabulary the signature join dominates and stays
     bucket-local.
 
-    Band-saturation policy (measured in scale_check_100x, r10): unlike
+    Band-saturation policy (measured by scripts/scale_check.py
+    qx266_simhash_exact, r10): unlike
     qx264's 2^60 md5 band keys, a FIXED 15-bit key space saturates as
     the corpus grows — candidate mass measured 234× at 100× docs
     (mildly super-linear; degenerate all-pairs would be ~10,000×),

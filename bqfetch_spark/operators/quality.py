@@ -1337,7 +1337,8 @@ def qx278_char_bigram_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame
     # DISK_ONLY checkpoint: the gram frame is corpus-scale (≈ docs ×
     # distinct-bigrams-per-doc rows), and the default MEMORY_AND_DISK
     # level OOMs the 100× census while UNROLLING deserialized blocks
-    # (measured at 6M docs in scale_check_100x). Serialized-to-disk
+    # (measured in the 100× census, scripts/scale_check.py
+    # qx278_char_bigram_familiarity). Serialized-to-disk
     # writes through with no unroll buffer; both consumers then stream
     # the materialized blocks.
     dg = (

@@ -54,9 +54,9 @@ SINGLE_PARTITION_ALLOWLIST = {
         "rate-tuned to ~1k rows/bucket in production, the exact shape "
         "of Spark's own RangePartitioner sampler); boundedness is a "
         "filter selectivity the subtree walk cannot prove. The full "
-        "query at 100x lineitem (60M rows) is certified in "
-        "scale_check_100x.check_round10_census_100x (wall 4.7x, exact "
-        "census asserted hard)."
+        "query at 100x lineitem (60M rows) is certified by "
+        "scale_check.py qx279_sort_range_planner (exact census asserted "
+        "hard; wall 25.5x on 4 cores in SCALE_c4.json)."
     ),
 }
 
@@ -141,7 +141,7 @@ def _certify_adaptive(spark, q, name: str) -> bool:
     chooser onto the scale path (thresholds to -1) and re-plan; if the
     unbounded exchange disappears, the scale spelling exists and is the
     one a 100-TB input would get (its behavior is separately certified
-    by scale_check_100x.check_global_rank_100x). Returns True if the
+    by scale_check.py rank_scale_path). Returns True if the
     forced plan has zero unbounded single-partition exchanges."""
     import bqfetch_spark.plans.ranks as ranks
 

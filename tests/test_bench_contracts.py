@@ -48,3 +48,22 @@ def test_bench_dict_literals_have_no_duplicate_keys():
             )
             dupes += [(node.lineno, k) for k, n in keys.items() if n > 1]
     assert dupes == []
+
+
+def test_previous_bench_fallback_takes_the_highest_headline_round(tmp_path, monkeypatch):
+    """Without BENCH_DETAIL.json the regression guard reads the
+    highest-round driver headline, BENCH_r<digits>.json; per-CPU (_c8)
+    and builder side records sort later but are not headlines."""
+    import json
+
+    import bench
+
+    def record(name, q):
+        (tmp_path / name).write_text(json.dumps({"parsed": {"queries": {q: 1.0}}}))
+
+    record("BENCH_r9.json", "r9")
+    record("BENCH_r14.json", "r14")
+    record("BENCH_r14_c8.json", "c8")
+    record("BENCH_r15_builder.json", "builder")
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    assert bench._load_previous_bench() == ("BENCH_r14.json", {"r14": 1.0})

@@ -163,6 +163,27 @@ def test_iter_batches_early_close_releases_stream(spark, fetcher):
     assert rows == fetcher.table(ref).count()
 
 
+def test_iter_batches_closes_its_socket(spark, fetcher):
+    """A stream's serving socket is closed by the stream itself, not
+    left to garbage collection: neither a used-up stream nor one closed
+    after its first batch may leave an unclosed socket behind."""
+    import gc
+    import warnings
+
+    ref = TableRef(SF_SMOKE, "lineitem")
+    gc.collect()  # earlier tests' garbage must not count against this one
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always", ResourceWarning)
+        assert sum(b.num_rows for b in fetcher.iter_batches(ref, None, batch_rows=100)) > 0
+        stream = fetcher.iter_batches(ref, None, batch_rows=100)
+        next(stream)
+        stream.close()
+        del stream
+        gc.collect()
+    leaked = [str(w.message) for w in caught if issubclass(w.category, ResourceWarning)]
+    assert not [m for m in leaked if "socket" in m], leaked
+
+
 def test_invalid_args(spark, fetcher):
     ref = TableRef(SF_SMOKE, "customer")
     with pytest.raises(ValueError):
