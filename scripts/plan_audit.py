@@ -56,7 +56,7 @@ SINGLE_PARTITION_ALLOWLIST = {
         "filter selectivity the subtree walk cannot prove. The full "
         "query at 100x lineitem (60M rows) is certified by "
         "scale_check.py qx279_sort_range_planner (exact census asserted "
-        "hard; wall 25.5x on 4 cores in SCALE_c4.json)."
+        "hard; its wall ratio is recorded in SCALE_c4.json)."
     ),
 }
 

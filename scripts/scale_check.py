@@ -93,9 +93,10 @@ def replicate(base_dir: str, k: int, tables, shared_text: bool = False) -> str:
     and its ``source`` with ``r<r>_`` (``n_chars`` follows), so no word
     n-gram or source is shared across replicas. ``shared_text`` keeps
     text and source verbatim for checks whose claim needs one token
-    space. Each table is one Parquet file with the base schema and a
-    few row groups per core, so scans still split. Built under WORK,
-    once per (base, k, tables, shared_text)."""
+    space. Each table is one Parquet file with the base schema, in row
+    groups of at most rows * k / (2 * cores) rows and at least one per
+    replica, so scans still split. Built under WORK, once per (base, k,
+    tables, shared_text)."""
     tables = tuple(sorted(set(tables)))
     if set(tables) & set(SHARED_TABLES) or not set(tables) <= set(TABLES):
         raise ValueError(f"cannot replicate {tables}")
@@ -353,6 +354,70 @@ def ks_grown_domain(spark, base, check) -> Sides:
     return Sides(run(base), run(big), (table_rows(base, check.tables), table_rows(big, check.tables)))
 
 
+@contextlib.contextmanager
+def session_confs(spark, confs: dict):
+    """Set ``confs`` on the session for the block, then restore them."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def skew_join(spark, base, check) -> Sides:
+    """AQE's runtime skew-join split on the kx lineitem fact where one
+    key owns ~10% of the rows: the fact-dim sort-merge join must end
+    with skew=true in the final plan, and cost at most the bound times a
+    same-volume uniform-key join (sides: uniform, skewed). The shuffle
+    starts at P = 8x the session's shuffle partitions, so the hot one is
+    1 + 0.1 * P / 0.9 >= 4.6x the median from 4 cores up (at P = 4 it
+    is ~1.4x, under the split factor 2); md5 payloads keep its bytes
+    from compressing away."""
+    from bqfetch_spark.session import shuffle_partitions
+
+    li = load_catalog(spark, replicate(base, check.factor, check.tables)).table("lineitem")
+    hot_key = li.agg(F.min("l_orderkey")).first()[0]
+    pay = F.md5(F.concat_ws("|", "l_orderkey", "l_linenumber", "l_partkey", "l_quantity")).alias("pay")
+    hot = F.pmod(F.xxhash64("l_orderkey"), F.lit(10)) == 0
+    paths = {"uniform": work("uniform_fact"), "skewed": work("skew_fact"), "dim": work("skew_dim")}
+    li.select(F.col("l_orderkey").alias("k"), pay).write.mode("overwrite").parquet(paths["uniform"])
+    li.select(F.when(hot, F.lit(hot_key)).otherwise(F.col("l_orderkey")).alias("k"), pay).write.mode(
+        "overwrite").parquet(paths["skewed"])
+    spark.read.parquet(paths["uniform"]).select("k").distinct().select(
+        "k", F.md5(F.col("k").cast("string")).alias("dpay")).write.mode("overwrite").parquet(paths["dim"])
+    n = li.count()
+    confs = {
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1m",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1m",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(8 * shuffle_partitions(spark)),
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+
+    def join(side: str, split: bool) -> Callable:
+        def run():
+            with session_confs(spark, confs):
+                dim = spark.read.parquet(paths["dim"])
+                j = spark.read.parquet(paths[side]).join(dim, "k").groupBy().agg(
+                    F.count(F.lit(1)).alias("n"), F.sum(F.length("pay") + F.length("dpay")).alias("s"))
+                got = j.collect()[0]["n"]  # on j itself, so j's plan is the final one
+            gate(got == n, f"{side} join returned {got} rows, expected {n}")
+            if split:
+                final = j._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+                gate("skew=true" in final, "AQE skew-join split did not engage:\n" + final[:1500])
+
+        return run
+
+    return Sides(join("uniform", False), join("skewed", True), (n, n), structure={"fact_rows": n})
+
+
 def _rank_frame(spark, n: int, hot: bool):
     """n synthetic (v, k) rows, k unique; with ``hot`` 10% share v = 0."""
     def build():
@@ -482,60 +547,62 @@ def _synth_vectors(spark, n: int, seed: int):
 
 
 def q69_candidate_join(spark, base, check) -> Sides:
-    """q69's salted within-cell candidate join + exact recheck under the
-    cells-proportional-to-N policy: k-fold vectors in k-fold cells keep the
-    per-cell occupancy, so pairs grow k-fold. Synthetic hash-balanced
-    probes stand in for the sample-fit KMeans cells q69 trains."""
-    from bqfetch_spark.functions.vectors import dot, norm2
+    """q69's scoring tail (the salted (cell, sub-bucket) groups, each
+    scored by score_pairs, then r6, the threshold and dropDuplicates)
+    under the cells-proportional-to-N policy: k-fold vectors in k-fold
+    cells keep the per-cell occupancy, so scored pairs grow k-fold.
+    Synthetic vectors on q69's IVF_Q grid and hash-balanced probes stand
+    in for the fixture embeddings and the KMeans cells q69 trains."""
     from bqfetch_spark.operators.relational import r6
-    from bqfetch_spark.operators.similarity import NEARDUP_IVF_PROBE, NEARDUP_SALT, NEARDUP_THRESHOLD
+    from bqfetch_spark.operators.similarity import (
+        IVF_Q, NEARDUP_IVF_PROBE, NEARDUP_SALT, NEARDUP_THRESHOLD, PAIR_SCHEMA, _ivf_side, score_pairs,
+    )
+    from bqfetch_spark.session import shuffle_partitions
 
-    def tail(emb, n_cells: int):
+    def score(pdf):
+        probe_side = pdf["probe_side"] == 1
+        return score_pairs(*_ivf_side(pdf[probe_side]), *_ivf_side(pdf[~probe_side]))
+
+    def tail(n: int, seed: int, n_cells: int) -> Callable:
+        qv = F.transform("v", lambda x: F.round(x * F.lit(float(IVF_Q))).cast("bigint")).alias("qv")
+        e = _synth_vectors(spark, n, seed).select("vec_id", qv)
+        nv = F.aggregate(F.zip_with("qv", "qv", lambda a, b: a * b), F.lit(0).cast("bigint"), lambda acc, x: acc + x)
+        e = e.select("vec_id", "qv", nv.alias("nv")).localCheckpoint(eager=True)
         probes = [
             F.pmod(F.xxhash64("vec_id") + F.lit(j * 7919), F.lit(n_cells)).cast("int")
             for j in range(NEARDUP_IVF_PROBE)
         ]
-        assigned = emb.select("vec_id", F.explode(F.array(*probes)).alias("cell_id")).dropDuplicates()
-        a = assigned.withColumn("salt", F.pmod(F.xxhash64("vec_id"), F.lit(NEARDUP_SALT)).cast("int"))
-        b = assigned.select("*", F.explode(F.sequence(F.lit(0), F.lit(NEARDUP_SALT - 1))).alias("salt"))
-        a, b = (x.repartition(RANK_BUCKETS, "cell_id", "salt") for x in (a, b))
-        cand = (
-            a.alias("a")
-            .join(
-                b.alias("b").hint("shuffle_hash"),
-                (F.col("a.cell_id") == F.col("b.cell_id"))
-                & (F.col("a.salt") == F.col("b.salt"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-            .dropDuplicates()
-        )
-        nv = emb.select("vec_id", "v", norm2(F.col("v")).alias("nn"))
-        va, vb = nv.alias("va"), nv.alias("vb")
-        cos = r6(dot(F.col("va.v"), F.col("vb.v"), dim=None) / (F.col("va.nn") * F.col("vb.nn")))
-        return lambda: (
-            cand.join(va, F.col("va.vec_id") == F.col("vec_a"))
-            .join(vb, F.col("vb.vec_id") == F.col("vec_b"))
-            .select("vec_a", "vec_b", F.when(F.rand(42) >= -1, cos).alias("cosine"))
+        aset = e.select("*", F.explode(F.array(*probes)).alias("cell_id")).dropDuplicates(["vec_id", "cell_id"])
+        a_rows = aset.select("*", F.pmod(F.xxhash64("vec_id"), F.lit(NEARDUP_SALT)).cast("int").alias("salt"),
+                             F.lit(1).alias("probe_side"))
+        b_rows = aset.select("*", F.explode(F.sequence(F.lit(0), F.lit(NEARDUP_SALT - 1))).alias("salt"),
+                             F.lit(0).alias("probe_side"))
+        pairs = (
+            a_rows.unionByName(b_rows)
+            .repartition(shuffle_partitions(spark), "cell_id", "salt")
+            .groupBy("cell_id", "salt")
+            .applyInPandas(score, PAIR_SCHEMA)
+            .select("vec_a", "vec_b", (r6(F.col("cosine")) + F.lit(0.0)).alias("cosine"))
             .filter(F.col("cosine") >= NEARDUP_THRESHOLD)
-            .count()
+            .dropDuplicates(["vec_a", "vec_b"])
         )
+        return lambda: noop(pairs)
 
-    n, cells = 500, 16  # 125 vectors per cell at 4 probes, on both sides
-    small = _synth_vectors(spark, n, 1).localCheckpoint(eager=True)
-    big = _synth_vectors(spark, n * check.factor, 2).localCheckpoint(eager=True)
-    return Sides(tail(small, cells), tail(big, cells * check.factor), (n, n * check.factor))
+    n, cells = 2_000, 16  # 125 vectors (500 probe slots) per cell, on both sides
+    return Sides(tail(n, 1, cells), tail(n * check.factor, 2, cells * check.factor), (n, n * check.factor))
 
 
 def qx262_scale_path(spark, base, check) -> Sides:
     """qx262's manifest explode on the forced scale-path rank (the
-    registry function picks the single-sort spelling at these sizes);
-    every non-final window must tile PACK_WINDOW exactly, checked
-    distributed."""
+    registry function picks the single-sort spelling at these sizes)
+    over ~60k and ~6M documents (the base replicated to 60k documents,
+    then k times that); every non-final window must tile PACK_WINDOW
+    exactly, checked distributed."""
     from bqfetch_spark.operators.corpus import PACK_WINDOW
 
     fn = _registry_fn("qx262_packing_manifest")
-    big = replicate(base, check.factor, check.tables)
+    start = max(1, round(60_000 / table_rows(base, check.tables)))
+    small, big = (replicate(base, start * k, check.tables) for k in (1, check.factor))
 
     def after() -> dict:
         with scale_path_ranks():
@@ -548,9 +615,9 @@ def qx262_scale_path(spark, base, check) -> Sides:
         return {"windows": stats.count(), "tiling_violations": bad}
 
     return Sides(
-        scaled(lambda: noop(fn(spark, base))),
+        scaled(lambda: noop(fn(spark, small))),
         scaled(lambda: noop(fn(spark, big))),
-        (table_rows(base, check.tables), table_rows(big, check.tables)),
+        (table_rows(small, check.tables), table_rows(big, check.tables)),
         after=after,
     )
 
@@ -794,6 +861,8 @@ CHECKS = (
     Check("qx224_dup_span_fraction", 10, 15, DOCS, shared_text=True),
     Check("qx229_dup_span_cut", 10, 15, DOCS, shared_text=True),
     Check("qx221_bpe_merges", 10, 15, DOCS, shared_text=True),
+    Check("skew_join_hot_key", 10, 5, LI, custom=skew_join,
+          why="needs a planted hot join key and AQE's skew confs; no fixture column has one"),
     Check("rank_scale_path", 100, 150, custom=rank_scale_path,
           why="forces the scale-path rank, which registry queries pick only past the crossover"),
     Check("rank_hot_key", 100, 2.5, custom=rank_hot_key,
