@@ -644,37 +644,13 @@ def _time_query(fn, spark, sf_dir) -> list[float]:
 STORE_WARM_TAGS = {"streaming", "incremental"}
 STORE_WARM_EXTRA = {"q39_compact_small_files"}
 
-# Queries whose implementations reuse per-session artifact memos
-# (frozen k-means/PQ training state, checkpointed quantized corpora —
-# the train-once-serve-many stance accepted in r11/r12). For these the
-# recorded min-of-repeats is a WARM number; VERDICT r13 #3 asks that
-# the cold/warm split live in the record instead of adjudication
-# prose, so the child reports {cold_first_run, warm_min} per memo-
-# backed query into BENCH_DETAIL. Caveat the reader must keep:
-# cold_first_run is session-cold only when the query ran before any
-# memo-sharing sibling in its child (child composition is in the
-# "runs"/"child_batches" records); it is an upper bound on the
-# artifact-build cost either way. The timing path is unchanged.
-MEMO_BACKED = {
-    "q55_ann_ivf_kmeans",
-    "q56_ann_ivfpq",
-    "q57_streaming_ann_index",
-    "q69_embedding_neardup_ivf",
-    "qx139_embedding_clusters",
-    "qx191_embedding_clusters_scale",
-    "qx240_ann_pq",
-    "qx242_ann_drift_retrain",
-    "qx272_ann_recall_report",
-    "qx287_ann_shard_merge",
-}
-
-
 def _needs_store_warm(entry, name: str) -> bool:
     return name in STORE_WARM_EXTRA or bool(STORE_WARM_TAGS & set(entry.tags))
 
 
 def child_queries(names: list[str]) -> None:
     """Run a group of queries in this (fresh) session; JSON to stdout."""
+    from bqfetch_spark import workcache
     from bqfetch_spark.registry import all_queries
     from bqfetch_spark.session import get_session
 
@@ -716,17 +692,23 @@ def child_queries(names: list[str]) -> None:
                 registry[name].fn(spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
+            lookups = sum(workcache.LOOKUPS.values())
             runs = _time_query(registry[name].fn, spark, sf_dir)
+            memo_backed = sum(workcache.LOOKUPS.values()) > lookups
         except Exception as exc:  # one broken query must not kill the bench
             failures[name] = str(exc).splitlines()[0][:200]
             print(f"# {name}: FAILED {failures[name]}", file=sys.stderr)
             continue
         timings[name] = round(min(runs), 3)
         runs_by_name[name] = [round(r, 3) for r in runs]
-        if name in MEMO_BACKED and len(runs) > 1:
-            # VERDICT r13 #3: keep artifact-build amortization visible
-            # in the record (see the MEMO_BACKED comment for the
-            # session-cold caveat)
+        if memo_backed and len(runs) > 1:
+            # the query's runs looked up the session artifact store
+            # (workcache.artifact), so min-of-repeats is a WARM number:
+            # keep the artifact-build amortization visible in the
+            # record. cold_first_run is session-cold only when no
+            # artifact-sharing sibling ran before it in this child
+            # (child composition is in "child_batches"); it is an upper
+            # bound on the artifact-build cost either way.
             memo_cold_warm[name] = {
                 "cold_first_run": round(runs[0], 3),
                 "warm_min": round(min(runs[1:]), 3),

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, TimestampType
 
-from bqfetch_spark.compat import app_id, parquet_schema_reader
+from bqfetch_spark.compat import parquet_schema_reader, session_key
 
 TABLES = (
     "region",
@@ -52,7 +52,7 @@ class Catalog:
         self.sf_dir = sf_dir
         self._dfs: dict[str, DataFrame] = {}
         self._file_schemas: dict[str, StructType] = {}
-        self._session = _session_key(spark)
+        self._session = session_key(spark)
         # defensive: the harness may hand us a session built without
         # bqfetch_spark.session defaults; events.ts (timestamp[ns])
         # is unreadable without this (it is a runtime-settable conf)
@@ -133,51 +133,19 @@ def normalize_table(name: str, df: DataFrame) -> DataFrame:
 # runs no Spark job (schemas come from the footers on the driver), but
 # it still reads 10 footers and resolves 10 DataFrames and temp views,
 # all of which a hit reuses.
-# Keyed by (applicationId, sessionUUID, sf_dir): applicationId is
-# stable for a context's lifetime and unique across restarts, so a
-# recycled SparkSession can never resurrect a catalog whose DataFrames
-# point at a stopped JVM (a CPython id() key could be reused after GC);
-# the per-session UUID distinguishes spark.newSession() siblings that
-# SHARE an applicationId but not temp views — without it the second
-# session would reuse a catalog whose views exist only in the first.
+# Keyed by (compat.session_key, sf_dir): the session half keeps
+# spark.newSession() siblings, which share an app id but not temp
+# views, from reusing a catalog whose views exist only in the other.
 _CATALOGS: dict[tuple[str, str, str], Catalog] = {}
 # Which sf_dir's tables a session's temp views currently name, keyed by
-# (applicationId, sessionUUID) and set whenever a Catalog registers a
-# view. A memo hit re-registers the views only when another sf_dir took
+# session_key and set whenever a Catalog registers a view. A memo hit re-registers the views only when another sf_dir took
 # them over, so the common hit (same sf_dir as the last call) makes no
 # py4j view call at all.
 _VIEW_OWNER: dict[tuple[str, str], str] = {}
 
 
-def _session_uuid(spark: SparkSession) -> str:
-    try:
-        return str(spark._jsparkSession.sessionUUID())
-    except Exception:
-        # Connect / future API drift: stamp a uuid4 onto the session
-        # proxy on first touch. A plain id(spark) fallback would
-        # reintroduce the exact hazard the memo key is documented to
-        # prevent — CPython can reuse the address after GC and
-        # resurrect a catalog whose DataFrames point at a dead session.
-        # A NEW session object can never carry the old attribute, so
-        # address reuse is harmless here.
-        u = getattr(spark, "_bqfs_session_uuid", None)
-        if u is None:
-            import uuid
-
-            u = str(uuid.uuid4())
-            try:
-                spark._bqfs_session_uuid = u
-            except Exception:
-                pass  # unsettable proxy: key degrades to per-call (no reuse, just no memo)
-        return u
-
-
-def _session_key(spark: SparkSession) -> tuple[str, str]:
-    return app_id(spark), _session_uuid(spark)
-
-
 def load_catalog(spark: SparkSession, sf_dir: str) -> Catalog:
-    session = _session_key(spark)
+    session = session_key(spark)
     cat = _CATALOGS.get((*session, sf_dir))
     if cat is None:
         cat = Catalog(spark, sf_dir).load_all()

@@ -10,8 +10,10 @@ fallback instead of an AttributeError:
   falls back to the public ``df.explain(...)`` capture, or ``None`` —
   callers must treat ``None`` as "unknown plan" and take the
   scale-safe route (plans/ranks.py materialize-and-count).
-- session identity (``app_id``) falls back to a per-process constant —
-  uniqueness is then carried by the per-session component of the key.
+- session identity (``app_id``, ``session_key``): the app id falls
+  back to a per-process constant, and the session uuid to a uuid4
+  stamped on the session object — uniqueness is then carried by the
+  per-session component of the key.
 - raw JVM access (``jvm_or_none``) returns ``None`` so callers can gate
   JVM-only features (count-min-sketch deserialization, connector class
   probes) behind an explicit capability error.
@@ -116,6 +118,33 @@ def app_id(spark: SparkSession) -> str:
         return str(spark.conf.get("spark.app.id"))
     except Exception:
         return "connect-app"
+
+
+def session_key(spark: SparkSession) -> tuple[str, str]:
+    """(app id, session uuid): the one identity every per-session memo
+    keys on. The app id is stable for a context's lifetime and unique
+    across restarts, so a recycled SparkSession never resurrects state
+    that points at a stopped JVM; the uuid tells ``spark.newSession()``
+    siblings apart, which share an app id but not temp views or
+    checkpoints. Under Connect the uuid is a uuid4 stamped onto the
+    session proxy on first touch. ``id(spark)`` would not do: CPython
+    can reuse the address after GC, while a NEW session object can
+    never carry the old attribute."""
+    app = app_id(spark)
+    try:
+        return app, str(spark._jsparkSession.sessionUUID())
+    except Exception:
+        pass
+    u = getattr(spark, "_bqfs_session_uuid", None)
+    if u is None:
+        import uuid
+
+        u = str(uuid.uuid4())
+        try:
+            spark._bqfs_session_uuid = u
+        except Exception:
+            pass  # unsettable proxy: key degrades to per-call (no reuse, just no memo)
+    return app, u
 
 
 def parquet_schema_reader(spark: SparkSession) -> Callable[[str], StructType | None]:

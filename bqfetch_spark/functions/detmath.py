@@ -37,10 +37,10 @@ power iteration would need thousands of steps per component.
 Measured on the sf0.01 covariance: 8 sweeps give max eigenvalue error
 vs numpy.eigh of ~4e-16 (identical to 10 sweeps — converged);
 Python ~1.2 s, DuckDB ~3.5 s; both spellings bit-equal in all 64
-eigenvalues and all 4096 eigenvector components. The Python spelling
-is additionally memoized per covariance within a session
-(:func:`jacobi_eigh_flat_cached`) — qx193 and qx208 share one
-decomposition of the same (sf, corpus) stats.
+eigenvalues and all 4096 eigenvector components. The Python spelling's
+result is memoized per covariance within a session
+(``similarity._pca_eig``, through ``workcache.artifact``) — qx193 and
+qx208 share one decomposition of the same (sf, corpus) stats.
 """
 
 from __future__ import annotations
@@ -131,30 +131,6 @@ def jacobi_eigh_flat(
         a, v = a2, v2
     lam = [a[i * dim + i] for i in range(dim)]
     return lam, v
-
-
-# Session-lifetime memo for the fixed-cost driver decomposition: the
-# PCA family (qx193 projection, qx208 whitening) derives from the SAME
-# per-(sf, corpus) covariance, so within a session the O(d³) Jacobi
-# runs once, not once per query. Keyed by matrix CONTENT (tuple hash of
-# 4096 doubles — microseconds), so a changed corpus can never serve a
-# stale decomposition; bounded to a handful of entries per process.
-_EIG_MEMO: dict[tuple, tuple[list[float], list[float]]] = {}
-
-
-def jacobi_eigh_flat_cached(
-    a_flat: list[float], dim: int, sweeps: int = JACOBI_SWEEPS
-) -> tuple[list[float], list[float]]:
-    """Memoized :func:`jacobi_eigh_flat` (same bits, cached by matrix
-    content). Callers must NOT mutate the returned lists."""
-    key = (dim, sweeps, tuple(a_flat))
-    out = _EIG_MEMO.get(key)
-    if out is None:
-        if len(_EIG_MEMO) > 32:  # runaway-guard: synthetic-corpus test loops
-            _EIG_MEMO.clear()
-        out = jacobi_eigh_flat(a_flat, dim, sweeps)
-        _EIG_MEMO[key] = out
-    return out
 
 
 def pin_sign(vec: list[float]) -> list[float]:

@@ -731,15 +731,15 @@ def qx242_ann_drift_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # retrained quantizer is a pure trained state of sf_dir, so it
     # rides the same session memo as the frozen artifacts (the
     # production train-once stance q56/q57 already apply)
-    from bqfetch_spark.operators.pq import _Q56_MEMO, _q56_memo_put
+    from bqfetch_spark.workcache import artifact
 
     union = initial.unionByName(wave_in).unionByName(wave_dr)
-    mkey = (app_id(spark), sf_dir, "qx242-retrain")
-    if mkey not in _Q56_MEMO:
-        _q56_memo_put(
-            mkey, sorted(km_quantized(fixed_point_kmeans(union, IVFPQ_CELLS)))
-        )
-    cq2 = _Q56_MEMO[mkey]
+    cq2 = artifact(
+        spark,
+        "qx242-retrain",
+        sf_dir,
+        lambda: sorted(km_quantized(fixed_point_kmeans(union, IVFPQ_CELLS))),
+    )
     frozen_a = km_assign(union, cq_frozen).select(
         "vec_id", F.col("cell_id").alias("c1")
     )

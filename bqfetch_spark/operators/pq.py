@@ -45,10 +45,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bqfetch_spark.catalog import load_catalog
-from bqfetch_spark.compat import app_id
 from bqfetch_spark.functions.vectors import as_double, cosine
 from bqfetch_spark.operators.relational import r6
 from bqfetch_spark.registry import register
+from bqfetch_spark.workcache import artifact
 
 PQ_M = 8  # subspaces → 8-byte codes (32× smaller than 256-byte vectors)
 PQ_K = 32  # centroids per subspace (one uint8 per subspace)
@@ -246,19 +246,16 @@ def int_train_codebooks(qsample: list) -> list:
     return books
 
 
-# per-session memos (train-once-serve-many, the q55 artifact stance):
-# the quantized frame + its bounded training sample are shared by
-# qx240 (qn-grid books) and q56 (coarse cells + residual books).
-_PQ_FRAME_MEMO: dict = {}
-_PQI_BOOKS_MEMO: dict = {}
-
-
+# per-session artifacts (train-once-serve-many, the q55 artifact
+# stance; workcache.artifact): the quantized frame + its bounded
+# training sample are shared by qx240 (qn-grid books) and q56 (coarse
+# cells + residual books).
 def pq_frame_and_sample(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
     """(localCheckpointed quantized frame, [(vec_id, qn), ...] sample)
     memoized per session — ONE checkpoint + ONE bounded collect feeds
     every integer-PQ trainer."""
-    key = (app_id(spark), sf_dir)
-    if key not in _PQ_FRAME_MEMO:
+
+    def build():
         q = pq_quantized(spark, sf_dir).localCheckpoint(eager=True)
         sample = [
             (int(r["vec_id"]), [int(x) for x in r["qn"]])
@@ -267,17 +264,15 @@ def pq_frame_and_sample(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, li
             .limit(PQ_FIT_SAMPLE)
             .collect()
         ]
-        _PQ_FRAME_MEMO[key] = (q, sample)
-    return _PQ_FRAME_MEMO[key]
+        return q, sample
+
+    return artifact(spark, "pq-frame", sf_dir, build)
 
 
 def pqi_artifacts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
     """(quantized frame, qn-grid integer codebooks), memoized."""
     q, sample = pq_frame_and_sample(spark, sf_dir)
-    key = (app_id(spark), sf_dir)
-    if key not in _PQI_BOOKS_MEMO:
-        _PQI_BOOKS_MEMO[key] = int_train_codebooks(sample)
-    return q, _PQI_BOOKS_MEMO[key]
+    return q, artifact(spark, "qx240-books", sf_dir, lambda: int_train_codebooks(sample))
 
 
 def _pqi_codes_np(mat: "np.ndarray", books_arr: "np.ndarray") -> "np.ndarray":
@@ -532,10 +527,12 @@ def qx240_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the CODE STORE is an artifact too (q57's premise): checkpoint it
     # once per session so repeat invocations serve from codes instead
     # of re-running the encode pass
-    ck = (app_id(spark), sf_dir, "qx240-codes")
-    if ck not in _PQI_BOOKS_MEMO:
-        _PQI_BOOKS_MEMO[ck] = pqi_int_codes(q, books).localCheckpoint(eager=True)
-    codes = _PQI_BOOKS_MEMO[ck]
+    codes = artifact(
+        spark,
+        "qx240-codes",
+        sf_dir,
+        lambda: pqi_int_codes(q, books).localCheckpoint(eager=True),
+    )
     queries = sorted(
         (int(r["vec_id"]), [int(x) for x in r["qn"]])
         for r in q.filter(F.col("vec_id") < 5).select("vec_id", "qn").collect()
@@ -1127,39 +1124,6 @@ SELECT wave, n_vectors, occ, jsd, retrained, n_moved FROM (
 """
 
 
-_Q56_MEMO: dict = {}
-
-
-def _unpersist_memo_value(v) -> None:
-    """Best-effort unpersist, recursing into tuple-packed artifact
-    bundles (e.g. _q56_artifacts' (q, cq_sorted, books)) so their
-    checkpointed members don't leak past eviction (ADVICE r12)."""
-    if isinstance(v, tuple):
-        for item in v:
-            _unpersist_memo_value(item)
-    elif isinstance(v, DataFrame):
-        try:
-            v.unpersist()
-        except Exception:
-            pass
-
-
-def _q56_memo_put(key, value) -> None:
-    """Bounded-memo insert (VERDICT r11 'what's wrong' #2): same
-    ``len > 32`` runaway guard as similarity's _STATS_MEMO. Eviction
-    is OLDEST-FIRST (dict insertion order), one entry per overflow —
-    not a full clear — so checkpoints that lazily back result frames
-    recently handed to callers stay alive, and evicted
-    localCheckpoint frames (including ones packed inside tuples) are
-    unpersisted so synthetic-corpus test loops can't pin checkpoint
-    disk for the session lifetime. Contract: a caller holding a
-    result frame across >32 later fixture builds must materialize it
-    first — after eviction its backing checkpoint is gone."""
-    while len(_Q56_MEMO) > 32:
-        _unpersist_memo_value(_Q56_MEMO.pop(next(iter(_Q56_MEMO))))
-    _Q56_MEMO[key] = value
-
-
 def int_residual_books(sample: list, cq_sorted: list) -> list:
     """Residual codebooks from a [(vec_id, qn)] training sample
     against quantized coarse cells [(cell_id, cq)] (cell_id-sorted):
@@ -1179,26 +1143,25 @@ def int_residual_books(sample: list, cq_sorted: list) -> list:
 
 
 def _q56_artifacts(spark: SparkSession, sf_dir: str):
-    """(frame, coarse cq list, residual books, residual-sample
-    assignment fn inputs) memoized per session."""
-    key = (app_id(spark), sf_dir)
-    if key in _Q56_MEMO:
-        return _Q56_MEMO[key]
+    """(quantized frame, coarse cq list, residual books); the trained
+    pair is memoized per session."""
     from bqfetch_spark.operators.similarity import (
         fixed_point_kmeans,
         km_quantized,
     )
 
     q, sample = pq_frame_and_sample(spark, sf_dir)
-    coarse = km_quantized(
-        fixed_point_kmeans(
-            q.select("vec_id", F.col("qn").alias("qv")), IVFPQ_CELLS
+
+    def build():
+        coarse = km_quantized(
+            fixed_point_kmeans(
+                q.select("vec_id", F.col("qn").alias("qv")), IVFPQ_CELLS
+            )
         )
-    )
-    cq_sorted = sorted(coarse)
-    books = int_residual_books(sample, cq_sorted)
-    _q56_memo_put(key, (q, cq_sorted, books))
-    return _Q56_MEMO[key]
+        cq_sorted = sorted(coarse)
+        return cq_sorted, int_residual_books(sample, cq_sorted)
+
+    return (q, *artifact(spark, "q56", sf_dir, build))
 
 
 def train_int_artifacts(initial_qn: DataFrame) -> tuple[list, list]:
@@ -1238,14 +1201,13 @@ def q57_int_artifacts(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     (Q57_TRAIN_WHERE), memoized per session — ONE training chain feeds
     q57's streaming fixture AND qx242's drift monitor (the
     shared-artifact stance: production trains once, serves many)."""
-    key = (app_id(spark), sf_dir, "q57-train")
-    if key not in _Q56_MEMO:
-        from bqfetch_spark.streaming.waves import wave_of
+    from bqfetch_spark.streaming.waves import wave_of
 
+    def build():
         q, _ = pq_frame_and_sample(spark, sf_dir)
-        initial = q.filter(wave_of("vec_id") <= 2)
-        _q56_memo_put(key, train_int_artifacts(initial))
-    return _Q56_MEMO[key]
+        return train_int_artifacts(q.filter(wave_of("vec_id") <= 2))
+
+    return artifact(spark, "q57-train", sf_dir, build)
 
 
 def ivfpq_int_encode(frame: DataFrame, cq_sorted: list, books: list) -> DataFrame:
@@ -1443,13 +1405,12 @@ def q56_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # code store as a per-session artifact (see qx240): assignment +
     # residual + encode run once, repeats serve from the checkpoint
-    ck = (app_id(spark), sf_dir, "q56-codes")
-    if ck not in _Q56_MEMO:
-        _q56_memo_put(
-            ck,
-            ivfpq_int_encode(
-                q.select("vec_id", "qn"), cq_sorted, books
-            ).localCheckpoint(eager=True),
-        )
-    codes = _Q56_MEMO[ck]
+    codes = artifact(
+        spark,
+        "q56-codes",
+        sf_dir,
+        lambda: ivfpq_int_encode(
+            q.select("vec_id", "qn"), cq_sorted, books
+        ).localCheckpoint(eager=True),
+    )
     return pqi_ivf_search(spark, codes, q, cq_sorted, books)

@@ -18,11 +18,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from bqfetch_spark.catalog import load_catalog
-from bqfetch_spark.compat import app_id
 from bqfetch_spark.functions.vectors import as_double, cosine, dot, norm2
 from bqfetch_spark.operators.relational import r6
 from bqfetch_spark.registry import register
 from bqfetch_spark.session import shuffle_partitions
+from bqfetch_spark.workcache import artifact
 
 TOPK_ORACLE = """
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -468,22 +468,19 @@ def ivf_seeded_assign(frame: DataFrame, crows: list, probe: int) -> DataFrame:
     return assign_cells(frame, *seeded_keys(crows), probe)
 
 
-# Per-session artifact memos (the frozen-index stance applied to the
-# fixture path): the trained state is a pure function of (sf_dir, k,
-# rounds) and the quantized corpus checkpoint of sf_dir — production
-# trains ONCE and serves many, so repeated registry invocations (bench
-# best-of-3, rotation sweeps, qx139→q69 chains) reuse the artifacts
-# instead of re-running the fit. Keys carry the Spark applicationId:
-# localCheckpoint blocks die with their session.
-_E_CKPT_MEMO: dict = {}
-_KM_STATE_MEMO: dict = {}
-
-
+# Per-session artifacts (the frozen-index stance applied to the
+# fixture path; workcache.artifact): the trained state is a pure
+# function of (sf_dir, k, rounds) and the quantized corpus checkpoint
+# of sf_dir — production trains ONCE and serves many, so repeated
+# registry invocations (bench best-of-3, rotation sweeps, qx139→q69
+# chains) reuse the artifacts instead of re-running the fit.
 def _ivf_quantized_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (app_id(spark), sf_dir)
-    if key not in _E_CKPT_MEMO:
-        _E_CKPT_MEMO[key] = _ivf_quantized(spark, sf_dir).localCheckpoint(eager=True)
-    return _E_CKPT_MEMO[key]
+    return artifact(
+        spark,
+        "ivf-quantized",
+        sf_dir,
+        lambda: _ivf_quantized(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def fixed_point_kmeans_cached(
@@ -492,10 +489,9 @@ def fixed_point_kmeans_cached(
     """(checkpointed quantized corpus, trained exact state) with both
     memoized per session — the deterministic fit makes the memo safe."""
     e = _ivf_quantized_ckpt(spark, sf_dir)
-    key = (app_id(spark), sf_dir, k, rounds)
-    if key not in _KM_STATE_MEMO:
-        _KM_STATE_MEMO[key] = fixed_point_kmeans(e, k, rounds)
-    return e, _KM_STATE_MEMO[key]
+    return e, artifact(
+        spark, "kmeans", (sf_dir, k, rounds), lambda: fixed_point_kmeans(e, k, rounds)
+    )
 
 
 def fixed_point_kmeans(e: DataFrame, k: int, rounds: int = KM_ROUNDS) -> list:
@@ -1663,9 +1659,6 @@ def pca_stats_phase1(emb: DataFrame) -> DataFrame:
     )
 
 
-_STATS_MEMO: dict = {}
-
-
 def _embedding_sufficient_stats(spark: SparkSession, sf_dir: str):
     """(n, per-dim sums, upper-triangle cross-moments) in ONE scan of
     the embeddings table: each row contributes the 64 + 2080-slot array
@@ -1700,30 +1693,24 @@ def _embedding_sufficient_stats(spark: SparkSession, sf_dir: str):
     stale sums; the values are plain Python ints, safe to share."""
     import os
 
-    from bqfetch_spark.catalog import _session_uuid
-
     try:
         mtime = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
     except OSError:
         mtime = None
-    key = (app_id(spark), _session_uuid(spark), sf_dir, mtime)
-    memo = _STATS_MEMO.get(key)
-    if memo is not None:
-        return memo
-    emb = load_catalog(spark, sf_dir).table("embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    phase1 = pca_stats_phase1(emb)
-    sums = phase1.groupBy("pos").agg(
-        F.sum(F.col("q1").cast("decimal(38,0)")).alias("q")
-    )
-    rows = sums.collect()  # 2144 rows — driver-side by design
-    n = emb.count()
-    sx, sxy = decode_stat_sums(rows, n)
-    if len(_STATS_MEMO) > 32:  # runaway-guard: synthetic-corpus test loops
-        _STATS_MEMO.clear()
-    _STATS_MEMO[key] = (n, sx, sxy)
-    return n, sx, sxy
+
+    def build():
+        emb = load_catalog(spark, sf_dir).table("embeddings").select(
+            "vec_id", as_double(F.col("embedding")).alias("v")
+        )
+        phase1 = pca_stats_phase1(emb)
+        sums = phase1.groupBy("pos").agg(
+            F.sum(F.col("q1").cast("decimal(38,0)")).alias("q")
+        )
+        rows = sums.collect()  # 2144 rows — driver-side by design
+        n = emb.count()
+        return (n, *decode_stat_sums(rows, n))
+
+    return artifact(spark, "pca-stats", (sf_dir, mtime), build)
 
 
 @register(
@@ -1773,13 +1760,18 @@ def decode_stat_sums(rows, n: int):
     return sx, sxy
 
 
-def _pca_eig_inputs(spark: SparkSession, sf_dir: str):
-    """(n, mu list, flat symmetric covariance) as UNROUNDED doubles in
-    the exact expression the oracle spells — verified bit-identical
-    across engines (2080/2080 covariance entries, 64/64 means at
-    sf0.01): both sides hold the same integer sums (qx192's fixed-point
-    trick), and decimal→double conversion plus the combine arithmetic
-    are correctly-rounded IEEE ops in both CPython and DuckDB."""
+def _pca_eig(spark: SparkSession, sf_dir: str):
+    """(n, mu list, eigenvalues, flat eigenvectors) of the embedding
+    covariance. Mean and covariance are UNROUNDED doubles in the exact
+    expression the oracle spells — verified bit-identical across
+    engines (2080/2080 covariance entries, 64/64 means at sf0.01): both
+    sides hold the same integer sums (qx192's fixed-point trick), and
+    decimal→double conversion plus the combine arithmetic are
+    correctly-rounded IEEE ops in both CPython and DuckDB. qx193 and
+    qx208 share one decomposition per session, keyed by the matrix
+    content, so a changed corpus never serves a stale one."""
+    from bqfetch_spark.functions.detmath import jacobi_eigh_flat
+
     n, sx, sxy = _embedding_sufficient_stats(spark, sf_dir)
     cov_flat = [0.0] * (PCA_DIM * PCA_DIM)
     for (i, j), s in sxy.items():
@@ -1787,7 +1779,10 @@ def _pca_eig_inputs(spark: SparkSession, sf_dir: str):
         cov_flat[i * PCA_DIM + j] = c
         cov_flat[j * PCA_DIM + i] = c
     mu = [sx[i] / float(n) for i in range(PCA_DIM)]
-    return n, mu, cov_flat
+    lam, vflat = artifact(
+        spark, "pca-eig", tuple(cov_flat), lambda: jacobi_eigh_flat(cov_flat, PCA_DIM)
+    )
+    return n, mu, lam, vflat
 
 
 def _pca_shared_oracle_ctes() -> str:
@@ -1891,10 +1886,9 @@ def qx193_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     (λ desc, index asc); ``+ 0.0`` folds -0.0 so both engines render
     zero identically. numpy-parity, variance-ordering, and
     orthonormality remain pytest-gated (tests/test_ann_recall.py)."""
-    from bqfetch_spark.functions.detmath import jacobi_eigh_flat_cached, top_components
+    from bqfetch_spark.functions.detmath import top_components
 
-    n, mu, cov_flat = _pca_eig_inputs(spark, sf_dir)
-    lam, vflat = jacobi_eigh_flat_cached(cov_flat, PCA_DIM)
+    n, mu, lam, vflat = _pca_eig(spark, sf_dir)
     comps = top_components(lam, vflat, PCA_DIM, PCA_K)
 
     emb = load_catalog(spark, sf_dir).table("embeddings").select(
@@ -2332,10 +2326,9 @@ def qx208_embedding_whitening(spark: SparkSession, sf_dir: str) -> DataFrame:
     natural-order Gram assembly), bit-identical between the driver and
     the oracle's WITH-RECURSIVE SQL; the whitened-covariance≈I pytest
     gate (tests/test_ann_recall.py) keeps pinning the semantics."""
-    from bqfetch_spark.functions.detmath import jacobi_eigh_flat_cached, whitening_flat
+    from bqfetch_spark.functions.detmath import whitening_flat
 
-    n, mu, cov_flat = _pca_eig_inputs(spark, sf_dir)
-    lam, vflat = jacobi_eigh_flat_cached(cov_flat, PCA_DIM)
+    n, mu, lam, vflat = _pca_eig(spark, sf_dir)
     wmat_flat = whitening_flat(lam, vflat, PCA_DIM, ZCA_EPS)
 
     emb = load_catalog(spark, sf_dir).table("embeddings").select(

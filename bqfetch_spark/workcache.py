@@ -1,20 +1,31 @@
-"""Per-session memoized scratch directories for store-building queries.
+"""Session-lifetime reuse: scratch directories and trained artifacts.
 
-Streaming-store registry queries (qx281 water-fill store, qx285 span-mask
-store, ...) materialize an on-disk store under a temp workdir and return a
-lazy DataFrame whose lineage READS that store — so the directory cannot be
-removed until the session ends (eager cleanup would break the returned
-frame).  The original convention (fresh ``tempfile.mkdtemp`` + one
-``atexit`` handler per invocation) was correct but accumulated disk and
-duplicate handlers when a long-lived session invoked the same registry
-entry repeatedly (bench reruns, rotation sweeps).
+Two halves, with different lifetimes.
 
-``session_workdir`` memoizes the BUILT directory per (tag, key): the first
-invocation creates the dir, runs the build, and registers exactly one
-cleanup; every later invocation with the same key returns the already-built
-store — no disk growth, no duplicate handlers, and the (expensive) ingest
-replay is skipped entirely.  A failed build is rolled back and NOT cached,
-so a transient error does not poison the session.
+**Scratch directories.** Streaming-store registry queries (qx281
+water-fill store, qx285 span-mask store, ...) materialize an on-disk
+store under a temp workdir and return a lazy DataFrame whose lineage
+READS that store — so the directory cannot be removed until the session
+ends (eager cleanup would break the returned frame).
+``session_workdir`` memoizes the BUILT directory per (tag, key): the
+first invocation creates the dir, runs the build, and registers exactly
+one cleanup; every later invocation with the same key returns the
+already-built store. ``overwrite_workdir`` keeps one stable dir per
+(tag, key) and clears it on every call. Neither is ever evicted, since
+lazy frames still read them; ``release`` drops one eagerly.
+
+**Trained artifacts.** ``artifact`` is the one bounded store for what
+the ANN/PCA families train once and serve many times in a session:
+quantized corpus checkpoints, k-means state, PQ codebooks and code
+stores, embedding sufficient statistics, eigendecompositions. Entries
+are keyed by (app id, session uuid, tag, key) — ``compat.session_key``
+— so a ``spark.newSession()`` sibling never receives another session's
+checkpoints. At most ``ARTIFACT_SLOTS`` entries are kept; the least
+recently used one is evicted and unpersisted, DataFrames packed inside
+tuples included. ``LOOKUPS`` counts hits and misses per tag.
+
+In both halves a build that raises is rolled back and NOT cached, so a
+transient error does not poison the session.
 """
 
 from __future__ import annotations
@@ -23,7 +34,14 @@ import atexit
 import os
 import shutil
 import tempfile
-from typing import Callable
+from collections import Counter, OrderedDict
+from typing import Callable, Hashable, TypeVar
+
+from pyspark.sql import DataFrame, SparkSession
+
+from bqfetch_spark.compat import session_key
+
+T = TypeVar("T")
 
 _BUILT: dict[tuple[str, str], str] = {}
 _OWNED: dict[tuple[str, str], str] = {}
@@ -95,11 +113,41 @@ def release(tag: str, key: str) -> bool:
     return True
 
 
-def release_all(tag: str | None = None) -> int:
-    """Release every cached store — memoized (_BUILT) and stable
-    overwrite (_OWNED) — or every store under one ``tag``; returns the
-    count removed.  Same caller contract as ``release``."""
-    picked = [
-        k for d in (_BUILT, _OWNED) for k in d if tag is None or k[0] == tag
-    ]
-    return sum(release(*k) for k in picked)
+# Room for every artifact family at several fixture scales in one
+# session (one scale fills 12 entries), small enough that loops over
+# synthetic corpora cannot pin checkpoint blocks for the session.
+ARTIFACT_SLOTS = 64
+_ARTIFACT_MEMO: OrderedDict[tuple, object] = OrderedDict()
+# (tag, "hit" | "miss") -> count, for this process
+LOOKUPS: Counter[tuple[str, str]] = Counter()
+
+
+def _unpersist(value) -> None:
+    if isinstance(value, tuple):
+        for item in value:
+            _unpersist(item)
+    elif isinstance(value, DataFrame):
+        try:
+            value.unpersist()
+        except Exception:
+            pass
+
+
+def artifact(spark: SparkSession, tag: str, key: Hashable, build: Callable[[], T]) -> T:
+    """``build()``'s value, built once per (session, tag, key) and then
+    served from the store. ``key`` must capture every input the build
+    depends on (typically the sf_dir), and callers must not mutate the
+    value. A frame handed out earlier may lose its backing checkpoint
+    once its entry is evicted: materialize it before ``ARTIFACT_SLOTS``
+    further artifacts are built."""
+    memo = (*session_key(spark), tag, key)
+    if memo in _ARTIFACT_MEMO:
+        LOOKUPS[tag, "hit"] += 1
+        _ARTIFACT_MEMO.move_to_end(memo)
+        return _ARTIFACT_MEMO[memo]
+    LOOKUPS[tag, "miss"] += 1
+    value = build()
+    _ARTIFACT_MEMO[memo] = value
+    while len(_ARTIFACT_MEMO) > ARTIFACT_SLOTS:
+        _unpersist(_ARTIFACT_MEMO.popitem(last=False)[1])
+    return value

@@ -101,7 +101,10 @@ def test_session_uuid_fallback_is_stable_and_gc_safe(spark):
     DataFrames point at a dead session. The fallback stamps a uuid4 on
     first touch: stable across calls on the SAME proxy, distinct on a
     NEW proxy even if it lands at a recycled address."""
-    from bqfetch_spark.catalog import _session_uuid
+    from bqfetch_spark.compat import session_key
+
+    def _session_uuid(s):
+        return session_key(s)[1]
 
     real = _session_uuid(spark)
     assert real == str(spark._jsparkSession.sessionUUID())

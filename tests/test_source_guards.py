@@ -1,8 +1,9 @@
 """Source-level guards on where the engine touches its surroundings:
 deployment settings come from the environment in session.py alone, and
-the Spark application identity is read through compat.py alone (Spark
-Connect has no sparkContext), word n-grams are built by one kernel, and
-no read runs a schema-inference job only to learn a schema."""
+the Spark application and session identity are read through compat.py
+alone (Spark Connect has no sparkContext), word n-grams are built by one
+kernel, no read runs a schema-inference job only to learn a schema, and
+cross-call memos live in the one artifact store."""
 
 from __future__ import annotations
 
@@ -21,6 +22,7 @@ def test_environment_and_app_id_reads_live_in_one_module_each():
     for needles, home in (
         (("os.environ", "os.getenv"), "session.py"),
         (("sparkContext.applicationId",), "compat.py"),
+        (("sessionUUID",), "compat.py"),
     ):
         hits = [n for n, text in sources.items() if any(x in text for x in needles)]
         if sorted(hits) != [home]:
@@ -60,3 +62,19 @@ def test_no_schema_only_parquet_reads():
         for p in root.rglob("*.py")
     }
     assert {k: n for k, n in hits.items() if n} == {"streaming/waves.py": 1}
+
+
+def test_module_level_memos_live_in_workcache():
+    """A module-level dict named ``*_MEMO`` is a hand-rolled cross-call
+    memo: its key, bound and eviction rule belong to
+    ``workcache.artifact``, so only workcache.py may define one."""
+    import re
+
+    root = Path(bqfetch_spark.__file__).parent
+    memo = re.compile(r"^_?[A-Z0-9_]*_MEMO\b\s*(?::[^=\n]*)?=", re.MULTILINE)
+    hits = sorted(
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if memo.search(p.read_text(encoding="utf-8"))
+    )
+    assert hits == ["workcache.py"]
