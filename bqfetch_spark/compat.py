@@ -22,6 +22,14 @@ fallback instead of an AttributeError:
   ``PythonRDD.toLocalIteratorAndServe``, read over a socket this module
   owns and closes) and falls back to a ``mapInArrow``
   IPC re-encode plus ``toLocalIterator`` when those are unreachable.
+  ``arrow_partitions`` builds a frame's Arrow batch RDD once and serves
+  any one partition of it on request (``PythonRDD.runJob``); it returns
+  ``None`` under Connect.
+- Driver pulls of small results (``collect_rows``) read
+  ``collectToPython``'s stream over a socket this module closes;
+  pyspark's own ``collect()`` leaves it to garbage collection.
+- Cache release (``unpersist``) also frees a checkpointed frame's
+  blocks, which ``DataFrame.unpersist`` leaves in place.
 - Parquet footer schemas (``parquet_schema_reader`` /
   ``parquet_file_schema``) read one file's footer on the driver and
   convert it with Spark's own ``ParquetToSparkSchemaConverter`` under
@@ -239,15 +247,11 @@ def _jvm_arrow_frames(df: DataFrame):
     """(frame iterator, Arrow schema) for the classic route; raises on
     any missing internal. The socket is connected here, so setup errors
     surface before the first frame."""
-    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.traceback_utils import SCCallSiteSync
     from pyspark.util import local_connect_and_auth
 
-    spark = df.sparkSession
-    schema = to_arrow_schema(
-        df.schema, prefers_large_types=spark._jconf.arrowUseLargeVarTypes()
-    )
-    sc = spark.sparkContext
+    schema = _arrow_schema(df)
+    sc = df.sparkSession.sparkContext
     with SCCallSiteSync(sc):
         port, secret, server = sc._jvm.PythonRDD.toLocalIteratorAndServe(
             df._jdf.toArrowBatchRdd(), True
@@ -256,6 +260,104 @@ def _jvm_arrow_frames(df: DataFrame):
     # partitions take unpredictable time to compute: no read timeout
     sock.settimeout(None)
     return _served_frames(sockfile, sock, server), schema
+
+
+def _arrow_schema(df: DataFrame) -> "pa.Schema":
+    """The Arrow schema ``toArrow()`` casts ``df``'s batches to."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(
+        df.schema, prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes()
+    )
+
+
+def arrow_partitions(
+    df: DataFrame,
+) -> tuple["pa.Schema", int, Callable[[int], Iterator["pa.RecordBatch"]]] | None:
+    """``df``'s Arrow batch RDD, built once, with a reader that serves
+    any one of its partitions: ``(schema, partition count, read)``,
+    where ``read(i)`` yields partition ``i``'s record batches (none for
+    an empty one). ``None`` when the classic route is closed (Connect).
+
+    Building runs the plan's shuffle map stages (an adaptive plan
+    materializes them in ``toArrowBatchRdd``), so every later ``read``
+    is one job over one partition's shuffle blocks. ``read`` collects
+    its partition into the driver JVM (``PythonRDD.runJob``), then
+    serves it over a socket this module closes. The shuffle lives as
+    long as the returned reader does."""
+    if not is_classic(df):
+        return None
+    import pyarrow as pa
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.traceback_utils import SCCallSiteSync
+
+    schema = _arrow_schema(df)
+    sc = df.sparkSession.sparkContext
+    with SCCallSiteSync(sc):
+        jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
+
+    def read(index: int) -> Iterator[pa.RecordBatch]:
+        with SCCallSiteSync(sc):
+            sock_info = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, [index])
+        for frame in _served_stream(sock_info, NoOpSerializer()):
+            yield pa.ipc.read_record_batch(pa.py_buffer(frame), schema)
+
+    return schema, jrdd.getNumPartitions(), read
+
+
+def collect_rows(df: DataFrame) -> list:
+    """``df.collect()``: every row of a small result as a ``Row``.
+    Classic route: ``collectToPython`` runs the job, then its stream is
+    read over a socket this module closes (pyspark's ``collect()``
+    leaves that socket to garbage collection). Fallback (Connect): the
+    public ``collect()``."""
+    if not is_classic(df):
+        return df.collect()
+    from pyspark.serializers import BatchedSerializer, CPickleSerializer
+    from pyspark.traceback_utils import SCCallSiteSync
+
+    with SCCallSiteSync(df.sparkSession.sparkContext):
+        sock_info = df._jdf.collectToPython()
+    return list(_served_stream(sock_info, BatchedSerializer(CPickleSerializer())))
+
+
+def unpersist(df: DataFrame) -> None:
+    """Release ``df``'s cached blocks. For a checkpointed frame
+    (``localCheckpoint``) that includes the checkpointed RDD, which
+    ``DataFrame.unpersist()`` leaves persisted because the cache manager
+    it clears never held it. The frame cannot be read afterwards."""
+    df.unpersist()
+    try:
+        plan = df._jdf.logicalPlan()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+    except Exception:  # Connect, or not a checkpoint
+        pass
+
+
+def _served_stream(sock_info, serializer) -> Iterator:
+    """What the JVM serves at ``sock_info`` (``PythonRDD.serveIterator``:
+    port and secret first), loaded with ``serializer``. The socket is
+    closed on exhaustion, error or early close; an early close first
+    drains the rest, so the serving thread ends cleanly."""
+    from pyspark.util import local_connect_and_auth
+
+    sockfile, sock = local_connect_and_auth(sock_info[0], sock_info[1])
+    # the served data may take unpredictable time to come: no read timeout
+    sock.settimeout(None)
+    items = serializer.load_stream(sockfile)
+    try:
+        for item in items:  # ``yield from`` would close ``items`` before the drain
+            yield item
+    finally:
+        try:
+            for _ in items:  # nothing left unless closed early
+                pass
+        except Exception:  # the server may already be gone
+            pass
+        finally:
+            sockfile.close()
+            sock.close()
 
 
 def _served_frames(sockfile, sock, server):

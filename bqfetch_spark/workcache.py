@@ -22,7 +22,8 @@ are keyed by (app id, session uuid, tag, key) — ``compat.session_key``
 — so a ``spark.newSession()`` sibling never receives another session's
 checkpoints. At most ``ARTIFACT_SLOTS`` entries are kept; the least
 recently used one is evicted and unpersisted, DataFrames packed inside
-tuples included. ``LOOKUPS`` counts hits and misses per tag.
+tuples included; a checkpointed frame's blocks are freed too
+(``compat.unpersist``). ``LOOKUPS`` counts hits and misses per tag.
 
 In both halves a build that raises is rolled back and NOT cached, so a
 transient error does not poison the session.
@@ -39,7 +40,7 @@ from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bqfetch_spark.compat import session_key
+from bqfetch_spark.compat import session_key, unpersist
 
 T = TypeVar("T")
 
@@ -128,7 +129,7 @@ def _unpersist(value) -> None:
             _unpersist(item)
     elif isinstance(value, DataFrame):
         try:
-            value.unpersist()
+            unpersist(value)
         except Exception:
             pass
 

@@ -52,13 +52,9 @@ def test_chunks_more_than_values_degrades(spark, fetcher):
     assert sum(fetcher.fetch(ref, c).count() for c in chunks) == 150
 
 
-@pytest.mark.parametrize("by_values", [False, True])
-def test_chunks_cover_null_domain_values(spark, fetcher, tmp_path, by_values):
-    """A nullable chunk column must still satisfy union(chunks) ==
-    table: BETWEEN and IN both reject NULL and collect_list drops it,
-    so the planner flags whichever bucket the NULL value sorted into
-    and that chunk's predicate gains an IS NULL disjunct (round-4
-    advice: NULL rows were silently lost from every chunk)."""
+def _nulled_customer(fetcher, tmp_path) -> TableRef:
+    """customer with every tenth ``c_nationkey`` set to NULL, in a
+    fixture directory of its own."""
     import os
 
     # the catalog loads every fixture table for a directory: symlink the
@@ -72,7 +68,17 @@ def test_chunks_cover_null_domain_values(spark, fetcher, tmp_path, by_values):
         F.when(F.col("c_custkey") % 10 == 0, F.lit(None)).otherwise(F.col("c_nationkey")),
     )
     nulled.write.parquet(str(tmp_path / "customer.parquet"))
-    ref = TableRef(str(tmp_path), "customer")
+    return TableRef(str(tmp_path), "customer")
+
+
+@pytest.mark.parametrize("by_values", [False, True])
+def test_chunks_cover_null_domain_values(spark, fetcher, tmp_path, by_values):
+    """A nullable chunk column must still satisfy union(chunks) ==
+    table: BETWEEN and IN both reject NULL and collect_list drops it,
+    so the planner flags whichever bucket the NULL value sorted into
+    and that chunk's predicate gains an IS NULL disjunct (round-4
+    advice: NULL rows were silently lost from every chunk)."""
+    ref = _nulled_customer(fetcher, tmp_path)
     tbl = fetcher.table(ref)
     n_rows = tbl.count()
     n_null_rows = tbl.filter(F.col("c_nationkey").isNull()).count()
@@ -292,6 +298,164 @@ def test_value_list_chunks_typed_predicates(spark, fetcher):
             fetcher.table(ref).filter(F.col(column).isin(*chunk.elements)).count()
         )
         assert got.count() == expected
+
+
+@pytest.fixture
+def spark_conf(spark):
+    """Set session confs for one test, restoring them afterwards."""
+    saved = {}
+
+    def set_conf(key, value):
+        saved.setdefault(key, spark.conf.get(key, None))
+        spark.conf.set(key, value)
+
+    yield set_conf
+    for key, value in saved.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+
+def _assert_served_like_fetch(fetcher, ref, chunks):
+    """Each chunk's ``iter_batches`` and ``fetch_to_pandas`` hold the
+    rows ``fetch`` selects, as a multiset, with ``toArrow``'s schema."""
+    import pyarrow as pa
+
+    for chunk in chunks:
+        expected = fetcher.fetch(ref, chunk).toArrow()
+        got = pa.Table.from_batches(
+            list(fetcher.iter_batches(ref, chunk, batch_rows=64)), schema=expected.schema
+        )
+        assert _rows(got) == _rows(expected), chunk
+        pdf, want = fetcher.fetch_to_pandas(ref, chunk), expected.to_pandas()
+        assert list(pdf.dtypes) == list(want.dtypes)
+        assert _records(pdf) == _records(want), chunk
+
+
+def _records(pdf):
+    from collections import Counter
+
+    return Counter(repr(r) for r in pdf.itertuples(index=False))
+
+
+def _stream_table(fetcher, ref, chunk):
+    """``iter_batches(ref, chunk)`` gathered into one Arrow table."""
+    import pyarrow as pa
+
+    schema = fetcher.fetch(ref, chunk).toArrow().schema
+    return pa.Table.from_batches(list(fetcher.iter_batches(ref, chunk)), schema=schema)
+
+
+@pytest.mark.parametrize("split_bytes", [None, "512"])
+def test_value_list_layout_serves_what_fetch_selects(
+    spark, fetcher, spark_conf, tmp_path, split_bytes
+):
+    """A value-list plan's chunks are served from one shuffle of the
+    table by chunk id, and each holds exactly what its filter selects:
+    the NULL-owning chunk its NULL rows, a chunk derived from a planned
+    one (here emptied) its own filter's rows, and all chunks together
+    the table. With small scan splits every chunk spans several
+    sub-partitions."""
+    import dataclasses
+
+    import pyarrow as pa
+
+    if split_bytes:
+        spark_conf("spark.sql.files.maxPartitionBytes", split_bytes)
+        spark_conf("spark.sql.files.openCostInBytes", "0")
+    ref = _nulled_customer(fetcher, tmp_path)
+    chunks = fetcher.chunks(ref, "c_nationkey", by_nb_chunks=4, by_values=True)
+    null_chunk = next(c for c in chunks if c.includes_null)
+    emptied = dataclasses.replace(null_chunk, elements=(), includes_null=False)
+    _assert_served_like_fetch(fetcher, ref, [*chunks, emptied])
+    layout = chunks[0].layout
+    s = layout.partitions // (len(chunks) + 1)
+    assert layout.partitions == (len(chunks) + 1) * s
+    assert (s > 1) == bool(split_bytes)
+    assert list(fetcher.iter_batches(ref, emptied)) == []
+    assert fetcher.fetch(ref, null_chunk).filter(F.col("c_nationkey").isNull()).count() > 0
+
+    served = pa.concat_tables(_stream_table(fetcher, ref, c) for c in chunks)
+    assert _rows(served) == _rows(fetcher.table(ref).toArrow())
+
+
+def _jobs_and_tasks(spark, group, fn):
+    """fn()'s result, and the jobs and completed tasks it ran in a job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    tasks = sum(info.numCompletedTasks for info in map(tracker.getStageInfo, stages) if info)
+    return out, len(jobs), tasks
+
+
+def test_layout_second_delivery_is_one_job_one_task(spark, fetcher):
+    """The first delivery of a value-list plan shuffles the table once;
+    every later chunk is one job of one task over its own partition."""
+    ref = TableRef(SF_SMOKE, "lineitem")
+    chunks = fetcher.chunks(ref, "l_suppkey", by_nb_chunks=3, by_values=True)
+    first = sum(b.num_rows for b in fetcher.iter_batches(ref, chunks[0]))
+    assert first == fetcher.fetch(ref, chunks[0]).count()
+    rows, jobs, tasks = _jobs_and_tasks(
+        spark,
+        "test-layout-second-delivery",
+        lambda: sum(b.num_rows for b in fetcher.iter_batches(ref, chunks[1])),
+    )
+    assert rows == fetcher.fetch(ref, chunks[1]).count()
+    assert (jobs, tasks) == (1, 1)
+    pdf, jobs, tasks = _jobs_and_tasks(
+        spark, "test-layout-pandas-delivery", lambda: fetcher.fetch_to_pandas(ref, chunks[2])
+    )
+    assert len(pdf) == fetcher.fetch(ref, chunks[2]).count()
+    assert (jobs, tasks) == (1, 1)
+
+
+@pytest.mark.parametrize("advisory", ["1", "1g"])
+def test_layout_partitions_survive_aqe_coalescing(spark, fetcher, spark_conf, advisory):
+    """Adaptive execution neither merges nor splits the layout's
+    shuffle: it keeps one partition per chunk plus the spare one, and
+    every chunk is still served exactly."""
+    spark_conf("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
+    ref = TableRef(SF_SMOKE, "lineitem")
+    chunks = fetcher.chunks(ref, "l_suppkey", by_nb_chunks=4, by_values=True)
+    _assert_served_like_fetch(fetcher, ref, chunks)
+    assert chunks[0].layout.partitions == len(chunks) + 1
+
+
+def test_thousand_chunk_plan_is_served(spark, fetcher):
+    """A 1,000-chunk plan lays out 1,001 partitions and serves its
+    chunks exactly; the first and last chunks and a spread between
+    them are checked against their filters."""
+    ref = TableRef(SF_SMOKE, "orders")
+    chunks = fetcher.chunks(ref, "o_orderkey", by_nb_chunks=1000, by_values=True)
+    assert len(chunks) == 1000
+    _assert_served_like_fetch(fetcher, ref, chunks[::111] + chunks[-1:])
+    assert chunks[0].layout.partitions == 1001
+
+
+def test_layout_falls_back_to_filters_without_classic_internals(spark, fetcher, monkeypatch):
+    """Without the classic internals (Connect's shape) a value-list
+    plan is planned and read through the public API: the chunks hold
+    the same rows as on the classic route."""
+    from bqfetch_spark import compat
+
+    ref = TableRef(SF_SMOKE, "customer")
+    classic = fetcher.chunks(ref, "c_nationkey", by_nb_chunks=3, by_values=True)
+    served = [_rows(_stream_table(fetcher, ref, c)) for c in classic]
+    monkeypatch.setattr(compat, "is_classic", lambda _obj: False)
+    fallback = fetcher.chunks(ref, "c_nationkey", by_nb_chunks=3, by_values=True)
+    assert fallback == classic
+    assert [_rows(_stream_table(fetcher, ref, c)) for c in fallback] == served
+    assert fallback[0].layout.partitions is None  # nothing was shuffled
+    pdfs = [fetcher.fetch_to_pandas(ref, c) for c in fallback]
+    assert sum(map(len, pdfs)) == fetcher.table(ref).count()
 
 
 def test_value_list_chunks_domain_cap(spark, fetcher):

@@ -2,8 +2,9 @@
 deployment settings come from the environment in session.py alone, and
 the Spark application and session identity are read through compat.py
 alone (Spark Connect has no sparkContext), word n-grams are built by one
-kernel, no read runs a schema-inference job only to learn a schema, and
-cross-call memos live in the one artifact store."""
+kernel, no read runs a schema-inference job only to learn a schema,
+cross-call memos live in the one artifact store, and the fetcher pulls
+rows to the driver only through compat.py."""
 
 from __future__ import annotations
 
@@ -78,3 +79,29 @@ def test_module_level_memos_live_in_workcache():
         if memo.search(p.read_text(encoding="utf-8"))
     )
     assert hits == ["workcache.py"]
+
+
+def test_fetcher_pulls_rows_through_compat():
+    """fetcher.py pulls results to the driver through compat.py, whose
+    pulls close their sockets: no direct ``.collect()``, ``.first()``,
+    ``.toPandas()`` or ``.toArrow()``, except the one ``toArrow()`` that
+    reads a range-plan chunk in ``fetch_to_pandas``."""
+    import ast
+
+    path = Path(bqfetch_spark.__file__).parent / "fetcher.py"
+    tree = ast.parse(path.read_text(encoding="utf-8"))
+    funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+
+    def scope(line):
+        """The name of the innermost function around ``line``."""
+        around = [f for f in funcs if f.lineno <= line <= f.end_lineno]
+        return min(around, key=lambda f: f.end_lineno - f.lineno).name if around else None
+
+    hits = [
+        (scope(node.lineno), node.func.attr)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("collect", "first", "toPandas", "toArrow")
+    ]
+    assert hits == [("fetch_to_pandas", "toArrow")]

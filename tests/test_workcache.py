@@ -162,6 +162,22 @@ def test_evicted_packed_checkpoint_is_unpersisted(spark, store):
     assert released["n"] == 1
 
 
+def test_evicted_checkpoint_frees_its_blocks(spark, store):
+    """Evicting a checkpointed frame releases its checkpointed RDD, which
+    ``DataFrame.unpersist()`` alone leaves persisted."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    ckpt = store.artifact(
+        spark, "t_free", "frame", lambda: spark.range(100).localCheckpoint(eager=True)
+    )
+    rdd_id = ckpt._jdf.logicalPlan().rdd().id()
+    assert rdd_id in persisted()
+    held = persisted().size()
+    for i in range(store.ARTIFACT_SLOTS):
+        store.artifact(spark, "t_free", i, lambda: i)
+    assert rdd_id not in persisted()
+    assert persisted().size() < held
+
+
 def test_failed_artifact_build_is_not_cached(spark, store):
     calls = {"n": 0}
 
