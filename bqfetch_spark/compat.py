@@ -25,9 +25,11 @@ fallback instead of an AttributeError:
   ``arrow_partitions`` builds a frame's Arrow batch RDD once and serves
   any one partition of it on request (``PythonRDD.runJob``); it returns
   ``None`` under Connect.
-- Driver pulls of small results (``collect_rows``) read
-  ``collectToPython``'s stream over a socket this module closes;
-  pyspark's own ``collect()`` leaves it to garbage collection.
+- Driver pulls (``collect_rows`` for small results, ``collect_arrow``
+  for a whole result as one Arrow table) read ``collectToPython``'s or
+  ``collectAsArrowToPython``'s stream over a socket this module closes;
+  pyspark's own ``collect()`` and ``toArrow()`` leave it to garbage
+  collection.
 - Cache release (``unpersist``) also frees a checkpointed frame's
   blocks, which ``DataFrame.unpersist`` leaves in place.
 - Parquet footer schemas (``parquet_schema_reader`` /
@@ -319,6 +321,33 @@ def collect_rows(df: DataFrame) -> list:
     with SCCallSiteSync(df.sparkSession.sparkContext):
         sock_info = df._jdf.collectToPython()
     return list(_served_stream(sock_info, BatchedSerializer(CPickleSerializer())))
+
+
+def collect_arrow(df: DataFrame) -> "pa.Table":
+    """``df.toArrow()``: the whole result as one Arrow table with the
+    schema ``toArrow()`` gives. Classic route: ``collectAsArrowToPython``
+    runs the job and serves the batches, then their order; the stream is
+    read over a socket this module closes (pyspark's ``toArrow()``
+    leaves that socket to garbage collection). Fallback (Connect): the
+    public ``toArrow()``."""
+    if not is_classic(df):
+        return df.toArrow()
+    import pyarrow as pa
+    from pyspark.errors.exceptions.captured import unwrap_spark_exception
+    from pyspark.sql.pandas.serializers import ArrowCollectSerializer
+    from pyspark.traceback_utils import SCCallSiteSync
+
+    schema = _arrow_schema(df)
+    with SCCallSiteSync(df.sparkSession.sparkContext):
+        port, secret, server = df._jdf.collectAsArrowToPython()
+    try:
+        *batches, order = _served_stream((port, secret), ArrowCollectSerializer())
+    finally:
+        with unwrap_spark_exception():
+            server.getResult()  # joins the serving thread, raises its error
+    if not batches:
+        return schema.empty_table()
+    return pa.Table.from_batches([batches[i] for i in order]).cast(schema)
 
 
 def unpersist(df: DataFrame) -> None:

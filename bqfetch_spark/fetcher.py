@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
 from bqfetch_spark.catalog import load_catalog
-from bqfetch_spark.compat import arrow_batches, arrow_partitions, collect_rows
+from bqfetch_spark.compat import arrow_batches, arrow_partitions, collect_arrow, collect_rows
 from bqfetch_spark.registry import register
 
 if TYPE_CHECKING:
@@ -605,16 +605,17 @@ class Fetcher:
     def fetch_to_pandas(self, ref: TableRef, chunk: FetchingChunk | None):
         """Materialize a chunk as pandas via Arrow (the reference's
         result contract: Arrow batches → pandas, bqfetch/bqfetch.py:
-        501-502). Goes through toArrow().to_pandas() directly — the
-        pyspark toPandas() wrapper adds ~5× conversion overhead on
-        timestamp/string columns (measured 11 s vs 2.7 s on 600k rows).
-        A value-list plan's chunk is read from its plan's layout, as in
-        ``iter_batches``, and needs no ``toArrow()``.
+        501-502). Goes through one Arrow collect and ``to_pandas()``
+        directly (``compat.collect_arrow``, the ``toArrow()`` call over a
+        socket it closes) — the pyspark toPandas() wrapper adds ~5×
+        conversion overhead on timestamp/string columns (measured 11 s
+        vs 2.7 s on 600k rows). A value-list plan's chunk is read from
+        its plan's layout, as in ``iter_batches``, and needs no collect.
         Timing/log parity with bqfetch verbose mode (:331,365-371)."""
         t0 = time.time()
         served = self._served(ref, chunk)
         if served is None:
-            tbl = self.fetch(ref, chunk).toArrow()
+            tbl = collect_arrow(self.fetch(ref, chunk))
         else:
             import pyarrow as pa
 
@@ -646,7 +647,7 @@ class Fetcher:
         partitions' frames plus ``batch_rows`` pending rows however large
         the chunk is. On classic PySpark the batches carry the schema
         ``toArrow()`` gives. For a chunk that fits in driver memory,
-        ``fetch_to_pandas`` is the faster single-``toArrow`` path; this
+        ``fetch_to_pandas`` is the faster single-collect path; this
         is the 100 TB-safe spout.
 
         A chunk of a value-list plan is served from its plan's layout

@@ -26,14 +26,6 @@ from pyspark.sql import functions as F
 from bqfetch_spark.catalog import load_catalog
 from bqfetch_spark.registry import register
 
-MEDIA_SCHEMA = (
-    "doc_id bigint, payload binary, kind string, width int, height int, duration_ms int"
-)
-
-FEATURE_SCHEMA = (
-    "doc_id bigint, kind string, byte_len bigint, checksum string, feat_mean double"
-)
-
 
 def attach_fake_payload(docs: DataFrame) -> DataFrame:
     """Derive a deterministic binary payload + metadata from documents
@@ -134,31 +126,6 @@ def encode_wav(sample_rate: int, channels: int, n_samples: int) -> bytes:
         + struct.pack("<4sI", b"data", data)
         + b"\x00" * data
     )
-
-
-def extract_features(media: DataFrame, batch_size: int = 512) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads via
-    mapInPandas: byte length, md5 checksum, and a deterministic fake
-    'embedding mean' standing in for the decoded-feature statistic."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "kind": pdf["kind"],
-                    "byte_len": payloads.map(len).astype("int64"),
-                    "checksum": payloads.map(lambda b: hashlib.md5(bytes(b)).hexdigest()),
-                    "feat_mean": payloads.map(
-                        lambda b: (sum(b[:64]) / min(len(b), 64)) if len(b) else 0.0
-                    ),
-                }
-            )
-
-    return media.mapInPandas(_extract, FEATURE_SCHEMA)
 
 
 MEDIA_META_ORACLE = """

@@ -713,7 +713,7 @@ def qx230_content_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Versioned parquet table: snapshot manifests + time travel + vacuum
+# Versioned parquet table: snapshot manifests + time travel
 # ---------------------------------------------------------------------------
 #
 # The environment blocks delta-spark (no pip), so the table-format leg
@@ -724,9 +724,7 @@ def qx230_content_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # directory; they read the manifest and open precisely those files, so
 #   - time travel = read an old manifest (the files still exist),
 #   - commits are atomic = the manifest appears via temp-file+rename,
-#   - concurrent writers conflict on the manifest name, not on data,
-#   - vacuum = drop expired manifests, then delete any data file no
-#     surviving manifest references.
+#   - concurrent writers conflict on the manifest name, not on data.
 # At 100 TB the manifest is O(n_files) paths — the same scaling as
 # Iceberg's manifest lists — and a snapshot read costs zero directory
 # listings (reference cite: bqfetch/bqfetch.py:457-502 reads managed
@@ -761,7 +759,7 @@ def _read_manifest(table_dir: str, version: int) -> dict:
     if not os.path.exists(path):
         raise KeyError(
             f"snapshot v{version} does not exist in {table_dir} "
-            f"(latest = v{table_version(table_dir)}; vacuumed manifests are gone)"
+            f"(latest = v{table_version(table_dir)})"
         )
     with open(path) as fh:
         return json.load(fh)
@@ -778,7 +776,7 @@ def commit_snapshot(
     The data files land under data/commit-<version>/ (immutable — a
     commit never touches another commit's files); the manifest is
     written temp-file+os.replace, so a crashed commit leaves orphaned
-    data files (vacuum collects them) but never a half-visible
+    data files no manifest references, but never a half-visible
     snapshot. A concurrent committer racing to the same version loses
     on the atomic manifest link (os.link raises EEXIST — the kernel,
     not a check-then-act exists() probe, arbitrates the race) —
@@ -838,41 +836,6 @@ def read_snapshot(spark: SparkSession, table_dir: str, version: int | None = Non
     if not paths:
         raise KeyError(f"snapshot v{version} is empty in {table_dir}")
     return spark.read.parquet(*paths)
-
-
-def vacuum_snapshots(table_dir: str, keep_last: int) -> dict:
-    """Retention: keep only the most recent ``keep_last`` manifests,
-    delete every data file no surviving manifest references (plus
-    crash-orphaned files no manifest ever referenced). Returns
-    {'manifests_removed': n, 'files_removed': n} for audit logs.
-    Time travel beyond the horizon then raises KeyError — the Delta
-    VACUUM contract."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    mdir = os.path.join(table_dir, TT_MANIFESTS)
-    versions = sorted(
-        int(f[1:-5])
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
-    drop, keep = versions[:-keep_last], versions[-keep_last:]
-    kept_files = set()
-    for v in keep:
-        kept_files.update(_read_manifest(table_dir, v)["files"])
-    for v in drop:
-        os.remove(_manifest_path(table_dir, v))
-    removed_files = 0
-    data_root = os.path.join(table_dir, TT_DATA)
-    for commit_name in sorted(os.listdir(data_root)):
-        cdir = os.path.join(data_root, commit_name)
-        for f in sorted(os.listdir(cdir)):
-            rel = os.path.join(TT_DATA, commit_name, f)
-            if f.endswith(".parquet") and rel not in kept_files:
-                os.remove(os.path.join(cdir, f))
-                removed_files += 1
-        if not os.listdir(cdir):
-            os.rmdir(cdir)
-    return {"manifests_removed": len(drop), "files_removed": removed_files}
 
 
 def _timetravel_store_dir(sf_dir: str) -> str:
@@ -1168,8 +1131,7 @@ def qx255_optimize_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     debris problem moved into the table format) are rewritten as ONE
     bin-packed commit. Because compaction is itself a commit, the
     pre-compaction snapshot stays readable — maintenance never
-    destroys history; vacuum later reclaims the small files once the
-    retention horizon passes. Output: v3 (pre) and v4 (post,
+    destroys history. Output: v3 (pre) and v4 (post,
     compacted) read back AS OF and fingerprinted; the oracle derives
     both from the source table and they must be IDENTICAL content —
     the q39 content-identity contract, now version-aware. The

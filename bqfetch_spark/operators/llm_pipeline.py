@@ -13,8 +13,6 @@ Scale stance (100 TB of documents):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -410,9 +408,8 @@ def q46_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 MINHASH_K = 16  # signature width
 LSH_BANDS = 4  # 4 bands × 4 rows: catches J≈0.6+ pairs w.h.p.
 MH_P = 2147483647  # Mersenne prime 2^31-1: a*h+b stays in BIGINT
-MH_K = MINHASH_K  # aliases used by the qx264 exact-verify sibling
 MH_R = MINHASH_K // LSH_BANDS  # rows per band
-MH_B = LSH_BANDS
+MH_B = LSH_BANDS  # alias used by the qx264 exact-verify sibling
 MH_SHINGLE = 3  # word-gram width
 
 
@@ -2466,7 +2463,7 @@ def qx259_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame
 # qx264: cross-engine-exact MinHash-LSH (the oracle-bearing LSH sibling)
 # ---------------------------------------------------------------------------
 
-# MH_P / MH_K / MH_R / MH_B / MH_SHINGLE and _mh_coefs live in the q47
+# MH_P / MH_R / MH_B / MH_SHINGLE and _mh_coefs live in the q47
 # section since round 10 — q47 and this exact-verify sibling share the
 # identical signature machinery (q47 estimates Jaccard from signature
 # agreement; qx264 re-joins grams for the TRUE Jaccard).

@@ -210,13 +210,13 @@ class ChunkedParquetStreamReader(DataSourceStreamReader):
 
     Restart semantics: pacing state is instance-local, so a
     checkpoint-recovered reader starts with ``_emitted = 0`` while the
-    offset LOG holds the true high-water. latestOffset (the only
-    driver hook the API exposes — it receives no start offset) may
-    therefore briefly return an offset BELOW the committed one; the
-    in-run guarantee lives in ``partitions``, which ratchets a floor
-    to the highest start Spark has ever passed and never yields a unit
-    below it — a transiently regressed log entry produces an empty
-    batch, never a re-read.
+    offset LOG holds the true high-water. latestOffset (the driver hook
+    that receives no start offset) may therefore return an offset BELOW
+    the committed one if Spark asks it first; the in-run guarantee
+    lives in ``partitions``, which ratchets a floor to the highest start
+    Spark has ever passed and never yields a unit below it — a
+    transiently regressed log entry produces an empty batch, never a
+    re-read.
 
     That in-memory ratchet covers ONE restart. Because Spark compares
     Python-source offsets by equality, a regressed latestOffset is
@@ -225,9 +225,10 @@ class ChunkedParquetStreamReader(DataSourceStreamReader):
     (round-4 advice). Exactly-once across arbitrary restarts therefore
     needs a DURABLE high-water, and it is ON BY DEFAULT: ``commit()``
     persists the committed offset to ``<state_dir>/highwater.json``
-    (atomic tmp+rename); a recovered reader seeds its floor from the
-    sidecar, so latestOffset never returns below the durably committed
-    offset and a regressed entry can never enter the offset log.
+    (atomic tmp+rename); a recovered reader raises its floor to the
+    sidecar's at its first ``partitions`` or ``commit`` call, so
+    latestOffset never returns below the durably committed offset and
+    a regressed entry can never enter the offset log.
 
     The sidecar's location: ``option("state_dir", ...)`` when given
     (put it next to the checkpoint); otherwise a directory derived
@@ -236,11 +237,17 @@ class ChunkedParquetStreamReader(DataSourceStreamReader):
     the source the query's checkpointLocation (only readStream options
     arrive — probed empirically on Spark 4.1), so path identity is the
     best automatic key. Fresh-vs-restart disambiguation rides the
-    offset protocol itself: Spark calls ``initialOffset()`` ONLY when
-    the checkpoint has no offset log, and that hook RESETS the sidecar
-    — a brand-new query over the same path replays from zero, while a
-    crash-recovered query (no initialOffset call) keeps the durable
-    floor. The one configuration that still needs explicit options is
+    offset protocol itself (Spark 4.1 call order, traced): a
+    crash-recovered query first re-plans its last logged batch
+    (``partitions``), and only then asks ``latestOffset``; a brand-new
+    query asks ``latestOffset`` first and then ``initialOffset()``, which
+    Spark calls ONLY when the checkpoint has no offset log and which
+    RESETS the sidecar. So the sidecar's floor waits for the first
+    ``partitions``/``commit`` call: a brand-new query over the same path
+    replays from zero at its own pace (seeding pacing from a dead
+    query's floor put every unit up to that floor into its first batch),
+    while a recovered query keeps the durable floor. The one
+    configuration that still needs explicit options is
     two CONCURRENT fresh queries replaying the same path: give each a
     distinct ``stream_id`` (or ``state_dir``) so they don't share a
     floor. ``option("durable_state", "false")`` turns the sidecar off
@@ -282,9 +289,11 @@ class ChunkedParquetStreamReader(DataSourceStreamReader):
             for rg in range(pq.ParquetFile(f).metadata.num_row_groups)
         ]
         self._emitted = 0
-        # highest committed start observed this run, seeded from the
-        # durable sidecar when configured (crash recovery)
-        self._floor = self._durable_floor()
+        # highest committed start observed this run
+        self._floor = 0
+        # the durable sidecar's floor (crash recovery), applied at the
+        # first partitions()/commit() call; initialOffset() drops it
+        self._durable = self._durable_floor()
 
     def _durable_floor(self) -> int:
         import json
@@ -299,12 +308,12 @@ class ChunkedParquetStreamReader(DataSourceStreamReader):
 
     def initialOffset(self) -> dict:
         # Spark invokes this ONLY when the checkpoint has no offset
-        # log — i.e. a brand-new query, never a crash recovery. Reset
+        # log — i.e. a brand-new query, never a crash recovery — and
+        # after its first latestOffset(), which paced from zero. Reset
         # the durable sidecar so a fresh query over a previously
         # streamed path replays from zero instead of inheriting a
         # dead query's floor.
-        self._floor = 0
-        self._emitted = 0
+        self._floor = self._durable = 0
         if self.state_path:
             import contextlib
             import os
@@ -320,7 +329,7 @@ class ChunkedParquetStreamReader(DataSourceStreamReader):
         return {"rg": self._emitted}
 
     def partitions(self, start: dict, end: dict):
-        self._floor = max(self._floor, start["rg"])
+        self._floor = max(self._floor, self._durable, start["rg"])
         lo = max(start["rg"], self._floor)
         hi = min(end["rg"], len(self._units))
         if hi <= lo:
@@ -341,7 +350,7 @@ class ChunkedParquetStreamReader(DataSourceStreamReader):
         yield from tbl.to_batches()
 
     def commit(self, end: dict) -> None:
-        self._floor = max(self._floor, end["rg"])
+        self._floor = max(self._floor, self._durable, end["rg"])
         if self.state_path:
             import json
             import os

@@ -2,12 +2,10 @@
 
 The reference reads exactly one source: BigQuery via the Storage API
 with Arrow wire format and a `row_restriction` pushdown filter
-(bqfetch/bqfetch.py:478-502). The Spark-native equivalents:
-
-- Parquet scan with predicate pushdown + column pruning (the stand-in
-  for the Storage API; spark-bigquery-connector slots in identically
-  in production).
-- CSV / JSON / ORC for interchange.
+(bqfetch/bqfetch.py:478-502). The Spark-native equivalent is a Parquet
+scan with predicate pushdown + column pruning (the stand-in for the
+Storage API; spark-bigquery-connector slots in identically in
+production).
 
 ``pushed_filters`` exposes what actually reached the scan so tests can
 assert pushdown instead of hoping for it.
@@ -20,34 +18,11 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 
 def read_parquet(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
     df = spark.read.parquet(path)
     return df.select(*columns) if columns else df
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: StructType | str | None = None, header: bool = True
-) -> DataFrame:
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema: StructType | str | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
@@ -64,16 +39,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
         if body:
             out.extend(p.strip() for p in body.split(","))
     return out
-
-
-def read_schema(df: DataFrame) -> str | None:
-    """The ReadSchema of the scan — proof of column pruning.
-    Connect-tolerant via compat.formatted_plan."""
-    from bqfetch_spark.compat import formatted_plan
-
-    plan = formatted_plan(df)
-    m = re.search(r"ReadSchema: (\S+)", plan)
-    return m.group(1) if m else None
 
 
 # ---------------------------------------------------------------------------

@@ -1,44 +1,14 @@
 """Sinks (SURVEY.md §2.A A4/A5 — the reference's only sink was a CTAS
 temp table it immediately dropped).
 
-Spark-native sinks with the two layout levers that matter at 100 TB:
-
-- ``partition_by``: directory partitioning → partition pruning on read
-  (the query-side filter skips whole directories).
-- ``bucket_by``: pre-shuffled, co-located layout → joins/aggs on the
-  bucket key skip their shuffle entirely (requires saveAsTable).
+Plain sinks are ``df.write``. The one layout lever that needs more is
+bucketing: a pre-shuffled, co-located layout lets joins/aggs on the
+bucket key skip their shuffle entirely (requires saveAsTable).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    max_records_per_file: int | None = None,
-) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
 
 
 def write_bucketed_table(

@@ -103,51 +103,6 @@ def _write_artifacts(
     )
 
 
-def save_baseline_occupancy(index_dir: str, counts: np.ndarray) -> None:
-    """The trained cell-occupancy histogram IS an index artifact
-    (FAISS keeps the same per-list sizes for imbalance monitoring):
-    persisting it means the drift monitor never re-reads the code
-    store just to rebuild a KB-sized baseline each wave."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pq.write_table(
-        pa.table(
-            {
-                "cell_id": list(range(len(counts))),
-                "n": [int(x) for x in counts],
-            }
-        ),
-        os.path.join(index_dir, "occupancy.parquet"),
-    )
-
-
-def invalidate_baseline_occupancy(index_dir: str) -> None:
-    """Drop the occupancy artifact after a retrain: the store just
-    changed shape, and rebuilding the histogram eagerly would cost a
-    store scan the retrain itself doesn't need — the NEXT monitored
-    wave rebuilds it on demand (load returns None → one scan)."""
-    path = os.path.join(index_dir, "occupancy.parquet")
-    if os.path.exists(path):
-        os.remove(path)
-
-
-def load_baseline_occupancy(index_dir: str, n_cells: int) -> np.ndarray | None:
-    """Baseline occupancy COUNTS from the artifact, or None if absent
-    (pre-round-11 index dirs fall back to a store scan)."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(index_dir, "occupancy.parquet")
-    if not os.path.exists(path):
-        return None
-    t = pq.read_table(path).to_pydict()
-    counts = np.zeros(n_cells, dtype=np.float64)
-    for c, n in zip(t["cell_id"], t["n"]):
-        if int(c) < n_cells:
-            counts[int(c)] = float(n)
-    return counts
-
-
 def load_index(spark: SparkSession, index_dir: str) -> tuple[np.ndarray, np.ndarray]:
     """Frozen artifacts back as numpy (a few KB — the broadcast side
     of every encode/search stage; read driver-side, like any
@@ -443,16 +398,6 @@ def cell_counts(codes: DataFrame, n_cells: int) -> np.ndarray:
     return occ
 
 
-def _normalized(counts: np.ndarray) -> np.ndarray:
-    total = counts.sum()
-    return counts / total if total else counts
-
-
-def cell_occupancy(codes: DataFrame, n_cells: int) -> np.ndarray:
-    """Normalized cell-occupancy histogram (cell_counts / total)."""
-    return _normalized(cell_counts(codes, n_cells))
-
-
 def occupancy_jsd(p: np.ndarray, q: np.ndarray) -> float:
     """Jensen-Shannon divergence, base 2 (symmetric, bounded [0,1],
     defined even when a cell is empty on one side — the reason it
@@ -482,17 +427,12 @@ def retrain_index(
         None,
         overwrite_all=True,
     )
-    invalidate_baseline_occupancy(index_dir)
     return cents, books
 
 
 # A cell is HOT when the wave lands more than DRIFT_HOT_FACTOR times
-# its uniform share there; drift counts as LOCALIZED (→ partial
-# retrain) when the hot cells hold at least DRIFT_LOCALIZED_SHARE of
-# the wave. A diffuse shift (every cell a little off) fails the share
-# test and falls back to the full rebuild.
+# its uniform share there: the cells a partial retrain re-resolves.
 DRIFT_HOT_FACTOR = 2.0
-DRIFT_LOCALIZED_SHARE = 0.5
 DRIFT_SUBCELLS = 4  # new centroids carved out of the hot region
 
 
@@ -519,9 +459,9 @@ def recover_retrain(index_dir: str) -> bool:
     it exists every remaining step is replayable — commit staged
     artifact files (rename; skip if already renamed), swap each listed
     cell directory (remove stale dir, move staged dir; skip cells
-    already moved), drop the stale occupancy baseline, then remove the
-    journal and staging leftovers. Idempotent: safe to call at every
-    store open; returns True if a retrain was completed."""
+    already moved), then remove the journal and staging leftovers.
+    Idempotent: safe to call at every store open; returns True if a
+    retrain was completed."""
     import json
 
     journal = os.path.join(index_dir, _RETRAIN_JOURNAL)
@@ -576,7 +516,6 @@ def recover_retrain(index_dir: str) -> bool:
                 os.replace(
                     os.path.join(src_b, fname), os.path.join(dst_b, fname)
                 )
-    invalidate_baseline_occupancy(index_dir)
     os.remove(journal)
     shutil.rmtree(staging, ignore_errors=True)
     return True
@@ -695,63 +634,7 @@ def partial_retrain(
     return cents_new, books
 
 
-def ingest_with_drift_monitor(
-    spark: SparkSession,
-    emb_n_corpus: DataFrame,
-    wave_emb_n: DataFrame,
-    dim: int,
-    index_dir: str,
-    threshold: float = ANN_DRIFT_JSD,
-) -> dict:
-    """Append one wave with the drift check in the loop: encode the
-    wave against the frozen artifacts (O(wave)), compare its cell
-    occupancy to the trained baseline's (read from the occupancy
-    ARTIFACT — no store re-scan per wave), and when the JSD crosses
-    ``threshold`` rebuild: a LOCALIZED partial_retrain when the drift
-    concentrates in hot cells, the full retrain_index otherwise.
-    Returns the decision record the monitoring table stores per wave:
-    {'jsd', 'retrained', 'mode', 'n_wave'} with mode in
-    (None, 'partial', 'full').
-
-    ``emb_n_corpus`` is the already-indexed vector corpus — only read
-    (and for the partial path, only its hot-cell slice) when a retrain
-    actually fires; the wave path itself never touches history,
-    preserving q57's O(wave) append contract. The wave size rides the
-    occupancy counts — no separate count job."""
-    recover_retrain(index_dir)  # roll forward any interrupted swap
-    cents, books = load_index(spark, index_dir)
-    n_cells = len(cents)
-    store = os.path.join(index_dir, "codes")
-    base_counts = load_baseline_occupancy(index_dir, n_cells)
-    if base_counts is None:
-        base_counts = cell_counts(spark.read.parquet(store), n_cells)
-        save_baseline_occupancy(index_dir, base_counts)
-    wave_codes = ivfpq_encode(spark, wave_emb_n, cents, books)
-    wave_counts = cell_counts(wave_codes, n_cells)
-    n_wave = int(wave_counts.sum())
-    wave_occ = _normalized(wave_counts)
-    jsd = occupancy_jsd(_normalized(base_counts), wave_occ)
-    if jsd > threshold:
-        # the retrain paths consume wave_codes several times (hot-id
-        # splits, cold pass-through) — materialize the wave-sized code
-        # frame once instead of re-running the Arrow encode per consumer
-        wave_codes = wave_codes.localCheckpoint(eager=True)
-        hot = [int(c) for c in np.nonzero(wave_occ > DRIFT_HOT_FACTOR / n_cells)[0]]
-        if hot and float(wave_occ[hot].sum()) >= DRIFT_LOCALIZED_SHARE:
-            partial_retrain(
-                spark, emb_n_corpus, wave_emb_n, wave_codes, index_dir,
-                hot, cents, books,
-            )
-            return {"jsd": jsd, "retrained": True, "mode": "partial", "n_wave": n_wave}
-        retrain_index(spark, emb_n_corpus.unionByName(wave_emb_n), dim, index_dir)
-        return {"jsd": jsd, "retrained": True, "mode": "full", "n_wave": n_wave}
-    append_wave(spark, wave_emb_n, index_dir)
-    new_counts = base_counts + wave_counts
-    save_baseline_occupancy(index_dir, new_counts)
-    return {"jsd": jsd, "retrained": False, "mode": None, "n_wave": n_wave}
-
-
-# planted drift workload (shared by qx242 and its recall pytest): a
+# planted drift workload (the retrain recall and crash tests'): a
 # dense 2-mode cloud in seeded directions the fixture corpus never
 # produced — unit-norm, tighter than the rerank budget, so frozen
 # artifacts measurably lose recall there and a retrain recovers it

@@ -127,103 +127,3 @@ def run_incremental_dedup(
         store_dir,
     )
     return spark.read.parquet(sink_dir).drop("ingest_batch")
-
-
-# ---------------------------------------------------------------------------
-# Bloom-sidecar fast path: probe traffic cut for the nightly wave
-# ---------------------------------------------------------------------------
-
-
-def _bloom_dir(store_dir: str) -> str:
-    return store_dir.rstrip("/") + "_bloom"
-
-
-def _read_bloom(spark: SparkSession, bloom_dir: str) -> DataFrame:
-    # explicit schema: an absent/empty sidecar reads as an empty frame,
-    # which bloom_maybe_contains treats as all-negative — safe, because
-    # a store that predates the sidecar would then skip the prefilter
-    # only for genuinely-new fps... which is wrong for dups. So callers
-    # must backfill the sidecar when enabling the fast path (see
-    # build_fingerprint_store_with_bloom); an empty bloom + non-empty
-    # store is rejected in incremental_dedup_batch_bloom.
-    return spark.read.schema("word_idx bigint, bits bigint").parquet(bloom_dir)
-
-
-def build_fingerprint_store_with_bloom(
-    corpus: DataFrame, store_dir: str
-) -> None:
-    """Backfill the fp store AND its Bloom sidecar (m/64 packed-long
-    rows, operators/llm_pipeline.build_bloom)."""
-    from bqfetch_spark.operators.llm_pipeline import build_bloom
-
-    build_fingerprint_store(corpus, store_dir)
-    spark = corpus.sparkSession
-    fps = spark.read.parquet(store_dir).select("fp")
-    build_bloom(fps).write.mode("overwrite").parquet(_bloom_dir(store_dir))
-
-
-def incremental_dedup_batch_bloom(
-    spark: SparkSession, batch: DataFrame, store_dir: str, batch_id: int | None = None
-) -> DataFrame:
-    """incremental_dedup_batch with a persisted Bloom sidecar in front
-    of the store probe: wave fps whose k filter bits are not all set
-    are DEFINITELY absent from the store and skip the anti-join; only
-    bloom-positives (true dups + fpp) probe the store. The sidecar is
-    maintained incrementally — the survivors' bits are OR-merged into
-    the m/64-row frame, so neither the store nor its history is ever
-    rescanned to keep the filter current.
-
-    Crash/retry safety comes from MONOTONICITY, not batch tagging: bits
-    are only ever added, and re-ORing a retried wave's bits is a no-op.
-    A wave that crashed after the sidecar write but before the store
-    append leaves the filter over-set — those fps test bloom-positive,
-    fall through to the exact anti-join against a store that does NOT
-    have them, and survive correctly. False positives cost one probe;
-    false negatives cannot happen."""
-    from bqfetch_spark.operators.llm_pipeline import (
-        bloom_maybe_contains,
-        build_bloom,
-        dedup_exact,
-    )
-    from bqfetch_spark.session import shuffle_partitions
-
-    if batch_id is None:
-        batch_id = MANUAL_BATCH_ID
-    bloom_dir = _bloom_dir(store_dir)
-    bloom = _read_bloom(spark, bloom_dir)
-    store = spark.read.parquet(store_dir).filter(F.col("batch_id") != batch_id)
-    if bloom.isEmpty() and not store.isEmpty():
-        raise ValueError(
-            "Bloom sidecar is empty but the fp store is not — backfill with "
-            "build_fingerprint_store_with_bloom before using the bloom path"
-        )
-
-    wave = dedup_exact(batch, shuffle_partitions(spark)).withColumn(
-        "fp", F.xxhash64("text")
-    )
-    flagged = bloom_maybe_contains(wave, bloom)
-    definitely_new = flagged.filter(~F.col("bloom_maybe")).drop("bloom_maybe")
-    maybe_new = (
-        flagged.filter(F.col("bloom_maybe"))
-        .drop("bloom_maybe")
-        .join(store.select("fp"), "fp", "left_anti")
-    )
-    fresh = definitely_new.unionByName(maybe_new).localCheckpoint(eager=True)
-
-    (
-        fresh.select("fp")
-        .withColumn("batch_id", F.lit(batch_id).cast("bigint"))
-        .write.mode("append")
-        .parquet(store_dir)
-    )
-    # OR-merge the survivors' bits into the sidecar: union the old
-    # m/64 frame with the wave's bit rows and re-aggregate. Materialize
-    # before overwriting the directory being read.
-    merged = (
-        bloom.unionByName(build_bloom(fresh.select("fp")))
-        .groupBy("word_idx")
-        .agg(F.bit_or("bits").alias("bits"))
-        .localCheckpoint(eager=True)
-    )
-    merged.write.mode("overwrite").parquet(bloom_dir)
-    return fresh.drop("fp")

@@ -2,21 +2,16 @@
 
 The incremental stores (streaming/waves.py lists them) are APPEND-ONLY
 by design — that is what makes their ingest waves O(wave) and
-retry-idempotent — so they grow forever. This module compacts three of
-them: the fingerprint store (streaming/incremental.py) accumulates one
-duplicate fp row per retried wave, the LSH band store
-(streaming/neardup.py) and ANN code store (streaming/ann_index.py)
-accumulate one small file per wave per partition, and all three keep
-dead ``ingest_batch`` partition directories around indefinitely. This
-module is the maintenance-window counterpart (rollup has its own
-``compact_rollup``): fold the accumulated rows back to the canonical
-backfill tag, bin-packed to target-sized files (the same
+retry-idempotent — so they grow forever. The fingerprint store
+(streaming/incremental.py) accumulates one duplicate fp row per retried
+wave. This module is its maintenance-window counterpart (rollup has its
+own ``compact_rollup``): fold the accumulated rows back to the
+canonical backfill tag, bin-packed to target-sized files (the same
 ceil(bytes/target) policy as q39's ``compact_parquet_dir``).
 
 Content identity is the contract: compaction changes the store's FILE
-layout and its ``batch_id``/``ingest_batch`` tags, never its logical
-content — the distinct fingerprint set, the distinct band-row set, the
-code-row set are byte-identical before and after (pytest-pinned, and
+layout and its ``batch_id`` tags, never its logical content — the
+distinct fingerprint set is identical before and after (pytest-pinned, and
 ``keep_backup=True`` lets a caller diff the pre-image at any scale
 without a driver-side snapshot).
 
@@ -47,7 +42,7 @@ from pyspark.sql import functions as F
 
 from bqfetch_spark.registry import register
 from bqfetch_spark.streaming.ownership import OWNER_MARKER
-from bqfetch_spark.streaming.waves import BACKFILL_BATCH_ID, write_wave
+from bqfetch_spark.streaming.waves import BACKFILL_BATCH_ID
 
 # q39's policy (operators/lakehouse.py): ceil(total_bytes / target)
 # files. Stores are fingerprint-sized, so at fixture scale this is 1.
@@ -119,9 +114,7 @@ def compact_fingerprint_store(
 ) -> str | None:
     """Fold the fp store to DISTINCT fingerprints under the backfill
     tag, bin-packed. Retried waves append duplicate fp rows (harmless
-    for membership, costly in bytes) — this reclaims them. The Bloom
-    sidecar (``<store>_bloom``) needs no rebuild: the fp SET is
-    unchanged and the filter's bits are a monotone function of it."""
+    for membership, costly in bytes) — this reclaims them."""
     _check_claim(store_dir, force)
     tmp = store_dir.rstrip("/") + "__compacting"
     if os.path.exists(tmp):
@@ -136,65 +129,6 @@ def compact_fingerprint_store(
         .parquet(tmp)
     )
     return _swap_in(tmp, store_dir, keep_backup)
-
-
-def compact_band_store(
-    spark: SparkSession,
-    store_dir: str,
-    target_bytes: int = COMPACT_TARGET_BYTES,
-    keep_backup: bool = False,
-    force: bool = False,
-) -> str | None:
-    """Fold the LSH band store to one backfill ``ingest_batch``
-    partition of DISTINCT (band, bucket, doc_id, signature) rows,
-    bin-packed. Wave appends leave one file per wave; a year of
-    nightly crawls is 365 tiny files per partition that every probe
-    join must open."""
-    _check_claim(store_dir, force)
-    tmp = store_dir.rstrip("/") + "__compacting"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    folded = (
-        spark.read.schema(
-            "band int, bucket bigint, doc_id bigint, "
-            "signature array<bigint>, ingest_batch bigint"
-        )
-        .parquet(store_dir)
-        .select("band", "bucket", "doc_id", "signature")
-        .distinct()
-        .repartition(_packed_file_count(store_dir, target_bytes))
-    )
-    write_wave(folded, tmp, untagged=BACKFILL_BATCH_ID)
-    return _swap_in(tmp, store_dir, keep_backup)
-
-
-def compact_ann_code_store(
-    spark: SparkSession,
-    index_dir: str,
-    keep_backup: bool = False,
-    force: bool = False,
-) -> str | None:
-    """Fold the ANN code store's per-wave ``ingest_batch`` partitions
-    into the backfill partition, one file per cell (the probe-pruned
-    unit — a search opens exactly the files of its probed cells). The
-    frozen centroid/codebook artifacts are untouched; searches return
-    identical results because search prunes on ``cell_id`` and ignores
-    ``ingest_batch`` entirely."""
-    codes_dir = os.path.join(index_dir, "codes")
-    _check_claim(codes_dir, force)
-    tmp = codes_dir.rstrip("/") + "__compacting"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    folded = (
-        spark.read.parquet(codes_dir)
-        .drop("ingest_batch")
-        .distinct()
-        .repartition(F.col("cell_id"))
-    )
-    # the live store's (cell_id, ingest_batch) layout: partial_retrain
-    # swaps whole cell_id directories
-    write_wave(folded, tmp, cols=("cell_id",), untagged=BACKFILL_BATCH_ID)
-    return _swap_in(tmp, codes_dir, keep_backup)
 
 
 # ---------------------------------------------------------------------------

@@ -69,11 +69,3 @@ def claim_store(store_dir: str, owner_key: str) -> None:
             f"{OWNER_MARKER} marker after verifying no ingest_batch "
             "collisions are possible."
         )
-
-
-def release_store(store_dir: str) -> None:
-    """Remove the ownership marker (maintenance-window handoff, e.g.
-    after a compaction that rewrites every ingest_batch tag)."""
-    marker = os.path.join(store_dir, OWNER_MARKER)
-    if os.path.exists(marker):
-        os.remove(marker)

@@ -9,8 +9,8 @@ micro-batches and restarts. That running counter is per-key streaming
 state.
 
 Implementation: ``applyInPandasWithState`` (GroupState keyed by
-source), the same arbitrary-state API as the sessionizer
-(streaming/sessions.py).
+source), the same arbitrary-state API as debounce and rate limit
+(streaming/bucket_state.py).
 
 Admission is deterministic: within each micro-batch a source's rows
 are processed in doc_id order, so with doc_id-ordered arrival the

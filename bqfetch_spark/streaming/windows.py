@@ -119,27 +119,6 @@ def run_to_memory(
     return spark.table(name)
 
 
-def session_counts_stream(
-    events: DataFrame, watermark: str = "1 hour", gap: str = "30 minutes"
-) -> DataFrame:
-    """Watermarked SESSION-window aggregation — the streaming leg of
-    q84 (operators/events.py): the identical F.session_window groupBy,
-    now incremental. Sessions merge in the state store as events
-    arrive and finalize once the watermark passes their end; state is
-    bounded by the watermark horizon, not the stream length."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming exactly-once dedup on event_id within the watermark
     horizon (dropDuplicatesWithinWatermark): the state store keeps one

@@ -526,7 +526,7 @@ def test_drift_retrain_recovers_recall(spark, tmp_path):
         _write_codes_wave,
         append_wave,
         build_index,
-        cell_occupancy,
+        cell_counts,
         drifted_wave,
         ivfpq_encode,
         load_index,
@@ -550,12 +550,17 @@ def test_drift_retrain_recovers_recall(spark, tmp_path):
         None,
         overwrite_all=True,
     )
-    baseline = cell_occupancy(spark.read.parquet(os.path.join(idx, "codes")), len(cents))
+
+    def occupancy(codes):
+        counts = cell_counts(codes, len(cents))
+        return counts / counts.sum()
+
+    baseline = occupancy(spark.read.parquet(os.path.join(idx, "codes")))
 
     in_dist = emb_n.filter(F.pmod("vec_id", F.lit(5)) == 4)
     drift = drifted_wave(spark, dim)
-    jsd_in = occupancy_jsd(baseline, cell_occupancy(ivfpq_encode(spark, in_dist, cents, books), len(cents)))
-    jsd_drift = occupancy_jsd(baseline, cell_occupancy(ivfpq_encode(spark, drift, cents, books), len(cents)))
+    jsd_in = occupancy_jsd(baseline, occupancy(ivfpq_encode(spark, in_dist, cents, books)))
+    jsd_drift = occupancy_jsd(baseline, occupancy(ivfpq_encode(spark, drift, cents, books)))
     assert jsd_in <= ANN_DRIFT_JSD, jsd_in
     assert jsd_drift > ANN_DRIFT_JSD, jsd_drift
 
@@ -587,14 +592,11 @@ def test_drift_retrain_recovers_recall(spark, tmp_path):
 def test_partial_retrain_recovers_recall(spark, tmp_path):
     """The LOCALIZED retrain path (round 11, VERDICT r10 #6) must
     recover recall on the planted drifted workload like the full
-    rebuild does: the monitor detects the 2-mode cloud as hot-cell
-    drift, trains only DRIFT_SUBCELLS new centroids on the hot slice,
-    re-encodes only the affected vectors, and swaps the store —
-    and the searched recall over the swapped store clears the same
-    bar the full-rebuild test pins (frozen + 0.15, absolute 0.65).
-    Also pins mode == 'partial': if the hot-cell detector ever stops
-    classifying the planted cloud as localized, this fails rather
-    than silently taking the full-rebuild path."""
+    rebuild does: the wave's hot cells (more than DRIFT_HOT_FACTOR
+    times their uniform share) get DRIFT_SUBCELLS new centroids
+    trained on the hot slice, only the affected vectors are
+    re-encoded, and the store is swapped — and the searched recall
+    over the swapped store clears a bar close to the full rebuild's."""
     import os
 
     import numpy as np
@@ -605,13 +607,15 @@ def test_partial_retrain_recovers_recall(spark, tmp_path):
     from bqfetch_spark.functions.vectors import as_double
     from bqfetch_spark.operators.pq import ivfpq_search
     from bqfetch_spark.streaming.ann_index import (
+        DRIFT_HOT_FACTOR,
         DRIFT_ID_BASE,
         _write_codes_wave,
         build_index,
+        cell_counts,
         drifted_wave,
-        ingest_with_drift_monitor,
         ivfpq_encode,
         load_index,
+        partial_retrain,
         unit_normalized,
     )
     from tests.conftest import SF_CORRECT
@@ -652,7 +656,7 @@ def test_partial_retrain_recovers_recall(spark, tmp_path):
         return float(np.mean([len(exact[q] & by_q.get(q, set())) / 10 for q in qids]))
 
     # frozen baseline measured on a COPY: wave force-appended with the
-    # frozen artifacts (the no-retrain serving state), so the monitor
+    # frozen artifacts (the no-retrain serving state), so the retrain
     # below still acts on a pristine store
     import shutil
 
@@ -663,9 +667,11 @@ def test_partial_retrain_recovers_recall(spark, tmp_path):
     append_wave(spark, drift, idx_frozen)
     r_frozen = recall(idx_frozen, cents, books)
 
-    rec = ingest_with_drift_monitor(spark, initial, drift, dim, idx)
-    assert rec["retrained"] is True
-    assert rec["mode"] == "partial", rec
+    wave_codes = ivfpq_encode(spark, drift, cents, books).localCheckpoint(eager=True)
+    occ = cell_counts(wave_codes, len(cents))
+    hot = [int(c) for c in np.nonzero(occ / occ.sum() > DRIFT_HOT_FACTOR / len(cents))[0]]
+    assert hot
+    partial_retrain(spark, initial, drift, wave_codes, idx, hot, cents, books)
     cents2, books2 = load_index(spark, idx)
     assert len(cents2) > len(cents)  # sub-cells appended, old ids kept
     r_partial = recall(idx, cents2, books2)

@@ -52,7 +52,10 @@ def test_formatted_plan_falls_back_to_explain_capture(spark):
 
 
 def test_pushed_filters_and_read_schema_survive_missing_jdf(spark):
-    from bqfetch_spark.sources.readers import pushed_filters, read_schema
+    import re
+
+    from bqfetch_spark.compat import formatted_plan
+    from bqfetch_spark.sources.readers import pushed_filters
 
     df = (
         spark.read.parquet(os.path.join(SF_SMOKE, "orders.parquet"))
@@ -62,8 +65,8 @@ def test_pushed_filters_and_read_schema_survive_missing_jdf(spark):
     via_proxy = pushed_filters(_NoInternals(df))
     assert any("o_totalprice" in p for p in via_proxy)
     assert via_proxy == pushed_filters(df)
-    rs = read_schema(_NoInternals(df))
-    assert rs is not None and "o_orderkey" in rs
+    rs = re.search(r"ReadSchema: (\S+)", formatted_plan(_NoInternals(df)))
+    assert rs is not None and "o_orderkey" in rs.group(1)
 
 
 def test_plan_probes_return_none_without_internals(spark):

@@ -190,6 +190,42 @@ def test_iter_batches_closes_its_socket(spark, fetcher):
     assert not [m for m in leaked if "socket" in m], leaked
 
 
+def test_fetch_to_pandas_closes_its_socket(spark, fetcher):
+    """A range-plan chunk, a hand-built chunk and the whole table are
+    each pulled in one Arrow collect whose socket the pull closes, not
+    garbage collection; the collect gives what ``toArrow()`` gives,
+    for an empty chunk too."""
+    import gc
+    import warnings
+
+    from bqfetch_spark.fetcher import FetchingChunk
+
+    ref = TableRef(SF_SMOKE, "lineitem")
+    chunks = fetcher.chunks(ref, "l_orderkey", by_nb_chunks=3)
+    assert all(c.elements is None and c.layout is None for c in chunks)
+    empty = FetchingChunk("l_orderkey", 0, 1, -2, -1, 0)
+    gc.collect()  # earlier tests' garbage must not count against this one
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always", ResourceWarning)
+        pdfs = [fetcher.fetch_to_pandas(ref, c) for c in chunks]
+        assert sum(map(len, pdfs)) == len(fetcher.fetch_to_pandas(ref, None)) > 0
+        assert len(fetcher.fetch_to_pandas(ref, empty)) == 0
+        gc.collect()
+    leaked = [str(w.message) for w in caught if issubclass(w.category, ResourceWarning)]
+    assert not [m for m in leaked if "socket" in m], leaked
+
+    from bqfetch_spark.compat import collect_arrow
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", ResourceWarning)  # toArrow() leaves its socket to GC
+        for chunk in (chunks[1], empty):
+            want = fetcher.fetch(ref, chunk).toArrow()
+            got = collect_arrow(fetcher.fetch(ref, chunk))
+            assert got.schema == want.schema
+            assert _rows(got) == _rows(want)
+        gc.collect()
+
+
 def test_invalid_args(spark, fetcher):
     ref = TableRef(SF_SMOKE, "customer")
     with pytest.raises(ValueError):

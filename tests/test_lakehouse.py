@@ -387,48 +387,6 @@ def test_time_travel_snapshots_are_immutable(spark, tmp_path):
         read_snapshot(spark, store, 99)
 
 
-def test_vacuum_enforces_retention_and_collects_orphans(spark, tmp_path):
-    """vacuum contract: expired manifests go away (time travel past the
-    horizon raises), data files referenced only by expired manifests
-    are deleted, files shared with surviving snapshots survive, and
-    crash-orphaned files (no manifest ever referenced them) are
-    collected too."""
-    from bqfetch_spark.catalog import load_catalog
-    from bqfetch_spark.operators.lakehouse import (
-        TT_DATA,
-        commit_snapshot,
-        read_snapshot,
-        vacuum_snapshots,
-    )
-
-    docs = load_catalog(spark, SF_SMOKE).table("documents").select(
-        "doc_id", "text", "lang", "source", "n_chars"
-    )
-    store = str(tmp_path / "tt")
-    commit_snapshot(spark, store, docs.filter(F.col("doc_id") % 2 == 0))  # v1
-    commit_snapshot(spark, store, docs.filter(F.col("doc_id") % 2 == 1), mode="append")  # v2
-    fp_v2 = _doc_fingerprint(read_snapshot(spark, store, 2))
-    # a crash-orphan: data written, manifest never committed
-    orphan_dir = os.path.join(store, TT_DATA, "commit-000099")
-    docs.limit(1).write.parquet(orphan_dir)
-    assert any(f.endswith(".parquet") for f in os.listdir(orphan_dir))
-
-    stats = vacuum_snapshots(store, keep_last=1)
-    assert stats["manifests_removed"] == 1
-    assert stats["files_removed"] >= 1  # at least the orphan
-
-    # v2 appends v1's files, so retention keeps them: content intact
-    assert _doc_fingerprint(read_snapshot(spark, store, 2)) == fp_v2
-    with pytest.raises(KeyError):
-        read_snapshot(spark, store, 1)
-    assert not os.path.exists(orphan_dir) or not any(
-        f.endswith(".parquet") for f in os.listdir(orphan_dir)
-    )
-
-    with pytest.raises(ValueError):
-        vacuum_snapshots(store, keep_last=0)
-
-
 def test_commit_conflict_raises(spark, tmp_path):
     """Optimistic concurrency: a second committer racing to the same
     version must fail on the manifest rename, never corrupt history."""

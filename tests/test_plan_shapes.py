@@ -627,8 +627,7 @@ def test_qx171_disjunction_pushes_part_side_or_filter(spark):
 
 def test_aqe_splits_skewed_join_partition(spark):
     """The engine's skew posture relies on AQE's runtime skew-join
-    split as the first line of defense (plans/skew.py salting is the
-    manual fallback) — pin that it actually fires: a 200k-row hot key
+    split — pin that it actually fires: a 200k-row hot key
     against 31 cold keys must execute with a skew=true sort-merge join
     in the final adaptive plan, i.e. the hot partition was split, not
     serialized through one task."""

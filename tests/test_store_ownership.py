@@ -23,7 +23,6 @@ from bqfetch_spark.streaming.ownership import (
     OWNER_MARKER,
     claim_store,
     owner_key_for_checkpoint,
-    release_store,
 )
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -41,8 +40,8 @@ def test_claim_create_reclaim_and_refuse(tmp_path):
     # a fresh-checkpoint query must be refused BEFORE any batch runs
     with pytest.raises(ValueError, match="owned by checkpoint lineage"):
         claim_store(store, key_b)
-    # explicit maintenance handoff releases the claim
-    release_store(store)
+    # explicit maintenance handoff: deleting the marker releases the claim
+    os.remove(os.path.join(store, OWNER_MARKER))
     claim_store(store, key_b)
 
 
