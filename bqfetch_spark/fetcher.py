@@ -29,16 +29,15 @@ Reference mapping:
   the reference read from the Storage API (:496-502) as JVM-encoded
   Arrow frames served partition by partition, with no Python worker.
 - The reference's per-chunk temporary tables (step (c), :158-181) come
-  back once per plan for value-list plans: a value-list plan's
-  ``iter_batches`` and ``fetch_to_pandas`` are served from one shuffle
-  of the table by chunk id, built at the plan's first delivery
-  (``_ChunkLayout``), instead of one full filter scan per chunk. An
-  IN-list on a column whose row groups mix every value prunes nothing,
-  while range chunks on clustered data are pruned by min/max
-  statistics, so range plans keep the filter scan. A served
-  partition is held in the driver JVM, on average no bigger than one
-  scan split; the shuffle is freed once the plan's chunks are
-  garbage-collected.
+  back once per plan: a plan's ``iter_batches`` and ``fetch_to_pandas``
+  are served from one shuffle of the table by chunk id, built at the
+  plan's first delivery (``_ChunkLayout``), instead of one filter scan
+  per chunk. A filter prunes nothing on a column whose row groups mix
+  every value, so each chunk's scan would decode the whole table; on
+  clustered data, where min/max statistics do prune, the shuffle
+  measured no slower. A served partition is held in the driver JVM, on
+  average no bigger than one scan split; the shuffle is freed once the
+  plan's chunks are dropped.
 """
 
 from __future__ import annotations
@@ -49,7 +48,7 @@ import logging
 import math
 import threading
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import TYPE_CHECKING, Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -155,12 +154,12 @@ class FetchingChunk:
       memory is O(domain), so the planner bounds it with
       ``max_values``.
 
-    A value-list chunk planned by ``Fetcher.chunks`` also carries its
-    plan's ``layout``: the table shuffled once so that one partition
+    A chunk planned by ``Fetcher.chunks``, in either mode, also carries
+    its plan's ``layout``: the table shuffled once so that one partition
     holds this chunk (see ``_ChunkLayout``). ``iter_batches`` and
-    ``fetch_to_pandas`` serve the chunk from there; ``fetch`` and the
-    predicates ignore it, and so do equality, hashing and repr. A
-    hand-built chunk has none and is read by its filter.
+    ``fetch_to_pandas`` serve the chunk from there; ``fetch``, the
+    predicates, equality, hashing and repr ignore it. A hand-built
+    chunk, or one derived from a planned one, is read by its filter.
     """
 
     column: str
@@ -238,59 +237,68 @@ class FetchingChunk:
 
 
 class _ChunkLayout:
-    """One value-list plan's table with a chunk id per row, shuffled by
+    """One plan's table with a chunk id per row, shuffled by
     ``repartitionById`` so that partition ``i`` holds exactly chunk
     ``i``: the reference's per-chunk temporary tables (PAPER.md §0 step
-    (c)), built once per plan instead of one filter scan per chunk. A
-    pushed-down IN-list prunes nothing on a column whose row groups mix
-    every value, so each chunk's filter would read the whole table.
+    (c)), built once per plan instead of one filter scan per chunk,
+    range and value-list plans alike.
 
-    - **Chunk id.** A broadcast lookup join against one inline
-      ``VALUES (value, chunk id)`` relation (``createDataFrame`` when a
-      value has no SQL spelling); the NULL-owning chunk matches with
-      ``<=>``. A row that matches no chunk gets id ``n`` and lands in a
-      spare partition that is never served, so a chunk holds exactly
-      what its filter selects.
+    - **Chunk id.** One Spark SQL expression (``_chunk_id_sql``). A row
+      no chunk selects gets id ``n`` and lands in a spare partition that
+      is never served, so a chunk holds exactly what its filter selects.
+      A plan holding a value with no SQL spelling is not laid out.
     - **Memory.** A served partition is collected into the driver JVM
       before it streams, so each chunk is split by a row hash into
       ``s = ceil(scan partitions / n)`` sub-partitions, served one job
       each: on average no bigger than one scan split.
     - **Lifetime.** Built at the plan's first delivery, under a lock, so
-      a plan that is only ``fetch``-ed pays nothing. The shuffle lives
-      as long as the plan's chunks (Spark's ContextCleaner frees it
-      after they are garbage-collected). Under Connect the layout
-      serves nothing and the chunks are read by their filters.
+      a plan that is only ``fetch``-ed pays nothing. It holds layout-free
+      copies of the plan's chunks, so no reference cycle keeps it: the
+      shuffle lives as long as the plan's chunks (Spark's ContextCleaner
+      frees it once they are dropped). Under Connect the layout serves
+      nothing and the chunks are read by their filters.
     """
 
-    def __init__(self, spark: SparkSession, ref: TableRef, column: str, members: list):
+    def __init__(self, spark: SparkSession, ref: TableRef, chunks: list[FetchingChunk]):
         self.spark = spark
         self.ref = ref
-        self.column = column
-        self.members = members  # per chunk index: (elements, includes_null)
+        self.chunks = chunks  # by index, each with layout=None
         self._lock = threading.Lock()
         self._built = False
         self._served = None  # (schema, read, sub-partitions) once built, if it serves
         self.partitions = None  # the built shuffle's partition count
 
     def serves(self, spark: SparkSession, ref: TableRef, chunk: FetchingChunk) -> bool:
-        """True when ``chunk`` is one this layout was built for, read
+        """True when ``chunk`` equals one this layout was built for, read
         from the same table in the same session."""
         i = chunk.index
         return (
             spark is self.spark
             and ref == self.ref
-            and chunk.column == self.column
-            and 0 <= i < len(self.members)
-            and self.members[i] == (chunk.elements, chunk.includes_null)
+            and 0 <= i < len(self.chunks)
+            and self.chunks[i] == chunk
         )
 
     def batches(self, index: int) -> tuple[pa.Schema, Iterator[pa.RecordBatch]] | None:
         """Chunk ``index``'s Arrow schema and batches, building the
-        shuffle on first use; None when it cannot be served."""
+        shuffle on first use (logged as one structured record); None
+        when it cannot be served."""
         with self._lock:
             if not self._built:
+                t0 = time.perf_counter()
                 self._served = self._build()
                 self._built = True
+                s = self._served[2] if self._served else None
+                rec = {
+                    "table": self.ref.name,
+                    "column": self.chunks[0].column,
+                    "n_chunks": len(self.chunks),
+                    "partitions": self.partitions if s else None,
+                    "sub_partitions": s,
+                    "build_s": time.perf_counter() - t0,
+                }
+                msg = "laid out %(n_chunks)d chunks of %(table)s.%(column)s in %(build_s).2f s"
+                _logger.info(msg, rec, extra=rec)
         if self._served is None:
             return None
         schema, read, s = self._served
@@ -301,19 +309,12 @@ class _ChunkLayout:
         from bqfetch_spark.compat import is_classic
 
         tbl = load_catalog(self.spark, self.ref.sf_dir).table(self.ref.name)
-        if not is_classic(tbl):
+        sql = self._chunk_id_sql(_spark_identifier(self.chunks[0].column))
+        if sql is None or not is_classic(tbl):
             return None
-        n = len(self.members)
-        ident = _spark_identifier(self.column)
-        lookup = self._lookup(tbl, ident)
-        if lookup is None:  # no chunk holds a value
-            rows, cid = tbl, F.lit(n)
-        else:
-            rows = tbl.join(
-                F.broadcast(lookup), F.expr(f"{ident} <=> `__bqfs_value`"), "left"
-            )
-            cid = F.coalesce(F.col("__bqfs_chunk"), F.lit(n))
+        n = len(self.chunks)
         s = max(1, math.ceil(tbl.rdd.getNumPartitions() / n))
+        cid = F.expr(sql)
         if s > 1:
             # a map column cannot be hashed
             hashable = [
@@ -322,12 +323,11 @@ class _ChunkLayout:
                 if "map<" not in f.dataType.simpleString()
             ]
             cid = cid * s + F.pmod(F.hash(*hashable), F.lit(s))
-        layout = (
-            rows.withColumn("__bqfs_part", cid)
+        served = arrow_partitions(
+            tbl.withColumn("__bqfs_part", cid)
             .repartitionById((n + 1) * s, "__bqfs_part")
-            .drop("__bqfs_value", "__bqfs_chunk", "__bqfs_part")
+            .drop("__bqfs_part")
         )
-        served = arrow_partitions(layout)
         if served is None:
             return None
         schema, self.partitions, read = served
@@ -335,29 +335,32 @@ class _ChunkLayout:
             return None
         return schema, read, s
 
-    def _lookup(self, tbl: DataFrame, ident: str) -> DataFrame | None:
-        """The (value, chunk id) relation, or None when it is empty."""
-        pairs = [
-            (v, i)
-            for i, (elements, includes_null) in enumerate(self.members)
-            for v in (*elements, *((None,) if includes_null else ()))
-        ]
-        if not pairs:
+    def _chunk_id_sql(self, col: str) -> str | None:
+        """A row's chunk id as Spark SQL over ``col``, or None when a
+        value has no spelling (``_sql_literal``). NULL goes to the chunk
+        that owns it; any other value takes a binary search over the
+        ordered ``lower`` bounds (``col < lower``, Spark's sort order,
+        which the planner's buckets follow) and keeps its chunk's id
+        only if that chunk's own predicate (``FetchingChunk._sql``)
+        selects it."""
+        n = len(self.chunks)
+        ntz = _prefers_ntz([c.lower for c in self.chunks])
+        ranked = [c for c in self.chunks if c.lower is not None]
+        lowers = [_sql_literal(c.lower, spark=True, ntz=ntz) for c in ranked]
+        leaves = [c._sql(col, spark=True, ntz=ntz) for c in ranked]
+        if None in lowers or None in leaves:
             return None
-        ntz = _prefers_ntz([v for v, _ in pairs])
-        lits = [_sql_literal(v, spark=True, ntz=ntz) for v, _ in pairs]
-        if None not in lits:
-            values = ", ".join(f"({lit}, {i})" for lit, (_, i) in zip(lits, pairs))
-            return self.spark.sql(
-                f"SELECT * FROM VALUES {values} AS t(__bqfs_value, __bqfs_chunk)"
-            )
-        from pyspark.sql.types import IntegerType, StructField, StructType
 
-        dtype = tbl.select(F.expr(ident)).schema[0].dataType
-        schema = StructType(
-            [StructField("__bqfs_value", dtype), StructField("__bqfs_chunk", IntegerType())]
-        )
-        return self.spark.createDataFrame(pairs, schema)
+        def search(lo: int, hi: int) -> str:  # over ranked[lo:hi]
+            if hi - lo == 1:
+                return f"CASE WHEN {leaves[lo]} THEN {ranked[lo].index} ELSE {n} END"
+            mid = (lo + hi) // 2
+            below, above = search(lo, mid), search(mid, hi)
+            return f"CASE WHEN {col} < {lowers[mid]} THEN {below} ELSE {above} END"
+
+        owner = next((c.index for c in self.chunks if c.includes_null), n)
+        rest = search(0, len(ranked)) if ranked else n
+        return f"CASE WHEN {col} IS NULL THEN {owner} ELSE {rest} END"
 
 
 def _skewed(mean: float) -> F.Column:
@@ -549,12 +552,7 @@ class Fetcher:
         finally:
             if persisted:
                 counts.unpersist()
-        # per chunk: (elements, includes_null)
-        members = [
-            (tuple(row["els"]) if by_values else None, row["n_nulls"] > 0) for row in bounds
-        ]
-        layout = _ChunkLayout(self.spark, ref, column, members) if by_values else None
-        out = [
+        plan = [
             FetchingChunk(
                 column=column,
                 index=row["__bucket"] - 1,
@@ -562,12 +560,13 @@ class Fetcher:
                 lower=row["lo"],
                 upper=row["hi"],
                 n_values=row["n"],
-                elements=elements,
-                includes_null=includes_null,
-                layout=layout,
+                elements=tuple(row["els"]) if by_values else None,
+                includes_null=row["n_nulls"] > 0,
             )
-            for row, (elements, includes_null) in zip(bounds, members)
+            for row in bounds
         ]
+        layout = _ChunkLayout(self.spark, ref, plan)
+        out = [replace(c, layout=layout) for c in plan]
         domain_size = sum(c.n_values for c in out)
         frac = None
         if sized:
@@ -609,8 +608,8 @@ class Fetcher:
         directly (``compat.collect_arrow``, the ``toArrow()`` call over a
         socket it closes) — the pyspark toPandas() wrapper adds ~5×
         conversion overhead on timestamp/string columns (measured 11 s
-        vs 2.7 s on 600k rows). A value-list plan's chunk is read from
-        its plan's layout, as in ``iter_batches``, and needs no collect.
+        vs 2.7 s on 600k rows). A planned chunk is read from its plan's
+        layout instead, as in ``iter_batches``.
         Timing/log parity with bqfetch verbose mode (:331,365-371)."""
         t0 = time.time()
         served = self._served(ref, chunk)
@@ -650,13 +649,13 @@ class Fetcher:
         ``fetch_to_pandas`` is the faster single-collect path; this
         is the 100 TB-safe spout.
 
-        A chunk of a value-list plan is served from its plan's layout
-        instead (``_ChunkLayout``): the first delivery of any chunk of
-        the plan shuffles the table by chunk id once, and every call
-        then reads only its own chunk's partitions, one Spark job each
-        (the driver JVM holds one such partition, on average one scan
-        split). The batches are the rows ``fetch(ref, chunk)`` selects,
-        in another order."""
+        A chunk planned by ``chunks`` (range or value-list) is served
+        from its plan's layout instead (``_ChunkLayout``): the first
+        delivery of any chunk of the plan shuffles the table by chunk
+        id once, and every call then reads only its own chunk's
+        partitions, one Spark job each (the driver JVM holds one such
+        partition, on average one scan split). The batches are the rows
+        ``fetch(ref, chunk)`` selects, in another order."""
         if batch_rows <= 0:
             raise ValueError(f"batch_rows must be positive, got {batch_rows}")
         return _rebatch(self._arrow_batches(ref, chunk), batch_rows)
@@ -671,8 +670,8 @@ class Fetcher:
         self, ref: TableRef, chunk: FetchingChunk | None
     ) -> tuple[pa.Schema, Iterator[pa.RecordBatch]] | None:
         """The chunk's schema and batches from its plan's layout, or None
-        when it has none that serves it (range and hand-built chunks,
-        another table or session, Connect)."""
+        when it has none that serves it (hand-built or derived chunks,
+        another table or session, a value with no SQL spelling, Connect)."""
         layout = None if chunk is None else chunk.layout
         if layout is None or not layout.serves(self.spark, ref, chunk):
             return None

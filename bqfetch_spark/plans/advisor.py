@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bqfetch_spark.catalog import TABLES, load_catalog
+from bqfetch_spark.compat import collect_rows
 from bqfetch_spark.registry import register
 
 DEFAULT_TARGET_PARTITION_BYTES = 128 * 1024 * 1024  # Spark's maxPartitionBytes default
@@ -99,8 +100,8 @@ def estimated_materialized_bytes(df: DataFrame) -> int:
     """Σ materialized_row_bytes over the frame — the num_bytes analog
     used by the by_chunk_size planner (one column-pruned scan; only
     string columns are read)."""
-    row = df.select(materialized_row_bytes(df).alias("b")).agg(F.sum("b")).first()
-    return int(row[0] or 0)
+    [(total,)] = collect_rows(df.select(materialized_row_bytes(df).alias("b")).agg(F.sum("b")))
+    return int(total or 0)
 
 
 def available_memory_bytes() -> int:

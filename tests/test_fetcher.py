@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bqfetch_spark.catalog import TABLES
+from bqfetch_spark.compat import collect_arrow, collect_rows
 from bqfetch_spark.fetcher import Fetcher, TableRef
 from tests.conftest import SF_SMOKE
 
@@ -26,7 +27,7 @@ def test_chunks_partition_customer(spark, fetcher, n_chunks):
     total = 0
     seen = set()
     for c in chunks:
-        keys = {r.c_custkey for r in fetcher.fetch(ref, c).select("c_custkey").collect()}
+        keys = {r.c_custkey for r in collect_rows(fetcher.fetch(ref, c).select("c_custkey"))}
         assert not (keys & seen), "chunks overlap"
         seen |= keys
         total += len(keys)
@@ -52,23 +53,28 @@ def test_chunks_more_than_values_degrades(spark, fetcher):
     assert sum(fetcher.fetch(ref, c).count() for c in chunks) == 150
 
 
-def _nulled_customer(fetcher, tmp_path) -> TableRef:
-    """customer with every tenth ``c_nationkey`` set to NULL, in a
-    fixture directory of its own."""
+def _as_customer(df, tmp_path) -> TableRef:
+    """A fixture directory of its own whose customer table is ``df``."""
     import os
 
     # the catalog loads every fixture table for a directory: symlink the
-    # untouched ones, rewrite only customer with NULLs injected
+    # others, write only customer
     for t in TABLES:
         if t != "customer":
             os.symlink(f"{SF_SMOKE}/{t}.parquet", str(tmp_path / f"{t}.parquet"))
+    df.write.parquet(str(tmp_path / "customer.parquet"))
+    return TableRef(str(tmp_path), "customer")
+
+
+def _nulled_customer(fetcher, tmp_path) -> TableRef:
+    """customer with every tenth ``c_nationkey`` set to NULL, in a
+    fixture directory of its own."""
     base = fetcher.table(TableRef(SF_SMOKE, "customer"))
     nulled = base.withColumn(
         "c_nationkey",
         F.when(F.col("c_custkey") % 10 == 0, F.lit(None)).otherwise(F.col("c_nationkey")),
     )
-    nulled.write.parquet(str(tmp_path / "customer.parquet"))
-    return TableRef(str(tmp_path), "customer")
+    return _as_customer(nulled, tmp_path)
 
 
 @pytest.mark.parametrize("by_values", [False, True])
@@ -121,7 +127,7 @@ def _assert_stream_matches_to_arrow(fetcher, ref, chunk, batch_rows):
     toArrow() materialization of the same chunk, sliced to batch_rows."""
     import pyarrow as pa
 
-    expected = fetcher.fetch(ref, chunk).toArrow()
+    expected = collect_arrow(fetcher.fetch(ref, chunk))
     batches = list(fetcher.iter_batches(ref, chunk, batch_rows=batch_rows))
     assert all(isinstance(b, pa.RecordBatch) for b in batches)
     assert all(0 < b.num_rows <= batch_rows for b in batches)
@@ -191,10 +197,11 @@ def test_iter_batches_closes_its_socket(spark, fetcher):
 
 
 def test_fetch_to_pandas_closes_its_socket(spark, fetcher):
-    """A range-plan chunk, a hand-built chunk and the whole table are
-    each pulled in one Arrow collect whose socket the pull closes, not
-    garbage collection; the collect gives what ``toArrow()`` gives,
-    for an empty chunk too."""
+    """Neither route of ``fetch_to_pandas`` leaves a socket to garbage
+    collection: a range plan's chunks, served from their layout, nor a
+    hand-built chunk and the whole table, each pulled in one Arrow
+    collect whose socket the pull closes. The collect gives what
+    ``toArrow()`` gives, for an empty chunk too."""
     import gc
     import warnings
 
@@ -202,7 +209,8 @@ def test_fetch_to_pandas_closes_its_socket(spark, fetcher):
 
     ref = TableRef(SF_SMOKE, "lineitem")
     chunks = fetcher.chunks(ref, "l_orderkey", by_nb_chunks=3)
-    assert all(c.elements is None and c.layout is None for c in chunks)
+    layout = chunks[0].layout
+    assert layout is not None and all(c.elements is None and c.layout is layout for c in chunks)
     empty = FetchingChunk("l_orderkey", 0, 1, -2, -1, 0)
     gc.collect()  # earlier tests' garbage must not count against this one
     with warnings.catch_warnings(record=True) as caught:
@@ -211,10 +219,9 @@ def test_fetch_to_pandas_closes_its_socket(spark, fetcher):
         assert sum(map(len, pdfs)) == len(fetcher.fetch_to_pandas(ref, None)) > 0
         assert len(fetcher.fetch_to_pandas(ref, empty)) == 0
         gc.collect()
+    assert layout.partitions is not None  # the plan's chunks were served
     leaked = [str(w.message) for w in caught if issubclass(w.category, ResourceWarning)]
     assert not [m for m in leaked if "socket" in m], leaked
-
-    from bqfetch_spark.compat import collect_arrow
 
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", ResourceWarning)  # toArrow() leaves its socket to GC
@@ -303,7 +310,7 @@ def test_value_list_chunks_partition(spark, fetcher):
         assert c.lower == c.elements[0] and c.upper == c.elements[-1]
         assert c.n_values == len(c.elements)
         all_vals.extend(c.elements)
-    domain = {r[0] for r in fetcher.table(ref).select("c_mktsegment").distinct().collect()}
+    domain = {r[0] for r in collect_rows(fetcher.table(ref).select("c_mktsegment").distinct())}
     assert sorted(all_vals) == sorted(domain)  # disjoint cover
     assert sum(fetcher.fetch(ref, c).count() for c in chunks) == 150
     # same bucket membership as range mode on the same domain
@@ -328,7 +335,7 @@ def test_value_list_chunks_typed_predicates(spark, fetcher):
         chunk = fetcher.chunks(ref, column, by_nb_chunks=4, by_values=True)[0]
         assert all(isinstance(e, pytype) for e in chunk.elements)
         got = fetcher.fetch(ref, chunk)
-        member = {r[0] for r in got.select(column).distinct().collect()}
+        member = {r[0] for r in collect_rows(got.select(column).distinct())}
         assert member == set(chunk.elements)
         expected = (
             fetcher.table(ref).filter(F.col(column).isin(*chunk.elements)).count()
@@ -359,7 +366,7 @@ def _assert_served_like_fetch(fetcher, ref, chunks):
     import pyarrow as pa
 
     for chunk in chunks:
-        expected = fetcher.fetch(ref, chunk).toArrow()
+        expected = collect_arrow(fetcher.fetch(ref, chunk))
         got = pa.Table.from_batches(
             list(fetcher.iter_batches(ref, chunk, batch_rows=64)), schema=expected.schema
         )
@@ -379,7 +386,7 @@ def _stream_table(fetcher, ref, chunk):
     """``iter_batches(ref, chunk)`` gathered into one Arrow table."""
     import pyarrow as pa
 
-    schema = fetcher.fetch(ref, chunk).toArrow().schema
+    schema = collect_arrow(fetcher.fetch(ref, chunk)).schema
     return pa.Table.from_batches(list(fetcher.iter_batches(ref, chunk)), schema=schema)
 
 
@@ -395,8 +402,6 @@ def test_value_list_layout_serves_what_fetch_selects(
     sub-partitions."""
     import dataclasses
 
-    import pyarrow as pa
-
     if split_bytes:
         spark_conf("spark.sql.files.maxPartitionBytes", split_bytes)
         spark_conf("spark.sql.files.openCostInBytes", "0")
@@ -404,16 +409,156 @@ def test_value_list_layout_serves_what_fetch_selects(
     chunks = fetcher.chunks(ref, "c_nationkey", by_nb_chunks=4, by_values=True)
     null_chunk = next(c for c in chunks if c.includes_null)
     emptied = dataclasses.replace(null_chunk, elements=(), includes_null=False)
-    _assert_served_like_fetch(fetcher, ref, [*chunks, emptied])
-    layout = chunks[0].layout
-    s = layout.partitions // (len(chunks) + 1)
-    assert layout.partitions == (len(chunks) + 1) * s
-    assert (s > 1) == bool(split_bytes)
+    _assert_layout_serves_what_fetch_selects(fetcher, ref, chunks, emptied, split_bytes)
     assert list(fetcher.iter_batches(ref, emptied)) == []
     assert fetcher.fetch(ref, null_chunk).filter(F.col("c_nationkey").isNull()).count() > 0
 
+
+@pytest.mark.parametrize("split_bytes", [None, "512"])
+def test_range_layout_serves_what_fetch_selects(
+    spark, fetcher, spark_conf, tmp_path, split_bytes
+):
+    """A range plan's chunks are served from one shuffle of the table by
+    chunk id, as a value-list plan's are, and each holds exactly what
+    its BETWEEN filter selects: the NULL-owning chunk its NULL rows, a
+    chunk narrowed from a planned one its own filter's rows, and all
+    chunks together the table."""
+    import dataclasses
+
+    if split_bytes:
+        spark_conf("spark.sql.files.maxPartitionBytes", split_bytes)
+        spark_conf("spark.sql.files.openCostInBytes", "0")
+    ref = _nulled_customer(fetcher, tmp_path)
+    chunks = fetcher.chunks(ref, "c_nationkey", by_nb_chunks=4)
+    assert all(c.elements is None for c in chunks)
+    null_chunk = next(c for c in chunks if c.includes_null)
+    narrowed = dataclasses.replace(null_chunk, upper=null_chunk.lower)
+    _assert_layout_serves_what_fetch_selects(fetcher, ref, chunks, narrowed, split_bytes)
+    n_null = fetcher.fetch(ref, null_chunk).filter(F.col("c_nationkey").isNull()).count()
+    assert 0 < n_null < fetcher.fetch(ref, narrowed).count() < fetcher.fetch(ref, null_chunk).count()
+
+
+def _assert_layout_serves_what_fetch_selects(fetcher, ref, chunks, derived, split_bytes):
+    """A plan's chunks, and ``derived`` (a chunk made from one of them
+    with other values, which its layout does not serve), hold what
+    ``fetch`` selects; the plan was laid out in ``s`` sub-partitions
+    per chunk (s > 1 exactly when the scan splits are small), and its
+    served chunks together are the table."""
+    import pyarrow as pa
+
+    layout = chunks[0].layout
+    assert not layout.serves(fetcher.spark, ref, derived)
+    _assert_served_like_fetch(fetcher, ref, [*chunks, derived])
+    s = layout.partitions // (len(chunks) + 1)
+    assert layout.partitions == (len(chunks) + 1) * s
+    assert (s > 1) == bool(split_bytes)
     served = pa.concat_tables(_stream_table(fetcher, ref, c) for c in chunks)
-    assert _rows(served) == _rows(fetcher.table(ref).toArrow())
+    assert _rows(served) == _rows(collect_arrow(fetcher.table(ref)))
+
+
+def _routing_table(fetcher, tmp_path) -> TableRef:
+    """A fixture directory whose customer table holds a string, a
+    timestamp and a double column, each with NULLs; the doubles also
+    hold NaN, ±inf, 0.0 and -0.0."""
+    import datetime
+
+    doubles = [float("nan"), -0.0, 0.0, None, float("inf"), float("-inf"), 1.5, -2.5, 1e-300]
+    start = datetime.datetime(2024, 3, 10, 1, 30)
+    rows = [
+        (
+            i,
+            None if i % 11 == 0 else ("", "a", "B", "ab", "é", "a'b", "zz")[i % 7] + str(i % 3),
+            None if i % 13 == 0 else start + datetime.timedelta(hours=7 * (i % 17), microseconds=i % 2),
+            doubles[i % len(doubles)],
+        )
+        for i in range(300)
+    ]
+    df = fetcher.spark.createDataFrame(rows, "id int, s string, ts timestamp, x double")
+    return _as_customer(df.coalesce(1), tmp_path)
+
+
+@pytest.mark.parametrize("n_chunks", [3, 40])
+@pytest.mark.parametrize("by_values", [False, True])
+@pytest.mark.parametrize("column", ["s", "ts", "x"])
+def test_layout_routes_like_fetch(spark, fetcher, tmp_path, column, by_values, n_chunks):
+    """The chunk-id expression sends each row to the chunk whose filter
+    selects it, for both plan modes over a string, a timestamp and a
+    double column: served chunks equal ``fetch``'s and together are the
+    table. This pins that ``col < lower`` follows Spark's sort order
+    (NaN above +inf, -0.0 with 0.0, NULL first). At 40 chunks every
+    value has a chunk of its own, NULL and NaN included."""
+    import pyarrow as pa
+
+    ref = _routing_table(fetcher, tmp_path)
+    chunks = fetcher.chunks(ref, column, by_nb_chunks=n_chunks, by_values=by_values)
+    if n_chunks == 3:
+        assert len(chunks) == 3
+    else:
+        assert all(c.n_values == 1 for c in chunks)
+    served = []
+    for chunk in chunks:
+        want = collect_arrow(fetcher.fetch(ref, chunk))
+        got = pa.Table.from_batches(list(fetcher.iter_batches(ref, chunk)), schema=want.schema)
+        assert _rows(got) == _rows(want), chunk
+        served.append(got)
+    assert chunks[0].layout.partitions == len(chunks) + 1  # served, not filtered
+    assert _rows(pa.concat_tables(served)) == _rows(collect_arrow(fetcher.table(ref)))
+
+
+def test_dropped_plan_frees_its_layout(spark, fetcher):
+    """A layout holds layout-free copies of its plan's chunks, so no
+    reference cycle keeps it: once the plan's chunks are dropped, it
+    (and with it the shuffle) is freed by reference counting alone."""
+    import gc
+    import weakref
+
+    ref = TableRef(SF_SMOKE, "customer")
+    gc.disable()
+    try:
+        chunks = fetcher.chunks(ref, "c_custkey", by_nb_chunks=3)
+        assert len(fetcher.fetch_to_pandas(ref, chunks[1])) > 0
+        layout = weakref.ref(chunks[0].layout)
+        assert layout().partitions is not None
+        del chunks
+        assert layout() is None
+    finally:
+        gc.enable()
+
+
+def test_layout_build_log_record(spark, fetcher, caplog, monkeypatch):
+    """Each layout build emits one structured record on the fetcher
+    logger, at the plan's first delivery only; a plan whose chunks are
+    read by their filters logs a build with no partitions."""
+    import gc
+    import logging
+    import warnings
+
+    from bqfetch_spark import compat
+
+    ref = TableRef(SF_SMOKE, "lineitem")
+    chunks = fetcher.chunks(ref, "l_orderkey", by_nb_chunks=3)
+    with caplog.at_level(logging.INFO, logger="bqfetch_spark.fetcher"):
+        for chunk in chunks:
+            fetcher.fetch_to_pandas(ref, chunk)
+    [record] = [r for r in caplog.records if r.name == "bqfetch_spark.fetcher"]
+    assert record.levelno == logging.INFO
+    assert (record.table, record.column, record.n_chunks) == ("lineitem", "l_orderkey", 3)
+    assert (record.partitions, record.sub_partitions) == (chunks[0].layout.partitions, 1) == (4, 1)
+    assert record.build_s > 0
+    assert record.getMessage().startswith("laid out 3 chunks of lineitem.l_orderkey in ")
+
+    caplog.clear()
+    monkeypatch.setattr(compat, "is_classic", lambda _obj: False)
+    with warnings.catch_warnings():
+        # the public route's pulls leave their sockets to garbage collection
+        warnings.simplefilter("ignore", ResourceWarning)
+        chunks = fetcher.chunks(ref, "l_suppkey", by_nb_chunks=2, by_values=True)
+        with caplog.at_level(logging.INFO, logger="bqfetch_spark.fetcher"):
+            list(fetcher.iter_batches(ref, chunks[0]))
+        gc.collect()
+    [record] = [r for r in caplog.records if r.name == "bqfetch_spark.fetcher"]
+    assert (record.column, record.n_chunks) == ("l_suppkey", 2)
+    assert record.partitions is None and record.sub_partitions is None
 
 
 def _jobs_and_tasks(spark, group, fn):
@@ -433,21 +578,36 @@ def _jobs_and_tasks(spark, group, fn):
 
 
 def test_layout_second_delivery_is_one_job_one_task(spark, fetcher):
-    """The first delivery of a value-list plan shuffles the table once;
-    every later chunk is one job of one task over its own partition."""
+    """The first delivery of a plan, value-list or size-driven range,
+    shuffles the table once; every later chunk is one job of one task
+    over its own partition."""
+    import warnings
+
     ref = TableRef(SF_SMOKE, "lineitem")
     chunks = fetcher.chunks(ref, "l_suppkey", by_nb_chunks=3, by_values=True)
+    _assert_second_delivery_is_one_job_one_task(spark, fetcher, ref, chunks)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", UserWarning)  # l_orderkey's skew warning
+        sized = fetcher.chunks(
+            ref, "l_orderkey", by_chunk_size_in_GB=2e-4, available_bytes=2 * 1024**3
+        )
+    assert len(sized) >= 3 and all(c.elements is None for c in sized)
+    _assert_second_delivery_is_one_job_one_task(spark, fetcher, ref, sized)
+
+
+def _assert_second_delivery_is_one_job_one_task(spark, fetcher, ref, chunks):
+    group = f"test-layout-second-delivery-{chunks[0].column}"  # one per plan
     first = sum(b.num_rows for b in fetcher.iter_batches(ref, chunks[0]))
     assert first == fetcher.fetch(ref, chunks[0]).count()
     rows, jobs, tasks = _jobs_and_tasks(
         spark,
-        "test-layout-second-delivery",
+        f"{group}-stream",
         lambda: sum(b.num_rows for b in fetcher.iter_batches(ref, chunks[1])),
     )
     assert rows == fetcher.fetch(ref, chunks[1]).count()
     assert (jobs, tasks) == (1, 1)
     pdf, jobs, tasks = _jobs_and_tasks(
-        spark, "test-layout-pandas-delivery", lambda: fetcher.fetch_to_pandas(ref, chunks[2])
+        spark, f"{group}-pandas", lambda: fetcher.fetch_to_pandas(ref, chunks[2])
     )
     assert len(pdf) == fetcher.fetch(ref, chunks[2]).count()
     assert (jobs, tasks) == (1, 1)
@@ -477,21 +637,35 @@ def test_thousand_chunk_plan_is_served(spark, fetcher):
 
 
 def test_layout_falls_back_to_filters_without_classic_internals(spark, fetcher, monkeypatch):
-    """Without the classic internals (Connect's shape) a value-list
-    plan is planned and read through the public API: the chunks hold
-    the same rows as on the classic route."""
+    """Without the classic internals (Connect's shape) a value-list or
+    range plan is planned and read through the public API: the chunks
+    hold the same rows as on the classic route."""
+    import gc
+    import warnings
+
+    import pyarrow as pa
+
     from bqfetch_spark import compat
 
+    def streamed(chunks):
+        return [_rows(pa.Table.from_batches(list(fetcher.iter_batches(ref, c)))) for c in chunks]
+
     ref = TableRef(SF_SMOKE, "customer")
-    classic = fetcher.chunks(ref, "c_nationkey", by_nb_chunks=3, by_values=True)
-    served = [_rows(_stream_table(fetcher, ref, c)) for c in classic]
-    monkeypatch.setattr(compat, "is_classic", lambda _obj: False)
-    fallback = fetcher.chunks(ref, "c_nationkey", by_nb_chunks=3, by_values=True)
-    assert fallback == classic
-    assert [_rows(_stream_table(fetcher, ref, c)) for c in fallback] == served
-    assert fallback[0].layout.partitions is None  # nothing was shuffled
-    pdfs = [fetcher.fetch_to_pandas(ref, c) for c in fallback]
-    assert sum(map(len, pdfs)) == fetcher.table(ref).count()
+    for by_values in (True, False):
+        with monkeypatch.context() as m, warnings.catch_warnings():
+            classic = fetcher.chunks(ref, "c_nationkey", by_nb_chunks=3, by_values=by_values)
+            served = streamed(classic)
+            assert classic[0].layout.partitions is not None
+            m.setattr(compat, "is_classic", lambda _obj: False)
+            # the public route's pulls leave their sockets to garbage collection
+            warnings.simplefilter("ignore", ResourceWarning)
+            fallback = fetcher.chunks(ref, "c_nationkey", by_nb_chunks=3, by_values=by_values)
+            assert fallback == classic
+            assert streamed(fallback) == served
+            assert fallback[0].layout.partitions is None  # nothing was shuffled
+            pdfs = [fetcher.fetch_to_pandas(ref, c) for c in fallback]
+            assert sum(map(len, pdfs)) == fetcher.table(ref).count()
+            gc.collect()
 
 
 def test_value_list_chunks_domain_cap(spark, fetcher):
@@ -589,14 +763,14 @@ def test_value_list_predicate_is_one_expression(spark, monkeypatch, kind, owns_n
         expected = F.col("x").isin(*elements)
         if owns_null:
             expected = expected | F.col("x").isNull()
-        want = sorted(r.id for r in df.filter(expected).collect())
+        want = sorted(r.id for r in collect_rows(df.filter(expected)))
         chunk = FetchingChunk(
             "x", 0, 1, None, None, len(elements), elements=elements, includes_null=owns_null
         )
         with monkeypatch.context() as m:
             _no_per_value_literals(m)
             pred = chunk.predicate()
-        got = sorted(r.id for r in df.filter(pred).collect())
+        got = sorted(r.id for r in collect_rows(df.filter(pred)))
     finally:
         spark.conf.unset("spark.sql.timestampType")
         if old_tz is None:
@@ -619,7 +793,7 @@ def test_empty_value_list_predicate(spark, monkeypatch, owns_null):
     with monkeypatch.context() as m:
         _no_per_value_literals(m)
         pred = chunk.predicate()
-    assert [r.id for r in df.filter(pred).collect()] == ([2] if owns_null else [])
+    assert [r.id for r in collect_rows(df.filter(pred))] == ([2] if owns_null else [])
 
 
 def test_value_list_predicate_pushes_in_and_builds_fast(spark, fetcher, monkeypatch):
