@@ -228,8 +228,9 @@ def arrow_batches(df: DataFrame) -> Iterator["pa.RecordBatch"]:
 
     Fallback, when the classic setup is unreachable (Connect, or the
     private JVM calls raise before the first frame): executors re-encode
-    each batch as IPC bytes in a ``binary`` column (``mapInArrow``) and
-    the driver pulls those rows with ``toLocalIterator``."""
+    each batch as IPC bytes in a ``binary`` column (``mapInArrow``), the
+    driver pulls those rows with ``toLocalIterator`` and casts each batch
+    to ``toArrow()``'s schema."""
     import pyarrow as pa
 
     if is_classic(df):
@@ -265,12 +266,13 @@ def _jvm_arrow_frames(df: DataFrame):
 
 
 def _arrow_schema(df: DataFrame) -> "pa.Schema":
-    """The Arrow schema ``toArrow()`` casts ``df``'s batches to."""
+    """The Arrow schema ``toArrow()`` casts ``df``'s batches to (Connect's
+    ``toArrow()`` prefers no large types)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    return to_arrow_schema(
-        df.schema, prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes()
-    )
+    jconf = getattr(df.sparkSession, "_jconf", None)
+    large = jconf is not None and jconf.arrowUseLargeVarTypes()
+    return to_arrow_schema(df.schema, prefers_large_types=large)
 
 
 def arrow_partitions(
@@ -441,7 +443,11 @@ def _worker_arrow_batches(df: DataFrame) -> Iterator["pa.RecordBatch"]:
                 {"ipc": [sink.getvalue().to_pybytes()]}
             )
 
+    # the executors' batches may differ from toArrow()'s in nullability
+    # (a filter lets toArrow() mark a column NOT NULL): cast to its schema
+    schema = _arrow_schema(df)
     for row in df.mapInArrow(_to_ipc, "ipc binary").toLocalIterator(
         prefetchPartitions=True
     ):
-        yield from pa.ipc.open_stream(pa.py_buffer(row["ipc"]))
+        for batch in pa.ipc.open_stream(pa.py_buffer(row["ipc"])):
+            yield batch.cast(schema)

@@ -33,11 +33,12 @@ Reference mapping:
   are served from one shuffle of the table by chunk id, built at the
   plan's first delivery (``_ChunkLayout``), instead of one filter scan
   per chunk. A filter prunes nothing on a column whose row groups mix
-  every value, so each chunk's scan would decode the whole table; on
-  clustered data, where min/max statistics do prune, the shuffle
-  measured no slower. A served partition is held in the driver JVM, on
-  average no bigger than one scan split; the shuffle is freed once the
-  plan's chunks are dropped.
+  every value, so each chunk's scan would decode the whole table. The
+  shuffle pays off when most of a plan's chunks are delivered: one
+  chunk alone pays a whole-table shuffle where a pruned filter reads
+  about 1/n of the table. A served partition is held in the driver JVM,
+  on average no bigger than one scan split; the shuffle is freed once
+  the plan's chunks are dropped.
 """
 
 from __future__ import annotations
@@ -82,14 +83,15 @@ def _spark_identifier(column: str) -> str:
     return ".".join(f"`{part}`" for part in column.split("."))
 
 
-def _sql_literal(v: Any, spark: bool, ntz: bool = False) -> str | None:
+def _sql_literal(v: Any, spark: bool, ntz: bool = False, int_suffix: str = "") -> str | None:
     """``v`` as a SQL literal — the one renderer behind both chunk
     predicates. ``spark=True`` spells Spark SQL with the type ``F.lit(v)``
     gives (``ntz``: the session prefers TIMESTAMP_NTZ for naive
-    datetimes, as ``F.lit`` does) and returns None for a value it has no
-    spelling for; otherwise it spells BigQuery Storage-API SQL. NaN and
-    ±inf take a cast, since a bare ``nan``/``inf`` is an identifier in
-    both dialects."""
+    datetimes, as ``F.lit`` does; ``int_suffix`` types an int literal
+    instead, e.g. ``L`` for BIGINT) and returns None for a value it has
+    no spelling for; otherwise it spells BigQuery Storage-API SQL. NaN
+    and ±inf take a cast, since a bare ``nan``/``inf`` is an identifier
+    in both dialects."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -97,7 +99,7 @@ def _sql_literal(v: Any, spark: bool, ntz: bool = False) -> str | None:
     if isinstance(v, int):
         if spark and not -(2**63) <= v < 2**63:
             return None  # F.lit has no type past bigint either
-        return str(int(v))
+        return f"{int(v)}{int_suffix}"
     if isinstance(v, float):
         if math.isfinite(v):
             return f"{float(v)!r}D" if spark else repr(float(v))
@@ -169,12 +171,9 @@ class FetchingChunk:
     upper: Any
     n_values: int
     elements: tuple = None  # type: ignore[assignment]
-    # True when this chunk also owns the NULL rows of the chunk column.
-    # Neither BETWEEN nor IN matches NULL, and collect_list drops it, so
-    # without this flag a nullable chunk column silently lost its NULL
-    # rows from every chunk (union(chunks) != table — round-4 advice).
-    # The planner sets it on whichever bucket the NULL domain value
-    # sorted into; predicate() adds an IS NULL disjunct there.
+    # True when this chunk also owns the chunk column's NULL rows, which
+    # neither BETWEEN nor IN matches: the planner sets it on the bucket
+    # the NULL domain value sorted into, and predicate() adds IS NULL.
     includes_null: bool = False
     layout: _ChunkLayout | None = field(default=None, compare=False, hash=False, repr=False)
 
@@ -218,10 +217,10 @@ class FetchingChunk:
     def _values(self) -> tuple:
         return (self.lower, self.upper) if self.elements is None else self.elements
 
-    def _sql(self, col: str, spark: bool, ntz: bool = False) -> str | None:
+    def _sql(self, col: str, spark: bool, ntz: bool = False, int_suffix: str = "") -> str | None:
         """The chunk predicate over identifier ``col`` as SQL text, or
         None when a value has no spelling (``_sql_literal``)."""
-        lits = [_sql_literal(v, spark, ntz) for v in self._values]
+        lits = [_sql_literal(v, spark, ntz, int_suffix) for v in self._values]
         if None in lits:
             return None
         base = None
@@ -253,10 +252,9 @@ class _ChunkLayout:
       each: on average no bigger than one scan split.
     - **Lifetime.** Built at the plan's first delivery, under a lock, so
       a plan that is only ``fetch``-ed pays nothing. It holds layout-free
-      copies of the plan's chunks, so no reference cycle keeps it: the
-      shuffle lives as long as the plan's chunks (Spark's ContextCleaner
-      frees it once they are dropped). Under Connect the layout serves
-      nothing and the chunks are read by their filters.
+      copies of the plan's chunks, so no reference cycle keeps it and
+      Spark's ContextCleaner frees the shuffle once they are dropped.
+      Under Connect the chunks are read by their filters.
     """
 
     def __init__(self, spark: SparkSession, ref: TableRef, chunks: list[FetchingChunk]):
@@ -309,19 +307,21 @@ class _ChunkLayout:
         from bqfetch_spark.compat import is_classic
 
         tbl = load_catalog(self.spark, self.ref.sf_dir).table(self.ref.name)
-        sql = self._chunk_id_sql(_spark_identifier(self.chunks[0].column))
-        if sql is None or not is_classic(tbl):
+        if not is_classic(tbl):
+            return None
+        col = _spark_identifier(self.chunks[0].column)
+        dtype = tbl.select(F.expr(col)).schema.fields[0].dataType.simpleString()
+        suffix = {"bigint": "L", "smallint": "S", "tinyint": "Y"}.get(dtype, "")
+        sql = self._chunk_id_sql(col, suffix)
+        if sql is None:
             return None
         n = len(self.chunks)
         s = max(1, math.ceil(tbl.rdd.getNumPartitions() / n))
         cid = F.expr(sql)
         if s > 1:
             # a map column cannot be hashed
-            hashable = [
-                F.col(f"`{f.name}`")
-                for f in tbl.schema.fields
-                if "map<" not in f.dataType.simpleString()
-            ]
+            fields = tbl.schema.fields
+            hashable = [F.col(f"`{f.name}`") for f in fields if "map<" not in f.dataType.simpleString()]
             cid = cid * s + F.pmod(F.hash(*hashable), F.lit(s))
         served = arrow_partitions(
             tbl.withColumn("__bqfs_part", cid)
@@ -335,19 +335,20 @@ class _ChunkLayout:
             return None
         return schema, read, s
 
-    def _chunk_id_sql(self, col: str) -> str | None:
+    def _chunk_id_sql(self, col: str, int_suffix: str) -> str | None:
         """A row's chunk id as Spark SQL over ``col``, or None when a
         value has no spelling (``_sql_literal``). NULL goes to the chunk
         that owns it; any other value takes a binary search over the
         ordered ``lower`` bounds (``col < lower``, Spark's sort order,
         which the planner's buckets follow) and keeps its chunk's id
         only if that chunk's own predicate (``FetchingChunk._sql``)
-        selects it."""
+        selects it. Int literals take the column's type (``int_suffix``):
+        on a BIGINT column the analyser would cast INT ones one by one."""
         n = len(self.chunks)
         ntz = _prefers_ntz([c.lower for c in self.chunks])
         ranked = [c for c in self.chunks if c.lower is not None]
-        lowers = [_sql_literal(c.lower, spark=True, ntz=ntz) for c in ranked]
-        leaves = [c._sql(col, spark=True, ntz=ntz) for c in ranked]
+        lowers = [_sql_literal(c.lower, True, ntz, int_suffix) for c in ranked]
+        leaves = [c._sql(col, True, ntz, int_suffix) for c in ranked]
         if None in lowers or None in leaves:
             return None
 
@@ -644,10 +645,9 @@ class Fetcher:
         and serves them one partition at a time (``compat.arrow_batches``:
         no Python worker, no pickled rows), so driver memory stays at two
         partitions' frames plus ``batch_rows`` pending rows however large
-        the chunk is. On classic PySpark the batches carry the schema
-        ``toArrow()`` gives. For a chunk that fits in driver memory,
-        ``fetch_to_pandas`` is the faster single-collect path; this
-        is the 100 TB-safe spout.
+        the chunk is. The batches carry the schema ``toArrow()`` gives.
+        For a chunk that fits in driver memory, ``fetch_to_pandas`` is
+        the faster single-collect path; this is the 100 TB-safe spout.
 
         A chunk planned by ``chunks`` (range or value-list) is served
         from its plan's layout instead (``_ChunkLayout``): the first

@@ -458,11 +458,14 @@ def _assert_layout_serves_what_fetch_selects(fetcher, ref, chunks, derived, spli
 
 def _routing_table(fetcher, tmp_path) -> TableRef:
     """A fixture directory whose customer table holds a string, a
-    timestamp and a double column, each with NULLs; the doubles also
-    hold NaN, ±inf, 0.0 and -0.0."""
+    timestamp, a double, a bigint and a tinyint column, each with NULLs;
+    the doubles also hold NaN, ±inf, 0.0 and -0.0, the bigints values
+    past the INT range."""
     import datetime
 
     doubles = [float("nan"), -0.0, 0.0, None, float("inf"), float("-inf"), 1.5, -2.5, 1e-300]
+    bigints = [-(2**40), -5, 0, 7, 2**31, 2**40 + 1, 2**62, None]
+    tinyints = [-128, -1, 0, 1, 127, None]
     start = datetime.datetime(2024, 3, 10, 1, 30)
     rows = [
         (
@@ -470,23 +473,28 @@ def _routing_table(fetcher, tmp_path) -> TableRef:
             None if i % 11 == 0 else ("", "a", "B", "ab", "é", "a'b", "zz")[i % 7] + str(i % 3),
             None if i % 13 == 0 else start + datetime.timedelta(hours=7 * (i % 17), microseconds=i % 2),
             doubles[i % len(doubles)],
+            bigints[i % len(bigints)],
+            tinyints[i % len(tinyints)],
         )
         for i in range(300)
     ]
-    df = fetcher.spark.createDataFrame(rows, "id int, s string, ts timestamp, x double")
+    schema = "id int, s string, ts timestamp, x double, b bigint, t tinyint"
+    df = fetcher.spark.createDataFrame(rows, schema)
     return _as_customer(df.coalesce(1), tmp_path)
 
 
 @pytest.mark.parametrize("n_chunks", [3, 40])
 @pytest.mark.parametrize("by_values", [False, True])
-@pytest.mark.parametrize("column", ["s", "ts", "x"])
+@pytest.mark.parametrize("column", ["s", "ts", "x", "b", "t"])
 def test_layout_routes_like_fetch(spark, fetcher, tmp_path, column, by_values, n_chunks):
     """The chunk-id expression sends each row to the chunk whose filter
-    selects it, for both plan modes over a string, a timestamp and a
-    double column: served chunks equal ``fetch``'s and together are the
-    table. This pins that ``col < lower`` follows Spark's sort order
-    (NaN above +inf, -0.0 with 0.0, NULL first). At 40 chunks every
-    value has a chunk of its own, NULL and NaN included."""
+    selects it, for both plan modes over a string, a timestamp, a
+    double and two integer columns: served chunks equal ``fetch``'s and
+    together are the table. This pins that ``col < lower`` follows
+    Spark's sort order (NaN above +inf, -0.0 with 0.0, NULL first), and
+    that literals typed as the column (``2L``, ``2Y``) select what
+    ``predicate()``'s do. At 40 chunks every value has a chunk of its
+    own, NULL and NaN included."""
     import pyarrow as pa
 
     ref = _routing_table(fetcher, tmp_path)
@@ -503,6 +511,31 @@ def test_layout_routes_like_fetch(spark, fetcher, tmp_path, column, by_values, n
         served.append(got)
     assert chunks[0].layout.partitions == len(chunks) + 1  # served, not filtered
     assert _rows(pa.concat_tables(served)) == _rows(collect_arrow(fetcher.table(ref)))
+
+
+@pytest.mark.parametrize("by_values", [False, True])
+def test_chunk_id_literals_take_the_column_type(spark, fetcher, monkeypatch, by_values):
+    """On a BIGINT column the chunk-id expression spells its literals as
+    BIGINT, so the analyser adds no cast per literal (a cast per IN
+    element doubled the first delivery of a 150,000-value plan)."""
+    from bqfetch_spark import fetcher as fetcher_mod
+
+    built = []
+    chunk_id_sql = fetcher_mod._ChunkLayout._chunk_id_sql
+
+    def spy(layout, col, int_suffix):
+        built.append(chunk_id_sql(layout, col, int_suffix))
+        return built[-1]
+
+    monkeypatch.setattr(fetcher_mod._ChunkLayout, "_chunk_id_sql", spy)
+    ref = TableRef(SF_SMOKE, "lineitem")
+    chunks = fetcher.chunks(ref, "l_suppkey", by_nb_chunks=3, by_values=by_values)
+    list(fetcher.iter_batches(ref, chunks[1]))
+    [sql] = built
+    assert chunks[0].layout.partitions is not None
+    analyzed = fetcher.table(ref).select(F.expr(sql))._jdf.queryExecution().analyzed()
+    top = analyzed.toString().lower().splitlines()[0]  # the chunk id's projection
+    assert "case when" in top and "cast(" not in top
 
 
 def test_dropped_plan_frees_its_layout(spark, fetcher):
@@ -639,16 +672,15 @@ def test_thousand_chunk_plan_is_served(spark, fetcher):
 def test_layout_falls_back_to_filters_without_classic_internals(spark, fetcher, monkeypatch):
     """Without the classic internals (Connect's shape) a value-list or
     range plan is planned and read through the public API: the chunks
-    hold the same rows as on the classic route."""
+    hold the same rows as on the classic route, with ``toArrow()``'s
+    schema."""
     import gc
     import warnings
-
-    import pyarrow as pa
 
     from bqfetch_spark import compat
 
     def streamed(chunks):
-        return [_rows(pa.Table.from_batches(list(fetcher.iter_batches(ref, c)))) for c in chunks]
+        return [_rows(_stream_table(fetcher, ref, c)) for c in chunks]
 
     ref = TableRef(SF_SMOKE, "customer")
     for by_values in (True, False):
